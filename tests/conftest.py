@@ -10,6 +10,28 @@ if str(REPO_ROOT) not in sys.path:
     sys.path.insert(0, str(REPO_ROOT))
 
 SF_SMOKE = "/root/testdata/sf0.001"
+REFERENCE_DIR = Path("/root/reference")
+
+
+def _reference_file(name: str) -> str:
+    path = REFERENCE_DIR / name
+    if not path.is_file():
+        pytest.skip(f"reference file {path} unavailable")
+    return str(path)
+
+
+@pytest.fixture(scope="session")
+def reference_csv() -> str:
+    """The reference checkout's MuseMotion CSV; a test that uses it
+    skips on a host without the reference checkout."""
+    return _reference_file("musemotion_databse.csv")
+
+
+@pytest.fixture(scope="session")
+def reference_dump() -> str:
+    """The reference checkout's SQL INSERT dump; skips like
+    :func:`reference_csv`."""
+    return _reference_file("musemotion-populate-table.sql")
 
 
 @pytest.fixture(scope="session")

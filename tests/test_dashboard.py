@@ -6,14 +6,12 @@ from __future__ import annotations
 
 import pytest
 
-REFERENCE_CSV = "/root/reference/musemotion_databse.csv"
-
 
 @pytest.fixture(scope="module")
-def dash(spark):
+def dash(spark, reference_csv):
     from week4_musemotion_spark.dashboard import Dashboard
 
-    return Dashboard(spark, REFERENCE_CSV)
+    return Dashboard(spark, reference_csv)
 
 
 def test_unfiltered_kpis_match_reference(dash):

@@ -4,44 +4,38 @@ reference's own data, checked against its published dashboard KPIs
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
-REFERENCE_CSV = "/root/reference/musemotion_databse.csv"
-
 
 @pytest.fixture(scope="module")
-def cleaned(spark):
-    if not os.path.exists(REFERENCE_CSV):
-        pytest.skip("reference CSV not available")
+def cleaned(spark, reference_csv):
     from week4_musemotion_spark.operators.etl import clean_musemotion
     from week4_musemotion_spark.sources.csv import read_headerless_csv
 
-    return clean_musemotion(read_headerless_csv(spark, REFERENCE_CSV)).cache()
+    return clean_musemotion(read_headerless_csv(spark, reference_csv)).cache()
 
 
-def test_width_guard_truncates_junk_fields(spark):
+def test_width_guard_truncates_junk_fields(spark, reference_csv):
     """The raw CSV carries 15 fields; imposing 11 names naively shifts
     every column by 4 (the reference's own loader bug, SURVEY.md
     §2.10).  The guard must keep first-11 alignment."""
     from week4_musemotion_spark.sources.csv import read_headerless_csv
 
-    raw = read_headerless_csv(spark, REFERENCE_CSV)
+    raw = read_headerless_csv(spark, reference_csv)
     assert len(raw.columns) == 11
     # vin values look like VINs (alnum, len 10), not models
     sample = [r.vin for r in raw.select("vin").limit(20).collect()]
     assert all(v and len(v) >= 8 for v in sample)
 
 
-def test_multi_file_glob_union(spark, tmp_path):
+def test_multi_file_glob_union(spark, tmp_path, reference_csv):
     """S2: a directory of CSV shards reads as one table (the
     reference's blob-list + concat loop, pipeline.py:126-150)."""
     from week4_musemotion_spark.operators.etl import clean_musemotion, kpi_summary
     from week4_musemotion_spark.sources.csv import read_headerless_csv
 
-    lines = open(REFERENCE_CSV, encoding="utf-8", errors="replace").read().splitlines(True)
+    lines = open(reference_csv, encoding="utf-8", errors="replace").read().splitlines(True)
     shard_dir = tmp_path / "shards"
     shard_dir.mkdir()
     (shard_dir / "a.csv").write_text("".join(lines[: len(lines) // 2]))

@@ -3,22 +3,16 @@ against its own (cleaned) data — the §3.2 SQL lifecycle."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
-
-REFERENCE_CSV = "/root/reference/musemotion_databse.csv"
 
 
 @pytest.fixture(scope="module")
-def corpus_results(spark):
-    if not os.path.exists(REFERENCE_CSV):
-        pytest.skip("reference CSV not available")
+def corpus_results(spark, reference_csv):
     from week4_musemotion_spark.operators.etl import clean_musemotion
     from week4_musemotion_spark.queries.musemotion_sql import run_corpus
     from week4_musemotion_spark.sources.csv import read_headerless_csv
 
-    clean = clean_musemotion(read_headerless_csv(spark, REFERENCE_CSV)).cache()
+    clean = clean_musemotion(read_headerless_csv(spark, reference_csv)).cache()
     return {name: df for name, df in run_corpus(spark, clean)}
 
 

@@ -6,37 +6,32 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
-REFERENCE_CSV = "/root/reference/musemotion_databse.csv"
 
-
-@pytest.mark.skipif(not os.path.exists(REFERENCE_CSV), reason="reference CSV unavailable")
-def test_pipeline_end_to_end(spark, tmp_path):
+def test_pipeline_end_to_end(spark, tmp_path, reference_csv):
     from week4_musemotion_spark.operators.pipeline import run_musemotion_pipeline
 
     dest = str(tmp_path / "musemotion_clean")
-    run_musemotion_pipeline(spark, REFERENCE_CSV, dest)
+    run_musemotion_pipeline(spark, reference_csv, dest)
     out = spark.read.parquet(dest)
     assert out.count() == 1498
     assert out.columns[-2:] == ["latitude", "longitude"]
 
     # upsert-dedup variant: one row per VIN (reference data has 317 dups)
     dest2 = str(tmp_path / "musemotion_dedup")
-    run_musemotion_pipeline(spark, REFERENCE_CSV, dest2, dedup_key="vin")
+    run_musemotion_pipeline(spark, reference_csv, dest2, dedup_key="vin")
     deduped = spark.read.parquet(dest2)
     n_vins = deduped.select("vin").distinct().count()
     assert deduped.count() == n_vins
     assert n_vins < 1498
 
 
-@pytest.mark.skipif(not os.path.exists(REFERENCE_CSV), reason="reference CSV unavailable")
-def test_pipeline_partitioned_write_prunes(spark, tmp_path):
+def test_pipeline_partitioned_write_prunes(spark, tmp_path, reference_csv):
     from week4_musemotion_spark.operators.pipeline import run_musemotion_pipeline
 
     dest = str(tmp_path / "musemotion_by_type")
-    run_musemotion_pipeline(spark, REFERENCE_CSV, dest, partition_by=["vehicle_type"])
+    run_musemotion_pipeline(spark, reference_csv, dest, partition_by=["vehicle_type"])
     # partition dirs exist and a filtered read prunes to one of them
     dirs = [d for d in os.listdir(dest) if d.startswith("vehicle_type=")]
     assert len(dirs) >= 2

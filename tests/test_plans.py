@@ -57,13 +57,13 @@ def test_groupby_partial_aggregation(spark):
         assert_partial_aggregation(_q(name)(spark, SF_SMOKE))
 
 
-def test_cleaning_pipeline_is_single_stage(spark):
+def test_cleaning_pipeline_is_single_stage(spark, reference_csv):
     """The ETL chain must stay shuffle-free (narrow transforms only)."""
     from week4_musemotion_spark.operators.etl import clean_musemotion
     from week4_musemotion_spark.plans.audit import count_shuffles
     from week4_musemotion_spark.sources.csv import read_headerless_csv
 
-    df = clean_musemotion(read_headerless_csv(spark, "/root/reference/musemotion_databse.csv"))
+    df = clean_musemotion(read_headerless_csv(spark, reference_csv))
     assert count_shuffles(df) == 0
 
 

@@ -194,6 +194,26 @@ def test_bloom_prune_empty_keys_prunes_everything(spark):
     assert bloom_prune(li, none, "l_partkey", "p_partkey").count() == 0
 
 
+def test_bloom_prune_string_keys_prune(spark):
+    """String keys hash as themselves: the filter keeps every true key
+    and drops the rest (a long cast would null every string key and
+    pass every row).  Mixed or unsupported key types raise."""
+    import pytest
+
+    from week4_musemotion_spark.operators.sketches import bloom_prune
+
+    fact = spark.range(2000).select(F.format_string("k%d", "id").alias("k"))
+    wanted = {f"k{i}" for i in range(0, 2000, 100)}
+    keys = spark.createDataFrame([(k,) for k in sorted(wanted)], "key string")
+    got = {r.k for r in bloom_prune(fact, keys, "k", "key").collect()}
+    assert wanted <= got
+    assert len(got) < 100, len(got)
+    with pytest.raises(TypeError, match="cannot probe"):
+        bloom_prune(spark.range(10), keys, "id", "key")
+    with pytest.raises(TypeError, match="double"):
+        bloom_prune(fact, spark.createDataFrame([(1.0,)], "key double"), "k", "key")
+
+
 def test_bloom_membership_is_scan_side_predicate(spark):
     """The membership test must be a plain Filter on the fact scan —
     BELOW any exchange — or the 100 TB story (prune before shuffle)

@@ -3,22 +3,15 @@ dataset its CSV carries (two serializations, one table)."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
-POPULATE_SQL = "/root/reference/musemotion-populate-table.sql"
-REFERENCE_CSV = "/root/reference/musemotion_databse.csv"
 
-
-@pytest.mark.skipif(not os.path.exists(POPULATE_SQL), reason="reference dump unavailable")
-def test_dump_parses_and_matches_csv(spark):
+def test_dump_parses_and_matches_csv(spark, reference_dump, reference_csv):
     from week4_musemotion_spark.operators.etl import clean_musemotion
     from week4_musemotion_spark.sources.csv import read_headerless_csv
     from week4_musemotion_spark.sources.sql_inserts import read_sql_inserts
 
-    dump = read_sql_inserts(spark, POPULATE_SQL)
+    dump = read_sql_inserts(spark, reference_dump)
     # the reference's own serializations disagree by one record: the
     # CSV carries 1,499 rows, the SQL dump only 1,498 (VIN WA1E2AFY8R
     # appears twice in the CSV, zero times in the dump) — verified
@@ -29,7 +22,7 @@ def test_dump_parses_and_matches_csv(spark):
         assert c in dump.columns
 
     # same dataset as the CSV up to that one known row
-    csv = read_headerless_csv(spark, REFERENCE_CSV)
+    csv = read_headerless_csv(spark, reference_csv)
     dump_vins = {tuple(r) for r in dump.groupBy("vin").count().collect()}
     csv_vins = {tuple(r) for r in csv.groupBy("vin").count().collect()}
     assert dump_vins - csv_vins == set()
@@ -66,18 +59,17 @@ def test_cloud_path_builders():
     assert s3a_path("lake", "ev/part-*.parquet") == "s3a://lake/ev/part-*.parquet"
 
 
-@pytest.mark.skipif(not os.path.exists(POPULATE_SQL), reason="reference dump unavailable")
-def test_python_datasource_matches_driver_parser(spark):
+def test_python_datasource_matches_driver_parser(spark, reference_dump):
     """The Spark-4 Python DataSource (partition-parallel parse) must
     produce exactly the driver-side parser's dataset."""
     from week4_musemotion_spark.sources.sql_inserts import read_sql_inserts
     from week4_musemotion_spark.sources.sql_inserts_ds import SqlInsertsDataSource
 
     spark.dataSource.register(SqlInsertsDataSource)
-    ds = spark.read.format("sql_inserts").load(POPULATE_SQL)
+    ds = spark.read.format("sql_inserts").load(reference_dump)
     assert ds.rdd.getNumPartitions() > 1  # the parse actually distributes
     a = sorted(map(tuple, ds.collect()))
-    b = sorted(map(tuple, read_sql_inserts(spark, POPULATE_SQL).collect()))
+    b = sorted(map(tuple, read_sql_inserts(spark, reference_dump).collect()))
     assert a == b
 
 

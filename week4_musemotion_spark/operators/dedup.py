@@ -159,14 +159,13 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (≥ threshold).
 
-    The shingle table is persisted (it feeds three plan branches) and
-    stays cached until Spark's LRU evicts it — callers running many
-    dedup passes in one long session can reclaim eagerly with
-    ``spark.catalog.clearCache()``.  ``shingles`` (optional prebuilt
-    ``(_id, s)`` string frame) lets a paired detector share one
-    shingle pass — see :func:`shingle_sets`.
+    The shingle table feeds three plan branches, so it is pinned with
+    a lazy local checkpoint: the first job that reaches it
+    materializes it once.  ``shingles`` (optional prebuilt ``(_id, s)``
+    string frame) lets a paired detector share one shingle pass — see
+    :func:`shingle_sets`.
     """
-    sh = shingle_sets(df, text_col, id_col, n, shingles=shingles).persist()
+    sh = shingle_sets(df, text_col, id_col, n, shingles=shingles).localCheckpoint(eager=False)
     pairs = _intersections(None, sh)
     return pairs.filter(F.col("jac") >= threshold).select("doc_a", "doc_b", _jaccard_e4())
 

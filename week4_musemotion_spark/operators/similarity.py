@@ -725,9 +725,9 @@ def kmeans_fit(
     """Lloyd's k-means with deterministic seeding (the ``k`` smallest
     ids), expressed Spark-first: each iteration is ONE Arrow-batched
     map over the corpus that assigns and emits per-batch partial sums
-    (map-side reduction), finished by a tiny (cluster, dim) hash
-    aggregate — one linear scan per iteration, no all-pairs.  Only
-    the (k × dim) centroid matrix ever reaches the driver.
+    (map-side reduction), finished on the driver — one linear scan
+    and one job per iteration, no all-pairs.  Only per-batch
+    (k × dim) partial sums ever reach the driver.
 
     ``fit_fraction`` fits the quantizer on a seeded Bernoulli sample
     of the corpus: each Lloyd iteration's assignment pass costs
@@ -755,16 +755,13 @@ def kmeans_fit(
     if cent.shape[0] == 0:
         raise ValueError("empty embedding corpus")
     # FUSED Lloyd iteration (the pq_fit pattern): ONE Arrow-batched
-    # pass per iteration assigns AND emits per-batch partial-sum rows
-    # (map-side reduction — ≤ partitions × k × dim tiny rows reach
-    # the shuffle), then one small aggregate finishes the means.  The
-    # previous shape shipped every (id, vec, cluster) row back to the
-    # JVM and posexploded the full n × dim value stream through a
-    # hash aggregate — n·dim rows through an exchange per iteration
-    # at any scale.  Assignments are identical (same expand-identity
-    # argmin, first-min tie rule, float64 matrices); centroid means
-    # differ from the old avg() only by float-sum reassociation
-    # (batch partials vs Spark's accumulation order), the same
+    # pass per iteration assigns AND emits one partial-sum row per
+    # (batch, cluster) — a vectorised bincount + add.at reduction, so
+    # at most batches × k rows of (n, sum vector) reach the driver,
+    # which finishes the means itself: one job per iteration, no
+    # shuffle.  Assignments use the expand-identity argmin with the
+    # first-min tie rule on float64 matrices; centroid means differ
+    # from an avg() only by float-sum reassociation, the same
     # documented tolerance as pq_fit.  Empty clusters keep their
     # centroid.
     spark = emb.sparkSession
@@ -780,26 +777,27 @@ def kmeans_fit(
                     continue
                 mat = _to_matrix(pdf[vec_col])
                 a = np.argmin(cent_sq[None, :] - 2.0 * (mat @ cb.T), axis=1)
-                cs, ps, ss, ns = [], [], [], []
-                for c in np.unique(a):
-                    rows = mat[a == c]
-                    d = rows.shape[1]
-                    cs.extend([int(c)] * d)
-                    ps.extend(range(d))
-                    ss.extend(rows.sum(axis=0).tolist())
-                    ns.extend([len(rows)] * d)
-                yield pd.DataFrame({"cluster": cs, "pos": ps, "s": ss, "n": ns})
+                n = np.bincount(a, minlength=len(cb))
+                s = np.zeros_like(cb)
+                np.add.at(s, a, mat)
+                hit = np.flatnonzero(n)
+                yield pd.DataFrame(
+                    {"cluster": hit.astype(np.int32), "n": n[hit], "s": list(s[hit])}
+                )
 
-        means = (
-            scan.mapInPandas(_partials, "cluster int, pos int, s double, n long")
-            .groupBy("cluster", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        new_cent = cent.copy()  # empty clusters keep their centroid
-        for row in means:
-            new_cent[row["cluster"], row["pos"]] = row["s"] / row["n"]
-        cent = new_cent
+        try:
+            parts = scan.mapInPandas(
+                _partials, "cluster int, n long, s array<double>"
+            ).collect()
+        finally:
+            bc.destroy()
+        sums = np.zeros_like(cent)
+        counts = np.zeros(len(cent), dtype=np.int64)
+        for row in parts:
+            sums[row["cluster"]] += row["s"]
+            counts[row["cluster"]] += row["n"]
+        hit = counts > 0  # empty clusters keep their centroid
+        cent[hit] = sums[hit] / counts[hit, None]
     return cent
 
 

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def approx_distinct_by(
@@ -533,20 +534,37 @@ def bloom_might_contain(
     return out
 
 
+def _bloom_key(df: DataFrame, key_col: str) -> tuple[Column, str]:
+    """Canonical hash input of a :func:`bloom_prune` key column and its
+    family: integral types widen to long (so int32 and int64 columns
+    hash identically on both sides) and strings hash as themselves.
+    Any other type raises — ``cast("long")`` would null it, and a
+    filter over NULL hashes silently passes every row."""
+    t = df.schema[key_col].dataType
+    if isinstance(t, T.IntegralType):
+        return F.col(key_col).cast("long"), "integral"
+    if isinstance(t, T.StringType):
+        return F.col(key_col), "string"
+    raise TypeError(
+        f"bloom_prune: key column {key_col!r} has type {t.simpleString()}; "
+        "only integral and string keys are supported"
+    )
+
+
 def _fast_bloom_positions(
-    keys: DataFrame, key_col: str, num_bits: int, num_hashes: int
+    keys: DataFrame, key: Column, num_bits: int, num_hashes: int
 ) -> list[int]:
     """Distinct set bit positions of every non-NULL key under the
     NATIVE ``xxhash64(key, seed)`` family — the probe-cost-optimized
     twin of :func:`bloom_positions` for advisory filters whose bits
     are never replayed by a SQL oracle (the portable md5 family costs
     ~50× more per probed row: string cast + concat + MD5 + hex
-    substring + base conversion vs one codegen'd long hash)."""
+    substring + base conversion vs one codegen'd long hash).  ``key``
+    is the canonical column from :func:`_bloom_key`."""
     if num_bits & (num_bits - 1) or num_bits < 64:
         raise ValueError(f"num_bits must be a power of two >= 64, got {num_bits}")
-    key = F.col(key_col).cast("long")
     pos = (
-        keys.filter(F.col(key_col).isNotNull())
+        keys.filter(key.isNotNull())
         .select(
             F.explode(
                 F.array(
@@ -563,17 +581,15 @@ def _fast_bloom_positions(
 
 
 def _fast_might_contain(
-    col: Column, words: list[int], num_hashes: int = 3
+    probe: Column, words: list[int], num_hashes: int = 3
 ) -> Column:
     """Membership predicate under the native xxhash64 family — must
-    pair with :func:`_fast_bloom_positions` (same hash family, same
-    ``key.cast("long")`` canonicalization so int32/int64 key columns
-    hash identically on both sides).  Pure builtin expressions: runs
-    inside whole-stage codegen on the scan side, before any
+    pair with :func:`_fast_bloom_positions` over a ``probe`` column of
+    the same :func:`_bloom_key` family.  Pure builtin expressions:
+    runs inside whole-stage codegen on the scan side, before any
     exchange."""
     num_bits = 64 * len(words)
     arr = F.array(*[F.lit(w).cast("long") for w in words])
-    probe = col.cast("long")
     out = None
     for s in range(num_hashes):
         pos = F.pmod(F.xxhash64(probe, F.lit(s)), num_bits)
@@ -615,10 +631,19 @@ def bloom_prune(
     0.1 s on a 600 k-row probe).  The oracle-replayed audits
     (q_bloom_fp_audit) keep :func:`bloom_positions` /
     :func:`bloom_might_contain`, whose portable positions a SQL
-    oracle reproduces bit-for-bit."""
-    pos = _fast_bloom_positions(keys, dim_key or fact_key, num_bits, num_hashes)
+    oracle reproduces bit-for-bit.
+
+    Both key columns must be integral (hashed as long) or both string
+    (hashed as themselves); any other pairing raises ``TypeError``."""
+    key, key_family = _bloom_key(keys, dim_key or fact_key)
+    probe, probe_family = _bloom_key(fact, fact_key)
+    if key_family != probe_family:
+        raise TypeError(
+            f"bloom_prune: {key_family} build keys cannot probe {probe_family} fact keys"
+        )
+    pos = _fast_bloom_positions(keys, key, num_bits, num_hashes)
     w = bloom_words(pos, num_bits)
-    return fact.filter(_fast_might_contain(F.col(fact_key), w, num_hashes))
+    return fact.filter(_fast_might_contain(probe, w, num_hashes))
 
 
 # ---------------------------------------------------------------------------
