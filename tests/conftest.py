@@ -43,9 +43,9 @@ def spark():
     spark.stop()
 
 
-def staged_oracle(sql: str, tables: tuple[str, ...]) -> "pandas.DataFrame":  # noqa: F821
-    """DuckDB oracle run for a staged (not-yet-registered) query:
-    views over the smoke-SF parquet tables, one connection per call."""
+def duckdb_oracle(sql: str, tables: tuple[str, ...]) -> "pandas.DataFrame":  # noqa: F821
+    """DuckDB oracle run for a query: views over the smoke-SF parquet
+    tables, one connection per call."""
     import duckdb
 
     con = duckdb.connect()
@@ -54,19 +54,17 @@ def staged_oracle(sql: str, tables: tuple[str, ...]) -> "pandas.DataFrame":  # n
     return con.execute(sql).fetchdf()
 
 
-def staged_diff(spark, name: str, tables: tuple[str, ...]):
-    """Spark-vs-DuckDB differential for a staged registry query:
-    same column set, same row count, order-insensitive value
-    equality.  Returns the Spark result for extra asserts.  The
-    staged module must already be imported (registration side
-    effect)."""
+def oracle_diff(spark, name: str, tables: tuple[str, ...]):
+    """Spark-vs-DuckDB differential for a registry query: same column
+    set, same row count, order-insensitive value equality.  Returns
+    the Spark result for extra asserts."""
     import pandas as pd
 
     from week4_musemotion_spark.queries.registry import REGISTRY
 
     spec = REGISTRY[name]
     got = spec.builder(spark, SF_SMOKE).toPandas()
-    want = staged_oracle(spec.oracle, tables)
+    want = duckdb_oracle(spec.oracle, tables)
     assert sorted(got.columns) == sorted(want.columns), (got.columns, want.columns)
     cols = sorted(got.columns)
     g = got[cols].sort_values(cols).reset_index(drop=True)

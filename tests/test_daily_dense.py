@@ -1,4 +1,4 @@
-"""The shared densified-daily-grid helpers (staged_r9._daily_dense /
+"""The shared densified-daily-grid helpers (provenance._daily_dense /
 _daily_dense_sql) on a corpus that ACTUALLY has day gaps — the
 testdata has none at any SF (verified: 0 missing day cells), so the
 dropout-visibility behavior the grid exists for is otherwise never
@@ -32,7 +32,7 @@ def _gapped_events(tmp_path):
 
 
 def test_dense_grid_fills_dropout_days(spark, tmp_path):
-    from week4_musemotion_spark.queries.staged_r9 import _daily_dense, _daily_dense_sql
+    from week4_musemotion_spark.queries.provenance import _daily_dense, _daily_dense_sql
 
     sf_dir = _gapped_events(tmp_path)
     got = _daily_dense(spark, sf_dir).toPandas()
@@ -58,7 +58,7 @@ def test_dropout_moves_the_cusum_and_lag(spark, tmp_path):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from week4_musemotion_spark.queries.staged_r9 import _daily_dense
+    from week4_musemotion_spark.queries.provenance import _daily_dense
 
     sf_dir = _gapped_events(tmp_path)
     dense = _daily_dense(spark, sf_dir).filter(F.col("event_type") == "flaky")

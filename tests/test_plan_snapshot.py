@@ -31,9 +31,6 @@ _CANARIES = (
     "q_text_quality",
     "q_dedup_clusters",
     "q_jaccard_simjoin",
-    # staged-wave canary: snapshotted via audit_plans --staged, so a
-    # plan pathology in a not-yet-activated wave fails pytest at
-    # build time, not at activation time
     "q_winnow_pairs",
 )
 
@@ -49,10 +46,8 @@ def _latest_snapshot() -> dict:
 
 def test_canary_plan_shapes_match_snapshot(spark):
     from week4_musemotion_spark.plans.audit import plan_string
-    from week4_musemotion_spark.queries import REGISTRY, import_staged
+    from week4_musemotion_spark.queries import REGISTRY
     from tools.audit_plans import plan_metrics
-
-    import_staged()  # registers staged canaries (all waves, not just one chain)
 
     snap = _latest_snapshot()
     mismatches = {}

@@ -3,7 +3,7 @@ geometry and readout law, against a pure-Python model (the
 test_rbo_properties pattern: a third implementation independent of
 both engines; hypothesis drives only the Python side, so the loop is
 fast — the Spark/DuckDB agreement is pinned separately in
-tests/test_staged_r12.py's boundary sweep and oracle diffs)."""
+the distribution-audit tests' boundary sweep and oracle diffs)."""
 
 from __future__ import annotations
 

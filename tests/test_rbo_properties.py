@@ -1,9 +1,9 @@
-"""Property tests for the exact-integer RBO machinery (staged_r11)
+"""Property tests for the exact-integer RBO machinery (ranking_audits)
 — the grid/X_d SQL against a literal Fraction implementation of
 RBO_min on ADVERSARIAL rank lists (disjoint, identical, reversed,
 random with partial overlap).  No Spark: the Spark twin shares the
 coefficient table and is pinned to the same oracle by
-tests/test_staged_r11.py on the real corpus."""
+the ranking-audit oracle tests on the real corpus."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ import duckdb
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from week4_musemotion_spark.queries.staged_r11 import (
+from week4_musemotion_spark.queries.ranking_audits import (
     _RBO_COEF_SQL,
     _RBO_D,
     _RBO_K,

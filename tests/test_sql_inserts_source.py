@@ -57,41 +57,3 @@ def test_cloud_path_builders():
         == "abfss://raw@evdata.dfs.core.windows.net/musemotion/2025/*.csv"
     )
     assert s3a_path("lake", "ev/part-*.parquet") == "s3a://lake/ev/part-*.parquet"
-
-
-def test_python_datasource_matches_driver_parser(spark, reference_dump):
-    """The Spark-4 Python DataSource (partition-parallel parse) must
-    produce exactly the driver-side parser's dataset."""
-    from week4_musemotion_spark.sources.sql_inserts import read_sql_inserts
-    from week4_musemotion_spark.sources.sql_inserts_ds import SqlInsertsDataSource
-
-    spark.dataSource.register(SqlInsertsDataSource)
-    ds = spark.read.format("sql_inserts").load(reference_dump)
-    assert ds.rdd.getNumPartitions() > 1  # the parse actually distributes
-    a = sorted(map(tuple, ds.collect()))
-    b = sorted(map(tuple, read_sql_inserts(spark, reference_dump).collect()))
-    assert a == b
-
-
-def test_python_datasource_quoted_tuples(spark):
-    from week4_musemotion_spark.sources.sql_inserts_ds import SqlInsertsDataSource
-
-    p = "/tmp/_ins_ds_test.sql"
-    with open(p, "w") as f:
-        f.write(
-            "INSERT INTO `t` (`a`, `b`, `c`) VALUES\n"
-            "('x, y', 'it''s (fine)', NULL);\n"
-            "INSERT INTO `t` (`a`, `b`, `c`) VALUES\n"
-            "('', 'POINT (1 2)', '3');\n"
-        )
-    spark.dataSource.register(SqlInsertsDataSource)
-    rows = (
-        spark.read.format("sql_inserts")
-        .option("canonicalize", "false")
-        .load(p)
-        .collect()
-    )
-    assert sorted(map(tuple, rows)) == [
-        ("", "POINT (1 2)", "3"),
-        ("x, y", "it's (fine)", None),
-    ]

@@ -1,18 +1,15 @@
-"""Round-10 staged queries (queries/staged_r10.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential checks here,
-so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differential and semantic checks for the corpus-accounting
+queries in ``queries/corpus_accounting.py``."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_SMOKE as SF, staged_diff
+from tests.conftest import SF_SMOKE as SF, oracle_diff
 
 TABLES = ("documents",)
 
 
 def _diff(spark, name, tables=TABLES):
-    from week4_musemotion_spark.queries import staged_r10  # noqa: F401 — registers
-
-    return staged_diff(spark, name, tables)
+    return oracle_diff(spark, name, tables)
 
 
 def test_effective_tokens_matches_oracle(spark):
@@ -56,13 +53,13 @@ def test_bm25_saturates_vs_tfidf(spark):
     # n_docs here matches the query's own count(*) over documents
     # (NOT distinct doc_ids of the token stream — zero-token docs
     # would silently shrink that and understate the cap).
-    from tests.conftest import staged_oracle
+    from tests.conftest import duckdb_oracle
 
-    from week4_musemotion_spark.queries import staged_r10 as s10
+    from week4_musemotion_spark.queries import corpus_accounting as s10
     from week4_musemotion_spark.queries.registry import REGISTRY
 
-    top = staged_oracle(REGISTRY["q_bm25_topk"].oracle, TABLES)
-    idf = staged_oracle(
+    top = duckdb_oracle(REGISTRY["q_bm25_topk"].oracle, TABLES)
+    idf = duckdb_oracle(
         f"""
         WITH tok AS (SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'), w -> w != '')) AS term
                      FROM documents),
@@ -95,7 +92,7 @@ def test_stream_counts_compacted_matches_oracle(spark):
     got = _diff(spark, "q_stream_counts_compacted", ("events",))
     assert got.cnt.sum() == 1_000
     # the compacted fixture's log really is one folded batch
-    from week4_musemotion_spark.queries.staged_r10 import (
+    from week4_musemotion_spark.queries.corpus_accounting import (
         _compacted_count_store_fixture,
     )
     from tests.conftest import SF_SMOKE

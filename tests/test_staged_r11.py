@@ -1,10 +1,9 @@
-"""Round-11 staged queries (queries/staged_r11.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential checks here,
-so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differential and semantic checks for the ranking audits
+in ``queries/ranking_audits.py``."""
 
 from __future__ import annotations
 
-from tests.conftest import staged_diff
+from tests.conftest import oracle_diff
 
 TABLES = ("documents",)
 
@@ -14,9 +13,7 @@ _RBO_CEIL_PPM = 878_423
 
 
 def _diff(spark, name, tables=TABLES):
-    from week4_musemotion_spark.queries import staged_r11  # noqa: F401 — registers
-
-    return staged_diff(spark, name, tables)
+    return oracle_diff(spark, name, tables)
 
 
 def test_rank_overlap_rbo_matches_oracle(spark):
@@ -37,7 +34,7 @@ def test_rbo_coefficients_are_exact():
     # coefficient equals (1-p) p^(d-1)/d over the common denominator
     from fractions import Fraction
 
-    from week4_musemotion_spark.queries.staged_r11 import (
+    from week4_musemotion_spark.queries.ranking_audits import (
         _RBO_D,
         _RBO_K,
         _RBO_NUMS,

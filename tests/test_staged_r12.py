@@ -1,18 +1,15 @@
-"""Round-12 staged queries (queries/staged_r12.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential checks here,
-so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differential and semantic checks for the distribution
+audits in ``queries/distribution_audits.py``."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import staged_diff
+from tests.conftest import oracle_diff
 
 
 def _diff(spark, name, tables):
-    from week4_musemotion_spark.queries import staged_r12  # noqa: F401 — registers
-
-    return staged_diff(spark, name, tables)
+    return oracle_diff(spark, name, tables)
 
 
 def test_len_quantiles_matches_oracle_and_brackets_truth(spark):
@@ -63,8 +60,6 @@ def test_repetition_simpson_flags_planted_degenerate_doc(spark):
     # a doc that is one token repeated 50x must dominate its source:
     # simpson = 1e6 exactly (any two draws collide)
     import pandas as pd
-
-    from week4_musemotion_spark.queries import staged_r12  # noqa: F401
 
     rows = [(i, "alpha beta gamma delta epsilon zeta", "en", "clean", 1) for i in range(20)]
     rows.append((99, " ".join(["loop"] * 50), "en", "degen", 1))

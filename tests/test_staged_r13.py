@@ -1,18 +1,15 @@
-"""Round-13 staged queries (queries/staged_r13.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential checks here,
-so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differential and semantic checks for the quantile and
+PQ queries in ``queries/pq_quantiles.py``."""
 
 from __future__ import annotations
 
 import os
 
-from tests.conftest import staged_diff
+from tests.conftest import oracle_diff
 
 
 def _diff(spark, name, tables):
-    from week4_musemotion_spark.queries import staged_r13  # noqa: F401 — registers
-
-    return staged_diff(spark, name, tables)
+    return oracle_diff(spark, name, tables)
 
 
 def test_stream_len_quantiles_matches_batch_oracle(spark):

@@ -1,15 +1,13 @@
-"""Round-14 staged queries (queries/staged_r14.py — not yet imported
-by queries/__init__): Spark-vs-DuckDB differential + semantics."""
+"""Spark-vs-DuckDB differential and semantic checks for
+``queries/retrieval_eval.py``."""
 
 from __future__ import annotations
 
-from tests.conftest import staged_diff
+from tests.conftest import oracle_diff
 
 
 def _diff(spark, name, tables):
-    from week4_musemotion_spark.queries import staged_r14  # noqa: F401 — registers
-
-    return staged_diff(spark, name, tables)
+    return oracle_diff(spark, name, tables)
 
 
 def test_ndcg_eval_matches_oracle_and_bounds(spark):
@@ -25,7 +23,7 @@ def test_ndcg_eval_matches_oracle_and_bounds(spark):
 def test_ndcg_discount_table_is_the_log2_rounding():
     import math
 
-    from week4_musemotion_spark.queries.staged_r14 import _NDCG_K, _NDCG_W
+    from week4_musemotion_spark.queries.retrieval_eval import _NDCG_K, _NDCG_W
 
     assert len(_NDCG_W) == _NDCG_K
     for i, w in enumerate(_NDCG_W, start=1):

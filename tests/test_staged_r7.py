@@ -1,21 +1,18 @@
-"""Round-7 staged queries (queries/staged_r7.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential check here,
-so round 7 can register them with evidence already in hand."""
+"""Spark-vs-DuckDB differential and semantic checks for the sketch-quality
+queries in ``queries/sketch_quality.py``."""
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
 
-from tests.conftest import SF_SMOKE, staged_diff
+from tests.conftest import SF_SMOKE, oracle_diff
 
 TABLES = ("documents", "embeddings")
 
 
 def _diff(spark, name):
-    from week4_musemotion_spark.queries import staged_r7  # noqa: F401 — registers
-
-    return staged_diff(spark, name, TABLES)
+    return oracle_diff(spark, name, TABLES)
 
 
 def test_minhash_fidelity_matches_oracle(spark):
@@ -45,7 +42,6 @@ def test_embedding_whiten_shape(spark):
     # Driver contract: output must be SCALAR-typed even for rows-only
     # queries (the driver's canonicalizer pandas-sorts every column;
     # array<double> output was round 7's one red driver row).
-    from week4_musemotion_spark.queries import staged_r7  # noqa: F401
     from week4_musemotion_spark.queries.registry import REGISTRY
 
     df = REGISTRY["q_embedding_whiten"].builder(spark, SF_SMOKE)
@@ -74,7 +70,6 @@ def test_dup_inflation_matches_oracle(spark):
 
 
 def test_ann_recall_report(spark):
-    from week4_musemotion_spark.queries import staged_r7  # noqa: F401
     from week4_musemotion_spark.queries.registry import REGISTRY
 
     spec = REGISTRY["q_ann_recall_report"]

@@ -1,18 +1,15 @@
-"""Second staged wave (queries/staged_r7.py additions — not yet
-imported by queries/__init__): full Spark-vs-DuckDB differential
-checks here, so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differential and semantic checks for the distinct,
+Bloom-join and leakage-split queries in ``queries/sketch_quality.py``."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_SMOKE, staged_diff
+from tests.conftest import SF_SMOKE, oracle_diff
 
 TABLES = ("documents", "embeddings", "lineitem", "part", "supplier")
 
 
 def _diff(spark, name):
-    from week4_musemotion_spark.queries import staged_r7  # noqa: F401 — registers
-
-    return staged_diff(spark, name, TABLES)
+    return oracle_diff(spark, name, TABLES)
 
 
 def test_distinct_sketch_matches_oracle(spark):

@@ -1,18 +1,15 @@
-"""Round-8 staged queries (queries/staged_r8.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential checks here,
-so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differential checks for the sketch audits in
+``queries/sketch_audits.py``."""
 
 from __future__ import annotations
 
-from tests.conftest import staged_diff
+from tests.conftest import oracle_diff
 
 TABLES = ("documents", "lineitem", "part", "events", "embeddings")
 
 
 def _diff(spark, name):
-    from week4_musemotion_spark.queries import staged_r8  # noqa: F401 — registers
-
-    return staged_diff(spark, name, TABLES)
+    return oracle_diff(spark, name, TABLES)
 
 
 def test_dup_span_coverage_matches_oracle(spark):

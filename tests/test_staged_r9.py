@@ -1,18 +1,15 @@
-"""Round-9 staged queries (queries/staged_r9.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential checks here,
-so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differential and semantic checks for the provenance
+queries in ``queries/provenance.py``."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_SMOKE as SF, staged_diff
+from tests.conftest import SF_SMOKE as SF, oracle_diff
 
 TABLES = ("documents", "events")
 
 
 def _diff(spark, name):
-    from week4_musemotion_spark.queries import staged_r9  # noqa: F401 — registers
-
-    return staged_diff(spark, name, TABLES)
+    return oracle_diff(spark, name, TABLES)
 
 
 def test_winnow_density_matches_oracle(spark):
@@ -38,16 +35,16 @@ def test_winnow_matches_pure_python_reference(spark):
 
     from pyspark.sql import functions as F
 
-    from week4_musemotion_spark.queries import staged_r9  # noqa: F401
+    from week4_musemotion_spark.queries import provenance
 
     got = {
         r["doc_id"]: (r["n_grams"], r["n_prints"])
-        for r in staged_r9._winnow_selected(spark, SF)
+        for r in provenance._winnow_selected(spark, SF)
         .groupBy("doc_id")
         .agg(
             (F.max("pos") + 1).alias("n_grams"),
             F.countDistinct(
-                F.when(F.col("pos") >= staged_r9._WW - 1, F.col("selkey"))
+                F.when(F.col("pos") >= provenance._WW - 1, F.col("selkey"))
             ).alias("n_prints"),
         )
         .collect()
@@ -56,7 +53,7 @@ def test_winnow_matches_pure_python_reference(spark):
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(f"{SF}/documents.parquet", columns=["doc_id", "text"])
-    k, w = staged_r9._WK, staged_r9._WW
+    k, w = provenance._WK, provenance._WW
     for doc_id, text in zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()):
         toks = [t for t in re.split(r"\s+", text) if t]
         grams = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
@@ -84,7 +81,6 @@ def test_winnow_position_guard_survives_catalyst(spark):
     # (F.assert_true lowers to raise_error; Catalyst prunes it unless
     # it rides a used expression — verify-skill round-6 note)
     from week4_musemotion_spark.plans.audit import plan_string
-    from week4_musemotion_spark.queries import staged_r9  # noqa: F401
     from week4_musemotion_spark.queries.registry import REGISTRY
 
     df = REGISTRY["q_winnow_density"].builder(spark, "/root/testdata/sf0.001")

@@ -1,10 +1,10 @@
-"""Property tests for the winnowing selection (staged_r9) — pure
+"""Property tests for the winnowing selection (provenance) — pure
 Python reference vs the DuckDB oracle fragment on ADVERSARIAL token
 streams the real corpus never produces: tiny alphabets (mass hash
 ties, exercising the rightmost-on-ties packed-key encoding), lengths
 straddling the k and w boundaries, and constant documents (every
 window tied).  No Spark session — the Spark twin is pinned to the
-same oracle by tests/test_staged_r9.py on the real corpus.
+same oracle by the provenance oracle tests on the real corpus.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ import duckdb
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from week4_musemotion_spark.queries.staged_r9 import _WK, _WW, _winnow_sel_sql
+from week4_musemotion_spark.queries.provenance import _WK, _WW, _winnow_sel_sql
 
 #: 3-token alphabet: with k=4 grams over 3 symbols there are at most
 #: 81 distinct grams, so long documents repeat grams constantly and

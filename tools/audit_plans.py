@@ -2,12 +2,7 @@
 physical plan (shuffles, joins, top-k fusion, codegen, scans) so a
 pathological plan stands out at a glance.
 
-Usage: python tools/audit_plans.py [sf_dir] [--json] [--staged]
-
-``--staged`` also imports every ``queries/staged_*.py`` wave before
-reading the registry, so not-yet-activated queries get the same plan
-snapshot/diff coverage as registered ones — a plan pathology in a
-staged wave is caught at build time, not at activation time.
+Usage: python tools/audit_plans.py [sf_dir] [--json]
 
 ``--json`` emits one JSON object of per-query plan metrics counted
 on the SIMPLE plan (each node appears once — the table mode's
@@ -44,19 +39,13 @@ def plan_metrics(p: str) -> dict[str, int]:
 
 
 def main() -> int:
-    flags = {"--json", "--staged"}
-    args = [a for a in sys.argv[1:] if a not in flags]
+    args = [a for a in sys.argv[1:] if a != "--json"]
     as_json = "--json" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
 
     from week4_musemotion_spark.plans.audit import plan_string
     from week4_musemotion_spark.queries import REGISTRY
     from week4_musemotion_spark.session import get_spark
-
-    if "--staged" in sys.argv[1:]:
-        from week4_musemotion_spark.queries import import_staged
-
-        import_staged()
 
     spark = get_spark("audit-plans")
     out: dict[str, dict[str, int]] = {}

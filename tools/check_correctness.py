@@ -5,11 +5,7 @@ DuckDB oracle, then compares row count, column names, and
 order-insensitive values (sorted row tuples).  Stricter than a hash
 compare — if this passes, any reasonable value-hash also matches.
 
-Usage:  python tools/check_correctness.py [sf_dir] [--staged] [query ...]
-
-``--staged`` imports every ``queries/staged_*.py`` wave first, so
-not-yet-activated queries can be differentially checked at any SF by
-name, exactly like registered ones.
+Usage:  python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -43,7 +39,7 @@ def _rows(rows, cols):
 def main() -> int:
     import os
 
-    argv = [a for a in sys.argv[1:] if a != "--staged"]
+    argv = sys.argv[1:]
     # sf_dir is optional BEFORE query names: only an arg that is an
     # actual directory is taken as sf_dir, so omitting it cannot
     # silently consume the first query name as a data path.  An arg
@@ -67,11 +63,6 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEMORY", "16g")
 
     from week4_musemotion_spark.queries import REGISTRY
-
-    if "--staged" in sys.argv[1:]:
-        from week4_musemotion_spark.queries import import_staged
-
-        import_staged()
     from week4_musemotion_spark.session import get_spark
 
     spark = get_spark("check-correctness")

@@ -374,7 +374,7 @@ def main() -> int:
 
         cms = cms_sketch(sh_stream.select("s"), [], "s", width=8192, depth=4)
         if only is None or "bloom_pruned_join" in only:
-            from week4_musemotion_spark.queries.staged_r7 import _bloom_part_pred
+            from week4_musemotion_spark.queries.sketch_quality import _bloom_part_pred
 
             bdim = part.filter(_bloom_part_pred())
             t0 = time.perf_counter()
@@ -412,7 +412,7 @@ def main() -> int:
             )
         )
 
-        # round-9 staged shapes: winnowing selection (posexplode →
+        # round-9 shapes: winnowing selection (posexplode →
         # packed key → ONE window-min + per-doc agg on the same keys
         # — must track the stream linearly with a single keyed
         # shuffle) and the df-capped substring-run join (amplified
@@ -420,7 +420,7 @@ def main() -> int:
         # _RUN_MAXDF, so the stop-gram filter — not fanout — absorbs
         # the duplication flood; the join must NOT grow
         # quadratically).
-        from week4_musemotion_spark.queries.staged_r9 import (
+        from week4_musemotion_spark.queries.provenance import (
             _H40 as _wH40,
             _POSM as _wPOSM,
             _RUN_MAXDF as _rMAXDF,
@@ -468,7 +468,7 @@ def main() -> int:
             .agg(F.count(F.lit(1)).alias("m"))
         )
 
-        # round-10 staged shapes: fixed-point BM25 (term filter below
+        # round-10 shapes: fixed-point BM25 (term filter below
         # the tf aggregate — only matching tokens shuffle, so cost
         # tracks the scan) and the effective-token accounting (CC
         # over banded pairs + cluster-size join back; the corpus scan
@@ -480,7 +480,7 @@ def main() -> int:
         from week4_musemotion_spark.queries.extensions import (
             JACCARD_THRESHOLD as _JT,
         )
-        from week4_musemotion_spark.queries.staged_r10 import (
+        from week4_musemotion_spark.queries.corpus_accounting import (
             _BM25_B_E3,
             _BM25_K1_E3,
             _BM25_TERMS,
@@ -615,217 +615,6 @@ def main() -> int:
             adc.write.format("noop").mode("overwrite").save()
             results.setdefault("pq_encode_adc", {})[n] = round(time.perf_counter() - t0, 2)
 
-        # round-10 staged shapes (r16/r17 backlog): per-copy token
-        # namespaces (the round-3 jaccard trick) keep copies mutually
-        # dissimilar, so shingle df — and with it the rare-shingle
-        # blocking volume and the near-dup pair count — grows linearly
-        # with the corpus instead of quadratically per planted clone.
-        from week4_musemotion_spark.functions.text import shingles as _shingles
-        from week4_musemotion_spark.operators.mixing import (
-            deterministic_shuffle as _detsh,
-        )
-        from week4_musemotion_spark.queries.extensions import (
-            JACCARD_THRESHOLD as _JT2,
-        )
-
-        ns_copies = []
-        for i in range(n):
-            ns_copies.append(
-                doc0.select(
-                    (F.col("doc_id") + i * 1_000_000_000).alias("doc_id"),
-                    "source",
-                    F.expr(
-                        f"concat_ws(' ', transform(split(text, ' '), t -> concat(t, '_{i}')))"
-                    ).alias("text"),
-                )
-            )
-        ns_docs = reduce(DataFrame.unionByName, ns_copies)
-        ns_docs.count()
-        # TF-weighted multiset Jaccard (staged_r16 q_weighted_jaccard_pairs
-        # chain): tf table pinned, rare-shingle blocking df in [2, 8],
-        # sum-min verification on shared support only
-        _wtf = (
-            ns_docs.select(
-                "doc_id", F.explode(_shingles(_tokens(F.col("text")), 5)).alias("s")
-            )
-            .groupBy("doc_id", "s")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-            .localCheckpoint(eager=False)
-        )
-        _wtot = _wtf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("tot"))
-        _wrare = (
-            _wtf.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df").between(2, 8)).select("s")
-        )
-        _wpost = _wtf.join(_wrare, "s").select("s", "doc_id")
-        _wcand = (
-            _wpost.alias("a").join(_wpost.alias("b"), "s")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
-        wjac = (
-            _wcand.join(_wtf.alias("a"), F.col("a.doc_id") == F.col("doc_a"))
-            .join(
-                _wtf.alias("b"),
-                (F.col("b.doc_id") == F.col("doc_b")) & (F.col("b.s") == F.col("a.s")),
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.sum(F.least(F.col("a.tf"), F.col("b.tf"))).alias("inter_w"))
-            .join(_wtot.withColumnsRenamed({"doc_id": "doc_a", "tot": "ta"}), "doc_a")
-            .join(_wtot.withColumnsRenamed({"doc_id": "doc_b", "tot": "tb"}), "doc_b")
-            .select("doc_a", "doc_b", "inter_w", (F.col("ta") + F.col("tb") - F.col("inter_w")).alias("union_w"))
-        )
-        # DSIR two-model gain (staged_r16 q_dsir_select chain): both
-        # unigram models from ONE token-keyed aggregation, exact
-        # bit-length log2, per-doc ppm gain — key-shift amplification
-        # (docs below) keeps sources, so the target model scales with
-        # its stratum and per-doc work is one model hash-join
-        _dtok = docs.select(
-            "doc_id", "source", F.explode(_tokens(F.col("text"))).alias("term")
-        )
-        _dcnt = _dtok.groupBy("term").agg(
-            F.count(F.lit(1)).cast("long").alias("cc"),
-            F.count(F.when(F.col("source") == "src0", 1)).cast("long").alias("ct"),
-        )
-        _dtotals = _dcnt.agg(
-            F.sum("cc").cast("long").alias("nc"), F.sum("ct").cast("long").alias("nt")
-        )
-        _dmodel = (
-            _dcnt.filter(F.col("ct") > 0)
-            .join(F.broadcast(_dtotals))
-            .select(
-                "term",
-                (F.length(F.bin(F.expr("nc div cc"))) - F.lit(1)).cast("long").alias("bc"),
-                (F.length(F.bin(F.expr("nt div ct"))) - F.lit(1)).cast("long").alias("bt"),
-            )
-        )
-        dsir = (
-            _dtok.join(_dmodel, "term")
-            .groupBy("doc_id", "source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_scored"),
-                F.sum("bc").cast("long").alias("sbc"),
-                F.sum("bt").cast("long").alias("sbt"),
-            )
-            .select(
-                "doc_id",
-                (_idt(_dec(F.col("sbc")) * 1_000_000, F.col("n_scored"))
-                 - _idt(_dec(F.col("sbt")) * 1_000_000, F.col("n_scored"))).alias("gain_ppm"),
-            )
-            .orderBy(F.desc("gain_ppm"), "doc_id")
-            .limit(100)
-        )
-        # in-batch collision audit (staged_r17 q_inbatch_collisions
-        # chain): two-pass global index -> batch, near-dup pairs from
-        # banded shingle joins, double equi-join, two 1-row aggregates
-        _iasg = (
-            _detsh(ns_docs.select("doc_id"), "doc_id")
-            .select("doc_id", _idt(F.col("pos"), F.lit(32)).alias("batch"))
-            .localCheckpoint(eager=False)
-        )
-        _ipairs = _jp(ns_docs, _JT2).select("doc_a", "doc_b")
-        inbatch = (
-            _ipairs.join(
-                _iasg.select(F.col("doc_id").alias("doc_a"), F.col("batch").alias("ba")), "doc_a"
-            )
-            .join(
-                _iasg.select(F.col("doc_id").alias("doc_b"), F.col("batch").alias("bb")), "doc_b"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_pairs"),
-                F.sum(F.when(F.col("ba") == F.col("bb"), 1).otherwise(0)).alias("n_coll"),
-            )
-        )
-
-        # round-12 staged r21 shapes: the Poissonized-bootstrap resample
-        # (row-local 64-way hash fan-out collapsed map-side to
-        # sources×64 before the only shuffle — cost must scale with
-        # the SCAN, never the shuffle) and the KS drift grid (all
-        # window work on the distinct-values × sources grid, which
-        # key-shift amplification does NOT grow — flat-ish timings
-        # here are the values-bounded-state claim, measured)
-        from week4_musemotion_spark.queries.staged_r21 import _R as _BR
-        from week4_musemotion_spark.queries.staged_r21 import _SEED_BASE as _BSEED
-        from week4_musemotion_spark.queries.staged_r21 import _pois_w_sql as _bw
-
-        _bu = _sh64(
-            F.concat(
-                (F.col("r") + F.lit(_BSEED)).cast("string"),
-                F.lit(":"),
-                F.col("doc_id").cast("string"),
-            )
-        )
-        boot = (
-            docs.select("doc_id", "source", "n_chars")
-            .withColumn("r", F.explode(F.sequence(F.lit(0), F.lit(_BR - 1))))
-            .select("source", "n_chars", "r", _bu.alias("u"))
-            .select("source", "n_chars", "r", F.expr(_bw("u")).alias("w"))
-            .groupBy("source", "r")
-            .agg(
-                F.sum("w").cast("long").alias("n_r"),
-                F.sum(_dec(F.col("w") * F.col("n_chars"))).alias("s_r"),
-            )
-            .filter(F.col("n_r") > 0)
-            .select("source", _idt(F.col("s_r") * 1_000_000, F.col("n_r")).alias("m"))
-            .groupBy("source")
-            .agg(F.min("m").alias("lo"), F.max("m").alias("hi"))
-        )
-        _kc = (
-            docs.groupBy("source", F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-            .localCheckpoint(eager=False)
-        )
-        _kn = _kc.groupBy("source").agg(F.sum("cnt").cast("long").alias("n_s"))
-        _ktot = _kn.agg(F.sum("n_s").cast("long").alias("nn"))
-        _kcva = (
-            _kc.groupBy("v")
-            .agg(F.sum("cnt").cast("long").alias("ca"))
-            .select(
-                "v",
-                F.sum("ca")
-                .over(_W.orderBy("v").rowsBetween(_W.unboundedPreceding, _W.currentRow))
-                .cast("long")
-                .alias("cum_all"),
-            )
-        )
-        ksd = (
-            _kn.crossJoin(F.broadcast(_kcva))
-            .join(_kc.select("source", "v", "cnt"), ["source", "v"], "left")
-            .select(
-                "source",
-                "n_s",
-                "v",
-                "cum_all",
-                F.sum(F.coalesce(F.col("cnt"), F.lit(0)))
-                .over(
-                    _W.partitionBy("source")
-                    .orderBy("v")
-                    .rowsBetween(_W.unboundedPreceding, _W.currentRow)
-                )
-                .cast("long")
-                .alias("cum_s"),
-            )
-            .crossJoin(F.broadcast(_ktot))
-            .select(
-                "source",
-                "n_s",
-                (F.col("nn") - F.col("n_s")).alias("n_rest"),
-                F.abs(
-                    _dec(F.col("cum_s")) * (F.col("nn") - F.col("n_s"))
-                    - _dec(F.col("cum_all") - F.col("cum_s")) * F.col("n_s")
-                ).alias("d_num"),
-            )
-            .groupBy("source", "n_s", "n_rest")
-            .agg(F.max("d_num").alias("d"))
-            .select(
-                "source",
-                _idt(F.col("d") * 1_000_000, _dec(F.col("n_s")) * F.col("n_rest")).alias(
-                    "ks_e6"
-                ),
-            )
-        )
-
         for shape, df in [
             ("flagship_topk_join", flagship),
             ("group_agg", agg),
@@ -853,11 +642,6 @@ def main() -> int:
             ("bm25_fixed_point", bm25),
             ("qsketch_quantiles", qsk),
             ("tv_distance_pairs", tvd),
-            ("weighted_jaccard_dfcap", wjac),
-            ("dsir_two_model_gain", dsir),
-            ("inbatch_collision_audit", inbatch),
-            ("bootstrap_poisson_resample", boot),
-            ("ks_drift_grid_windows", ksd),
         ]:
             if only is not None and shape not in only:
                 continue

@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 
 
 #: Micro-seconds per day — the day-bucketing divisor every daily-grid
-#: consumer shares (staged CUSUM/seasonal monitors, streaming count
+#: consumer shares (CUSUM/seasonal monitors, streaming count
 #: store).  Bucketing truncates, so epochs are assumed NON-NEGATIVE
 #: (int_div_trunc's p ≥ 0 contract; DuckDB ``//`` truncates toward
 #: zero and would disagree on pre-1970 timestamps).

@@ -59,11 +59,3 @@ def double_array_lit(values) -> Column:
     parsed literal is bit-identical after analysis (repr() is the
     shortest round-trip double rendering) and costs ~6 ms."""
     return _array_lit(values, lambda v: f"{float(v)!r}D")
-
-
-def long_array_lit(values) -> Column:
-    """``array<bigint>`` literal rendered as ONE parsed SQL
-    expression — the integer twin of :func:`double_array_lit`, for
-    operators whose broadcast state is exact (perceptron weights,
-    quantized centers)."""
-    return _array_lit(values, lambda v: f"{int(v)}L")

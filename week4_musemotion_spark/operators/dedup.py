@@ -320,7 +320,7 @@ def simhash_signatures(
     share most of the vocab, so votes correlate corpus-wide) while
     shingle signatures track the same n-gram sets a Jaccard detector
     measures; pick the space to match the detector you pair it with
-    (see staged q_detector_agreement / q_detector_agreement_ngram for
+    (see q_detector_agreement / q_detector_agreement_ngram for
     the measured kappa gap: 0.012 vs ~0.9).
 
     Shape: explode distinct features, hash each once, then one hash

@@ -4,10 +4,9 @@ The reference's loaders overwrite their SQL tables in place
 (pipeline.py:166 ``if_exists='replace'``) — one bad run destroys the
 previous state.  Table formats solve this with versioned snapshots;
 this is the same idea on plain parquet: every write lands in a fresh
-``v_<n>`` directory, readers resolve ``latest`` (or any retained
-version — time travel), and old versions remain until an explicit
-``vacuum``.  Writers never mutate a committed version, so readers
-are isolated from concurrent writes for free.
+``v_<n>`` directory, readers resolve ``latest`` (or any committed
+version — time travel).  Writers never mutate a committed version,
+so readers are isolated from concurrent writes for free.
 
 Commit protocol: every write lands in a ``.staging-*`` directory (a
 name the version regex never matches, so no other writer's cleanup
@@ -24,7 +23,7 @@ Concurrent writers thus serialize safely on rename atomicity
 (last-committer gets the higher number); local-FS implementation —
 on an object store this is the table-format commit layer
 (Delta/Iceberg), which this module is a conscious stand-in for — the
-API (write/read/list/vacuum) maps 1:1.
+API (write/read/list) maps 1:1.
 """
 
 from __future__ import annotations
@@ -117,15 +116,3 @@ def read_version(spark: SparkSession, base: str, version: int | None = None) -> 
     if version not in committed:
         raise FileNotFoundError(f"version {version} not committed under {base} (have {committed})")
     return spark.read.parquet(os.path.join(base, f"v_{version:05d}"))
-
-
-def vacuum(base: str, keep_last: int = 2) -> list[int]:
-    """Remove all but the newest ``keep_last`` committed versions;
-    returns the removed version numbers.  Never removes the latest
-    version regardless of ``keep_last``."""
-    committed = _committed(base)
-    keep = max(1, keep_last)
-    doomed = committed[:-keep] if len(committed) > keep else []
-    for n in doomed:
-        shutil.rmtree(os.path.join(base, f"v_{n:05d}"))
-    return doomed

@@ -26,61 +26,14 @@ from week4_musemotion_spark.queries import mixing  # noqa: E402,F401
 from week4_musemotion_spark.queries import textmix  # noqa: E402,F401
 from week4_musemotion_spark.queries import semantic  # noqa: E402,F401
 from week4_musemotion_spark.queries import gatelog  # noqa: E402,F401
+from week4_musemotion_spark.queries import sketch_quality  # noqa: E402,F401
+from week4_musemotion_spark.queries import sketch_audits  # noqa: E402,F401
+from week4_musemotion_spark.queries import provenance  # noqa: E402,F401
+from week4_musemotion_spark.queries import corpus_accounting  # noqa: E402,F401
+from week4_musemotion_spark.queries import ranking_audits  # noqa: E402,F401
+from week4_musemotion_spark.queries import distribution_audits  # noqa: E402,F401
+from week4_musemotion_spark.queries import pq_quantiles  # noqa: E402,F401
+from week4_musemotion_spark.queries import retrieval_eval  # noqa: E402,F401
 
-# Round-7 activation: the staged r7 wave (pre-built + 3-SF
-# differential-tested in round 6; see QUERIES.md and staged_r7.py).
-from week4_musemotion_spark.queries import staged_r7  # noqa: E402,F401
-
-# Round-8 activation: the staged r8 wave (span coverage, bloom FP
-# audit, source-overlap HLL, CMS point error, stream-distinct report,
-# semantic threshold sweep, HLL fold grid, RP distortion).
-from week4_musemotion_spark.queries import staged_r8  # noqa: E402,F401
-
-# Round-9 activation: the staged r9 wave — the provenance /
-# contamination layer (winnowing density+pairs, substring runs,
-# detector kappa x2, shingle-SimHash pairs, provenance bitmasks,
-# CUSUM drift, cluster purity, quality bias).
-from week4_musemotion_spark.queries import staged_r9  # noqa: E402,F401
-
-# Round-10 activation: the staged r10 wave — the corpus-accounting /
-# governance layer (effective tokens, k-anonymity quasi-identifier
-# audit, exact-integer BM25 top-k, seasonal-naive residual drift,
-# streaming count store before/after compaction, language confusion
-# matrix, winnowing recall vs exact Jaccard).
-from week4_musemotion_spark.queries import staged_r10  # noqa: E402,F401
-
-# Round-11 activation: the staged r11 + r12 waves together — exact-
-# integer RBO rank overlap, intra-doc self-repetition runs, Benford
-# first-digit audit (r11); qsketch length/embedding-norm quantiles,
-# pairwise source TV distance, Simpson repetition index, streaming
-# watermark-delay audit, session-gap histogram, MinHash band tuner
-# (r12).  Both waves were pre-built with 3-SF differential evidence
-# in rounds 4-5 and re-validated every round since.
-from week4_musemotion_spark.queries import staged_r11  # noqa: E402,F401
-from week4_musemotion_spark.queries import staged_r12  # noqa: E402,F401
-
-# Round-12 activation: the staged r13 + r14 waves together — the PQ
-# lifecycle (code histogram, ADC top-k, distortion audit, in-batch
-# collision audit), the quantile-strategy triple (streaming qsketch
-# store, exact per-source quantiles, per-nation price quantiles),
-# the functional-dependency profiler, and nDCG@20 ranking eval.
-# Pre-built with 3-SF differential evidence in rounds 9-10 and
-# re-validated every round since (STAGED_BENCH_r11.json).
-from week4_musemotion_spark.queries import staged_r13  # noqa: E402,F401
-from week4_musemotion_spark.queries import staged_r14  # noqa: E402,F401
-
-
-def import_staged() -> None:
-    """Import every ``staged_*.py`` wave (idempotent), registering its
-    queries as a side effect — the ONE definition of how staged waves
-    load, shared by the tools' ``--staged`` flags and test canaries
-    (the per-wave import chains cover only r9+; r8 hangs off the
-    now-active r7, so a chain import alone would miss it)."""
-    import glob
-    import importlib
-    import os
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(glob.glob(os.path.join(here, "staged_*.py"))):
-        mod = os.path.splitext(os.path.basename(path))[0]
-        importlib.import_module(f"week4_musemotion_spark.queries.{mod}")
+# The reference's own SQL corpus: run through ``run_corpus``, not the registry.
+from week4_musemotion_spark.queries import musemotion_sql  # noqa: E402,F401

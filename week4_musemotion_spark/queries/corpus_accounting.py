@@ -1,9 +1,4 @@
-"""Round-10 staged queries — registered on import, NOT imported by
-``queries/__init__`` yet, so the active registry (and the benched
-battery) is unchanged until activation.  ``import
-week4_musemotion_spark.queries.staged_r10`` to register.
-
-Wave theme: corpus accounting under duplication + governance:
+"""Corpus accounting under duplication, plus governance audits:
 
 - q_effective_tokens — multiplicity-discounted corpus size: each
   document's tokens weighted by 1/|its near-dup cluster|, so a
@@ -33,9 +28,9 @@ Wave theme: corpus accounting under duplication + governance:
   streaming design rule (the idempotent-merge branch is pinned by
   q_stream_distinct_report).
 
-Differential evidence: tests/test_staged_r10.py (Spark vs DuckDB at
-sf0.001 via conftest.staged_diff; sf0.01/sf0.1 run manually per the
-verify-skill round-6 note).
+Differential evidence: the ``*_matches_oracle`` tests (Spark vs DuckDB
+at sf0.001 via conftest.oracle_diff; sf0.01/sf0.1 via
+``tools/check_correctness.py``).
 """
 
 from __future__ import annotations
@@ -55,9 +50,8 @@ from week4_musemotion_spark.queries.registry import query
 
 from week4_musemotion_spark.functions.eventtime import US_PER_DAY
 
-# staged_r9's shared daily-grid helpers; importing it also registers
-# the r9 wave, which is the intended activation order (r9 < r10)
-from week4_musemotion_spark.queries.staged_r9 import (
+# provenance's shared daily-grid and winnowing helpers
+from week4_musemotion_spark.queries.provenance import (
     _WP_MIN_SHARED,
     _WW,
     _daily_dense,
@@ -617,7 +611,7 @@ def q_winnow_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: both pair sets are bucketed equi-joins (shingle buckets /
     print buckets), the comparison is one left join on the tiny true
     pair set, and the report is a single row."""
-    from week4_musemotion_spark.queries.staged_r9 import _winnow_selected
+    from week4_musemotion_spark.queries.provenance import _winnow_selected
 
     docs = load_table(spark, sf_dir, "documents")
     # branch-reuse pins (SCALING.md): jac feeds the candidate set

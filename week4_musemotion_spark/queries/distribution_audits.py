@@ -1,9 +1,4 @@
-"""Round-12 staged queries — registered on import, NOT imported by
-``queries/__init__`` yet (the activation budget is ≤ ~10 new
-registrations per round; see the verify-skill rotation note).
-
-Wave theme: portable quantile sketches + distribution drift +
-streaming-semantics tuning + LSH parameter tuning:
+"""Quantile sketches, distribution drift, watermark and LSH tuning audits:
 
 - q_len_quantiles — per-source p50/p90/p99 document length off the
   quarter-octave log-bucket quantile sketch
@@ -37,8 +32,9 @@ streaming-semantics tuning + LSH parameter tuning:
   (0.5 <= j < 0.8) — the 1-(1-s^r)^b formula checked against THIS
   corpus, on the same signatures production banding would use.
 
-Differential evidence: tests/test_staged_r12.py (conftest.staged_diff
-at sf0.001; sf0.01/sf0.1 via ``tools/check_correctness.py --staged``).
+Differential evidence: the ``*_matches_oracle`` tests
+(conftest.oracle_diff at sf0.001; sf0.01/sf0.1 via
+``tools/check_correctness.py``).
 """
 
 from __future__ import annotations
@@ -60,9 +56,6 @@ from week4_musemotion_spark.operators.qsketch import (
 from week4_musemotion_spark.queries.extensions import _jaccard_ctes
 from week4_musemotion_spark.queries.registry import query
 from week4_musemotion_spark.sources.tables import load_table
-
-# chains staged_r11 -> r10 -> r9 registration
-import week4_musemotion_spark.queries.staged_r11  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
@@ -469,7 +462,7 @@ _TUNE_CONFIGS = ((16, 1), (8, 2), (4, 4), (2, 8))
 
 #: Pair domain (exact Jaccard >= this) and the "true dup" threshold
 #: separating recall pairs from sub-threshold (false-positive proxy)
-#: pairs — same constants as the staged-r7 fidelity audit.
+#: pairs — same constants as the sketch_quality fidelity audit.
 _TUNE_MIN_JACCARD = 0.5
 _TUNE_TRUE_E4 = 8000
 

@@ -1,8 +1,4 @@
-"""Round-13 staged queries — registered on import, NOT imported by
-``queries/__init__`` yet (activation budget: see the verify-skill
-rotation note).
-
-Wave theme: streaming quantiles + exact selection + packing audit.
+"""Streaming/exact quantiles, PQ audits and the functional-dependency profiler.
 
 - q_stream_len_quantiles — per-source document-length quantiles read
   from the STREAMING log-bucket sketch store
@@ -42,8 +38,8 @@ Wave theme: streaming quantiles + exact selection + packing audit.
   almost determines script bucket" vs "these columns are
   independent".
 
-Differential evidence: tests/test_staged_r13.py (conftest.staged_diff
-at sf0.001; sf0.01/sf0.1 via ``tools/check_correctness.py --staged``).
+Differential evidence: the ``*_matches_oracle`` tests (conftest.oracle_diff
+at sf0.001; sf0.01/sf0.1 via ``tools/check_correctness.py``).
 """
 
 from __future__ import annotations
@@ -56,9 +52,6 @@ from pyspark.sql import functions as F
 from week4_musemotion_spark.operators.qsketch import quantiles_sql
 from week4_musemotion_spark.queries.registry import query
 from week4_musemotion_spark.sources.tables import load_table
-
-# chains staged_r12 -> r11 -> r10 -> r9 registration
-import week4_musemotion_spark.queries.staged_r12  # noqa: F401
 
 #: Micro-batch count for the replayed corpus stream.
 _QS_BATCHES = 6

@@ -1,11 +1,4 @@
-"""Round-9 staged queries — registered on import, NOT imported by
-``queries/__init__`` yet, so the active registry (and the benched
-battery) is unchanged until activation.  ``import
-week4_musemotion_spark.queries.staged_r9`` to register.
-
-Wave theme: the remaining *provenance / overlap-forensics* layer of a
-training-data pipeline — who copied what from whom, at which
-granularity, and do the detectors agree:
+"""Provenance forensics: who copied what, and whether dup detectors agree.
 
 - q_winnow_density — winnowing fingerprint selection (Schleimer et
   al. 2003, the MOSS algorithm): per-source audit of selected-print
@@ -39,9 +32,9 @@ granularity, and do the detectors agree:
   event counts per type: S_t = D*prefix_t - t*total stays in exact
   BIGINT (no mean floats), peak day + range as the drift verdict.
 
-Differential evidence: tests/test_staged_r9.py (Spark vs DuckDB at
-sf0.001 via conftest.staged_diff; sf0.01/sf0.1 run manually per the
-verify-skill round-6 note).
+Differential evidence: the ``*_matches_oracle`` tests (Spark vs DuckDB at
+sf0.001 via conftest.oracle_diff; sf0.01/sf0.1 via
+``tools/check_correctness.py``).
 """
 
 from __future__ import annotations

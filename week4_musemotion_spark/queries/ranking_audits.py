@@ -1,9 +1,4 @@
-"""Round-11 staged queries — registered on import, NOT imported by
-``queries/__init__`` yet.  ``import
-week4_musemotion_spark.queries.staged_r11`` to register.
-
-Wave theme: ranking agreement + intra-document forensics + numeric
-data QA:
+"""Ranking agreement, intra-document repetition and numeric data QA:
 
 - q_rank_overlap_rbo — rank-biased overlap (Webber et al. 2010)
   between the engine's two retrieval rankings (fixed-point BM25 vs
@@ -24,9 +19,9 @@ data QA:
   the numeric-column QA that flags synthetic or truncated money
   columns before they poison downstream stats.
 
-Differential evidence: tests/test_staged_r11.py (Spark vs DuckDB at
-sf0.001 via conftest.staged_diff; sf0.01/sf0.1 run manually per the
-verify-skill round-6 note).
+Differential evidence: the ``*_matches_oracle`` tests (Spark vs DuckDB at
+sf0.001 via conftest.oracle_diff; sf0.01/sf0.1 via
+``tools/check_correctness.py``).
 """
 
 from __future__ import annotations
@@ -42,9 +37,6 @@ from week4_musemotion_spark.functions.exact import cents, cents_sql, dec, int_di
 from week4_musemotion_spark.functions.hashing import stable_hash64, stable_hash64_sql
 from week4_musemotion_spark.queries.registry import REGISTRY, query
 
-# chains staged_r10 -> staged_r9 registration; r11 composes the BM25
-# oracle from the registry, so the earlier waves must be registered
-import week4_musemotion_spark.queries.staged_r10  # noqa: F401
 from week4_musemotion_spark.queries.extensions import _shingle_expr
 from week4_musemotion_spark.sources.tables import load_table, spread
 
@@ -140,7 +132,7 @@ def q_rank_overlap_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     the comparison is a ≤k×k join plus a 20-row grid —
     driver-free and constant-size beyond the two retrieval scans."""
     from week4_musemotion_spark.queries.pipeline_ops import q_doc_search
-    from week4_musemotion_spark.queries.staged_r10 import q_bm25_topk
+    from week4_musemotion_spark.queries.corpus_accounting import q_bm25_topk
 
     # unpartitioned window = single partition by design: it ranks a
     # LIMIT-20 subtree (Spark's WindowExec warning is about unbounded

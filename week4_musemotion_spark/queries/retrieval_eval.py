@@ -1,8 +1,4 @@
-"""Round-14 staged queries — registered on import, NOT imported by
-``queries/__init__`` yet (activation budget: verify-skill rotation
-note).
-
-Wave seed: retrieval evaluation.
+"""Retrieval evaluation of the engine's own rankings.
 
 - q_ndcg_eval — nDCG@20 of the BM25 ranking against a graded
   relevance oracle (rel(doc) = number of distinct query terms the
@@ -14,8 +10,8 @@ Wave seed: retrieval evaluation.
   on the engine's own ranking via the registered q_bm25_topk oracle
   (single-sourced — the ranking and its evaluation can never drift).
 
-Differential evidence: tests/test_staged_r14.py (conftest.staged_diff
-at sf0.001; sf0.01/sf0.1 via ``tools/check_correctness.py --staged``).
+Differential evidence: the ``*_matches_oracle`` tests (conftest.oracle_diff
+at sf0.001; sf0.01/sf0.1 via ``tools/check_correctness.py``).
 """
 
 from __future__ import annotations
@@ -26,14 +22,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from week4_musemotion_spark.functions.exact import dec, int_div_trunc
+from week4_musemotion_spark.queries.corpus_accounting import _BM25_TERMS, _BM25_TERMS_SQL
+from week4_musemotion_spark.queries.ranking_audits import _ranked_oracle
 from week4_musemotion_spark.queries.registry import REGISTRY, query
-from week4_musemotion_spark.queries.staged_r10 import _BM25_TERMS, _BM25_TERMS_SQL
-from week4_musemotion_spark.queries.staged_r11 import _ranked_oracle
 from week4_musemotion_spark.sources.tables import load_table
-
-# chains staged_r13 -> ... -> r9 registration (q_bm25_topk must be
-# registered for the single-sourced oracle wrap below)
-import week4_musemotion_spark.queries.staged_r13  # noqa: F401
 
 #: Evaluation depth and the e9 discount table w_i = round(1e9 /
 #: log2(i+1)), i = 1..K — Python-precomputed ONCE and rendered into

@@ -1,6 +1,4 @@
-"""ACTIVATED IN ROUND 8 (built + differentially tested in round 7,
-staged behind the ≲10-registrations/round evidence-rotation budget;
-imported by ``queries/__init__`` since round 8).
+"""Sketch audits: span coverage, bloom/CMS/HLL error, projection distortion.
 
 - q_dup_span_coverage — per source, the fraction of 8-gram positions
   whose gram also appears in another document: the cross-document
@@ -52,7 +50,7 @@ from week4_musemotion_spark.queries.extensions import (
     EMBED_DUP_THRESHOLD,
 )
 from week4_musemotion_spark.queries.registry import query
-from week4_musemotion_spark.queries.staged_r7 import (
+from week4_musemotion_spark.queries.sketch_quality import (
     _BLOOM_PART_PRED_SQL,
     _HLL_M,
     _HLL_P,
@@ -212,7 +210,7 @@ def q_bloom_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_positions,
         bloom_words,
     )
-    from week4_musemotion_spark.queries.staged_r7 import _bloom_part_pred
+    from week4_musemotion_spark.queries.sketch_quality import _bloom_part_pred
 
     part = load_table(spark, sf_dir, "part").filter(_bloom_part_pred())
     # pinned: dimk feeds the position build (eager collect) plus the
@@ -352,7 +350,7 @@ def q_source_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_alpha_e7,
         hll_registers,
     )
-    from week4_musemotion_spark.queries.staged_r7 import _HLL_M, _HLL_P, _HLL_W1
+    from week4_musemotion_spark.queries.sketch_quality import _HLL_M, _HLL_P, _HLL_W1
 
     from week4_musemotion_spark.sources.tables import spread
 
@@ -849,7 +847,7 @@ _FOLD_GRID = (10, 9, 8)
 
 def _fold_rho_sql(p: int, h: str = "h") -> str:
     """Oracle rho at an arbitrary precision (the p-parameterized twin
-    of staged_r7._hll_rho_sql)."""
+    of sketch_quality._hll_rho_sql)."""
     w1 = 60 - p + 1
     return (
         f"CASE WHEN ({h} >> {p}) = 0 THEN {w1} "

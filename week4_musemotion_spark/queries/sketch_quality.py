@@ -1,12 +1,4 @@
-"""STAGED FOR ROUND 7 — built and pytest-verified this round, but
-NOT imported by ``queries/__init__`` yet: the driver's ~50-query
-correctness window re-validates the stalest evidence cohort each
-round, and registering more than ~10 new queries per round starves
-that rotation (see SURVEY.md round-6 wave / the verify skill note).
-To activate: add ``from week4_musemotion_spark.queries import
-staged_r7`` to ``queries/__init__.py``.
-
-Sketch-quality and PCA queries:
+"""Sketch-quality, dedup-threshold, PCA, ANN-recall and split-hygiene queries.
 
 - q_minhash_fidelity — per verified near-dup pair, exact Jaccard vs
   the 16-seed portable-MinHash agreement count: the audit that
@@ -27,7 +19,7 @@ Sketch-quality and PCA queries:
 - q_ann_recall_report — rows-only: recall@3 of the LSH and IVF ANNs
   against the exact brute-force baseline, per query vector.
 
-Second wave (sketch-prunes-but-never-decides + split hygiene):
+Sketch-prunes-but-never-decides + split hygiene:
 
 - q_distinct_sketch — per-source exact shingle cardinality vs the
   portable-HLL estimate (operators/sketches.hll_registers) with
@@ -577,7 +569,7 @@ def q_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _bloom_part_pred():
-    """Dim-side predicate for the bloom-pruned join AND staged_r8's
+    """Dim-side predicate for the bloom-pruned join AND sketch_audits'
     fp audit (which provisions THIS join's filter — the two must size
     the same key population): PROMO parts of size <= 10 (~6 % of
     parts), selective enough that the runtime filter visibly shrinks
@@ -709,7 +701,7 @@ def q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing docs keep theirs, EXCEPT docs whose cluster a new
     arrival merges with another (the representative re-keys; the
     stability boundary is pinned in
-    ``tests/test_staged_r7b.py::test_leakage_split_stable_under_append...``).
+    ``test_leakage_split_stable_under_append_unless_clusters_merge``).
     Scale: pair generation is the shingle
     equi-join (LSH at 100 TB), components are pointer-jumping CC,
     and the split itself is one hash + one keyed aggregate — no new
