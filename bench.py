@@ -5,6 +5,12 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 Execution is forced with the noop sink (full computation, zero
 collect/serialization cost on the driver), so timings measure the
 distributed plan, not result transfer.
+
+Operators pin with lazy ``localCheckpoint``, which no later query can
+match, so the timed pass no longer reads tables the warm-up pass left
+pinned: pin-heavy queries read slower here than they did while their
+pins leaked across queries, and that is a correction to the
+measurement, not a regression.
 """
 
 from __future__ import annotations
@@ -21,12 +27,11 @@ def main() -> None:
 
     # Size the local-mode JVM for the battery: local[32] runs every
     # executor thread inside the driver, whose 1g default heap is far
-    # below what 32 concurrent sort/join tasks plus the battery's
-    # accumulated pinned tables need.  At 237 registered queries the
-    # 1g heap degrades the parquet writers ("Total allocation exceeds
-    # 95% of heap" + row-group down-scaling); the controlled
-    # same-window comparison measured 1g at ~8% slower than 16g
-    # (370.9s vs 341.7s — SCALING.md round-9; larger readings that
+    # below what 32 concurrent sort/join tasks need.  At 237 registered
+    # queries the 1g heap degrades the parquet writers ("Total
+    # allocation exceeds 95% of heap" + row-group down-scaling); the
+    # controlled same-window comparison measured 1g at ~8% slower than
+    # 16g (370.9s vs 341.7s — SCALING.md round-9; larger readings that
     # night were host oscillation, not the heap).  A production
     # deployment sizes executor memory for the working set, so the
     # bench does too.  Env-overridable, set before the JVM launches

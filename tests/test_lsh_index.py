@@ -67,14 +67,17 @@ def test_bucketed_index_contract_equal_and_zero_corpus_exchange(spark, tmp_path)
     the batch side shuffles (exactly one Exchange hashpartitioning on
     bh in the candidate plan)."""
     from week4_musemotion_spark.operators.lsh_index import (
-        _band_rows,
         _bucket_candidates,
         build_index,
         build_index_bucketed,
         query_index,
         query_index_bucketed,
     )
-    from week4_musemotion_spark.operators.dedup import minhash_signatures, shingle_sets
+    from week4_musemotion_spark.operators.dedup import (
+        _band_rows,
+        minhash_signatures,
+        shingle_sets,
+    )
     from week4_musemotion_spark.plans.audit import plan_string
 
     d = _docs(spark)

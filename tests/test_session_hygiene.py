@@ -1,0 +1,46 @@
+"""Session hygiene: a query leaves no cached table behind.
+
+Operators pin shared subtrees with a lazy ``localCheckpoint``, which
+Spark's CacheManager never records or matches across queries.  A
+``persist()`` without its ``unpersist`` does register a plan there,
+and every later query in the session whose plan matches it reads the
+earlier query's work.  Each query below pins at least one table; it
+runs at the smoke scale factor through the ``noop`` sink and must
+leave the CacheManager as empty as it found it.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from tests.conftest import SF_SMOKE
+
+_PINNING_QUERIES = (
+    "q_contamination",
+    "q_band_tune",
+    "q_dedup_minhash",
+    "q_dedup_simhash_pairs",
+    "q_dedup_embedding_lsh",
+    "q_jaccard_simjoin",
+    "q_containment_pairs",
+    "q_detector_agreement",
+    "q_dedup_simhash_ngram",
+    "q_detector_agreement_ngram",
+    "q_neardup_incremental",
+    "q_minhash_fidelity",
+)
+
+
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+@pytest.mark.parametrize("name", _PINNING_QUERIES)
+def test_query_leaves_no_cache_entry(spark, name):
+    from week4_musemotion_spark.queries.registry import REGISTRY
+
+    # start empty: persisting a plan that is already cached adds no
+    # entry, so a table an earlier test left behind would hide a leak
+    spark.catalog.clearCache()
+    REGISTRY[name].builder(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+    assert _cache_entries(spark) == 0, f"{name} left {_cache_entries(spark)} cached plan(s)"

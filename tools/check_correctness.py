@@ -55,10 +55,10 @@ def main() -> int:
         sf_dir, only = "/root/testdata/sf0.01", set(argv)
 
     # Same local-mode heap sizing as bench.py (SCALING.md round-9):
-    # a full-registry battery in ONE session accumulates broadcasts
-    # and LRU caches; the 1g default heap OOM'd a late-session
-    # broadcast build at sf0.1 (round-12: q_dup_quality_bias failed
-    # in the battery, green in isolation).  Env-overridable; must be
+    # a full-registry battery in ONE session accumulates broadcasts;
+    # the 1g default heap OOM'd a late-session broadcast build at
+    # sf0.1 (round-12: q_dup_quality_bias failed in the battery,
+    # green in isolation).  Env-overridable; must be
     # set before the JVM launches.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEMORY", "16g")
 

@@ -336,9 +336,9 @@ def contamination_overlap(
     """
     from week4_musemotion_spark.operators.dedup import shingle_sets
 
-    # the (small) eval gram table feeds two branches — persist it so
-    # the totals and the hit join don't re-shingle the eval corpus
-    ev = shingle_sets(eval_df, text_col, id_col, n).persist()
+    # the (small) eval gram table feeds two branches — pin it so the
+    # totals and the hit join don't re-shingle the eval corpus
+    ev = shingle_sets(eval_df, text_col, id_col, n).localCheckpoint(eager=False)
     tr = shingle_sets(train_df, text_col, id_col, n).select("shingle").distinct()
     totals = ev.groupBy("_id").agg(F.count("*").alias("n_grams"))
     hits = ev.join(tr, "shingle").groupBy("_id").agg(F.count("*").alias("n_hit"))

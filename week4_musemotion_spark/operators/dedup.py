@@ -1,8 +1,6 @@
 """Deduplication operators for large-scale text corpora.
 
-Four families, all expressed with builtin Catalyst expressions (the
-hash primitive is functions.hashing.stable_hash64 so results are
-engine-portable and differentially testable):
+Four families, all expressed with builtin Catalyst expressions:
 
 - :func:`exact_dedup_groups` — hash-groupBy exact dedup.
 - :func:`jaccard_pairs` — exact n-gram-Jaccard near-dup pairs via a
@@ -13,9 +11,11 @@ engine-portable and differentially testable):
   plus a band-bucket shuffle; no all-pairs blowup).
 - :func:`simhash_signatures` — per-document SimHash bit signature.
 
-Scale notes: at production scale swap ``stable_hash64`` for
-``xxhash64`` (single JVM hash instead of md5) — kept portable here so
-the DuckDB oracle can replay every step bit-for-bit.  The exact
+Hashing: shingle keys and MinHash already use ``xxhash64`` (one JVM
+hash) — their values never reach an output, only the verified pairs
+and exact Jaccard do.  SimHash votes and content hashes use the
+md5-based ``functions.hashing.stable_hash64``, which the DuckDB oracle
+replays bit-for-bit.  The exact
 ``jaccard_pairs`` join is quadratic in documents sharing a shingle;
 it exists as the correctness baseline, while ``minhash_lsh_pairs``
 is the operator you run on a cluster.
@@ -190,6 +190,27 @@ def minhash_signatures(
     return sh.groupBy("_id").agg(*aggs)
 
 
+def _band_rows(sigs: DataFrame, *carry: str) -> DataFrame:
+    """Explode a signature frame to ``(_id, *carry, band, bh)`` rows:
+    one row per LSH band, ``bh`` the band's ``ROWS_PER_BAND`` min-hashes
+    hashed together under a per-band seed (``10_000 + band``), so equal
+    ``bh`` means a whole band matched.  ``carry`` names extra columns
+    of ``sigs`` that ride along (e.g. a batch/corpus side tag)."""
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(
+                F.lit(10_000 + b),
+                *[F.col(f"mh_{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
+            ).alias("bh"),
+        )
+        for b in range(BANDS)
+    ]
+    return sigs.select("_id", *carry, F.explode(F.array(*bands)).alias("k")).select(
+        "_id", *carry, F.col("k.band").alias("band"), F.col("k.bh").alias("bh")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.8,
@@ -207,27 +228,11 @@ def minhash_lsh_pairs(
     :func:`jaccard_pairs` whenever LSH recall is 1 (by construction
     ~certain above threshold+0.05 with the default banding).
     """
-    sh = shingle_sets(df, text_col, id_col, n).persist()
-    sigs = minhash_signatures(sh)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.lit(10_000 + b),
-                *[F.col(f"mh_{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-            ).alias("bh"),
-        )
-        for b in range(BANDS)
-    ]
-    exploded = (
-        sigs.select("_id", F.explode(F.array(*bands)).alias("k"))
-        .select("_id", F.col("k.band").alias("band"), F.col("k.bh").alias("bh"))
-        # pinned: the band table feeds BOTH sides of the candidate
-        # self-join — unpinned, the 32-min signature aggregate and the
-        # band explode re-run per side (the shared-build-side rule;
-        # LRU-evictable like the shingle table above)
-        .persist()
-    )
+    sh = shingle_sets(df, text_col, id_col, n).localCheckpoint(eager=False)
+    # pinned: the band table feeds BOTH sides of the candidate
+    # self-join — unpinned, the 32-min signature aggregate and the
+    # band explode re-run per side (the shared-build-side rule)
+    exploded = _band_rows(minhash_signatures(sh)).localCheckpoint(eager=False)
     a, b = exploded.alias("a"), exploded.alias("b")
     cands = (
         a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")) & (F.col("a._id") < F.col("b._id")))
@@ -268,29 +273,13 @@ def minhash_lsh_join(
     tagged = batch.select(F.col(id_col), F.col(text_col), F.lit(1).alias("_is_batch")).unionByName(
         corpus.select(F.col(id_col), F.col(text_col), F.lit(0).alias("_is_batch"))
     )
-    sh = shingle_sets(tagged, text_col, id_col, n).persist()
+    sh = shingle_sets(tagged, text_col, id_col, n).localCheckpoint(eager=False)
     sides = tagged.select(F.col(id_col).alias("_id"), "_is_batch")
     sigs = minhash_signatures(sh).join(sides, "_id")
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.lit(10_000 + b),
-                *[F.col(f"mh_{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-            ).alias("bh"),
-        )
-        for b in range(BANDS)
-    ]
-    exploded = (
-        sigs.select("_id", "_is_batch", F.explode(F.array(*bands)).alias("k"))
-        .select(
-            "_id", "_is_batch", F.col("k.band").alias("band"), F.col("k.bh").alias("bh")
-        )
-        # pinned: both band-join sides filter this one table —
-        # unpinned, the signature aggregate and its sides join re-run
-        # per side (the shared-build-side rule; LRU-evictable)
-        .persist()
-    )
+    # pinned: both band-join sides filter this one table — unpinned,
+    # the signature aggregate and its sides join re-run per side (the
+    # shared-build-side rule)
+    exploded = _band_rows(sigs, "_is_batch").localCheckpoint(eager=False)
     a = exploded.filter(F.col("_is_batch") == 1).alias("a")
     b = exploded.filter(F.col("_is_batch") == 0).alias("b")
     cands = (
@@ -394,11 +383,10 @@ def simhash_pairs(
     band_bits = -(-bits // n_bands)
     # the signature build (corpus scan + shingle vote aggregate) feeds
     # BOTH sides of the band self-join — pin the tiny (id, simhash)
-    # table so it is computed once, the same discipline as
-    # minhash_lsh_pairs' persisted shingle table
+    # table so it is computed once
     sig = simhash_signatures(
         df, text_col, id_col, bits, ngram=ngram, shingles=shingles
-    ).persist()
+    ).localCheckpoint(eager=False)
     mask = (1 << band_bits) - 1
     bands = sig.select(
         F.col(id_col).alias("_id"),

@@ -38,30 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from week4_musemotion_spark.operators.dedup import (
+    _band_rows,
     _intersections,
     _jaccard_e4,
-    BANDS,
-    ROWS_PER_BAND,
     minhash_signatures,
     shingle_sets,
 )
-
-
-def _band_rows(sigs: DataFrame) -> DataFrame:
-    """Explode a signature frame to ``(_id, band, bh)`` rows."""
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.lit(10_000 + b),
-                *[F.col(f"mh_{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-            ).alias("bh"),
-        )
-        for b in range(BANDS)
-    ]
-    return sigs.select("_id", F.explode(F.array(*bands)).alias("k")).select(
-        "_id", F.col("k.band").alias("band"), F.col("k.bh").alias("bh")
-    )
 
 
 def _materialize(df: DataFrame, path: str, mode: str, text_col: str, id_col: str, n: int) -> None:

@@ -179,14 +179,17 @@ def pq_fit(
                     {"j": js, "cluster": cs, "pos": ps, "s": ss, "n": ns}
                 )
 
-        means = (
-            scan.mapInPandas(
-                _partials, "j int, cluster int, pos int, s double, n long"
+        try:
+            means = (
+                scan.mapInPandas(
+                    _partials, "j int, cluster int, pos int, s double, n long"
+                )
+                .groupBy("j", "cluster", "pos")
+                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+                .collect()
             )
-            .groupBy("j", "cluster", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
+        finally:
+            bc.destroy()
         new_books = books.copy()  # empty clusters keep their centroid
         for r in means:
             new_books[r["j"], r["cluster"], r["pos"]] = r["s"] / r["n"]

@@ -30,21 +30,59 @@ Reference parity: /root/reference has no similarity join; this
 extends the dedup family (SURVEY.md §2 X-DEDUP-*) with the exact
 threshold variant the curation pipeline needs.
 
-Cache contract: both joins ``persist()`` their sorted-array table
-(four plan branches each) WITHOUT an unpersist — the same contract
-as ``dedup.jaccard_pairs``' shingle table.  In a long multi-query
-session these operator-internal caches accumulate and rely on
-Spark's LRU storage eviction under memory pressure (storage entries
-are evictable by execution demand, so they degrade to recompute, not
-OOM); the engine's long-session harnesses size the local driver heap
-accordingly (16 g — bench.py / check_correctness).  Callers running
-many passes can reclaim eagerly with ``spark.catalog.clearCache()``.
+Pins: both joins pin their sorted-array table (four plan branches
+each) with a lazy ``localCheckpoint``: the first job that reaches it
+materializes it once, and the pin is released with the DataFrame, so
+no query leaves a cached table behind.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from week4_musemotion_spark.functions.exact import ratio_e4
+
+
+def _rare_first(
+    records: DataFrame, id_col: str, tokens_col: str, tau_e4: int, within: list[str]
+) -> DataFrame:
+    """``(_id, *within, _arr, _s, _p)``: each record's token array
+    sorted rare-first (ascending global document frequency, term as
+    tie-break), its size ``_s`` and its prefix length
+    ``_p = s − ⌈τ·s⌉ + 1``, pinned with a lazy local checkpoint — the
+    table feeds four plan branches in either join, and unpinned the
+    explode + df-join + sort-aggregate lineage re-runs per branch."""
+    from week4_musemotion_spark.sources.tables import spread
+
+    # spread: the token build + explode + prefix emission otherwise
+    # run inside the single scan task of a one-row-group file
+    # (no-op on already-wide scans / shuffled frames)
+    records = spread(records)
+    toks = records.select(
+        F.col(id_col).alias("_id"), *within, F.explode(tokens_col).alias("_t")
+    )
+    df_tab = toks.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
+    # per-record token array sorted rare-first: sort (df, term) structs
+    # then project the term back out — one shuffle on _id
+    return (
+        toks.join(df_tab, "_t")
+        .groupBy("_id", *within)
+        .agg(
+            F.expr("transform(array_sort(collect_list(struct(_df, _t))), x -> x._t)").alias(
+                "_arr"
+            )
+        )
+        .withColumn("_s", F.size("_arr"))
+        # p = s - ceil(tau*s) + 1, with ceil in integer arithmetic
+        .withColumn(
+            "_p",
+            F.col("_s")
+            - F.floor((F.lit(tau_e4) * F.col("_s") + 9999) / 10000).cast("int")
+            + 1,
+        )
+        .localCheckpoint(eager=False)
+    )
 
 
 def jaccard_self_join(
@@ -71,42 +109,8 @@ def jaccard_self_join(
     (operators/dedup.py), which trades exactness for sub-quadratic
     candidates precisely where exact prefix joins degenerate.
     """
-    from week4_musemotion_spark.sources.tables import spread
-
     within = list(within or [])
-    # spread: the token build + explode + prefix emission otherwise
-    # run inside the single scan task of a one-row-group file
-    # (no-op on already-wide scans / shuffled frames)
-    records = spread(records)
-    toks = records.select(
-        F.col(id_col).alias("_id"), *within, F.explode(tokens_col).alias("_t")
-    )
-    df_tab = toks.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    # per-record token array sorted rare-first: sort (df, term) structs
-    # then project the term back out — one shuffle on _id
-    ordered = (
-        toks.join(df_tab, "_t")
-        .groupBy("_id", *within)
-        .agg(
-            F.expr("transform(array_sort(collect_list(struct(_df, _t))), x -> x._t)").alias(
-                "_arr"
-            )
-        )
-        .withColumn("_s", F.size("_arr"))
-        # p = s - ceil(tau*s) + 1, with ceil in integer arithmetic
-        .withColumn(
-            "_p",
-            F.col("_s")
-            - F.floor((F.lit(tau_e4) * F.col("_s") + 9999) / 10000).cast("int")
-            + 1,
-        )
-        # persisted: the sorted-array table feeds four plan branches
-        # (both self-join prefix sides + both verify array joins) —
-        # without it the explode+df-join+sort-aggregate lineage is
-        # recomputed per branch (same contract as dedup.jaccard_pairs'
-        # persisted shingle table; LRU-evictable)
-        .persist()
-    )
+    ordered = _rare_first(records, id_col, tokens_col, tau_e4, within)
     # prefix rows stay NARROW (id, stratum, size, position, token):
     # shipping the full token array through the candidate explosion
     # would copy it once per prefix token and again through the pair
@@ -175,16 +179,7 @@ def jaccard_self_join(
             "id_2",
             "common",
             "n_union",
-            # exact e4 ratio, round-half-away (matches functions/exact.py)
-            (
-                (
-                    (2 * F.col("common") * 10000 + F.col("n_union"))
-                    - F.pmod(2 * F.col("common") * 10000 + F.col("n_union"), 2 * F.col("n_union"))
-                )
-                / (2 * F.col("n_union"))
-            )
-            .cast("long")
-            .alias("jacc_e4"),
+            ratio_e4(F.col("common"), F.col("n_union")).alias("jacc_e4"),
         )
     )
 
@@ -212,34 +207,8 @@ def containment_join(
 
     Output: id_a, id_b, common, size_a, cont_e4.
     """
-    from week4_musemotion_spark.sources.tables import spread
-
     within = list(within or [])
-    # spread: same single-scan-task guard as jaccard_self_join
-    records = spread(records)
-    toks = records.select(
-        F.col(id_col).alias("_id"), *within, F.explode(tokens_col).alias("_t")
-    )
-    df_tab = toks.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    ordered = (
-        toks.join(df_tab, "_t")
-        .groupBy("_id", *within)
-        .agg(
-            F.expr("transform(array_sort(collect_list(struct(_df, _t))), x -> x._t)").alias(
-                "_arr"
-            )
-        )
-        .withColumn("_s", F.size("_arr"))
-        .withColumn(
-            "_p",
-            F.col("_s")
-            - F.floor((F.lit(tau_e4) * F.col("_s") + 9999) / 10000).cast("int")
-            + 1,
-        )
-        # persisted: four consumers (prefix side, full side, both
-        # verify array joins) — same contract as jaccard_self_join
-        .persist()
-    )
+    ordered = _rare_first(records, id_col, tokens_col, tau_e4, within)
     pre_a = ordered.select(
         "_id",
         *within,
@@ -294,14 +263,6 @@ def containment_join(
             "id_b",
             "common",
             F.col("_sa").cast("long").alias("size_a"),
-            (
-                (
-                    (2 * F.col("common") * 10000 + F.col("_sa"))
-                    - F.pmod(2 * F.col("common") * 10000 + F.col("_sa"), 2 * F.col("_sa"))
-                )
-                / (2 * F.col("_sa"))
-            )
-            .cast("long")
-            .alias("cont_e4"),
+            ratio_e4(F.col("common"), F.col("_sa")).alias("cont_e4"),
         )
     )

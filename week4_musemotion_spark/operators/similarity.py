@@ -491,12 +491,11 @@ def cosine_pairs_lsh(
     planes = _hyperplanes(n_tables * n_planes, dim)
     # the sketch (an Arrow pass over the whole corpus) feeds BOTH
     # sides of the bucket self-join — pin the tiny (id, table, bucket)
-    # table so the kernel runs once, the same discipline as
-    # simhash_pairs' persisted signature table (LRU-evictable)
+    # table so the kernel runs once
     sk = (
         _with_sketch(emb, planes, id_col, vec_col, ("_id", "_vec"), n_tables)
         .drop("_vec")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     a = sk.select("table", "bucket", F.col("_id").alias("vec_id_a"))
     b = sk.select("table", "bucket", F.col("_id").alias("vec_id_b"))

@@ -529,7 +529,7 @@ def q_band_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from week4_musemotion_spark.operators.dedup import _intersections, shingle_strings
 
     d = load_table(spark, sf_dir, "documents")
-    shs = shingle_strings(d).distinct().persist()
+    shs = shingle_strings(d).distinct().localCheckpoint(eager=False)
     sh = shs.select("_id", F.col("s").alias("shingle"))
     pairs = (
         _intersections(None, sh)

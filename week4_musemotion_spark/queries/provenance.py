@@ -638,14 +638,14 @@ def q_detector_agreement_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: both detectors measure the SAME word-3-gram feature space,
     so one tokenize+shingle pass feeds both — the distinct (_id, s)
-    shingle table is built once and persisted; SimHash hashes it with
+    shingle table is built once and pinned; SimHash hashes it with
     the portable md5 family, Jaccard with xxhash64 (each detector's
     own dedup/distinct is unchanged, so both pair sets are
     bit-identical to their standalone queries)."""
     docs = load_table(spark, sf_dir, "documents")
     from week4_musemotion_spark.operators.dedup import shingle_strings
 
-    shd = shingle_strings(docs).distinct().persist()
+    shd = shingle_strings(docs).distinct().localCheckpoint(eager=False)
     return _kappa_report(
         docs,
         simhash_pairs(

@@ -50,8 +50,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from week4_musemotion_spark.operators.dedup import minhash_signatures, shingle_sets
-from week4_musemotion_spark.operators.lsh_index import _band_rows, query_index
+from week4_musemotion_spark.operators.dedup import _band_rows, minhash_signatures, shingle_sets
+from week4_musemotion_spark.operators.lsh_index import query_index
 
 
 def _purge_keyed(target: str, tag: str) -> None:
