@@ -7,6 +7,10 @@ and every later query in the session whose plan matches it reads the
 earlier query's work.  Each query below pins at least one table; it
 runs at the smoke scale factor through the ``noop`` sink and must
 leave the CacheManager as empty as it found it.
+
+A query run a second time in the same session reuses the classes
+whole-stage codegen generated for it the first time, instead of
+compiling them again.
 """
 
 from __future__ import annotations
@@ -44,3 +48,35 @@ def test_query_leaves_no_cache_entry(spark, name):
     spark.catalog.clearCache()
     REGISTRY[name].builder(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
     assert _cache_entries(spark) == 0, f"{name} left {_cache_entries(spark)} cached plan(s)"
+
+
+#: The benchmark's curation_ops mix (perfbench/workloads.CURATION_MIX).
+_CURATION_MIX = (
+    "q_dedup_clusters",
+    "q_ann_recall_report",
+    "q_jaccard_simjoin",
+    "q_heavy_hitters",
+    "q_pq_distortion",
+    "q_fuzzy_join",
+    "q_mad_outliers",
+    "q_embedding_gram",
+)
+
+
+def test_warm_rerun_reuses_generated_code(spark):
+    from week4_musemotion_spark.queries.registry import REGISTRY
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_mix() -> int:
+        before = compiles.getCount()
+        for name in _CURATION_MIX:
+            REGISTRY[name].builder(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    run_mix()
+    # Spark's default 100-entry class cache recompiles about 250 classes
+    # here; the residual is AQE renumbering codegenStageId, which is part
+    # of the generated class name
+    recompiled = run_mix()
+    assert recompiled <= 25, f"the warm rerun compiled {recompiled} classes again"

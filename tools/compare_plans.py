@@ -5,9 +5,12 @@ Usage: python tools/compare_plans.py OLD.json NEW.json
 Prints one line per query whose plan shape changed (exchanges,
 joins, top-k fusion, codegen, scans), plus added/removed queries.
 Exit code 1 when any EXISTING query's metrics regressed (more
-exchanges or scans, lost codegen/top-k fusion) so a CI step can
-gate on it; shape changes that are strict improvements report but
-do not fail.
+exchanges, scans or sort-merge joins, lost top-k fusion) so a CI
+step can gate on it; shape changes that are strict improvements
+report but do not fail.  Fewer broadcast joins is not a regression
+by itself: joins moved under a new ``localCheckpoint`` drop out of
+the static plan, and a broadcast join that degrades to a sort-merge
+join still fails through ``smj``.
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ import sys
 #: Metrics where an increase is a regression.
 _UP_BAD = ("exch", "scans", "smj")
 #: Metrics where a decrease is a regression.
-_DOWN_BAD = ("topk", "bhj")
+_DOWN_BAD = ("topk",)
 
 
 def main() -> int:

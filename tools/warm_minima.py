@@ -29,12 +29,16 @@ def main() -> int:
         reps = int(args[i + 1])
         del args[i : i + 2]
     sf_dir = "/root/testdata/sf0.1"
+    given_dir = None
     names: list[str] = []
     for a in args:
         if a.startswith("q_"):
             names.append(a)
         elif os.path.isdir(a):
-            sf_dir = a
+            if given_dir is not None:
+                print(f"error: two sf_dir arguments, {given_dir!r} and {a!r}; pass one", file=sys.stderr)
+                return 2
+            sf_dir = given_dir = a
         else:
             # a mistyped sf_dir silently falling back to the default
             # would time the WRONG dataset — fail loudly instead

@@ -52,6 +52,12 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.mergeSchema", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Spark's JVM-wide cache of generated classes holds 100 by
+        # default; a cold registry pass generates 2,820 at sf0.001 and
+        # a curation_ops pass about 265, so at 100 every warm pass
+        # would recompile nearly every stage.  Static conf: sized once
+        # per JVM at the first codegen, so it can only be set here.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
 
 
