@@ -68,9 +68,7 @@ def test_golden_kpis(cleaned):
 
 def test_golden_group_stats(cleaned):
     """Recomputed reference stats: 36 makes, top = TESLA with 605."""
-    from week4_musemotion_spark.operators.etl import group_size
-
-    top = group_size(cleaned, "make").collect()
+    top = cleaned.groupBy("make").count().orderBy(F.col("count").desc()).collect()
     assert len(top) == 36
     assert top[0]["make"] == "TESLA" and top[0]["count"] == 605
 

@@ -12,6 +12,8 @@ def test_entry_returns_rows(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert df.columns == ["l_orderkey", "l_linenumber", "p_brand", "cnt", "l_quantity"]
+    # engine sessions skip PySpark's per-call origin capture
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
 def test_registry_contract(spark):

@@ -9,30 +9,39 @@ this layer keeps:
    interaction.
 2. Filters compose lazily (`isin` predicates on the cached frame) —
    nothing executes until a widget needs numbers.
-3. Only AGGREGATES ever leave the cluster: filter options are
-   distinct-sorted collects, KPIs are a 1-row agg, charts are
-   group-size frames — `.toPandas()` lands k rows, never the fact
-   table.  (The reference holds the whole CSV in driver pandas; at
-   100 TB only this aggregate-collect shape survives.)
+3. Only AGGREGATES ever leave the cluster, and each selection costs
+   ONE of them: filter options are one grouped collect for all
+   columns, and the KPI row and both charts slice one grouping-sets
+   aggregate (sets (make), (city), () with count, the KPI averages and
+   ``grouping_id()``), collected once per selection and shared by the
+   three widgets — `.toPandas()` lands k rows, never the fact table.
+   (The reference holds the whole CSV in driver pandas; at 100 TB
+   only this aggregate-collect shape survives.)
 
 The rendering shell is deliberately thin: `render_text` prints the
 same KPI row / charts the reference lays out (streamlit_app.py:
 180-223) and demonstrates the empty-selection guard
-(streamlit_app.py:172-174).  A Streamlit front end would call the
+(streamlit_app.py:172-174): a selection without a grand-total row has
+no rows at all.  A Streamlit front end would call the
 same Dashboard methods; streamlit itself is not a dependency here.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from week4_musemotion_spark.operators.etl import group_size, is_empty, kpi_summary
+from week4_musemotion_spark.operators.etl import kpi_columns
 from week4_musemotion_spark.sources.csv import read_headerless_csv
 
 #: Sidebar filter columns (streamlit_app.py:161-163).
 FILTER_COLUMNS = ("city", "model", "make")
+
+#: ``grouping_id()`` of each grouping set over the keys (make, city):
+#: a bit is set for every key the set rolls up.
+_BY_MAKE, _BY_CITY, _TOTAL = 1, 2, 3
 
 
 class Dashboard:
@@ -43,6 +52,10 @@ class Dashboard:
 
         self.spark = spark
         self.df = clean_musemotion(read_headerless_csv(spark, csv_path)).cache()
+        #: ``(selection, widget rows)`` of the last selection served.
+        #: One tuple, replaced whole, so a reader never pairs one
+        #: selection with another's rows.
+        self._last: tuple[DataFrame, pd.DataFrame] | None = None
 
     #: Max options surfaced per sidebar filter — a high-cardinality
     #: column must not flood the driver (or the UI) with millions of
@@ -92,25 +105,52 @@ class Dashboard:
                 out = out.filter(F.col(col).isin(list(values)))
         return out
 
-    # --- widget feeds: every one collects aggregates only ---
+    # --- widget feeds: one aggregate per selection, shared by all three ---
 
-    def kpis(self, selection: DataFrame):
-        """KPI row (A4) with the empty-selection guard (A8)."""
-        return kpi_summary(selection, skip_if_empty=True).toPandas()
+    def _widget_rows(self, selection: DataFrame) -> pd.DataFrame:
+        """The KPI and chart rows of ``selection``: one grouping-sets
+        aggregate, collected once and reused while the same selection
+        object is asked for its next widget."""
+        last = self._last
+        if last is not None and last[0] is selection:
+            return last[1]
+        rows = (
+            selection.groupingSets([["make"], ["city"], []], "make", "city")
+            .agg(*kpi_columns(), F.grouping_id().alias("gid"))
+            .toPandas()
+        )
+        self._last = (selection, rows)
+        return rows
 
-    def vehicles_by_make(self, selection: DataFrame):
-        return group_size(selection, "make", ascending=True).toPandas()
+    def _chart(self, selection: DataFrame, key: str, gid: int, ascending: bool) -> pd.DataFrame:
+        """Group sizes by ``key`` (ref streamlit_app.py:205,215), sorted
+        by count, ties by key.  A NULL key is a group of its own."""
+        rows = self._widget_rows(selection)
+        chart = rows.loc[rows["gid"] == gid, [key, "total_vehicles"]]
+        chart = chart.rename(columns={"total_vehicles": "count"})
+        return chart.sort_values(["count", key], ascending=[ascending, True]).reset_index(drop=True)
 
-    def counts_by_city(self, selection: DataFrame):
-        return group_size(selection, "city").toPandas()
+    def kpis(self, selection: DataFrame) -> pd.DataFrame:
+        """KPI row (A4) with the empty-selection guard (A8): an empty
+        selection has no grand-total row, so the frame has zero rows."""
+        rows = self._widget_rows(selection)
+        total = rows.loc[rows["gid"] == _TOTAL].drop(columns=["make", "city", "gid"])
+        return total.reset_index(drop=True)
+
+    def vehicles_by_make(self, selection: DataFrame) -> pd.DataFrame:
+        return self._chart(selection, "make", _BY_MAKE, ascending=True)
+
+    def counts_by_city(self, selection: DataFrame) -> pd.DataFrame:
+        return self._chart(selection, "city", _BY_CITY, ascending=False)
 
 
 def render_text(dash: Dashboard, **choices: list[str] | None) -> str:
     """Plain-text rendering of the reference's main page layout."""
     sel = dash.select(**choices)
-    if is_empty(sel):
+    kpis = dash.kpis(sel)
+    if kpis.empty:
         return "No data available based on the current filter settings!"
-    kpi = dash.kpis(sel).iloc[0]
+    kpi = kpis.iloc[0]
     lines = [
         "=== Muse Motion Electric Vehicles ===",
         f"Total Vehicles: {int(kpi.total_vehicles):,}"

@@ -15,7 +15,7 @@ runs at scan speed in one stage, scales linearly with input splits.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from week4_musemotion_spark.functions.cleaning import (
@@ -80,32 +80,19 @@ def explode_utilities(df: DataFrame) -> DataFrame:
     return df.withColumn("utility", F.explode_outer(utilities))
 
 
-def is_empty(df: DataFrame) -> bool:
-    """Emptiness guard (SURVEY §2 A8, ref streamlit_app.py:172-174).
-    ``DataFrame.isEmpty`` plans a LIMIT 1 — it touches one partition
-    and stops, never counting the table."""
-    return df.isEmpty()
-
-
-def kpi_summary(df: DataFrame, skip_if_empty: bool = False) -> DataFrame:
-    """The dashboard KPI row (ref streamlit_app.py:180-190):
-    total vehicles, avg year (1 dp), avg electric range (2 dp).
-
-    ``skip_if_empty`` mirrors the reference's empty-dashboard guard
-    (streamlit_app.py:172-174): zero input rows yield a zero-row KPI
-    frame (the app layer renders "no data") instead of a
-    count=0/NULL-averages row."""
-    out = df.agg(
+def kpi_columns() -> list[Column]:
+    """The dashboard KPI row's aggregates (ref streamlit_app.py:180-190):
+    total vehicles, avg year (1 dp), avg electric range (2 dp).  One
+    definition for :func:`kpi_summary` and the dashboard's
+    grouping-sets aggregate."""
+    return [
         F.count("*").alias("total_vehicles"),
         F.round(F.avg("year"), 1).alias("avg_year"),
         F.round(F.avg("electric_range"), 2).alias("avg_electric_range"),
-    )
-    if skip_if_empty and is_empty(df):
-        return out.limit(0)
-    return out
+    ]
 
 
-def group_size(df: DataFrame, col: str, ascending: bool = False) -> DataFrame:
-    """Group-size chart feed (ref streamlit_app.py:205,215)."""
-    counted = df.groupBy(col).count()
-    return counted.orderBy(F.col("count").asc() if ascending else F.col("count").desc())
+def kpi_summary(df: DataFrame) -> DataFrame:
+    """The KPI row of ``df``: one row, count 0 and NULL averages when
+    ``df`` is empty."""
+    return df.agg(*kpi_columns())
