@@ -60,58 +60,6 @@ def test_append_makes_new_docs_findable(spark, tmp_path):
     assert len(without) <= len(want)
 
 
-def test_bucketed_index_contract_equal_and_zero_corpus_exchange(spark, tmp_path):
-    """The bucketed band-table layout answers queries identically to
-    the parquet index, and the candidate join plans with NO exchange
-    on the corpus side: the bands table is bucketed by bh, so only
-    the batch side shuffles (exactly one Exchange hashpartitioning on
-    bh in the candidate plan)."""
-    from week4_musemotion_spark.operators.lsh_index import (
-        _bucket_candidates,
-        build_index,
-        build_index_bucketed,
-        query_index,
-        query_index_bucketed,
-    )
-    from week4_musemotion_spark.operators.dedup import (
-        _band_rows,
-        minhash_signatures,
-        shingle_sets,
-    )
-    from week4_musemotion_spark.plans.audit import plan_string
-
-    d = _docs(spark)
-    corpus = d.filter(F.col("doc_id") % 10 != 0)
-    batch = d.filter(F.col("doc_id") % 10 == 0)
-    path = str(tmp_path / "idx")
-    build_index(corpus, path)
-    try:
-        build_index_bucketed(corpus, "t_lshidx")
-        got = _pairs(query_index_bucketed(batch, "t_lshidx", threshold=0.8))
-        want = _pairs(query_index(batch, path, threshold=0.8))
-        assert got == want and len(got) > 0
-
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            # at test scale the planner would broadcast the batch side,
-            # which hides the bucketing; force the merge path the real
-            # (large-batch) gate takes
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            bband = _band_rows(
-                minhash_signatures(shingle_sets(batch, "text", "doc_id", 3))
-            )
-            cands = _bucket_candidates(bband, spark.table("t_lshidx_bands"))
-            plan = plan_string(cands, "simple")
-            n_bh_exchanges = plan.count("Exchange hashpartitioning(bh")
-            assert n_bh_exchanges == 1, plan[:3000]
-            assert "Bucketed: true" in plan, plan[:3000]
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_lshidx_bands")
-        spark.sql("DROP TABLE IF EXISTS t_lshidx_shingles")
-
-
 def test_compact_index_bounds_files_and_preserves_queries(spark, tmp_path):
     """20 streaming micro-batches accrete ~20 part-files per index
     subdir; compact_index folds each subdir to a bounded file count,

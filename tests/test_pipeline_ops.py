@@ -1,4 +1,4 @@
-"""Hash sampling / splits, profiling, and streaming-upsert loop."""
+"""Hash sampling / splits, profiling, upserts, sources and quality gates."""
 
 from __future__ import annotations
 
@@ -36,25 +36,6 @@ def test_profile_detects_nulls_and_ranges(spark):
     assert got["d"].min_value == -3.0 and got["d"].max_value == 1.5
 
 
-def test_stream_upsert_snapshot_converges(spark, tmp_path):
-    from week4_musemotion_spark.sources.tables import load_table
-    from week4_musemotion_spark.streaming.foreach_upsert import stream_upsert_to_snapshot
-    from week4_musemotion_spark.streaming.ingest import read_events_stream
-
-    snap = str(tmp_path / "snapshot")
-    ckpt = str(tmp_path / "ckpt")
-    stream = read_events_stream(spark, f"{SF_SMOKE}/events.parquet")
-    q = stream_upsert_to_snapshot(stream, snap, keys=["user_id"], checkpoint_dir=ckpt)
-    q.awaitTermination()
-    got = spark.read.parquet(snap)
-    n_users = (
-        load_table(spark, SF_SMOKE, "events").select("user_id").distinct().count()
-    )
-    assert got.count() == n_users  # one current row per key
-    assert got.select("user_id").distinct().count() == n_users
-    assert set(got.columns) == {"event_id", "ts", "user_id", "event_type", "value", "props"}
-
-
 def test_profile_decimal_and_tinyint_ranges(spark):
     from pyspark.sql import functions as F
 
@@ -77,41 +58,6 @@ def test_frequent_values_exact_support_boundary(spark):
     df = spark.createDataFrame([("x",)] * 21 + [("y",)] * 279, ["v"])
     got = {r.v for r in frequent_values(df, "v", min_support=0.07).collect()}
     assert "x" in got
-
-
-def test_stateful_totals_skip_null_values(spark, tmp_path):
-    import pandas as pd
-
-    from week4_musemotion_spark.streaming.ingest import EVENTS_STREAM_SCHEMA
-    from week4_musemotion_spark.streaming.stateful import running_user_totals
-
-    src = tmp_path / "ev"
-    src.mkdir()
-    pdf = pd.DataFrame(
-        {
-            "event_id": [1, 2, 3],
-            "ts": [10**18, 10**18 + 1, 10**18 + 2],
-            "user_id": [7, 7, 7],
-            "event_type": ["view", "view", "view"],
-            "value": [1.25, None, 2.75],
-            "props": ["{}", "{}", "{}"],
-        }
-    )
-    spark.createDataFrame(pdf, schema=EVENTS_STREAM_SCHEMA).write.parquet(str(src / "b.parquet"))
-    # point at the parquet output dir itself: the file stream source
-    # does not recurse into nested directories
-    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(str(src / "b.parquet"))
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("t_null_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    row = spark.table("t_null_totals").collect()[-1]
-    assert row.n_events == 3 and row.total_value_cents == 400  # null skipped, rows counted
 
 
 def test_upsert_recovers_from_orphaned_old_snapshot(spark, tmp_path):

@@ -50,6 +50,76 @@ def test_every_query_module_loads_with_the_package():
     assert out.stdout.strip() == "[]", out.stdout
 
 
+#: Package modules that no entry point imports, each with the reason it
+#: stays.  The guard below fails on an entry that is reached or gone,
+#: so this list can only shrink.
+UNREACHED_MODULES = {
+    "sources/cloud.py": "reference parity: the reference reads Azure Blob paths (pipeline.py)",
+    "sources/sql_inserts.py": "reference parity: the reference's INSERT dump "
+    "(musemotion-populate-table.sql)",
+    "sources/evolution.py": "ROADMAP D4: delete or promote",
+    "sources/quarantine.py": "ROADMAP D4: delete or promote",
+    "operators/expectations.py": "ROADMAP D4: delete or promote",
+    "operators/refresh.py": "ROADMAP D4: delete or promote",
+    "operators/stats.py": "ROADMAP D4: delete or promote",
+    "operators/versioned.py": "ROADMAP D4: delete or promote",
+}
+
+
+def _unreached_modules(repo) -> list[str]:
+    """Package modules (paths under the package) outside the static
+    import closure of the entry points: the query registry, the
+    dashboard, the driver contract, the benchmarks, the Streamlit
+    shell and the tools.  Counts relative and in-function imports;
+    importing ``a.b.c`` also reaches ``a`` and ``a.b``."""
+    import ast
+
+    pkg = "week4_musemotion_spark"
+
+    def name_of(path):
+        parts = list(path.relative_to(repo).with_suffix("").parts)
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    package = {name_of(p): p for p in (repo / pkg).rglob("*.py")}
+    entry = ("__spark_entry__.py", "bench.py", "streamlit_app.py", "perfbench/*.py", "tools/*.py")
+    roots = {name_of(p): p for g in entry for p in repo.glob(g)}
+    files = {**package, **roots}
+    todo = [f"{pkg}.queries", f"{pkg}.dashboard", *roots]
+    seen: set[str] = set()
+    while todo:
+        mod = todo.pop()
+        if mod in seen or mod not in files:
+            continue
+        seen.add(mod)
+        here = mod.split(".") if files[mod].name == "__init__.py" else mod.split(".")[:-1]
+        for node in ast.walk(ast.parse(files[mod].read_text())):
+            if isinstance(node, ast.Import):
+                targets = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    base = ".".join(here[: len(here) - node.level + 1] + ([base] if base else []))
+                targets = [base] + [f"{base}.{a.name}" for a in node.names]
+            else:
+                continue
+            for t in targets:
+                bits = t.split(".")
+                todo.extend(".".join(bits[:i]) for i in range(1, len(bits) + 1))
+    return sorted(p.relative_to(repo / pkg).as_posix() for m, p in package.items() if m not in seen)
+
+
+def test_every_package_module_is_reached():
+    # the package is what something runs: a module only tests import is
+    # dead code unless the allowlist above says why it stays
+    from tests.conftest import REPO_ROOT
+
+    unreached = _unreached_modules(REPO_ROOT)
+    dead = [p for p in unreached if p not in UNREACHED_MODULES]
+    assert not dead, f"no entry point imports {dead}"
+    stale = sorted(set(UNREACHED_MODULES) - set(unreached))
+    assert not stale, f"allowlisted but reached or gone: {stale}"
+
+
 def test_all_queries_run_at_smoke_sf(spark):
     import __spark_entry__ as mod
 

@@ -13,7 +13,7 @@ project), re-designed Spark-first for 100 TB scale:
 - extensions for large-scale training-data pipelines: dedup
   (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity
   search over embeddings, text analysis, multimodal column
-  plumbing, and a Structured Streaming ingest path.
+  plumbing, and exactly-once Structured Streaming stores.
 
 See SURVEY.md for the operator inventory this package covers.
 """

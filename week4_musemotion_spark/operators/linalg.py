@@ -421,84 +421,3 @@ def rp_signs_sql(signs: list[list[int]]) -> str:
         )
         + "]"
     )
-
-
-def embedding_dispersion(
-    df: DataFrame, vec_col: str = "embedding", group_col: str = "label"
-) -> DataFrame:
-    """Per-group embedding dispersion — the exact sum of squared
-    pairwise distances WITHOUT ever materializing a pair::
-
-        sum_{i<j} ||q_i - q_j||^2
-            = n * sum_i ||q_i||^2  -  sum_d (sum_i q_{i,d})^2
-
-    over the e6-quantized components (the identity follows from
-    expanding the square; the cross term telescopes into the
-    per-dimension linear sums).  This is the collapse/diversity audit
-    a training-data pipeline runs per source or label: a group whose
-    mean squared distance (msd) is near zero is embedding-collapsed
-    (all-duplicate or degenerate encoder output), and msd trends are
-    comparable across snapshots because the arithmetic is exact.
-
-    Returns one row per group: ``(group, n, pairs, ssd, msd_e6)``
-    where ``pairs`` and ``ssd`` are exact integers EMITTED as digit
-    strings (both outgrow int64 at corpus scale — pairs = n(n−1)/2
-    passes 2^63 near 4.3e9 rows/group — and decimal output columns
-    are driver-hash hostile) and ``msd_e6 = ssd // (pairs * 1e6)`` is
-    the mean squared distance in raw^2 * 1e6 units (NULL for
-    singleton groups; always long-safe — it is bounded by the max
-    squared distance, not the corpus size).
-
-    100 TB story: the naive form is O(n^2) pairs per group; this is
-    ONE scan + two aggregates whose state is O(groups * dims) rows —
-    the same sufficient-statistics discipline as ``gram_exact``
-    (n * S2 <= ~1e37 at 1e12 rows: inside decimal(38,0), far outside
-    long).  A ragged vector column raises (per-dimension row counts
-    must agree) instead of producing a silently wrong number."""
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * _Q + F.lit(0.5)).cast("long"),
-    )
-    ex = df.select(F.col(group_col).alias("grp"), F.posexplode(q).alias("pos", "qv"))
-    per_dim = ex.groupBy("grp", "pos").agg(
-        F.sum(dec(F.col("qv"))).alias("sd"),
-        F.sum(dec(F.col("qv")) * F.col("qv")).alias("s2p"),
-        F.count(F.lit(1)).alias("np"),
-    )
-    g = per_dim.groupBy("grp").agg(
-        F.sum("s2p").alias("s2"),
-        F.sum(F.col("sd") * F.col("sd")).alias("sumsq_d"),
-        F.max("np").alias("n"),
-        F.min("np").alias("n_min"),
-    )
-    # ragged guard: every dimension must have seen the same row count
-    # (assert_true is pruned unless it rides a USED expression)
-    n_ok = F.when(
-        F.assert_true(
-            F.col("n") == F.col("n_min"),
-            F.lit("embedding_dispersion: ragged vector column"),
-        ).isNull(),
-        F.col("n"),
-    )
-    from week4_musemotion_spark.functions.exact import int_div_trunc, int_div_trunc_dec
-
-    g = g.select(
-        F.col("grp").alias(group_col),
-        n_ok.cast("long").alias("n"),
-        "s2",
-        "sumsq_d",
-    )
-    # pairs stays decimal end-to-end: a long pairs wraps past ~4.3e9
-    # rows/group, and a long pairs*1e6 denominator wraps at ~4.3e6 —
-    # widen BEFORE the multiply (the s2p dec-before-product rule).
-    pairs = int_div_trunc_dec(dec(F.col("n")) * (F.col("n") - 1), F.lit(2))
-    ssd = dec(F.col("n")) * F.col("s2") - F.col("sumsq_d")
-    return g.select(
-        group_col,
-        "n",
-        pairs.cast("decimal(38,0)").cast("string").alias("pairs"),
-        ssd.cast("decimal(38,0)").cast("string").alias("ssd"),
-        F.when(
-            F.col("n") > 1, int_div_trunc(ssd, pairs * dec(F.lit(1_000_000)))
-        ).alias("msd_e6"),
-    )

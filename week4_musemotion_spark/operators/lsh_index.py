@@ -7,11 +7,8 @@ NOT check ``_SUCCESS`` — reads are not commit-gated, see the crash
 contract below):
 
 - ``bands/``     — ``(_id, band, bh)``: one row per document per LSH
-  band; the candidate-generation index.  The band join is an
-  equi-join on ``(band, bh)``; at warehouse scale write this with
-  ``bucketBy(bh)`` into a table so batch lookups join with zero
-  exchange on the corpus side — plain parquet here keeps the sandbox
-  dependency-free while the dataflow is identical.
+  band; the candidate-generation index.  Candidates come from an
+  equi-join on ``bh`` (see :func:`_bucket_candidates`).
 - ``shingles/``  — ``(_id, shingle)``: the distinct shingle-hash sets
   the exact-Jaccard verification needs (candidates are verified, so
   index false positives never surface).
@@ -79,11 +76,7 @@ def _bucket_candidates(bband: DataFrame, idx_bands: DataFrame) -> DataFrame:
     index is already folded into the hash (``_band_rows`` seeds
     xxhash64 with ``10_000 + band``), so a cross-band bh collision is
     a ~2⁻⁶⁴ accident — and a harmless one, because every candidate is
-    exact-Jaccard verified (a band equality predicate here would be
-    extracted into the join keys by Catalyst and defeat the
-    single-column bucketing the table layout exists for).  The
-    single-key join is what lets a ``bh``-bucketed corpus table
-    satisfy the join's required distribution with ZERO exchange."""
+    exact-Jaccard verified."""
     return (
         bband.alias("a")
         .join(idx_bands.alias("b"), F.col("a.bh") == F.col("b.bh"))
@@ -132,33 +125,6 @@ def query_index(
     idx_bands = spark.read.parquet(os.path.join(path, "bands"))
     idx_sh = spark.read.parquet(os.path.join(path, "shingles"))
     return _query_against(batch, idx_bands, idx_sh, threshold, text_col, id_col, n)
-
-
-def build_index_bucketed(
-    df: DataFrame,
-    table_prefix: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_buckets: int = 16,
-) -> None:
-    """The warehouse-scale layout: bands land in a metastore table
-    bucketed (hash-clustered) by ``bh``, shingles in one bucketed by
-    ``_id``.  Bucketing pre-shuffles at write time, so every later
-    batch lookup joins with ZERO exchange on the corpus side — only
-    the O(batch) side shuffles into the bucket layout.  At 100 TB the
-    band table is the big side of every ingest-gate join; never
-    re-shuffling it is the point of materializing the index at all.
-    Same band/shingle dataflow as :func:`build_index` (shingles
-    written first — same crash contract)."""
-    from week4_musemotion_spark.sources.sinks import write_bucketed_table
-
-    sh = shingle_sets(df, text_col, id_col, n).persist()
-    write_bucketed_table(sh, f"{table_prefix}_shingles", "_id", num_buckets)
-    write_bucketed_table(
-        _band_rows(minhash_signatures(sh)), f"{table_prefix}_bands", "bh", num_buckets
-    )
-    sh.unpersist()
 
 
 def compact_index(
@@ -234,22 +200,3 @@ def _compact_dir(
     if trigger_files is not None and n_files <= trigger_files:
         return -1
     return compact_parquet(spark, d, target_file_bytes)
-
-
-def query_index_bucketed(
-    batch: DataFrame,
-    table_prefix: str,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """:func:`query_index` against the bucketed-table layout —
-    identical output contract (same candidates, same verification);
-    the corpus-side band scan satisfies the join's required
-    distribution straight off its buckets (plan-asserted in
-    ``tests/test_lsh_index.py``)."""
-    spark: SparkSession = batch.sparkSession
-    idx_bands = spark.table(f"{table_prefix}_bands")
-    idx_sh = spark.table(f"{table_prefix}_shingles")
-    return _query_against(batch, idx_bands, idx_sh, threshold, text_col, id_col, n)

@@ -441,11 +441,9 @@ def q_delete_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window counts per event type — the batch
-    equivalent of streaming.windowed_event_counts (same grouping
-    keys), bucketed with exact integer division on epoch micros
-    (float division would lose precision above 2^53; encoding-
-    agnostic via epoch_micros)."""
+    """Tumbling 1-hour window counts per event type, bucketed with
+    exact integer division on epoch micros (float division would
+    lose precision above 2^53; encoding-agnostic via epoch_micros)."""
     from week4_musemotion_spark.functions.eventtime import epoch_micros
 
     e = load_table(spark, sf_dir, "events")

@@ -250,10 +250,7 @@ def spread(df: DataFrame, min_factor: int = 2, min_rows: int | None = None) -> D
       query build on the driver).
 
     At production scale (many files / row groups) the scan is already
-    wide and this is a no-op.  ``SPARK_GRAFT_NO_SPREAD=1`` disables
-    it entirely (A/B isolation switch)."""
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD", "").lower() in ("1", "true", "yes"):
-        return df
+    wide and this is a no-op."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     width = scan_width(df)
