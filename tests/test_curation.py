@@ -247,33 +247,3 @@ def test_curation_pipeline_stage_semantics(spark):
         assert r.bucket < int(rate * 1000)
     # composition shrinks monotonically: survivors <= deduped <= corpus
     assert len(rows) <= docs.count()
-
-
-def test_observe_expectations_free_ride(spark):
-    """Observed metrics must equal the dedicated-pass report while
-    riding along with the consuming job (no extra scan)."""
-    from week4_musemotion_spark.operators.expectations import (
-        Expectation,
-        check_expectations,
-        observe_expectations,
-        observed_violations,
-    )
-    from week4_musemotion_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    import pytest
-
-    exps = [
-        Expectation("o_totalprice", "max", 100.0),   # violated by ~everything
-        Expectation("o_orderstatus", "not_null"),     # holds
-    ]
-    o = load_table(spark, SF_SMOKE, "orders")
-    # DISTINCT aggregates can't ride in CollectMetrics: loud failure
-    with pytest.raises(ValueError, match="unique"):
-        observe_expectations(o, [Expectation("o_orderkey", "unique")])
-    observed, obs = observe_expectations(o, exps)
-    observed.write.format("noop").mode("overwrite").save()  # the "real" job
-    free = observed_violations(obs, exps)
-    paid = check_expectations(o, exps)
-    assert free == paid
-    assert free and free[0][0] == "o_totalprice max 100.0"

@@ -87,36 +87,6 @@ def test_sql_inserts_mysql_backslash_escapes(spark, tmp_path):
     assert rows == [("O'Brien", "back\\slash"), ("plain", "x")]
 
 
-def test_expectations_gate(spark):
-    import pytest
-
-    from week4_musemotion_spark.operators.expectations import Expectation, check_expectations
-
-    df = spark.createDataFrame(
-        [(1, "BEV", 100.0), (2, "PHEV", -5.0), (None, "BEV", 50.0), (2, "JET", 70.0)],
-        ["id", "kind", "range"],
-    )
-    rules = [
-        Expectation("id", "not_null"),
-        Expectation("id", "unique"),
-        Expectation("range", "min", 0.0),
-        Expectation("kind", "isin", ("BEV", "PHEV")),
-        Expectation("range", "max_null_fraction", 0.5),  # holds
-    ]
-    got = dict(check_expectations(df, rules))
-    assert got == {
-        "id not_null": 1,
-        "id unique": 1,
-        "range min 0.0": 1,
-        "kind isin ('BEV', 'PHEV')": 1,
-    }
-    with pytest.raises(ValueError, match="expectations failed"):
-        check_expectations(df, rules, fail_fast=True)
-    # clean data passes silently
-    clean = spark.createDataFrame([(1, "BEV", 1.0)], ["id", "kind", "range"])
-    assert check_expectations(clean, rules) == []
-
-
 def test_orc_roundtrip_matches_parquet(spark, tmp_path):
     """Format breadth: the engine's tables survive an ORC round-trip
     bit-identically (ORC is the other columnar format Spark ships

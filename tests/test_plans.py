@@ -13,7 +13,7 @@ def _q(name):
 
 
 def test_point_lookup_pushes_filter_and_prunes(spark):
-    from week4_musemotion_spark.plans.audit import assert_column_pruned, assert_filter_pushed
+    from tests.plan_asserts import assert_column_pruned, assert_filter_pushed
 
     df = _q("q_point_lookup")(spark, SF_SMOKE)
     assert_filter_pushed(df, "o_orderkey")
@@ -21,7 +21,7 @@ def test_point_lookup_pushes_filter_and_prunes(spark):
 
 
 def test_projection_prunes_scan(spark):
-    from week4_musemotion_spark.plans.audit import assert_column_pruned
+    from tests.plan_asserts import assert_column_pruned
 
     df = _q("q_read_limit")(spark, SF_SMOKE)
     assert_column_pruned(df, "l_extendedprice" + "x")  # sanity: never fails on absent col
@@ -30,7 +30,7 @@ def test_projection_prunes_scan(spark):
 
 
 def test_flagship_broadcasts_and_fuses_topk(spark):
-    from week4_musemotion_spark.plans.audit import assert_broadcast_join, assert_top_k_fused
+    from tests.plan_asserts import assert_broadcast_join, assert_top_k_fused
 
     df = _q("q_cte_topk_join")(spark, SF_SMOKE)
     assert_broadcast_join(df)
@@ -38,20 +38,20 @@ def test_flagship_broadcasts_and_fuses_topk(spark):
 
 
 def test_dim_joins_broadcast(spark):
-    from week4_musemotion_spark.plans.audit import assert_broadcast_join
+    from tests.plan_asserts import assert_broadcast_join
 
     for name in ("q_inner_join", "q_multi_dim_join"):
         assert_broadcast_join(_q(name)(spark, SF_SMOKE))
 
 
 def test_filter_sort_uses_topk(spark):
-    from week4_musemotion_spark.plans.audit import assert_top_k_fused
+    from tests.plan_asserts import assert_top_k_fused
 
     assert_top_k_fused(_q("q_filter_sort")(spark, SF_SMOKE))
 
 
 def test_groupby_partial_aggregation(spark):
-    from week4_musemotion_spark.plans.audit import assert_partial_aggregation
+    from tests.plan_asserts import assert_partial_aggregation
 
     for name in ("q_count_by_group", "q_having_avg", "q_stats_agg"):
         assert_partial_aggregation(_q(name)(spark, SF_SMOKE))
@@ -60,7 +60,7 @@ def test_groupby_partial_aggregation(spark):
 def test_cleaning_pipeline_is_single_stage(spark, reference_csv):
     """The ETL chain must stay shuffle-free (narrow transforms only)."""
     from week4_musemotion_spark.operators.etl import clean_musemotion
-    from week4_musemotion_spark.plans.audit import count_shuffles
+    from tests.plan_asserts import count_shuffles
     from week4_musemotion_spark.sources.csv import read_headerless_csv
 
     df = clean_musemotion(read_headerless_csv(spark, reference_csv))
@@ -68,7 +68,7 @@ def test_cleaning_pipeline_is_single_stage(spark, reference_csv):
 
 
 def test_scan_speed_queries_whole_stage_codegen(spark):
-    from week4_musemotion_spark.plans.audit import assert_whole_stage_codegen
+    from tests.plan_asserts import assert_whole_stage_codegen
 
     for name in ("q_trim_nullify", "q_safe_cast", "q_regex_extract_point", "q_text_quality"):
         assert_whole_stage_codegen(_q(name)(spark, SF_SMOKE))
@@ -145,7 +145,7 @@ def test_no_cartesian_in_similarity_and_fuzzy_joins(spark):
 
 
 def test_basket_affinity_broadcasts_dims_and_fuses_topk(spark):
-    from week4_musemotion_spark.plans.audit import assert_broadcast_join, assert_top_k_fused
+    from tests.plan_asserts import assert_broadcast_join, assert_top_k_fused
 
     df = _q("q_basket_affinity")(spark, SF_SMOKE)
     assert_broadcast_join(df, forbid_sort_merge=False)  # part dims broadcast
@@ -153,7 +153,7 @@ def test_basket_affinity_broadcasts_dims_and_fuses_topk(spark):
 
 
 def test_zscore_outliers_broadcasts_moments(spark):
-    from week4_musemotion_spark.plans.audit import assert_broadcast_join
+    from tests.plan_asserts import assert_broadcast_join
 
     # the 5-row per-type moment table must broadcast back over the scan
     assert_broadcast_join(_q("q_zscore_outliers")(spark, SF_SMOKE))
@@ -171,7 +171,7 @@ def test_lifecycle_queries_stay_equi_join_shaped(spark):
 
 
 def test_mad_outliers_broadcasts_group_stats(spark):
-    from week4_musemotion_spark.plans.audit import assert_broadcast_join
+    from tests.plan_asserts import assert_broadcast_join
 
     # the per-flag median / MAD tables are tiny and must broadcast
     # back over the stream — the stream itself is never sorted
@@ -179,10 +179,7 @@ def test_mad_outliers_broadcasts_group_stats(spark):
 
 
 def test_morton_tiles_single_scan_partial_agg(spark):
-    from week4_musemotion_spark.plans.audit import (
-        assert_column_pruned,
-        assert_partial_aggregation,
-    )
+    from tests.plan_asserts import assert_column_pruned, assert_partial_aggregation
 
     df = _q("q_morton_tiles")(spark, SF_SMOKE)
     assert_partial_aggregation(df)  # 64-key agg combines map-side
@@ -230,7 +227,7 @@ def test_partitioned_write_prunes_directories(spark):
 def test_source_mixture_broadcasts_acceptance(spark):
     """Temperature rebalancing must broadcast the tiny per-group
     acceptance table into the filter — never shuffle the fact side."""
-    from week4_musemotion_spark.plans.audit import assert_broadcast_join
+    from tests.plan_asserts import assert_broadcast_join
 
     df = _q("q_source_mixture")(spark, SF_SMOKE)
     assert_broadcast_join(df)

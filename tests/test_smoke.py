@@ -50,6 +50,35 @@ def test_every_query_module_loads_with_the_package():
     assert out.stdout.strip() == "[]", out.stdout
 
 
+def test_query_catalog_tool_runs_without_pythonpath():
+    # the tool's usage line redirects into QUERIES.md, so a failed
+    # import would leave the catalog truncated to zero bytes
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO_ROOT
+    from week4_musemotion_spark.queries import REGISTRY
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "tools/gen_query_catalog.py"],
+        cwd=REPO_ROOT,
+        env=env,
+        capture_output=True,
+        text=True,
+    )
+    assert out.returncode == 0, out.stderr
+    lines = out.stdout.splitlines()
+    assert lines[0] == "# QUERIES — the named query catalog"
+    rows = [line.split("`")[1] for line in lines if line.startswith("| `")]
+    assert rows == list(REGISTRY)
+
+
+#: Files that run the package: the driver contract, the benchmarks, the
+#: Streamlit shell and the tools.
+ENTRY_POINTS = ("__spark_entry__.py", "bench.py", "streamlit_app.py", "perfbench/*.py", "tools/*.py")
+
 #: Package modules that no entry point imports, each with the reason it
 #: stays.  The guard below fails on an entry that is reached or gone,
 #: so this list can only shrink.
@@ -57,21 +86,53 @@ UNREACHED_MODULES = {
     "sources/cloud.py": "reference parity: the reference reads Azure Blob paths (pipeline.py)",
     "sources/sql_inserts.py": "reference parity: the reference's INSERT dump "
     "(musemotion-populate-table.sql)",
-    "sources/evolution.py": "ROADMAP D4: delete or promote",
-    "sources/quarantine.py": "ROADMAP D4: delete or promote",
-    "operators/expectations.py": "ROADMAP D4: delete or promote",
-    "operators/refresh.py": "ROADMAP D4: delete or promote",
-    "operators/stats.py": "ROADMAP D4: delete or promote",
-    "operators/versioned.py": "ROADMAP D4: delete or promote",
+}
+
+_D4 = "ROADMAP D4: delete or give a caller"
+_STREAM_FRONT_END = (
+    "the Structured Streaming front-end of a sink the registry drives; "
+    "only its test exercises checkpoint replay"
+)
+_FOLDED_INTO_AUDITS = "the sketch audits inline its formula in one fused pass; " + _D4
+
+#: Public top-level functions and classes of reached package modules
+#: that no non-test code names, each with the reason it stays.  Like
+#: ``UNREACHED_MODULES``, an entry that is referenced or gone fails the
+#: guard, so this list can only shrink.
+UNREACHED_FUNCTIONS = {
+    "dashboard.py:render_text": _D4,
+    "operators/etl.py:explode_utilities": _D4,
+    "operators/fuzzy.py:candidate_pairs_edit1": _D4,
+    "operators/incremental.py:join_delta": _D4,
+    "operators/layout.py:write_zordered": _D4,
+    "operators/lsh_index.py:append_index": _D4,
+    "operators/multimodal.py:decode_media": _D4,
+    "operators/multimodal.py:thumbnail_stub": _D4,
+    "operators/sampling.py:train_test_split": _D4,
+    "operators/sketches.py:approx_distinct_by": _D4,
+    "operators/sketches.py:approx_quantiles": _D4,
+    "operators/sketches.py:frequent_values": _D4,
+    "operators/sketches.py:hll_fold": _FOLDED_INTO_AUDITS,
+    "operators/sketches.py:cms_merge": _D4,
+    "operators/sketches.py:cms_lookup": _FOLDED_INTO_AUDITS,
+    "operators/sketches.py:cms_fold": _FOLDED_INTO_AUDITS,
+    "queries/musemotion_sql.py:run_corpus": _D4,
+    "sources/sinks.py:write_bucketed_table": "pins test_bucketed_join_has_no_exchange",
+    "sources/sinks.py:verify_export": _D4,
+    "sources/sinks.py:append_rows": _D4,
+    "sources/sinks.py:drop_table": _D4,
+    "sources/sinks.py:write_jdbc": _D4,
+    "streaming/counts.py:stream_daily_counts": _STREAM_FRONT_END,
+    "streaming/neardup.py:stream_neardup_ingest": _STREAM_FRONT_END,
+    "streaming/sketches.py:stream_hll_distinct": _STREAM_FRONT_END,
 }
 
 
 def _unreached_modules(repo) -> list[str]:
     """Package modules (paths under the package) outside the static
     import closure of the entry points: the query registry, the
-    dashboard, the driver contract, the benchmarks, the Streamlit
-    shell and the tools.  Counts relative and in-function imports;
-    importing ``a.b.c`` also reaches ``a`` and ``a.b``."""
+    dashboard and ``ENTRY_POINTS``.  Counts relative and in-function
+    imports; importing ``a.b.c`` also reaches ``a`` and ``a.b``."""
     import ast
 
     pkg = "week4_musemotion_spark"
@@ -81,8 +142,7 @@ def _unreached_modules(repo) -> list[str]:
         return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
     package = {name_of(p): p for p in (repo / pkg).rglob("*.py")}
-    entry = ("__spark_entry__.py", "bench.py", "streamlit_app.py", "perfbench/*.py", "tools/*.py")
-    roots = {name_of(p): p for g in entry for p in repo.glob(g)}
+    roots = {name_of(p): p for g in ENTRY_POINTS for p in repo.glob(g)}
     files = {**package, **roots}
     todo = [f"{pkg}.queries", f"{pkg}.dashboard", *roots]
     seen: set[str] = set()
@@ -118,6 +178,71 @@ def test_every_package_module_is_reached():
     assert not dead, f"no entry point imports {dead}"
     stale = sorted(set(UNREACHED_MODULES) - set(unreached))
     assert not stale, f"allowlisted but reached or gone: {stale}"
+
+
+def _unreferenced_functions(repo) -> list[str]:
+    """Public top-level ``def``s and ``class``es of reached package
+    modules (``module.py:name``) that no other top-level statement of
+    a reached module or an entry point names as an AST ``Name``,
+    ``Attribute`` or import alias; docstrings and comments do not
+    count.  ``@query`` builders are reached through the registry."""
+    import ast
+    from collections import Counter
+
+    pkg = repo / "week4_musemotion_spark"
+    unreached = set(_unreached_modules(repo))
+    modules = {
+        p.relative_to(pkg).as_posix(): ast.parse(p.read_text())
+        for p in pkg.rglob("*.py")
+        if p.relative_to(pkg).as_posix() not in unreached
+    }
+    roots = [ast.parse(p.read_text()) for g in ENTRY_POINTS for p in repo.glob(g)]
+
+    def names(stmt) -> set[str]:
+        out = set()
+        for n in ast.walk(stmt):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.rsplit(".", 1)[-1])
+        return out
+
+    def registered(stmt) -> bool:
+        calls = (d.func if isinstance(d, ast.Call) else d for d in stmt.decorator_list)
+        return any(getattr(f, "id", getattr(f, "attr", None)) == "query" for f in calls)
+
+    # per name: how many top-level statements mention it
+    mentions: Counter[str] = Counter()
+    for tree in [*modules.values(), *roots]:
+        for stmt in tree.body:
+            mentions.update(names(stmt))
+    found = []
+    for rel, tree in sorted(modules.items()):
+        for stmt in tree.body:
+            if (
+                isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not stmt.name.startswith("_")
+                and not registered(stmt)
+                # no statement names it but, if recursive, its own
+                and mentions[stmt.name] == (stmt.name in names(stmt))
+            ):
+                found.append(f"{rel}:{stmt.name}")
+    return found
+
+
+def test_every_public_function_is_referenced():
+    # the package is what something runs, function by function: a
+    # public function only tests call is dead code unless the allowlist
+    # above says why it stays
+    from tests.conftest import REPO_ROOT
+
+    unreferenced = _unreferenced_functions(REPO_ROOT)
+    dead = [f for f in unreferenced if f not in UNREACHED_FUNCTIONS]
+    assert not dead, f"no non-test code names {dead}"
+    stale = sorted(set(UNREACHED_FUNCTIONS) - set(unreferenced))
+    assert not stale, f"allowlisted but referenced or gone: {stale}"
 
 
 def test_all_queries_run_at_smoke_sf(spark):

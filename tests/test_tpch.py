@@ -28,10 +28,7 @@ def test_pricing_summary_golden(spark):
 
 
 def test_pricing_summary_plan(spark):
-    from week4_musemotion_spark.plans.audit import (
-        assert_column_pruned,
-        assert_partial_aggregation,
-    )
+    from tests.plan_asserts import assert_column_pruned, assert_partial_aggregation
 
     df = _q("q_tpch_pricing_summary")(spark, SF_SMOKE)
     assert_partial_aggregation(df)
@@ -40,7 +37,7 @@ def test_pricing_summary_plan(spark):
 
 
 def test_shipping_priority_topk_fused(spark):
-    from week4_musemotion_spark.plans.audit import assert_partial_aggregation, assert_top_k_fused
+    from tests.plan_asserts import assert_partial_aggregation, assert_top_k_fused
 
     df = _q("q_tpch_shipping_priority")(spark, SF_SMOKE)
     assert_top_k_fused(df)
@@ -66,7 +63,7 @@ def test_order_priority_decorrelates_to_semi_join(spark):
 
 
 def test_local_supplier_broadcasts_dims(spark):
-    from week4_musemotion_spark.plans.audit import assert_broadcast_join
+    from tests.plan_asserts import assert_broadcast_join
 
     df = _q("q_tpch_local_supplier")(spark, SF_SMOKE)
     assert_broadcast_join(df, forbid_sort_merge=False)

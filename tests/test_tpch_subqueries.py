@@ -26,7 +26,7 @@ def _plan(df):
 
 
 def test_forecast_revenue_golden_and_pushdown(spark):
-    from week4_musemotion_spark.plans.audit import assert_filter_pushed
+    from tests.plan_asserts import assert_filter_pushed
 
     df = _q("q_tpch_forecast_revenue")(spark, SF_SMOKE)
     assert_filter_pushed(df, "l_shipdate")
@@ -66,7 +66,7 @@ def test_product_profit_grouped_and_ordered(spark):
 
 
 def test_returned_items_topk(spark):
-    from week4_musemotion_spark.plans.audit import assert_top_k_fused
+    from tests.plan_asserts import assert_top_k_fused
 
     df = _q("q_tpch_returned_items")(spark, SF_001)
     assert_top_k_fused(df)
@@ -77,7 +77,8 @@ def test_returned_items_topk(spark):
 
 
 def test_disjunct_revenue_pushes_part_predicates(spark):
-    from week4_musemotion_spark.plans.audit import plan_string, pushed_filters
+    from week4_musemotion_spark.plans.audit import plan_string
+    from tests.plan_asserts import pushed_filters
 
     df = _q("q_tpch_disjunct_revenue")(spark, SF_SMOKE)
     pushed = pushed_filters(plan_string(df))

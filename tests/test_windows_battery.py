@@ -82,7 +82,7 @@ def test_conditional_agg_partial_aggregation(spark):
 
 
 def test_collect_values_broadcasts_dim(spark):
-    from week4_musemotion_spark.plans.audit import assert_broadcast_join
+    from tests.plan_asserts import assert_broadcast_join
 
     assert_broadcast_join(_q("q_collect_values")(spark, SF_SMOKE))
 

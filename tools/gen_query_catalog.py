@@ -5,10 +5,12 @@ Usage: python tools/gen_query_catalog.py > QUERIES.md
 
 from __future__ import annotations
 
+import os
 import sys
 
 
 def main() -> int:
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from week4_musemotion_spark.queries import REGISTRY
 
     out = sys.stdout

@@ -10,8 +10,6 @@ from __future__ import annotations
 import difflib
 import re
 
-from pyspark.sql import DataFrame
-
 #: Fuzzy-match cutoff for column mapping (reference
 #: streamlit_app.py:106 uses difflib cutoff 0.6).
 MAP_CUTOFF = 0.6
@@ -21,10 +19,6 @@ def normalize_name(name: str) -> str:
     """lowercase, strip, collapse non-alnum runs to underscores
     (reference streamlit_app.py:24-28)."""
     return re.sub(r"[^a-z0-9]+", "_", str(name).strip().lower()).strip("_")
-
-
-def normalize_columns(df: DataFrame) -> DataFrame:
-    return df.toDF(*[normalize_name(c) for c in df.columns])
 
 
 def fuzzy_map_columns(actual: list[str], expected: list[str], cutoff: float = MAP_CUTOFF) -> dict[str, str]:

@@ -23,8 +23,7 @@ whose exact-Jaccard verification data is missing, silently dropping
 true near-dups in the inner ``_intersections`` join.  A crash
 mid-write can still leave partial part-files that a later read will
 see (parquet reads are not ``_SUCCESS``-gated); for replay-exact
-multi-writer semantics wrap the directory in ``operators/versioned``
-snapshots or use the streaming gate's batch-id commit log.
+multi-writer semantics use the streaming gate's batch-id commit log.
 """
 
 from __future__ import annotations

@@ -637,10 +637,7 @@ def q_dq_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     population come from ONE pass), domain violations (non-positive
     quantities, future order dates), blank documents, and key
     duplication (count minus count-distinct).  This is the
-    contract-check stage a pipeline runs before promoting a batch;
-    the declarative single-pass variant lives in
-    operators/expectations.py (``df.observe`` ride-along — zero
-    extra scans when the batch is being written anyway).
+    contract-check stage a pipeline runs before promoting a batch.
 
     Scale shape: each rule is one scan-plus-aggregate (the orphan
     check a shuffled count-distinct-free outer join on the fact key);
@@ -798,16 +795,16 @@ def q_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus snapshot diff — the audit between two versioned
-    snapshots (operators/versioned.py) that answers "what did last
-    night's refresh actually do": per status, how many rows were
-    added, removed, changed (value drift on the same key), or
-    unchanged.  The two versions are synthesized deterministically
-    from orders (disjoint modular drops + a price revision on keys ≡0
-    mod 3) so the query is self-contained; the operator shape — one
-    FULL OUTER join on the snapshot key feeding a classification
-    aggregate — is exactly what runs between v_<n-1> and v_<n>.
-    All prices in exact integer cents; one key-partitioned shuffle."""
+    """Corpus snapshot diff — the audit between two snapshots that
+    answers "what did last night's refresh actually do": per status,
+    how many rows were added, removed, changed (value drift on the
+    same key), or unchanged.  The two versions are synthesized
+    deterministically from orders (disjoint modular drops + a price
+    revision on keys ≡0 mod 3) so the query is self-contained; the
+    operator shape — one FULL OUTER join on the snapshot key feeding a
+    classification aggregate — is exactly what runs between v_<n-1>
+    and v_<n>.  All prices in exact integer cents; one key-partitioned
+    shuffle."""
     from week4_musemotion_spark.functions.exact import cents
 
     o = load_table(spark, sf_dir, "orders")
