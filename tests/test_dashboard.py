@@ -45,16 +45,6 @@ def test_filter_options_and_narrowing(dash):
     assert int(dash.kpis(sel).iloc[0].total_vehicles) == int(by_city["count"].sum())
 
 
-def test_render_text_and_empty_guard(dash):
-    from week4_musemotion_spark.dashboard import render_text
-
-    full = render_text(dash)
-    assert "Total Vehicles: 1,498" in full
-    assert "--- Vehicles by Make ---" in full
-    empty = render_text(dash, city=["no-such-city"])
-    assert empty == "No data available based on the current filter settings!"
-
-
 def test_streamlit_shell_guards_missing_dep():
     """The UI shell (streamlit_app.py) must stay optional: without
     streamlit installed, importing it exits with a clear message
@@ -158,18 +148,22 @@ def test_generated_tie_order_is_deterministic(generated):
 
 
 def test_generated_empty_selection(generated):
-    from week4_musemotion_spark.dashboard import render_text
-
     dash, _ = generated
     sel = dash.select(city=["no-such-city"])
     kpi = dash.kpis(sel)
     assert kpi.empty
     assert list(kpi.columns) == ["total_vehicles", "avg_year", "avg_electric_range"]
     assert dash.vehicles_by_make(sel).empty and dash.counts_by_city(sel).empty
-    assert render_text(dash, city=["no-such-city"]) == (
-        "No data available based on the current filter settings!"
-    )
-    assert "Total Vehicles: 30" in render_text(dash)
+
+
+def test_generated_cache_holds_only_widget_columns(generated):
+    """The cached frame keeps the five columns the widgets read, and
+    its plan trims and parses nothing else: no regex survives pruning
+    (the trims are ``btrim``, the WKT parse is pruned away)."""
+    dash, _ = generated
+    assert dash.df.columns == ["city", "model", "make", "year", "electric_range"]
+    plan = dash.df._jdf.queryExecution().optimizedPlan().toString()
+    assert "regexp_extract" not in plan and "regexp_replace" not in plan, plan
 
 
 def test_generated_interaction_job_budget(spark, generated):

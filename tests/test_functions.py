@@ -6,6 +6,7 @@ from __future__ import annotations
 import hashlib
 import math
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -28,6 +29,25 @@ def test_trim_nullify_idempotent(spark):
     once = df.select(trim_nullify("raw").alias("c"))
     twice = once.select(trim_nullify("c").alias("c"))
     assert once.collect() == twice.collect()
+
+
+@pytest.mark.parametrize(
+    "raw, want",
+    [
+        ("\x0b 42\x0c", "42"),  # every ASCII whitespace Java's \s matches
+        ("\xa0x\xa0", "\xa0x\xa0"),  # non-ASCII spaces are kept (pandas strips them)
+        ("x\u3000", "x\u3000"),
+        ("a \u2028", "a \u2028"),  # a `^\s+|\s+$` regex strips the space here
+        (" \t\r\n", ""),
+        (None, None),
+    ],
+    ids=["ascii_controls", "nbsp", "ideographic_space", "final_line_separator", "whitespace_only", "null"],
+)
+def test_strip_whitespace_semantics(spark, raw, want):
+    from week4_musemotion_spark.functions.cleaning import strip_whitespace
+
+    df = spark.createDataFrame([(raw,)], "raw string")
+    assert df.select(strip_whitespace("raw")).first()[0] == want
 
 
 def test_safe_cast_never_throws(spark):

@@ -88,15 +88,6 @@ def test_latlon_extraction_rate(cleaned):
     assert stats.lon_max < -60.0
 
 
-def test_explode_utilities(cleaned):
-    from week4_musemotion_spark.operators.etl import explode_utilities
-
-    exploded = explode_utilities(cleaned)
-    assert exploded.count() > cleaned.count()  # 948/1499 rows are multi-valued
-    bad = exploded.filter(F.col("utility").contains("|")).count()
-    assert bad == 0
-
-
 def test_upsert_merge_semantics(spark, tmp_path):
     from week4_musemotion_spark.operators.upsert import upsert_parquet_snapshot
 

@@ -67,6 +67,20 @@ def test_cleaning_pipeline_is_single_stage(spark, reference_csv):
     assert count_shuffles(df) == 0
 
 
+def test_cleaning_plan_has_no_regex_trim_and_no_shuffle(spark, tmp_path):
+    """The clean trims with builtin ``btrim``: no ``regexp_replace``
+    in its optimized plan, and no exchange."""
+    from tests.plan_asserts import count_shuffles
+    from week4_musemotion_spark.operators.etl import clean_musemotion
+    from week4_musemotion_spark.sources.csv import read_headerless_csv
+
+    path = tmp_path / "batch.csv"
+    path.write_text("VIN1, Seattle ,2020,TESLA,MODEL Y,BEV,e,10,1,POINT (-122.3 47.6),PSE\n")
+    df = clean_musemotion(read_headerless_csv(spark, str(path)))
+    assert "regexp_replace" not in df._jdf.queryExecution().optimizedPlan().toString()
+    assert count_shuffles(df) == 0
+
+
 def test_scan_speed_queries_whole_stage_codegen(spark):
     from tests.plan_asserts import assert_whole_stage_codegen
 

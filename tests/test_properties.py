@@ -4,7 +4,7 @@ degrade to NULL."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import given
 from hypothesis import strategies as st
 
 # driver-side pure functions: full hypothesis speed
@@ -69,17 +69,6 @@ def test_cleaning_battery_never_errors(spark):
     assert got["POINT ( )"].lat is None
     for s in ("nan", "None", "", "  ", "\t"):
         assert got[s].t is None, s
-
-
-@settings(max_examples=20, deadline=None)
-@given(st.lists(st.text(alphabet="ab |", min_size=0, max_size=12), min_size=1, max_size=6))
-def test_explode_utilities_never_emits_separators(spark, utilities):
-    from week4_musemotion_spark.operators.etl import explode_utilities
-
-    df = spark.createDataFrame([(u,) for u in utilities], ["utility"])
-    out = [r.utility for r in explode_utilities(df).collect()]
-    for u in out:
-        assert u is None or ("|" not in u and u == u.strip())
 
 
 def test_simhash_banding_equals_brute_force_random(spark):

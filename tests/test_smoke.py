@@ -100,8 +100,6 @@ _FOLDED_INTO_AUDITS = "the sketch audits inline its formula in one fused pass; "
 #: ``UNREACHED_MODULES``, an entry that is referenced or gone fails the
 #: guard, so this list can only shrink.
 UNREACHED_FUNCTIONS = {
-    "dashboard.py:render_text": _D4,
-    "operators/etl.py:explode_utilities": _D4,
     "operators/fuzzy.py:candidate_pairs_edit1": _D4,
     "operators/incremental.py:join_delta": _D4,
     "operators/layout.py:write_zordered": _D4,

@@ -6,7 +6,9 @@ this layer keeps:
 
 1. ONE cleaned DataFrame, cached once (`.cache()`), shared by every
    widget — the fact table is never re-read or re-cleaned per
-   interaction.
+   interaction.  The cache holds only :data:`WIDGET_COLUMNS`, the
+   columns the widgets read, so the scan parses, trims and stores
+   nothing else (the WKT coordinates are never parsed).
 2. Filters compose lazily (`isin` predicates on the cached frame) —
    nothing executes until a widget needs numbers.
 3. Only AGGREGATES ever leave the cluster, and each selection costs
@@ -18,12 +20,8 @@ this layer keeps:
    (The reference holds the whole CSV in driver pandas; at 100 TB
    only this aggregate-collect shape survives.)
 
-The rendering shell is deliberately thin: `render_text` prints the
-same KPI row / charts the reference lays out (streamlit_app.py:
-180-223) and demonstrates the empty-selection guard
-(streamlit_app.py:172-174): a selection without a grand-total row has
-no rows at all.  A Streamlit front end would call the
-same Dashboard methods; streamlit itself is not a dependency here.
+A front end (``streamlit_app.py``) calls these methods and only lays
+out what they return; streamlit itself is not a dependency here.
 """
 
 from __future__ import annotations
@@ -33,11 +31,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from week4_musemotion_spark.operators.etl import kpi_columns
+from week4_musemotion_spark.operators.etl import clean_musemotion, kpi_columns
 from week4_musemotion_spark.sources.csv import read_headerless_csv
 
 #: Sidebar filter columns (streamlit_app.py:161-163).
 FILTER_COLUMNS = ("city", "model", "make")
+
+#: The columns the filters, the KPI row and the charts read: all the
+#: cached frame holds.
+WIDGET_COLUMNS = (*FILTER_COLUMNS, "year", "electric_range")
 
 #: ``grouping_id()`` of each grouping set over the keys (make, city):
 #: a bit is set for every key the set rolls up.
@@ -48,10 +50,9 @@ class Dashboard:
     """Cached-frame dashboard backend over the MuseMotion dataset."""
 
     def __init__(self, spark: SparkSession, csv_path: str):
-        from week4_musemotion_spark.operators.etl import clean_musemotion
-
         self.spark = spark
-        self.df = clean_musemotion(read_headerless_csv(spark, csv_path)).cache()
+        clean = clean_musemotion(read_headerless_csv(spark, csv_path))
+        self.df = clean.select(*WIDGET_COLUMNS).cache()
         #: ``(selection, widget rows)`` of the last selection served.
         #: One tuple, replaced whole, so a reader never pairs one
         #: selection with another's rows.
@@ -64,10 +65,12 @@ class Dashboard:
 
     def filter_options(self) -> dict[str, list[str]]:
         """Sorted distinct values per sidebar filter (A6, ref
-        streamlit_app.py:144-151) — ONE Spark job for all columns
-        (explode to (col, value) pairs → one grouped count), capped at
-        :attr:`MAX_FILTER_OPTIONS` per column by frequency so only
-        ≤ k·|columns| tiny rows ever reach the driver."""
+        streamlit_app.py:144-151) — ONE collect for all columns
+        (explode to (col, value) pairs → one grouped count → a
+        per-column rank; under AQE a job per shuffle-map stage plus
+        the result job), capped at :attr:`MAX_FILTER_OPTIONS` per
+        column by frequency so only ≤ k·|columns| tiny rows ever reach
+        the driver."""
         pairs = self.df.select(
             F.explode(
                 F.array(
@@ -143,25 +146,3 @@ class Dashboard:
     def counts_by_city(self, selection: DataFrame) -> pd.DataFrame:
         return self._chart(selection, "city", _BY_CITY, ascending=False)
 
-
-def render_text(dash: Dashboard, **choices: list[str] | None) -> str:
-    """Plain-text rendering of the reference's main page layout."""
-    sel = dash.select(**choices)
-    kpis = dash.kpis(sel)
-    if kpis.empty:
-        return "No data available based on the current filter settings!"
-    kpi = kpis.iloc[0]
-    lines = [
-        "=== Muse Motion Electric Vehicles ===",
-        f"Total Vehicles: {int(kpi.total_vehicles):,}"
-        f" | Average Year: {kpi.avg_year}"
-        f" | Average Electric Range: {kpi.avg_electric_range}",
-        "--- Vehicles by Make ---",
-    ]
-    lines += [
-        f"{r['make'] or '<null>'}: {r['count']}"
-        for _, r in dash.vehicles_by_make(sel).iterrows()
-    ]
-    lines.append("--- Vehicle counts by City ---")
-    lines += [f"{r['city']}: {r['count']}" for _, r in dash.counts_by_city(sel).iterrows()]
-    return "\n".join(lines)

@@ -53,31 +53,20 @@ FINAL_COLUMNS = [
 def clean_musemotion(df: DataFrame, drop_location: bool = False) -> DataFrame:
     """Raw (all-string, positionally named) → MUSEMOTION_CLEAN.
 
+    One projection: trim the text columns, drop rows missing a critical
+    column, then cast and parse in the final select.  A caller that
+    selects fewer columns prunes the rest, down to the CSV fields read.
+
     ``drop_location`` reproduces the load_local_to_db.py:108 variant
     that drops the WKT source column after extraction.
     """
-    out = df
-    for c in TEXT_COLUMNS:
-        out = out.withColumn(c, trim_nullify(c))
-    out = out.na.drop(subset=CRITICAL_COLUMNS)
-    for c, t in NUMERIC_CASTS:
-        out = out.withColumn(c, safe_cast(c, t))
+    trimmed = df.select(
+        *[trim_nullify(c).alias(c) if c in TEXT_COLUMNS else F.col(c) for c in df.columns]
+    ).na.drop(subset=CRITICAL_COLUMNS)
     lat, lon = extract_point_latlon("location")
-    out = out.withColumn("latitude", lat).withColumn("longitude", lon)
+    parsed = {c: safe_cast(c, t) for c, t in NUMERIC_CASTS} | {"latitude": lat, "longitude": lon}
     cols = [c for c in FINAL_COLUMNS if not (drop_location and c == "location")]
-    return out.select(*cols)
-
-
-def explode_utilities(df: DataFrame) -> DataFrame:
-    """Split the pipe-delimited multi-valued ``utility`` column into
-    one row per utility (the natural ArrayType seam the reference
-    never exploits — 948/1,499 of its rows are multi-valued).
-    """
-    utilities = F.filter(
-        F.transform(F.split(F.col("utility"), r"\|+"), lambda u: F.trim(u)),
-        lambda u: u != "",
-    )
-    return df.withColumn("utility", F.explode_outer(utilities))
+    return trimmed.select(*[parsed[c].alias(c) if c in parsed else F.col(c) for c in cols])
 
 
 def kpi_columns() -> list[Column]:
