@@ -1,5 +1,5 @@
 """Manifest-driven partitioned corpus export (sinks.export_with_manifest
-/ verify_export): the writer twin of the q_data_card manifest."""
+/ refresh_manifest): the writer twin of the q_data_card manifest."""
 
 from __future__ import annotations
 
@@ -18,9 +18,19 @@ def _card(df):
     )
 
 
+def _stale_shards(spark, out):
+    """(source, lang) of every shard whose stored ``_manifest`` row
+    differs from the card recomputed from the files on disk, in
+    either direction; empty when the manifest is current."""
+    stored = spark.read.parquet(os.path.join(out, "_manifest"))
+    actual = _card(spark.read.parquet(out)).select(*stored.columns)
+    diff = stored.exceptAll(actual).unionByName(actual.exceptAll(stored))
+    return {(r["source"], r["lang"]) for r in diff.collect()}
+
+
 def test_export_roundtrip_and_tamper_detection(spark, tmp_path):
     from week4_musemotion_spark.sources.tables import load_table
-    from week4_musemotion_spark.sources.sinks import export_with_manifest, verify_export
+    from week4_musemotion_spark.sources.sinks import export_with_manifest
 
     d = load_table(spark, SF_SMOKE, "documents")
     out = str(tmp_path / "corpus")
@@ -34,18 +44,15 @@ def test_export_roundtrip_and_tamper_detection(spark, tmp_path):
     back = spark.read.parquet(out).select(*d.columns)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, d.collect()))
 
-    # clean export verifies clean
-    assert verify_export(spark, out, _card).count() == 0
+    # the published manifest describes the files as written
+    assert _stale_shards(spark, out) == set()
 
-    # tamper: drop one shard directory -> exactly its manifest rows flag
+    # tamper: drop one shard directory -> exactly its manifest rows differ
     shard = next((tmp_path / "corpus").glob("source=*"))
-    n_langs = len(list(shard.glob("lang=*")))
-    shutil.rmtree(shard)
-    bad = verify_export(spark, out, _card).collect()
-    assert len(bad) == n_langs
-    assert all(r["actual_n_docs"] is None for r in bad)
     src_val = shard.name.split("=", 1)[1]
-    assert all(r["source"] == src_val for r in bad)
+    langs = {p.name.split("=", 1)[1] for p in shard.glob("lang=*")}
+    shutil.rmtree(shard)
+    assert _stale_shards(spark, out) == {(src_val, lang) for lang in langs}
 
 
 def test_manifest_audit_flags_tampering_with_zero_not_null(spark, tmp_path):
@@ -90,13 +97,9 @@ def test_manifest_audit_flags_tampering_with_zero_not_null(spark, tmp_path):
 def test_refresh_manifest_recards_only_named_shards(spark, tmp_path):
     """Incremental re-card (sinks.refresh_manifest): append to ONE
     shard, refresh only that shard, and the manifest is consistent
-    again (verify_export clean) while every OTHER shard's manifest
+    again (no stale shard) while every OTHER shard's manifest
     row is value-identical to before the refresh."""
-    from week4_musemotion_spark.sources.sinks import (
-        export_with_manifest,
-        refresh_manifest,
-        verify_export,
-    )
+    from week4_musemotion_spark.sources.sinks import export_with_manifest, refresh_manifest
     from week4_musemotion_spark.sources.tables import load_table
 
     d = load_table(spark, SF_SMOKE, "documents")
@@ -114,14 +117,13 @@ def test_refresh_manifest_recards_only_named_shards(spark, tmp_path):
     assert n_extra > 0
     extra.write.mode("append").partitionBy("source", "lang").parquet(out)
 
-    # the stale manifest now flags exactly the touched shard
-    bad = verify_export(spark, out, _card).collect()
-    assert [(r["source"], r["lang"]) for r in bad] == [(tgt["source"], tgt["lang"])]
+    # the manifest is now stale for exactly the touched shard
+    assert _stale_shards(spark, out) == {(tgt["source"], tgt["lang"])}
 
     refresh_manifest(
         spark, out, _card, [{"source": tgt["source"], "lang": tgt["lang"]}]
     )
-    assert verify_export(spark, out, _card).count() == 0
+    assert _stale_shards(spark, out) == set()
     after = {
         (r["source"], r["lang"]): (r["n_docs"], r["chars_sum"])
         for r in spark.read.parquet(out + "/_manifest").collect()
@@ -153,11 +155,7 @@ def test_refresh_manifest_escaped_partition_values_and_empty_list(spark, tmp_pat
     An empty partitions list is a clear validation error."""
     import pytest
 
-    from week4_musemotion_spark.sources.sinks import (
-        export_with_manifest,
-        refresh_manifest,
-        verify_export,
-    )
+    from week4_musemotion_spark.sources.sinks import export_with_manifest, refresh_manifest
 
     d = spark.createDataFrame(
         [(1, "web", "pt:BR", 10), (2, "web", "en", 5), (3, "books", "pt:BR", 7)],
@@ -172,7 +170,7 @@ def test_refresh_manifest_escaped_partition_values_and_empty_list(spark, tmp_pat
     )
     extra.write.mode("append").partitionBy("source", "lang").parquet(out)
     refresh_manifest(spark, out, _card, [{"source": "web", "lang": "pt:BR"}])
-    assert verify_export(spark, out, _card).count() == 0
+    assert _stale_shards(spark, out) == set()
     rows = {
         (r["source"], r["lang"]): r["n_docs"]
         for r in spark.read.parquet(out + "/_manifest").collect()

@@ -98,20 +98,6 @@ def test_multimodal_meta_plumbing(spark):
         assert r.format in ("png", "jpeg")
 
 
-def test_decode_media_is_gated():
-    import pytest
-
-    from week4_musemotion_spark.operators.multimodal import decode_media
-
-    pytest.importorskip  # documentation: no imaging lib here
-    try:
-        decode_media(b"\x89PNG")
-    except NotImplementedError as e:
-        assert "imaging" in str(e)
-    else:  # pragma: no cover - only if Pillow is installed
-        pass
-
-
 def _next_job_id(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
@@ -172,23 +158,6 @@ def test_frame_sample_stride_and_fingerprints(spark):
     b = text.encode()
     exp = int(hashlib.md5(b"frame:" + b + b":" + str(row.frame_idx).encode()).hexdigest()[:15], 16)
     assert row.frame_fp == exp
-
-
-def test_thumbnail_stub_binary_roundtrip(spark):
-    from pyspark.sql import types as T
-
-    from week4_musemotion_spark.operators.multimodal import thumbnail_stub
-    from week4_musemotion_spark.sources.tables import load_table
-
-    d = load_table(spark, SF_SMOKE, "documents")
-    out = thumbnail_stub(d)
-    assert isinstance(out.schema["thumb"].dataType, T.BinaryType)
-    rows = out.collect()
-    assert len(rows) == d.count()
-    assert all(r.thumb_bytes == 16 and len(bytes(r.thumb)) == 16 for r in rows)
-    # deterministic across runs
-    again = {r.doc_id: bytes(r.thumb) for r in thumbnail_stub(d).collect()}
-    assert all(bytes(r.thumb) == again[r.doc_id] for r in rows)
 
 
 def test_connected_components_long_chain_pointer_jumping(spark):

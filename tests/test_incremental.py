@@ -64,39 +64,3 @@ def test_merge_states_rejects_empty():
 
     with pytest.raises(ValueError):
         merge_states()
-
-
-def test_join_delta_equals_full_rejoin(spark):
-    """base ∪ delta joined from scratch == base-join ∪ join_delta —
-    the refresh invariant of an incrementally-maintained join view."""
-    from pyspark.sql import functions as F
-
-    from week4_musemotion_spark.operators.incremental import join_delta
-    from week4_musemotion_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    o = load_table(spark, SF_SMOKE, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, SF_SMOKE, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_nationkey"
-    )
-    # split both sides into base + delta by key hash
-    bl, dl = o.filter("o_orderkey % 5 != 0"), o.filter("o_orderkey % 5 = 0")
-    br, dr = c.filter("o_custkey % 3 != 0"), c.filter("o_custkey % 3 = 0")
-
-    full = (
-        bl.unionByName(dl)
-        .join(br.unionByName(dr), "o_custkey")
-        .select("o_orderkey", "o_custkey", "c_nationkey")
-    )
-    incremental = (
-        bl.join(br, "o_custkey")
-        .select("o_orderkey", "o_custkey", "c_nationkey")
-        .unionByName(
-            join_delta(bl, br, dl, dr, on=["o_custkey"]).select(
-                "o_orderkey", "o_custkey", "c_nationkey"
-            )
-        )
-    )
-    assert sorted(map(tuple, full.collect())) == sorted(
-        map(tuple, incremental.collect())
-    )

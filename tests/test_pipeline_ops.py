@@ -1,26 +1,10 @@
-"""Hash sampling / splits, profiling, upserts, sources and quality gates."""
+"""Profiling, upserts, sources and quality gates."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-
-
-def test_train_test_split_disjoint_exhaustive_stable(spark):
-    from week4_musemotion_spark.operators.sampling import train_test_split
-
-    o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    train, test = train_test_split(o, "o_orderkey", test_fraction=0.2)
-    n_train, n_test, n = train.count(), test.count(), o.count()
-    assert n_train + n_test == n
-    assert train.join(test, "o_orderkey", "inner").count() == 0  # disjoint
-    assert 0.1 < n_test / n < 0.3  # roughly the requested fraction
-    # stability: repartitioned input yields the identical split
-    train2, _ = train_test_split(o.repartition(7), "o_orderkey", test_fraction=0.2)
-    assert sorted(r.o_orderkey for r in train.select("o_orderkey").collect()) == sorted(
-        r.o_orderkey for r in train2.select("o_orderkey").collect()
-    )
 
 
 def test_profile_detects_nulls_and_ranges(spark):
@@ -48,16 +32,6 @@ def test_profile_decimal_and_tinyint_ranges(spark):
     got = {r.column: r for r in profile(df).collect()}
     assert got["dec"].min_value == 0.0 and got["dec"].max_value == 2.0
     assert got["tiny"].min_value == 0.0 and got["tiny"].max_value == 2.0
-
-
-def test_frequent_values_exact_support_boundary(spark):
-    from week4_musemotion_spark.operators.sketches import frequent_values
-
-    # 300 rows; 'x' at exactly 7% (21) must qualify at min_support=0.07
-    # despite 300*0.07 = 21.000000000000004 in float
-    df = spark.createDataFrame([("x",)] * 21 + [("y",)] * 279, ["v"])
-    got = {r.v for r in frequent_values(df, "v", min_support=0.07).collect()}
-    assert "x" in got
 
 
 def test_upsert_recovers_from_orphaned_old_snapshot(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Scale-mechanics tests: salted joins preserve semantics; bucketed
-tables join without a shuffle."""
+"""Scale-mechanics tests: salted joins preserve semantics; compaction,
+set joins and global ranks stay exact."""
 
 from __future__ import annotations
 
@@ -34,34 +34,6 @@ def test_salted_left_join_keeps_unmatched(spark):
     assert sorted(map(tuple, plain.collect()), key=str) == sorted(
         map(tuple, salted.collect()), key=str
     )
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    from week4_musemotion_spark.plans.audit import plan_string
-    from week4_musemotion_spark.sources.sinks import write_bucketed_table
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-    o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    write_bucketed_table(li.select("l_orderkey", "l_quantity"), "t_li_b", "l_orderkey", 8)
-    write_bucketed_table(o.select("o_orderkey", "o_totalprice"), "t_o_b", "o_orderkey", 8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # at test scale the planner prefers broadcast (which disables
-        # bucketed reads); force the merge path a 100 TB fact⋈fact
-        # join would take
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = spark.table("t_li_b")
-        b = spark.table("t_o_b")
-        joined = a.join(b, a.l_orderkey == b.o_orderkey)
-        # co-bucketed sides: the join plans without any shuffle Exchange
-        plan = plan_string(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan[:2000]
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_li_b")
-        spark.sql("DROP TABLE IF EXISTS t_o_b")
 
 
 def test_salted_join_rejects_outer(spark):
@@ -106,70 +78,6 @@ def test_knn_handles_zero_norm_and_ties(spark):
     assert [(r.neighbor_id, r.rank) for r in got] == [(1, 1), (2, 2), (3, 3)]
     pairs = cosine_pairs(emb, threshold=0.5).collect()
     assert all(4 not in (r.vec_id_a, r.vec_id_b) for r in pairs)
-
-
-def test_frequent_values_ceil_threshold(spark):
-    from week4_musemotion_spark.operators.sketches import frequent_values
-
-    df = spark.createDataFrame([("x",)] * 2 + [("y",)] * 248, ["v"])
-    # 250 rows, 1% support -> ceil(2.5)=3: 'x' (count 2, 0.8%) must NOT qualify
-    got = {r.v for r in frequent_values(df, "v", min_support=0.01).collect()}
-    assert got == {"y"}
-
-
-def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):
-    """Z-order clustering must give BOTH columns bounded per-row-group
-    min/max spans (the property parquet stats pruning feeds on);
-    a single-column sort leaves the other column at full spread."""
-    import glob
-    import os
-    import statistics as st
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from week4_musemotion_spark.operators.layout import write_zordered
-    from week4_musemotion_spark.sources.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    from week4_musemotion_spark.functions.eventtime import epoch_micros
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    e = ev.select("event_id", "user_id", epoch_micros(ev).alias("tsu"))
-
-    def spreads(path):
-        out = []
-        for f in glob.glob(os.path.join(path, "*.parquet")):
-            md = pq.read_metadata(f)
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                cols = {
-                    g.column(i).path_in_schema: g.column(i).statistics
-                    for i in range(g.num_columns)
-                }
-                out.append(
-                    (
-                        cols["user_id"].max - cols["user_id"].min,
-                        cols["tsu"].max - cols["tsu"].min,
-                    )
-                )
-        return out
-
-    glob_u, glob_t = e.agg(
-        F.max("user_id") - F.min("user_id"), F.max("tsu") - F.min("tsu")
-    ).first()
-
-    zp, sp = str(tmp_path / "z"), str(tmp_path / "s")
-    write_zordered(e, zp, "user_id", "tsu", n_files=8)
-    e.repartitionByRange(8, "tsu").sortWithinPartitions("tsu").write.parquet(sp)
-
-    zs, ss = spreads(zp), spreads(sp)
-    med = lambda xs, i: st.median(x[i] for x in xs)  # noqa: E731
-    # z-order: both dimensions bounded well below global
-    assert med(zs, 0) <= 0.5 * glob_u
-    assert med(zs, 1) <= 0.75 * glob_t
-    # single-column sort: the unsorted dimension spans ~everything
-    assert med(ss, 0) >= 0.9 * glob_u
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):

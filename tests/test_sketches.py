@@ -8,49 +8,6 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 
-def test_approx_distinct_within_rsd(spark):
-    from week4_musemotion_spark.operators.sketches import approx_distinct_by
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-    approx = {
-        r.l_returnflag: r.approx_distinct
-        for r in approx_distinct_by(li, ["l_returnflag"], "l_orderkey", rsd=0.02).collect()
-    }
-    exact = {
-        r.l_returnflag: r.n
-        for r in li.groupBy("l_returnflag").agg(F.countDistinct("l_orderkey").alias("n")).collect()
-    }
-    assert set(approx) == set(exact)
-    for k in exact:
-        rel_err = abs(approx[k] - exact[k]) / exact[k]
-        assert rel_err < 0.06, (k, approx[k], exact[k])  # 3x rsd
-
-
-def test_approx_quantiles_bracket_exact(spark):
-    from week4_musemotion_spark.operators.sketches import approx_quantiles
-
-    o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    got = approx_quantiles(o, "o_totalprice", [0.1, 0.5, 0.9]).collect()[0].quantiles
-    vals = sorted(r.o_totalprice for r in o.select("o_totalprice").collect())
-    n = len(vals)
-    for p, q in zip([0.1, 0.5, 0.9], got):
-        lo = vals[max(0, int(n * (p - 0.02)) - 1)]
-        hi = vals[min(n - 1, int(n * (p + 0.02)))]
-        assert lo <= q <= hi, (p, q, lo, hi)
-    assert list(got) == sorted(got)
-
-
-def test_frequent_values_support(spark):
-    from week4_musemotion_spark.operators.sketches import frequent_values
-
-    e = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-    hh = frequent_values(e, "event_type", min_support=0.05).collect()
-    assert {r.event_type for r in hh} == {"view", "click", "purchase", "signup", "error"}
-    assert all(r.cnt >= 0.05 * 1000 for r in hh)
-    # raising support prunes
-    assert frequent_values(e, "event_type", min_support=0.9).count() == 0
-
-
 def test_heavy_hitters_matches_exact_on_zipf(spark):
     """The MG candidate pass must have NO false negatives even when
     the vocabulary (2k values) vastly exceeds the counter budget
@@ -304,107 +261,57 @@ def test_bloom_words_fold_from_larger_build(spark):
         assert bloom_words(pos, bits) == build_key_bloom(d, "k", num_bits=bits)
 
 
-def test_cms_never_underestimates_and_merges(spark):
-    from week4_musemotion_spark.operators.sketches import (
-        cms_lookup,
-        cms_merge,
-        cms_sketch,
-    )
-
-    o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").select(
-        F.col("o_orderpriority").alias("v"), F.col("o_orderkey").alias("k")
-    )
-    sk = cms_sketch(o, [], "v", width=64, depth=4)
-    exact = {r.v: r.cnt for r in o.groupBy("v").agg(F.count("*").alias("cnt")).collect()}
-    terms = o.select("v").distinct()
-    est = {
-        r.v: r.cms_est
-        for r in cms_lookup(sk, terms, "v", width=64, depth=4).collect()
-    }
-    for v, c in exact.items():
-        assert est[v] >= c, (v, est[v], c)  # one-sided guarantee
-    # mergeability: cells of sketch(A)+sketch(B) == sketch(A ∪ B)
-    a, b = o.filter(F.col("k") % 2 == 0), o.filter(F.col("k") % 2 == 1)
-    merged = cms_merge(
-        cms_sketch(a, [], "v", width=64, depth=4),
-        cms_sketch(b, [], "v", width=64, depth=4),
-        [],
-    )
-    key = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-    assert key(merged) == key(sk)
-
-
 def test_cms_width_mismatch_fails_loudly(spark):
     import pytest as _pytest
 
-    from week4_musemotion_spark.operators.sketches import cms_lookup, cms_sketch
+    from week4_musemotion_spark.operators.sketches import cms_sketch
 
     d = spark.range(100).select(F.concat(F.lit("v"), F.col("id") % 7).alias("v"))
-    sk = cms_sketch(d, [], "v", width=64)
-    with _pytest.raises(Exception, match="not built with width=128"):
-        cms_lookup(sk, d.select("v").distinct(), "v", width=128).collect()
     with _pytest.raises(ValueError):
         cms_sketch(d, [], "v", width=100)
 
 
-def test_cms_lookup_recovers_v1_sketch_depth(spark):
-    """Sketches persisted before the round-7 'd' column (v1 layout)
-    must still be readable: the build depth is recovered exactly from
-    the cells (max(j)+1), then enforced like v2 — a depth-overshoot
-    lookup on a v1 sketch must FAIL, not silently min() to 0 (the
-    never-below-true-count guarantee)."""
-    import pytest as _pytest
-
-    from week4_musemotion_spark.operators.sketches import cms_lookup, cms_sketch
-
-    d = spark.range(200).select(F.concat(F.lit("v"), F.col("id") % 5).alias("v"))
-    sk_v1 = cms_sketch(d, [], "v", width=64, depth=4).drop("d")
-    terms = d.select("v").distinct()
-    exact = {r.v: r.cnt for r in d.groupBy("v").agg(F.count("*").alias("cnt")).collect()}
-    est = {r.v: r.cms_est for r in cms_lookup(sk_v1, terms, "v", width=64, depth=4).collect()}
-    for v, c in exact.items():
-        assert est[v] >= c, (v, est[v], c)
-    # width mismatch still fails loudly even without 'd'
-    with _pytest.raises(Exception, match="not built with width=128"):
-        cms_lookup(sk_v1, terms, "v", width=128).collect()
-    # the hazard the recovery exists for: built at depth=2, looked up
-    # at depth=4 — j=2,3 rows would miss every cell and underestimate
-    sk_v1_d2 = cms_sketch(d, [], "v", width=64, depth=2).drop("d")
-    with _pytest.raises(Exception, match="depth=4"):
-        cms_lookup(sk_v1_d2, terms, "v", width=64, depth=4).collect()
-    # recovery is PER GROUP: a union of v1 sketches built at depths 4
-    # and 2 must fail a grouped depth-4 lookup (the shallow group's
-    # overshoot would underestimate), not pass on the global max
-    g = d.withColumn("grp", F.lit("a"))
-    g2 = d.withColumn("grp", F.lit("b"))
-    mixed = (
-        cms_sketch(g, ["grp"], "v", width=64, depth=4)
-        .drop("d")
-        .unionByName(cms_sketch(g2, ["grp"], "v", width=64, depth=2).drop("d"))
-    )
-    gterms = terms.crossJoin(spark.createDataFrame([("a",), ("b",)], "grp string"))
-    with _pytest.raises(Exception, match="depth=4"):
-        cms_lookup(mixed, gterms, "v", width=64, depth=4, group_cols=["grp"]).collect()
-
-
 def test_cms_ignores_nulls_and_absent_terms_read_zero(spark):
-    from week4_musemotion_spark.operators.sketches import cms_lookup, cms_sketch
+    from week4_musemotion_spark.functions.hashing import stable_hash64
+    from week4_musemotion_spark.operators.sketches import cms_sketch
 
     d = spark.createDataFrame([("a",), ("a",), (None,)], "v string")
     sk = cms_sketch(d, [], "v", width=64)
-    terms = spark.createDataFrame([("a",), ("zz-unseen",)], "v string")
-    est = {r.v: r.cms_est for r in cms_lookup(sk, terms, "v", width=64).collect()}
-    assert est["a"] >= 2
+    # the NULL row adds nothing: each of the 4 hash rows holds one
+    # cell, counting the two 'a's
+    assert sorted((r.j, r.cnt, r.w, r.d) for r in sk.collect()) == [
+        (j, 2, 64, 4) for j in range(4)
+    ]
     # an unseen term can only read collision mass; with 1 distinct
-    # value and 64*4 cells, all its cells are empty
-    assert est["zz-unseen"] == 0
+    # value and 64*4 cells, none of its cells is present (reads 0)
+    probe = spark.createDataFrame([("zz-unseen",)], "v string").select(
+        F.posexplode(
+            F.array(*[stable_hash64(F.col("v"), seed=j).bitwiseAND(63) for j in range(4)])
+        ).alias("j", "pos")
+    )
+    assert probe.join(sk, ["j", "pos"]).count() == 0
+
+
+def _fold(registers, q, group_cols):
+    """Fold a register table to precision ``q`` the way
+    ``q_hll_fold_grid`` does: map every register row with
+    ``hll_fold_register``, then ``max`` per narrowed bucket."""
+    from week4_musemotion_spark.operators.sketches import hll_fold_register
+
+    return (
+        registers.groupBy(
+            *group_cols, F.col("bucket").bitwiseAND((1 << q) - 1).alias("bucket")
+        )
+        .agg(F.max(hll_fold_register(q)).cast("int").alias("reg"))
+        .withColumn("p", F.lit(q).cast("int"))
+    )
 
 
 def test_hll_fold_equals_direct_build(spark):
-    """hll_fold(build(p_hi), q) == build(q) register-for-register (and
+    """fold(build(p_hi), q) == build(q) register-for-register (and
     therefore estimate-for-estimate) across a precision grid — the
     one-pass grid contract."""
-    from week4_musemotion_spark.operators.sketches import hll_fold, hll_registers
+    from week4_musemotion_spark.operators.sketches import hll_registers
 
     o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").select(
         "o_orderpriority", F.col("o_custkey").alias("v")
@@ -412,12 +319,12 @@ def test_hll_fold_equals_direct_build(spark):
     hi = hll_registers(o, ["o_orderpriority"], "v", p=12)
     key = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
     for q in (10, 8, 7):
-        assert key(hll_fold(hi, q, ["o_orderpriority"])) == key(
+        assert key(_fold(hi, q, ["o_orderpriority"])) == key(
             hll_registers(o, ["o_orderpriority"], "v", p=q)
         ), q
     # folding is composable: fold(fold(12→10), 8) == fold(12→8)
-    assert key(hll_fold(hll_fold(hi, 10, ["o_orderpriority"]), 8, ["o_orderpriority"])) == key(
-        hll_fold(hi, 8, ["o_orderpriority"])
+    assert key(_fold(_fold(hi, 10, ["o_orderpriority"]), 8, ["o_orderpriority"])) == key(
+        _fold(hi, 8, ["o_orderpriority"])
     )
 
 
@@ -427,7 +334,7 @@ def test_hll_fold_sentinel_register(spark):
     d == 0 → the new sentinel.  Synthetic register rows pin both
     branches (no md5 preimage with a 48-zero-bit suffix exists in any
     practical corpus)."""
-    from week4_musemotion_spark.operators.sketches import _HASH_BITS, hll_fold
+    from week4_musemotion_spark.operators.sketches import _HASH_BITS
 
     p, q = 12, 8
     sent_p = _HASH_BITS - p + 1  # 49
@@ -443,25 +350,9 @@ def test_hll_fold_sentinel_register(spark):
     regs = spark.createDataFrame(rows, "bucket long, reg int").withColumn(
         "p", F.lit(p).cast("int")
     )
-    got = {r.bucket: r.reg for r in hll_fold(regs, q).collect()}
+    got = {r.bucket: r.reg for r in _fold(regs, q, []).collect()}
     assert got[0b00000101] == new_w1 - 4
     assert got[0b00000011] == new_w1  # max(53, 17) — sentinel dominates
-    assert all(r.p == q for r in hll_fold(regs, q).collect())
-
-
-def test_hll_fold_rejects_fold_up(spark):
-    import pytest as _pytest
-
-    from week4_musemotion_spark.operators.sketches import hll_fold, hll_registers
-
-    d = spark.range(100).select(F.concat(F.lit("v"), F.col("id")).alias("v"))
-    regs = hll_registers(d, [], "v", p=8)
-    with _pytest.raises(Exception, match="must be < the build precision"):
-        hll_fold(regs, 10).collect()
-    with _pytest.raises(Exception, match="must be < the build precision"):
-        hll_fold(regs, 8).collect()
-    with _pytest.raises(ValueError):
-        hll_fold(regs, 6)
 
 
 def test_hll_registers_grid_equals_per_p_builds(spark):

@@ -88,38 +88,18 @@ UNREACHED_MODULES = {
     "(musemotion-populate-table.sql)",
 }
 
-_D4 = "ROADMAP D4: delete or give a caller"
 _STREAM_FRONT_END = (
     "the Structured Streaming front-end of a sink the registry drives; "
     "only its test exercises checkpoint replay"
 )
-_FOLDED_INTO_AUDITS = "the sketch audits inline its formula in one fused pass; " + _D4
 
-#: Public top-level functions and classes of reached package modules
-#: that no non-test code names, each with the reason it stays.  Like
-#: ``UNREACHED_MODULES``, an entry that is referenced or gone fails the
-#: guard, so this list can only shrink.
+#: Top-level functions, classes and module constants of reached
+#: package modules that no non-test code names, each with the reason
+#: it stays.  Like ``UNREACHED_MODULES``, an entry that is referenced
+#: or gone fails the guard, so this list can only shrink.
 UNREACHED_FUNCTIONS = {
-    "operators/fuzzy.py:candidate_pairs_edit1": _D4,
-    "operators/incremental.py:join_delta": _D4,
-    "operators/layout.py:write_zordered": _D4,
-    "operators/lsh_index.py:append_index": _D4,
-    "operators/multimodal.py:decode_media": _D4,
-    "operators/multimodal.py:thumbnail_stub": _D4,
-    "operators/sampling.py:train_test_split": _D4,
-    "operators/sketches.py:approx_distinct_by": _D4,
-    "operators/sketches.py:approx_quantiles": _D4,
-    "operators/sketches.py:frequent_values": _D4,
-    "operators/sketches.py:hll_fold": _FOLDED_INTO_AUDITS,
-    "operators/sketches.py:cms_merge": _D4,
-    "operators/sketches.py:cms_lookup": _FOLDED_INTO_AUDITS,
-    "operators/sketches.py:cms_fold": _FOLDED_INTO_AUDITS,
-    "queries/musemotion_sql.py:run_corpus": _D4,
-    "sources/sinks.py:write_bucketed_table": "pins test_bucketed_join_has_no_exchange",
-    "sources/sinks.py:verify_export": _D4,
-    "sources/sinks.py:append_rows": _D4,
-    "sources/sinks.py:drop_table": _D4,
-    "sources/sinks.py:write_jdbc": _D4,
+    "queries/musemotion_sql.py:run_corpus": "reference parity: runs the reference's own "
+    "musemotion-queries.sql; only a reference-checkout test can drive it",
     "streaming/counts.py:stream_daily_counts": _STREAM_FRONT_END,
     "streaming/neardup.py:stream_neardup_ingest": _STREAM_FRONT_END,
     "streaming/sketches.py:stream_hll_distinct": _STREAM_FRONT_END,
@@ -179,11 +159,13 @@ def test_every_package_module_is_reached():
 
 
 def _unreferenced_functions(repo) -> list[str]:
-    """Public top-level ``def``s and ``class``es of reached package
-    modules (``module.py:name``) that no other top-level statement of
-    a reached module or an entry point names as an AST ``Name``,
-    ``Attribute`` or import alias; docstrings and comments do not
-    count.  ``@query`` builders are reached through the registry."""
+    """Top-level ``def``s, ``class``es and module-level assignments
+    (``X = ...``, ``X: T = ...``) of reached package modules
+    (``module.py:name``), public or ``_``-prefixed, that no other
+    top-level statement of a reached module or an entry point names
+    as an AST ``Name``, ``Attribute`` or import alias; docstrings and
+    comments do not count.  Dunder names are exempt, and ``@query``
+    builders are reached through the registry."""
     import ast
     from collections import Counter
 
@@ -216,24 +198,33 @@ def _unreferenced_functions(repo) -> list[str]:
     for tree in [*modules.values(), *roots]:
         for stmt in tree.body:
             mentions.update(names(stmt))
+    def defined(stmt) -> list[str]:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            return [] if registered(stmt) else [stmt.name]
+        if isinstance(stmt, ast.Assign):
+            return [t.id for t in stmt.targets if isinstance(t, ast.Name)]
+        if isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name):
+            return [stmt.target.id]
+        return []
+
     found = []
     for rel, tree in sorted(modules.items()):
         for stmt in tree.body:
-            if (
-                isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not stmt.name.startswith("_")
-                and not registered(stmt)
-                # no statement names it but, if recursive, its own
-                and mentions[stmt.name] == (stmt.name in names(stmt))
-            ):
-                found.append(f"{rel}:{stmt.name}")
+            for name in defined(stmt):
+                if (
+                    not (name.startswith("__") and name.endswith("__"))
+                    # no statement names it but its own (the assignment
+                    # target, or the call of a recursive function)
+                    and mentions[name] == (name in names(stmt))
+                ):
+                    found.append(f"{rel}:{name}")
     return found
 
 
 def test_every_public_function_is_referenced():
-    # the package is what something runs, function by function: a
-    # public function only tests call is dead code unless the allowlist
-    # above says why it stays
+    # the package is what something runs, name by name: a function,
+    # class or constant (public or private) only tests use is dead
+    # code unless the allowlist above says why it stays
     from tests.conftest import REPO_ROOT
 
     unreferenced = _unreferenced_functions(REPO_ROOT)

@@ -23,10 +23,6 @@ from pyspark.sql import functions as F
 #: Number of leading md5 hex digits used (60 bits).
 _HEX_DIGITS = 15
 
-#: Modulus for derived universal-hash families: the Mersenne prime
-#: 2^61 - 1 (> 2^60, standard choice for (a*x + b) mod p families).
-MERSENNE_61 = (1 << 61) - 1
-
 
 def stable_hash64(col: Column | str, seed: int | None = None) -> Column:
     """60-bit engine-portable hash of a string column (JVM-side only).

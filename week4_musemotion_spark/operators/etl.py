@@ -51,7 +51,8 @@ FINAL_COLUMNS = [
 
 
 def clean_musemotion(df: DataFrame, drop_location: bool = False) -> DataFrame:
-    """Raw (all-string, positionally named) → MUSEMOTION_CLEAN.
+    """Raw (all-string, positionally named) → the typed post-ETL
+    columns (``FINAL_COLUMNS``; reference pipeline.py:119-120).
 
     One projection: trim the text columns, drop rows missing a critical
     column, then cast and parse in the final select.  A caller that

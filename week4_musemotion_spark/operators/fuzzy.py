@@ -211,12 +211,7 @@ def fuzzy_join_edit1(
     from week4_musemotion_spark.sources.tables import spread
 
     # spread: same single-scan-task guard as fuzzy_join
-    clean = spread(clean)
-    dirty = spread(dirty)
-    ck = _exploded_keys(clean, clean_col, 1)
-    dk = _exploded_keys(dirty, dirty_col, 1)
-    keys = list(dedup_on) if dedup_on else list(dirty.columns) + list(clean.columns)
-    cands = dk.join(ck, dk["_k"] == ck["_k"]).drop("_k").dropDuplicates(keys)
+    cands = candidate_pairs_edit1(spread(clean), spread(dirty), clean_col, dirty_col, dedup_on)
     return cands.withColumn(
         "dist", F.levenshtein(F.col(dirty_col), F.col(clean_col))
     ).filter(F.col("dist") <= 1)
@@ -229,9 +224,12 @@ def candidate_pairs_edit1(
     dirty_col: str,
     dedup_on: Optional[Sequence[str]] = None,
 ) -> DataFrame:
-    """The blocked candidate set BEFORE the levenshtein verify — used
-    by tests to assert the candidate count stays near-linear (the
-    guard against a degenerate-blocking regression)."""
+    """The blocked candidate set of :func:`fuzzy_join_edit1` BEFORE
+    the levenshtein verify: every (dirty, clean) pair sharing a
+    depth-1 deletion-variant hash, deduped on ``dedup_on``.  Its size
+    is what degenerate blocking would blow up (templated keys with
+    one shared prefix), so it is checked on its own to stay
+    near-linear."""
     ck = _exploded_keys(clean, clean_col, 1)
     dk = _exploded_keys(dirty, dirty_col, 1)
     keys = list(dedup_on) if dedup_on else list(dirty.columns) + list(clean.columns)

@@ -85,35 +85,3 @@ def finalize(state: DataFrame) -> DataFrame:
             ).otherwise(-int_div_round(-F.col("sum_cents"), F.col("cnt"))),
         ).alias("avg_cents"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Incremental JOIN maintenance (delta propagation)
-# ---------------------------------------------------------------------------
-
-
-def join_delta(
-    base_left: DataFrame,
-    base_right: DataFrame,
-    delta_left: DataFrame,
-    delta_right: DataFrame,
-    on: Sequence[str],
-) -> DataFrame:
-    """The delta of an inner-join view under insertions to both sides:
-
-        Δ(L ⋈ R) = ΔL ⋈ R  ∪  L ⋈ ΔR  ∪  ΔL ⋈ ΔR
-
-    so a materialized join refreshes by appending this delta instead
-    of re-joining the full inputs — the classic incremental-view
-    algebra.  At 100 TB the payoff is that every term joins at least
-    one DELTA side (small): Catalyst broadcasts it, and the big base
-    tables are each scanned once and never joined against each other.
-    Insertions only (the reference's pipelines are append/replace —
-    SURVEY §2.9); deletions would add the symmetric negative terms.
-    """
-    cols = list(on)
-    return (
-        delta_left.join(base_right, cols)
-        .unionByName(base_left.join(delta_right, cols))
-        .unionByName(delta_left.join(delta_right, cols))
-    )

@@ -1,41 +1,22 @@
-"""Multi-dimensional data layout: Z-order (Morton-curve) clustering.
+"""Physical data layout: the Morton (Z-order) key and small-files
+compaction.
 
-A sorted write clusters ONE column: parquet row-group min/max stats
-then prune scans filtered on that column, but a second column's
-values scatter across every file.  Interleaving the bits of two
-rank-scaled columns (the Z-order / Morton curve) gives BOTH columns
-locality: each file covers a small rectangle of the (a, b) value
-space, so row-group stats prune point/range predicates on either
-dimension.  This is the same layout trick Delta's OPTIMIZE ZORDER BY
-ships; here it is a pure-Spark composition — an aggregate for the
-scale bounds, a bitwise expression for the key, and a range
-repartition + in-partition sort for the write.
-
-Everything is builtin bitwise/arithmetic expressions (codegen'd); at
-100 TB the only extra cost over a plain sorted write is the one
-min/max aggregate pass.
+- :func:`interleave_bits` — the Morton z-value of two integer columns.
+  A sorted write clusters ONE column; interleaving the bits of two
+  columns gives BOTH locality, so a table range-partitioned and sorted
+  by the z-value has tight per-row-group min/max stats on either
+  dimension (the layout Delta's OPTIMIZE ZORDER BY ships).
+  ``q_morton_tiles`` audits the tiles such a layout would write.
+- :func:`compact_parquet` — crash-safe small-files compaction.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: bits per dimension in the interleaved key (2 dims × 16 = 32-bit z-value)
-DEFAULT_BITS = 16
 
-
-def _scale_to_bits(col: Column, lo: int, hi: int, bits: int) -> Column:
-    """Affine-map an integer column from [lo, hi] onto [0, 2^bits)."""
-    span = max(hi - lo, 1)
-    return F.least(
-        F.lit((1 << bits) - 1),
-        ((col - F.lit(lo)).cast("double") / F.lit(span) * F.lit((1 << bits) - 1))
-        .cast("long"),
-    )
-
-
-def interleave_bits(a: Column, b: Column, bits: int = DEFAULT_BITS) -> Column:
+def interleave_bits(a: Column, b: Column, bits: int) -> Column:
     """Morton z-value of two ``bits``-wide non-negative ints.
 
     Expression tree of 2·``bits`` masked shifts OR'd together — wide
@@ -49,45 +30,6 @@ def interleave_bits(a: Column, b: Column, bits: int = DEFAULT_BITS) -> Column:
     for p in parts[1:]:
         z = z.bitwiseOR(p)
     return z
-
-
-def zorder_key(df: DataFrame, col_a: str, col_b: str, bits: int = DEFAULT_BITS) -> Column:
-    """Z-order key over two integer columns, rank-scaled by the
-    DataFrame's own min/max (one tiny aggregate pass)."""
-    lo_a, hi_a, lo_b, hi_b = (
-        df.agg(
-            F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-        ).first()
-    )
-    return interleave_bits(
-        _scale_to_bits(F.col(col_a), int(lo_a), int(hi_a), bits),
-        _scale_to_bits(F.col(col_b), int(lo_b), int(hi_b), bits),
-        bits,
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = DEFAULT_BITS,
-) -> None:
-    """Write ``df`` as parquet clustered on the Z-order of
-    (``col_a``, ``col_b``): range-repartition by the z-key (balanced
-    files covering disjoint curve segments) and sort within each
-    partition (monotone row groups → tight per-group min/max stats
-    on BOTH columns)."""
-    z = zorder_key(df, col_a, col_b, bits).alias("_zkey")
-    (
-        df.withColumn("_zkey", z)
-        .repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def compact_parquet(

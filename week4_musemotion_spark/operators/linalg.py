@@ -365,8 +365,9 @@ def rp_signs(in_dim: int, out_dim: int, seed: int = 0) -> list[list[int]]:
     Rows are NESTED by construction: the matrix for a smaller
     ``out_dim`` is a prefix of the larger one's rows, so one
     projection at the grid maximum serves every smaller target dim
-    via ``slice`` — the one-pass grid contract of ``hll_fold`` /
-    ``cms_fold``, for dimensionality."""
+    via ``slice`` — the one-pass grid contract of
+    ``q_hll_fold_grid`` / ``q_cms_point_error``, for
+    dimensionality."""
     import hashlib
 
     return [

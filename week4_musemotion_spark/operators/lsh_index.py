@@ -1,6 +1,8 @@
-"""Persisted MinHash-LSH index: build once, append batches, query
-batches — the materialized form of the band table that
-``dedup.minhash_lsh_join`` recomputes per call.
+"""Persisted MinHash-LSH index: build once, query batches — the
+materialized form of the band table that ``dedup.minhash_lsh_join``
+recomputes per call.  Batches are appended only by the streaming
+near-dup gate (``streaming/neardup.py``), under its batch-id commit
+log.
 
 Layout under ``path`` (plain parquet; note ``spark.read.parquet`` does
 NOT check ``_SUCCESS`` — reads are not commit-gated, see the crash
@@ -13,17 +15,18 @@ contract below):
   the exact-Jaccard verification needs (candidates are verified, so
   index false positives never surface).
 
-Append-only contract: ids must be unique across all builds/appends
-(the ingest pipeline's natural monotonic doc ids).  Crash contract:
-``_materialize`` writes ``shingles/`` (the verification data) BEFORE
-``bands/`` (the candidate index), so a crash between the two leaves
-shingle sets with no band rows — those ids simply never become
+Ids must be unique across the build and every appended batch (the
+ingest pipeline's natural monotonic doc ids).  Crash contract:
+:func:`build_index` writes ``shingles/`` (the verification data)
+BEFORE ``bands/`` (the candidate index), so a crash between the two
+leaves shingle sets with no band rows — those ids simply never become
 candidates, which is safe; the reverse order would leave band rows
 whose exact-Jaccard verification data is missing, silently dropping
-true near-dups in the inner ``_intersections`` join.  A crash
-mid-write can still leave partial part-files that a later read will
-see (parquet reads are not ``_SUCCESS``-gated); for replay-exact
-multi-writer semantics use the streaming gate's batch-id commit log.
+true near-dups in the inner ``_intersections`` join.  The streaming
+gate appends in the same order.  A crash mid-write can still leave
+partial part-files that a later read will see (parquet reads are not
+``_SUCCESS``-gated); for replay-exact multi-writer semantics use the
+streaming gate's batch-id commit log.
 """
 
 from __future__ import annotations
@@ -42,31 +45,20 @@ from week4_musemotion_spark.operators.dedup import (
 )
 
 
-def _materialize(df: DataFrame, path: str, mode: str, text_col: str, id_col: str, n: int) -> None:
+def build_index(
+    df: DataFrame, path: str, text_col: str = "text", id_col: str = "doc_id", n: int = 3
+) -> None:
+    """Materialize the LSH index for a corpus (overwrite)."""
     sh = shingle_sets(df, text_col, id_col, n).persist()
     # shingles (verification data) FIRST: a crash after this write but
     # before the band write only hides the batch from candidate
     # generation; bands-first would emit candidates that verification
     # silently drops (see module docstring crash contract).
-    sh.write.mode(mode).parquet(os.path.join(path, "shingles"))
-    _band_rows(minhash_signatures(sh)).write.mode(mode).parquet(os.path.join(path, "bands"))
+    sh.write.mode("overwrite").parquet(os.path.join(path, "shingles"))
+    _band_rows(minhash_signatures(sh)).write.mode("overwrite").parquet(
+        os.path.join(path, "bands")
+    )
     sh.unpersist()
-
-
-def build_index(
-    df: DataFrame, path: str, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> None:
-    """Materialize the LSH index for a corpus (overwrite)."""
-    _materialize(df, path, "overwrite", text_col, id_col, n)
-
-
-def append_index(
-    df: DataFrame, path: str, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> None:
-    """Append a new batch's bands+shingles to an existing index —
-    cost is O(batch), the corpus is never recomputed (the whole point
-    of materializing)."""
-    _materialize(df, path, "append", text_col, id_col, n)
 
 
 def _bucket_candidates(bband: DataFrame, idx_bands: DataFrame) -> DataFrame:

@@ -7,12 +7,10 @@ iterators (``mapInPandas``), the idiomatic slow-path for per-row
 Python at scale (one Python roundtrip per ~10k-row Arrow batch, not
 per row).
 
-The actual codec step is STUBBED here (no image/audio libraries in
-this environment): :func:`decode_media` raises NotImplementedError
-unless a real decoder is importable, and :func:`extract_media_meta`
-uses a deterministic fake "decode" (md5-derived dimensions) so the
-distributed plumbing — schema, batching, partitioning — is real and
-testable end-to-end.
+The actual codec step is STUBBED here (no image/audio libraries are
+a dependency): :func:`extract_media_meta` uses a deterministic fake
+"decode" (md5-derived dimensions) so the distributed plumbing —
+schema, batching, partitioning — is real and testable end-to-end.
 """
 
 from __future__ import annotations
@@ -49,25 +47,6 @@ def attach_binary(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     return df.select(
         F.col(id_col), F.encode(F.col(text_col), "UTF-8").alias("payload")
     ).filter(F.col("payload").isNotNull())
-
-
-def decode_media(payload: bytes):  # pragma: no cover - requires optional dep
-    """Real decoder gate: uses Pillow when present, else explains.
-
-    STUB: the execution environment has no imaging libraries; the
-    Spark-side contract (binary in, array/struct out) is what matters.
-    """
-    try:
-        import io
-
-        from PIL import Image  # type: ignore[import-not-found]
-    except ImportError as e:
-        raise NotImplementedError(
-            "media decoding requires an imaging library (e.g. Pillow), "
-            "not available in this environment; see extract_media_meta "
-            "for the deterministic stub used in tests"
-        ) from e
-    return Image.open(io.BytesIO(payload))
 
 
 def _fake_dims(payload: bytes) -> tuple[int, int, str]:
@@ -171,36 +150,6 @@ def sample_frames(
             )
 
     return binary.mapInPandas(_sample, schema=FRAME_SAMPLE_SCHEMA)
-
-
-def thumbnail_stub(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Binary→binary transform plumbing (resize/thumbnail stands in):
-    emits a fixed-size 16-byte digest as the "thumbnail" payload.
-    Exercises the binary-out Arrow path (images stay bytes end to
-    end; only the metadata columns are ever JVM-typed).  STUB: a real
-    implementation swaps the digest for an actual resampled image —
-    the schema, batching, and partition behavior do not change."""
-    binary = attach_binary(df, id_col=id_col) if "payload" not in df.columns else df
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("thumb", T.BinaryType()),
-            T.StructField("thumb_bytes", T.LongType()),
-        ]
-    )
-
-    def _thumb(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            thumbs = [hashlib.md5(b"thumb:" + bytes(p)).digest() for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "thumb": thumbs,
-                    "thumb_bytes": [len(t) for t in thumbs],
-                }
-            )
-
-    return binary.mapInPandas(_thumb, schema=schema)
 
 
 #: dimensionality of the stub media embedding

@@ -7,7 +7,7 @@ Reference lifecycle → engine lifecycle:
   glob scan, union implicit, executors stream partitions
 - eager pandas mutations → a single narrow-transform plan
 - chunked to_sql INSERTs → a parallel columnar parquet write
-  (or write_jdbc for an actual database target)
+  (or Spark's ``DataFrameWriter.jdbc`` for an actual database target)
 
 Nothing materializes on the driver at any point.
 """

@@ -15,10 +15,7 @@ from pyspark.sql import types as T
 
 def profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """One row per column: nulls, distincts, min/max (numeric only).
-
-    Exact distinct counts; swap in operators.sketches.approx_distinct_by
-    per column when cardinality itself is the scaling problem.
-    """
+    Distinct counts are exact."""
     from week4_musemotion_spark.sources.tables import spread
 
     cols = columns or df.columns

@@ -35,9 +35,6 @@ from pyspark.sql.window import Window
 
 from week4_musemotion_spark.functions.exact import int_div_trunc
 
-#: Highest encodable bucket id: blen = 63 (v < 2^63), sub = 3.
-_MAX_BUCKET = 4 * 63 + 3
-
 
 def _bit(b: Column, i: int) -> Column:
     """0/1 value of the i-th character (1-based) of a bin() string;

@@ -32,15 +32,6 @@ def hash_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
     return df.filter(hash_bucket(key_col) < int(fraction * GRANULARITY))
 
 
-def train_test_split(
-    df: DataFrame, key_col: str, test_fraction: float = 0.1
-) -> tuple[DataFrame, DataFrame]:
-    """Disjoint, exhaustive, reproducible (train, test) split."""
-    cut = int(test_fraction * GRANULARITY)
-    bucket = hash_bucket(key_col)
-    return df.filter(bucket >= cut), df.filter(bucket < cut)
-
-
 def weighted_hash_sample(
     df: DataFrame, key_col: str, weight_e4_col, granularity: int = 10_000
 ) -> DataFrame:

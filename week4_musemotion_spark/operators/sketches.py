@@ -1,33 +1,20 @@
-"""Approximate sketches — the constant-memory summaries that replace
-exact operators when 100 TB won't fit a hash table.
+"""Portable approximate sketches — the constant-memory summaries that
+replace exact operators when 100 TB won't fit a hash table.
 
-- :func:`approx_distinct_by` — HyperLogLog++ distinct counts
-  (builtin ``approx_count_distinct``): O(1) state per group vs the
-  exact count-distinct's shuffle of every distinct value.
-- :func:`approx_quantiles` — Greenwald-Khanna quantile sketch
-  (builtin ``approx_percentile``): mergeable, bounded error.
-- :func:`frequent_values` — heavy hitters by grouped count with a
-  minimum support threshold: the exact small-scale stand-in for a
-  count-min/space-saving sketch, with the same output contract
-  (value, count ≥ support) so a sketch can swap in behind it.
-
-Those two builtin-backed sketches are run-deterministic but NOT
-engine-portable (xxhash64/GK internals), so they ship with tolerance
-tests rather than DuckDB value oracles.
-
-The rest of the module is the PORTABLE sketch family, built on
-functions.hashing.stable_hash64 so every estimate replays bit-for-bit
-in a SQL oracle — approximate answers, exactly checkable:
+Every sketch here is built on functions.hashing.stable_hash64, so each
+estimate replays bit-for-bit in a SQL oracle — approximate answers,
+exactly checkable:
 
 - :func:`heavy_hitters` — Misra-Gries candidates + exact recount
   (frequency, exact output);
 - :func:`hll_registers` / :func:`hll_merge` / :func:`hll_estimate` —
-  HyperLogLog (distinct count, mergeable m-row state);
+  HyperLogLog (distinct count, mergeable m-row state), with
+  :func:`hll_fold_register` to derive a smaller precision from a
+  larger build;
 - :func:`build_key_bloom` / :func:`bloom_might_contain` /
   :func:`bloom_prune` — bloom membership (join pruning, exact after
   the join);
-- :func:`cms_sketch` / :func:`cms_merge` / :func:`cms_lookup` —
-  count-min (point frequency, mergeable depth×width state).
+- :func:`cms_sketch` — count-min (point frequency, depth×width state).
 """
 
 from __future__ import annotations
@@ -37,57 +24,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def approx_distinct_by(
-    df: DataFrame, group_cols: list[str], value_col: str, rsd: float = 0.05
-) -> DataFrame:
-    """Per-group approximate distinct count (HLL++, relative
-    standard deviation ``rsd``)."""
-    return df.groupBy(*group_cols).agg(
-        F.approx_count_distinct(value_col, rsd=rsd).alias("approx_distinct")
-    )
-
-
-def approx_quantiles(
-    df: DataFrame, value_col: str, probabilities: list[float], accuracy: int = 10_000
-) -> DataFrame:
-    """Approximate quantiles of a numeric column (one row, one array
-    column ``quantiles`` aligned with ``probabilities``)."""
-    probs = F.array(*[F.lit(p) for p in probabilities])
-    return df.agg(
-        F.percentile_approx(value_col, probs, F.lit(accuracy)).alias("quantiles")
-    )
-
-
-def frequent_values(
-    df: DataFrame, col: str, min_support: float = 0.01
-) -> DataFrame:
-    """Values of ``col`` appearing in at least ``min_support`` of all
-    rows, with counts — heavy-hitter contract (exact implementation;
-    swap a space-saving sketch behind the same signature at scale)."""
-    import math
-
-    from week4_musemotion_spark.sources.tables import exact_scan_rows
-
-    total = exact_scan_rows(df)
-    if total is None:
-        total = df.count()
-    # 'at least' contract: ceil, but guard the float product landing a
-    # hair ABOVE the exact integer (300*0.07 = 21.000000000000004
-    # would wrongly exclude a value at exactly 7% support)
-    threshold = math.ceil(total * min_support - 1e-9)
-    return (
-        df.groupBy(col)
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") >= F.lit(max(threshold, 1)))
-        .orderBy(F.col("cnt").desc(), F.col(col).asc())
-    )
-
-
 def heavy_hitters(df: DataFrame, col: str, den: int) -> DataFrame:
     """Exact heavy hitters at support 1/``den`` via a Misra-Gries
     candidate pass + exact recount — the two-pass plan that replaces
-    :func:`frequent_values`' full groupBy when the value domain is
-    too wide to shuffle (URLs, n-grams, user ids at 100 TB).
+    a full groupBy when the value domain is too wide to shuffle
+    (URLs, n-grams, user ids at 100 TB).
 
     Pass 1 runs a ``den``-counter Misra-Gries summary PER PARTITION
     inside one Arrow-batched ``mapInPandas`` (mergeable-summaries
@@ -312,10 +253,12 @@ def hll_merge(a: DataFrame, b: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
-def hll_fold(registers: DataFrame, new_p: int, group_cols: list[str] | None = None) -> DataFrame:
-    """Fold an HLL register table down to a SMALLER precision —
-    EXACTLY ``hll_registers(df, ..., p=new_p)``, register for
-    register, derived from the high-precision table alone.
+def hll_fold_register(new_p: int) -> Column:
+    """A register row of an HLL table (``bucket``, ``reg``, ``p``)
+    mapped to precision ``new_p < p``: grouping the mapped rows by
+    ``bucket & (2^new_p - 1)`` and taking the ``max`` gives EXACTLY
+    ``hll_registers(df, ..., p=new_p)``, register for register,
+    derived from the high-precision table alone.
 
     Why it is exact (layout: ``bucket = h & (m-1)``, ``rho`` ranks
     the leading 1-bit of the suffix ``w = h >> p``): narrowing the
@@ -329,38 +272,16 @@ def hll_fold(registers: DataFrame, new_p: int, group_cols: list[str] | None = No
     non-sentinel rho in its bucket, so per-value mapping commutes
     with the per-bucket max.  Hence a PRECISION GRID costs one corpus
     pass (build at the grid max) plus re-aggregations of the
-    ``<= m`` register rows — the same one-build trick as
-    :func:`cms_fold` (width) and :func:`bloom_words` (bitmap size).
-
-    Folding UP is impossible (the discarded suffix bits are gone);
-    an in-plan guard fails the job if ``new_p >= build p``.
+    ``<= m`` register rows (``q_hll_fold_grid``).  Folding UP is
+    impossible: the discarded suffix bits are gone.
     """
-    if not 7 <= new_p <= 16:
-        raise ValueError(f"new_p must be in [7, 16], got {new_p}")
-    gcols = group_cols or []
     old_sent = F.lit(_HASH_BITS + 1) - F.col("p")  # W_p + 1, from the row's own p
     new_w1 = _HASH_BITS - new_p + 1  # W_q + 1
     d = F.shiftright(F.col("bucket"), new_p)
-    mapped = F.when(F.col("reg") < old_sent, F.col("reg")).otherwise(
+    return F.when(F.col("reg") < old_sent, F.col("reg")).otherwise(
         # bin(0) is "0" (length 1), not length 0 — the d == 0 branch
         # must be explicit or the double-sentinel folds one short
         F.when(d == 0, F.lit(new_w1)).otherwise(F.lit(new_w1) - F.length(F.bin(d)))
-    )
-    p_ok = F.assert_true(
-        F.col("p") > new_p,
-        F.lit(f"hll_fold: new_p={new_p} must be < the build precision"),
-    )
-    return (
-        registers.select(
-            *gcols,
-            F.col("bucket").bitwiseAND((1 << new_p) - 1).alias("bucket"),
-            # the assert must ride the USED expression or Catalyst
-            # prunes it (assert_true yields NULL on success)
-            F.when(p_ok.isNull(), mapped).alias("reg"),
-        )
-        .groupBy(*gcols, "bucket")
-        .agg(F.max("reg").cast("int").alias("reg"))
-        .withColumn("p", F.lit(new_p).cast("int"))
     )
 
 
@@ -667,23 +588,16 @@ def cms_sketch(
     Layout: one row per NON-ZERO cell ``(*group_cols, j, pos, cnt,
     w, d)`` with ``pos = hash_j(value) & (width-1)`` for each of
     ``depth`` seeded hashes; ``w`` and ``d`` carry the build width
-    and depth so :func:`cms_lookup` can reject a mismatched sketch
-    in EITHER dimension (looking up with a larger depth than built
-    would make the extra j rows miss every cell and min to 0 — a
-    silent break of the never-below-true-count guarantee).
-
-    Schema note: the ``d`` column was added in round 7 (v2 layout).
-    Sketches persisted by earlier builds lack it; :func:`cms_lookup`
-    recovers the build depth exactly from the cells (``max(j)+1`` —
-    every value writes a row for every hash row, so j=depth-1 always
-    exists in a non-empty sketch) and then enforces it like v2, while
-    :func:`cms_merge`/:func:`cms_fold` require v2 — re-materialize
-    old sketch parquet before merging.  State is at
-    most ``depth × width`` rows per group regardless of stream size;
-    two sketches merge by summing cells (:func:`cms_merge`); NULL
-    values contribute nothing.  Estimates are the classic min over
-    rows: never below the true count, above it only by hash-collision
-    mass (ε ≈ e/width of the stream per row, δ ≈ e^-depth)."""
+    and depth, so a reader can check the geometry it estimates
+    against.  State is at most ``depth × width`` rows per group
+    regardless of stream size; two sketches merge by summing cells;
+    NULL values contribute nothing.  Because ``pos`` is a bit mask,
+    the cells of a narrower power-of-two width are exact sums of the
+    wide cells sharing ``pos & (new_width-1)`` — a width grid costs
+    one build (``q_cms_point_error``).  Estimates are the classic min
+    over rows: never below the true count, above it only by
+    hash-collision mass (ε ≈ e/width of the stream per row,
+    δ ≈ e^-depth)."""
     if width & (width - 1) or width < 16:
         raise ValueError(f"width must be a power of two >= 16, got {width}")
     if not 1 <= depth <= 8:
@@ -701,113 +615,4 @@ def cms_sketch(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("w", F.lit(width).cast("int"))
         .withColumn("d", F.lit(depth).cast("int"))
-    )
-
-
-def cms_merge(a: DataFrame, b: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Merge two count-min sketches (same width/depth): cells sum.
-    ``w`` rides the grouping key, so merging mismatched-width
-    sketches keeps both and :func:`cms_lookup`'s check rejects the
-    result."""
-    return (
-        a.unionByName(b)
-        .groupBy(*group_cols, "j", "pos", "w", "d")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(*group_cols, "j", "pos", "cnt", "w", "d")
-    )
-
-
-def cms_lookup(
-    sketch: DataFrame,
-    terms: DataFrame,
-    term_col: str,
-    width: int = 1024,
-    depth: int = 4,
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Point-frequency estimates for every row of ``terms``:
-    ``(*group_cols, term_col, cms_est)`` with ``cms_est = min_j
-    cnt[j][hash_j(term)]`` (absent cells read 0).  The SKETCH side is
-    broadcast: it is compact by construction (at most depth × width
-    non-zero cells per group), and broadcasting the build side of a
-    left-outer join is the shape BroadcastHashJoin actually supports
-    — hinting the preserved (terms) side would be silently ignored
-    and fall back to a shuffle."""
-    from week4_musemotion_spark.functions.hashing import stable_hash64
-
-    gcols = group_cols or []
-    if "d" not in sketch.columns:
-        # v1 layout (pre round 7) persisted without the depth column:
-        # RECOVER the build depth from the cells themselves — every
-        # non-null value contributes one row per hash row j, so any
-        # non-empty sketch contains j = depth-1 and max(j)+1 IS the
-        # build depth exactly (an empty sketch joins nothing and every
-        # estimate legitimately reads 0).  A recovered depth that
-        # mismatches the lookup then FAILS the assert below — without
-        # this, a lookup at depth > built would have its extra j rows
-        # miss every cell and min() true counts silently down to 0.
-        # Recovery is PER GROUP (two unioned v1 sketches may have been
-        # built at different depths — a global max would stamp the
-        # deeper one's depth on both and let the shallow group's
-        # overshoot rows slip the assert).  The window is a pass over
-        # the SKETCH frame only, which is compact by construction
-        # (<= depth * width cells per group) and broadcast below
-        # anyway.
-        from pyspark.sql.window import Window
-
-        sketch = sketch.withColumn(
-            "d",
-            (F.max("j").over(Window.partitionBy(*gcols)) + F.lit(1)).cast("int"),
-        )
-    t = F.col(term_col).cast("string")
-    pos = F.array(
-        *[stable_hash64(t, seed=j).bitwiseAND(width - 1) for j in range(depth)]
-    )
-    tpos = terms.select(
-        *gcols, term_col, F.posexplode(pos).alias("j", "pos")
-    )
-    # the assert rides the join output (a used expression, so
-    # Catalyst keeps it): any sketch row with a different build width
-    # fails the job instead of silently estimating against the wrong
-    # geometry.  Absent cells (join miss) carry NULL w and must pass
-    # — they legitimately read 0.  (v1 sketches reach here with d
-    # recovered above, so the depth check applies uniformly.)
-    w_ok = F.assert_true(
-        F.col("w").isNull() | ((F.col("w") == width) & (F.col("d") == depth)),
-        F.lit(
-            f"cms_lookup: sketch was not built with width={width}, depth={depth}"
-        ),
-    )
-    joined = tpos.join(F.broadcast(sketch), gcols + ["j", "pos"], "left").select(
-        *gcols,
-        term_col,
-        "j",
-        F.when(w_ok.isNull(), F.coalesce(F.col("cnt"), F.lit(0))).alias("cell"),
-    )
-    return joined.groupBy(*gcols, term_col).agg(
-        F.min("cell").cast("long").alias("cms_est")
-    )
-
-
-def cms_fold(
-    sketch: DataFrame, new_width: int, group_cols: list[str] | None = None
-) -> DataFrame:
-    """Fold a count-min sketch down to a SMALLER power-of-two width:
-    because positions are ``hash & (width-1)``, the cells of the
-    narrow sketch are exact sums of the wide sketch's cells sharing
-    ``pos & (new_width-1)`` — identical to having built at
-    ``new_width`` directly.  A width grid therefore costs ONE pass
-    over the data (build at the grid max) plus tiny re-aggregations
-    of the ≤ depth × width cell table, the same one-build trick as
-    :func:`bloom_words`."""
-    if new_width & (new_width - 1) or new_width < 16:
-        raise ValueError(f"new_width must be a power of two >= 16, got {new_width}")
-    gcols = group_cols or []
-    return (
-        sketch.groupBy(
-            *gcols, "j", "d", F.col("pos").bitwiseAND(new_width - 1).alias("pos")
-        )
-        .agg(F.sum("cnt").alias("cnt"))
-        .withColumn("w", F.lit(new_width).cast("int"))
-        .select(*gcols, "j", "pos", "cnt", "w", "d")
     )

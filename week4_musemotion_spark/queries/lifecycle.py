@@ -368,9 +368,9 @@ def q_morton_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`operators.layout.interleave_bits` expression (pure
     shift/mask tree, whole-stage codegen), then summarize the top-6-
     bit tiles — per tile the row count and z-range.  Writing the
-    table range-partitioned by this key (operators/layout.
-    write_zordered) makes BOTH ``custkey`` and date predicates prune
-    files via parquet min/max stats; this query is the audit that
+    table range-partitioned and sorted by this key makes BOTH
+    ``custkey`` and date predicates prune files via parquet min/max
+    stats; this query is the audit that
     shows each tile covers a tight z-range.  Scale: one scan + one
     grouped agg on a 64-value key."""
     from week4_musemotion_spark.operators.layout import interleave_bits

@@ -1046,12 +1046,12 @@ def q_manifest_card_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (manifest stale → refresh; card drift → source mutated after
     export).  ``reconciled`` must come back 1 on every shard — it
     compares BOTH shared metrics (doc count and char volume), and the
-    join is FULL OUTER like ``verify_export``'s: a shard present on
-    one side only (stale manifest after an unmanifested append, or a
-    manifest row whose shard vanished) surfaces as reconciled = 0
-    instead of being silently dropped, the fault class this query
-    exists to localize.  The oracle derives both paths independently
-    from the source table.
+    join is FULL OUTER: a shard present on one side only (stale
+    manifest after an unmanifested append, or a manifest row whose
+    shard vanished) surfaces as reconciled = 0 instead of being
+    silently dropped, the fault class this query exists to localize.
+    The oracle derives both paths independently from the source
+    table.
 
     Scale shape: one corpus scan for the card, a tiny manifest read,
     one join on the (source, lang) key — the manifest side is

@@ -14,7 +14,7 @@
   pairs cost |S|²·m register rows after one corpus scan, never a
   pairwise data union; the mirror-site triage signal.
 - q_cms_point_error — count-min point-frequency audit over a width
-  grid: top-20 exact counts vs cms_lookup estimates with over_ppm
+  grid: top-20 exact counts vs count-min estimates with over_ppm
   collapsing ~1/width; the one-sided never-underestimates guarantee
   holds in every row.
 - q_stream_distinct_report — the STREAMING register store
@@ -28,10 +28,10 @@
   touched-vector counts from ONE pair table, grid-compared on the
   rounded-e6 integer cosine.
 - q_hll_fold_grid — the precision-fold audit: one p=11 register
-  table folded (hll_fold) to each grid precision and proven equal —
-  registers AND estimate — to a direct build at that precision; the
-  one-pass grid contract the bloom/cms fold family established,
-  completed for cardinality.
+  table folded (hll_fold_register) to each grid precision and proven
+  equal — registers AND estimate — to a direct build at that
+  precision; the one-pass grid contract the bloom/cms fold family
+  established, completed for cardinality.
 - q_rp_distortion — Johnson-Lindenstrauss ±1 projection audit:
   projected-vs-full cosine error over the exact near-dup pair set
   and the per-vector norm-preservation ratio, across a prefix-nested
@@ -508,7 +508,7 @@ def _cms_oracle_one_width(w: int) -> str:
 )
 def q_cms_point_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch under audit: the corpus' top-20 shingles by
-    EXACT count next to their ``cms_lookup`` estimates and the
+    EXACT count next to their count-min estimates and the
     overestimate in ppm, swept over a WIDTH GRID (1 Ki → 64 Ki
     cells/row) — one result is the provisioning curve "my stream at
     width w → this collision mass", error collapsing ~1/w as the
@@ -521,7 +521,7 @@ def q_cms_point_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each sketch is depth × width rows TOTAL no matter the
     stream, and the whole GRID costs one corpus pass — cells are
     built once at the grid maximum and folded down per width
-    (``cms_fold``: positions are hash & (w-1), so narrow cells are
+    (``cms_sketch``: positions are hash & (w-1), so narrow cells are
     exact sums of wide ones), the same one-build trick as the bloom
     grid.  The exact top-k exists only as the audit's truth side.
     Same portable primitives as the HLL/bloom family, so the oracle
@@ -540,13 +540,11 @@ def q_cms_point_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the terms hashing into it — so the whole sketch GRID derives
     # from the exact term-frequency table: 4 md5s per DISTINCT term
     # (hashed once at the grid max, masked down per width — pmod at a
-    # power of two is a bit mask), not 4 per occurrence.  Replaces
-    # the previous shape (3 cms_fold aggregates + 3 cms_lookup
-    # joins + union + a join back to the truth side) with one
-    # explode+aggregate for all widths' cells and one broadcast left
-    # join + min aggregate.  Cell counts and estimates are
-    # bit-identical to building at each width directly; the oracle is
-    # unchanged.
+    # power of two is a bit mask), not 4 per occurrence.  One
+    # explode+aggregate builds every width's cells and one broadcast
+    # left join + min aggregate reads the estimates.  Cell counts and
+    # estimates are bit-identical to building at each width
+    # directly.
     exact = (
         s.groupBy("s")
         .agg(F.count(F.lit(1)).alias("exact_cnt"))
@@ -933,9 +931,9 @@ def _fold_oracle_sql() -> str:
 @query("q_hll_fold_grid", covers=("X-HLL-FOLD",), oracle=_fold_oracle_sql())
 def q_hll_fold_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL precision-fold audit: one register table built at p=11 is
-    folded (``operators/sketches.hll_fold``) to each precision in the
-    grid and compared — register table AND estimate — against a
-    direct build at that precision.  ``reg_mismatch`` must be 0 in
+    folded (``operators/sketches.hll_fold_register``) to each
+    precision in the grid and compared — register table AND
+    estimate — against a direct build at that precision.  ``reg_mismatch`` must be 0 in
     every row: the fold is EXACT, because narrowing the bucket index
     moves the dropped index bits (recoverable as ``bucket >> q``) to
     the bottom of the ranked suffix where they cannot displace the
@@ -946,7 +944,7 @@ def q_hll_fold_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     m=256 enough for my per-source mixing weights?" — costs ONE
     corpus pass (build at the grid max, m rows/source) instead of one
     scan per candidate precision; the same one-build grid contract as
-    the bloom bitmap-size audit and ``cms_fold``'s width grid.  The
+    the bloom bitmap-size audit and the count-min width grid.  The
     oracle independently replays the fold arithmetic AND every direct
     build, so a fold bug cannot hide behind its own twin.
 
@@ -959,6 +957,7 @@ def q_hll_fold_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from week4_musemotion_spark.operators.sketches import (
         _HASH_BITS,
         hll_alpha_e7,
+        hll_fold_register,
         hll_registers_grid,
     )
     from week4_musemotion_spark.sources.tables import spread
@@ -978,31 +977,22 @@ def q_hll_fold_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FUSED grid (was: per-q fold aggregate + 2 estimate aggregates +
     # full join + 3 result joins, × 3 grid points, unioned — 14 joins/
     # aggregates).  All three folds ride ONE explode+aggregate (the
-    # per-q mapped registers derive from the same p=11 row — identical
-    # integer arithmetic to operators/sketches.hll_fold), the direct
+    # per-q mapped registers derive from the same p=11 row through
+    # operators/sketches.hll_fold_register), the direct
     # builds are already keyed (source, p, bucket) in the grid table,
     # and ONE full join + ONE aggregate compute register mismatches
     # and both estimates' harmonic sums per (source, p).  The estimate
     # formula inlines hll_estimate's exact-integer arithmetic with the
     # same pinned α·m²·2^(W+1) literals, so every output integer is
     # bit-identical to the branched form (oracle unchanged).
-    old_sent = F.lit(_HASH_BITS + 1) - F.col("p")  # W_11 + 1, from the row
-    fold_structs = []
-    for q in _FOLD_GRID:
-        new_w1 = _HASH_BITS - q + 1
-        dd = F.shiftright(F.col("bucket"), q)
-        mapped = F.when(F.col("reg") < old_sent, F.col("reg")).otherwise(
-            F.when(dd == 0, F.lit(new_w1)).otherwise(
-                F.lit(new_w1) - F.length(F.bin(dd))
-            )
+    fold_structs = [
+        F.struct(
+            F.lit(q).cast("int").alias("p"),
+            F.col("bucket").bitwiseAND((1 << q) - 1).alias("bucket"),
+            hll_fold_register(q).cast("int").alias("rho"),
         )
-        fold_structs.append(
-            F.struct(
-                F.lit(q).cast("int").alias("p"),
-                F.col("bucket").bitwiseAND((1 << q) - 1).alias("bucket"),
-                mapped.cast("int").alias("rho"),
-            )
-        )
+        for q in _FOLD_GRID
+    ]
     fold = (
         hi.select("source", F.explode(F.array(*fold_structs)).alias("f"))
         .groupBy("source", F.col("f.p").alias("p"), F.col("f.bucket").alias("bucket"))

@@ -23,7 +23,6 @@ from week4_musemotion_spark.functions.eventtime import epoch_micros
 from week4_musemotion_spark.queries.registry import query
 from week4_musemotion_spark.sources.tables import load_table
 
-NS_PER_MIN = 60 * 1_000_000_000
 #: All cross-engine temporal comparisons happen at MICROsecond
 #: resolution: DuckDB coerces the parquet layout to µs TIMESTAMP, so
 #: Spark derives epoch_micros(df) to match exactly.

@@ -23,8 +23,8 @@ Scale notes (100 TB):
   NOT IN rewrites to a broadcast anti join (supplier is tiny).
 - Q21's paired EXISTS / NOT EXISTS both decorrelate to semi/anti
   joins against the *same* lineitem scan on the same orderkey —
-  with bucketed tables the three lineitem reads share one layout
-  and shuffle zero bytes (operators/skew.py shows the bucketing).
+  with tables bucketed on orderkey (``DataFrameWriter.bucketBy``)
+  the three lineitem reads share one layout and shuffle zero bytes.
 """
 
 from __future__ import annotations
@@ -42,13 +42,6 @@ from week4_musemotion_spark.queries.registry import query
 from week4_musemotion_spark.sources.tables import load_table
 
 _DISC_PCT_SQL = "CAST(round(l_discount * 100) AS BIGINT)"
-
-
-def _rev_e4(prefix: str = "") -> F.Column:
-    """Exact e4 revenue ``extendedprice × (1 - discount)``."""
-    return cents(f"{prefix}l_extendedprice") * (
-        100 - F.round(F.col(f"{prefix}l_discount") * 100).cast("long")
-    )
 
 
 # ---------------------------------------------------------------------------

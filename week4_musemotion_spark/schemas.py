@@ -1,4 +1,4 @@
-"""Schemas: the MuseMotion data model and the driver testdata tables.
+"""Schemas: the MuseMotion column order and the driver testdata tables.
 
 The reference's universe is a single flat EV-registration fact table
 (11 logical columns; raw CSV rows carry 4 trailing junk fields) plus
@@ -7,8 +7,6 @@ musemotion-queries.sql:91-95, pipeline.py:32-35).  See SURVEY.md §1.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # MuseMotion fact table
@@ -31,44 +29,6 @@ MUSEMOTION_COLUMNS = [
     "utility",
 ]
 
-#: Raw scan schema: everything as string ("parse-don't-trust" — typed
-#: casts happen in the cleaning layer with null-on-failure semantics).
-#: Real-world rows carry up to 4 trailing junk fields which the width
-#: guard truncates (reference pipeline.py:87-96; SURVEY.md §2.10).
-MUSEMOTION_RAW = T.StructType(
-    [T.StructField(c, T.StringType(), True) for c in MUSEMOTION_COLUMNS]
-    + [T.StructField(f"_junk{i}", T.StringType(), True) for i in range(1, 5)]
-)
-
-#: Post-ETL contract (reference pipeline.py:119-120): typed columns
-#: plus latitude/longitude extracted from the WKT ``location`` string.
-MUSEMOTION_CLEAN = T.StructType(
-    [
-        T.StructField("vin", T.StringType(), False),
-        T.StructField("city", T.StringType(), False),
-        T.StructField("year", T.IntegerType(), True),
-        T.StructField("make", T.StringType(), True),
-        T.StructField("model", T.StringType(), True),
-        T.StructField("vehicle_type", T.StringType(), True),
-        T.StructField("eligibility", T.StringType(), True),
-        T.StructField("electric_range", T.IntegerType(), True),
-        T.StructField("vehicle_id", T.LongType(), True),
-        T.StructField("location", T.StringType(), True),
-        T.StructField("utility", T.StringType(), True),
-        T.StructField("latitude", T.DoubleType(), True),
-        T.StructField("longitude", T.DoubleType(), True),
-    ]
-)
-
-#: Join dimension (reference musemotion-queries.sql:91-95).
-UTILITIES = T.StructType(
-    [
-        T.StructField("utility_id", T.IntegerType(), False),
-        T.StructField("utility_name", T.StringType(), False),
-        T.StructField("region", T.StringType(), True),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Driver testdata (read-only parquet, /root/testdata/sf*/; TESTDATA.md)
 # ---------------------------------------------------------------------------
@@ -88,7 +48,3 @@ TESTDATA_TABLES = [
     "documents",
     "embeddings",
 ]
-
-#: Small dimension tables that should always be broadcast when joined
-#: against a fact table (their size is O(sf) and tiny).
-BROADCAST_TABLES = {"region", "nation", "supplier", "part", "customer"}

@@ -1,9 +1,11 @@
 """Sinks: the reference's four load paths, Spark-native.
 
 Reference → engine mapping (SURVEY.md §2.1):
-- K1 full-replace JDBC  → :func:`write_jdbc` mode="overwrite"
-- K2 explicit-DDL append→ :func:`write_jdbc` mode="append" (DDL via
-  ``spark.sql`` where a metastore exists)
+- K1 full-replace JDBC  → Spark's ``DataFrameWriter.jdbc`` with
+  ``mode="overwrite"`` (no engine wrapper: the writer already takes
+  the mode, the batch size and the partition count)
+- K2 explicit-DDL append→ ``DataFrameWriter.jdbc`` with
+  ``mode="append"`` (DDL via ``spark.sql`` where a metastore exists)
 - K3 create-if-absent   → :func:`write_parquet` (CREATE IF NOT
   EXISTS semantics are native to ``saveAsTable``)
 - K4 upsert             → operators.upsert (last-write-wins merge;
@@ -21,11 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: The reference batches JDBC writes at 500 rows (pipeline.py:168-169)
-#: — a pandas-era knob; Spark's JDBC writer batches per partition, and
-#: 10k is a sane modern default for wide rows.
-JDBC_BATCH_SIZE = 10_000
-
 
 def write_parquet(
     df: DataFrame,
@@ -37,29 +34,6 @@ def write_parquet(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_by: str,
-    num_buckets: int = 16,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (hash-clustered) managed table.
-
-    Bucketing pre-shuffles data at write time: two tables bucketed the
-    same way join with ZERO exchange at read time — at 100 TB this is
-    the difference between re-shuffling the fact table on every join
-    and never shuffling it at all.  Requires a metastore-backed
-    ``saveAsTable`` (bucket metadata lives in the catalog, not the
-    files).
-    """
-    w = df.write.mode(mode).bucketBy(num_buckets, bucket_by)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    w.saveAsTable(table)
 
 
 def export_with_manifest(
@@ -82,8 +56,7 @@ def export_with_manifest(
     written to a dot-prefixed staging dir and atomically ``os.rename``d
     into place — a crash mid-manifest-write leaves only staging
     litter, never a partial ``_manifest`` a presence-checking reader
-    would trust.  Consumers ``verify_export`` before mixing a shard
-    in."""
+    would trust."""
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
     back = df.sparkSession.read.parquet(path)
     _publish_manifest(manifest_fn(back), path)
@@ -130,8 +103,7 @@ def refresh_manifest(
     from the stored manifest untouched, and the merge is published via
     the same staging-dir + ``os.rename`` commit as the full export.
     Cost is O(touched shards) scan volume — the pruned filter reads
-    only the named directories — not O(corpus); ``verify_export``
-    remains the full-scan auditor."""
+    only the named directories — not O(corpus)."""
     import os
 
     if not partitions:
@@ -155,73 +127,3 @@ def refresh_manifest(
     stored = spark.read.parquet(os.path.join(path, "_manifest"))
     kept = stored.filter(~touched)
     _publish_manifest(kept.unionByName(fresh).coalesce(1), path)
-
-
-def verify_export(spark, path: str, manifest_fn, keys: tuple[str, ...] = ("source", "lang")) -> DataFrame:
-    """Audit an :func:`export_with_manifest` dataset: recompute the
-    manifest from the current files and full-outer-join it against the
-    stored one — any row returned is a shard whose on-disk content no
-    longer matches its manifest (torn rewrite, manual tampering, a
-    partition overwritten without re-carding).  Empty result = clean."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    stored = spark.read.parquet(os.path.join(path, "_manifest"))
-    actual = manifest_fn(spark.read.parquet(path))
-    val_cols = [c for c in stored.columns if c not in keys]
-    cond = F.lit(False)
-    for c in val_cols:
-        cond = cond | ~F.col(f"s.{c}").eqNullSafe(F.col(f"a.{c}"))
-    s, a = stored.alias("s"), actual.alias("a")
-    on = [F.col(f"s.{k}").eqNullSafe(F.col(f"a.{k}")) for k in keys]
-    joined = s.join(a, on, "full_outer")
-    mismatch = joined.filter(
-        cond
-        | F.col(f"s.{keys[0]}").isNull()  # shard on disk, not in manifest
-        | F.col(f"a.{keys[0]}").isNull()  # shard in manifest, gone on disk
-    )
-    return mismatch.select(
-        *[F.coalesce(F.col(f"s.{k}"), F.col(f"a.{k}")).alias(k) for k in keys],
-        *[F.col(f"s.{c}").alias(f"manifest_{c}") for c in val_cols],
-        *[F.col(f"a.{c}").alias(f"actual_{c}") for c in val_cols],
-    )
-
-
-def append_rows(spark, path: str, rows: list, schema=None) -> None:
-    """Explicit single/few-row INSERT (SURVEY §2 C2, ref
-    musemotion-queries.sql:56-57): literal rows → one-partition
-    DataFrame → parquet append.  For row-at-a-time arrival at real
-    scale, batch upstream or use the streaming sink — a 100-TB table
-    should not accrete one footer per row."""
-    df = spark.createDataFrame(rows, schema=schema)
-    write_parquet(df.coalesce(1), path, mode="append")
-
-
-def drop_table(spark, table: str) -> None:
-    """DROP TABLE IF EXISTS (SURVEY §2 C5, ref
-    musemotion-queries.sql:52) — catalog-side, no error when absent."""
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "overwrite",
-    properties: dict[str, str] | None = None,
-    batch_size: int = JDBC_BATCH_SIZE,
-    num_partitions: int | None = None,
-) -> None:
-    """JDBC sink (overwrite = the reference's drop-and-replace K1;
-    append = K2/K3).  ``num_partitions`` caps concurrent connections
-    — at cluster scale an unbounded writer DDoSes the database.
-
-    Live-tested against embedded Derby (the in-memory database in
-    Spark's own jars): replace/append/read-back round-trips in
-    ``tests/test_jdbc_sink.py``.
-    """
-    w = df.coalesce(num_partitions) if num_partitions else df
-    opts = dict(properties or {})
-    opts["batchsize"] = str(batch_size)
-    w.write.mode(mode).options(**opts).jdbc(url, table, properties=opts)

@@ -10,8 +10,6 @@ from pyspark.sql import DataFrame, SparkSession
 from week4_musemotion_spark.schemas import TESTDATA_TABLES
 from week4_musemotion_spark.session import ensure_runtime_conf
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one testdata table.
