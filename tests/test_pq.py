@@ -172,11 +172,10 @@ def test_adc_topk_partial_nan_keeps_finite_neighbors(spark):
 
 
 def test_fused_fit_matches_per_subspace_kmeans(spark):
-    """The fused pq_fit (one Arrow pass per Lloyd iteration, partial
-    sums) must reproduce the per-subspace kmeans_fit decomposition it
-    replaced — same seeding, same argmin, same empty-cluster rule —
-    up to float-sum reassociation (the partial-sum order differs from
-    Spark's avg order; the means are otherwise the same multisets)."""
+    """pq_fit's one Lloyd pass over all m subspaces must reproduce m
+    separate kmeans_fit runs over the sliced subvectors — same
+    seeding, same argmin, same empty-cluster rule — up to float-sum
+    reassociation (the sliced scans may batch rows differently)."""
     import numpy as np
     from pyspark.sql import functions as F
 

@@ -1,4 +1,5 @@
-"""Session hygiene: a query leaves no cached table behind.
+"""Session hygiene: a query leaves no cached table or driver temp file
+behind.
 
 Operators pin shared subtrees with a lazy ``localCheckpoint``, which
 Spark's CacheManager never records or matches across queries.  A
@@ -48,6 +49,26 @@ def test_query_leaves_no_cache_entry(spark, name):
     spark.catalog.clearCache()
     REGISTRY[name].builder(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
     assert _cache_entries(spark) == 0, f"{name} left {_cache_entries(spark)} cached plan(s)"
+
+
+#: Queries whose operators carry a driver-side matrix (queries,
+#: centroids, codebooks, ADC tables) into their Arrow kernels.
+_KERNEL_STATE_QUERIES = ("q_ann_recall_report", "q_hard_negatives", "q_pq_adc_knn")
+
+
+@pytest.mark.parametrize("name", _KERNEL_STATE_QUERIES)
+def test_query_leaves_no_driver_temp_file(spark, name):
+    # a SparkContext broadcast writes a driver temp file that only its
+    # destroy() removes; state riding in the kernel closure leaves none
+    import os
+
+    from week4_musemotion_spark.queries.registry import REGISTRY
+
+    temp_dir = spark.sparkContext._temp_dir
+    before = set(os.listdir(temp_dir))
+    REGISTRY[name].builder(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+    left = sorted(set(os.listdir(temp_dir)) - before)
+    assert not left, f"{name} left {len(left)} file(s) in the driver temp dir"
 
 
 #: The benchmark's curation_ops mix (perfbench/workloads.CURATION_MIX).

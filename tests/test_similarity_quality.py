@@ -303,3 +303,20 @@ def test_hard_negatives_null_label_contract(spark):
         S.hard_negatives_lsh(emb, nulled.limit(6), k=2)
     with pytest.raises(ValueError, match="corpus has null"):
         S.hard_negatives_lsh(nulled, q, k=2)
+
+
+def test_knn_null_embedding_raises_curated_error(spark):
+    """A null embedding row fails with the curated error that names the
+    hygiene query, not numpy's inhomogeneous-shape error."""
+    import pytest
+
+    from pyspark.errors import PythonException
+
+    from week4_musemotion_spark.operators.similarity import knn_brute_force
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").filter(F.col("vec_id") < 20)
+    nulled = emb.withColumn(
+        "embedding", F.when(F.col("vec_id") % 5 == 0, None).otherwise(F.col("embedding"))
+    )
+    with pytest.raises(PythonException, match="null embedding row"):
+        knn_brute_force(nulled, emb.limit(3), k=2).collect()

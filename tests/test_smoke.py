@@ -234,6 +234,28 @@ def test_every_public_function_is_referenced():
     assert not stale, f"allowlisted but referenced or gone: {stale}"
 
 
+def test_no_package_module_calls_sparkcontext_broadcast():
+    # a SparkContext broadcast outlives the query that made it: its
+    # driver temp file goes only with destroy().  Operator state rides
+    # in the kernel closure instead, which the plan owns.
+    import ast
+
+    from tests.conftest import REPO_ROOT
+
+    calls = []
+    for p in sorted((REPO_ROOT / "week4_musemotion_spark").rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "broadcast"
+                and getattr(node.func.value, "attr", getattr(node.func.value, "id", None))
+                in ("sparkContext", "sc")
+            ):
+                calls.append(f"{p.relative_to(REPO_ROOT)}:{node.lineno}")
+    assert not calls, f"sparkContext.broadcast called at {calls}"
+
+
 def test_all_queries_run_at_smoke_sf(spark):
     import __spark_entry__ as mod
 

@@ -17,6 +17,7 @@ catches runtime ones.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 
@@ -43,6 +44,7 @@ def main() -> int:
     as_json = "--json" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
 
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from week4_musemotion_spark.plans.audit import plan_string
     from week4_musemotion_spark.queries import REGISTRY
     from week4_musemotion_spark.session import get_spark

@@ -62,6 +62,7 @@ def main() -> int:
     # set before the JVM launches.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEMORY", "16g")
 
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from week4_musemotion_spark.queries import REGISTRY
     from week4_musemotion_spark.session import get_spark
 

@@ -32,6 +32,7 @@ def main() -> int:
 
     import os
 
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from week4_musemotion_spark.session import get_spark
 
     # amplified runs sort multi-million-row variant/token explosions in

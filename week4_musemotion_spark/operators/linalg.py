@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from week4_musemotion_spark.functions.exact import dec
+from week4_musemotion_spark.operators.similarity import _to_matrix
 
 #: Fixed-point scale shared with the cosine family (floor(x*1e6+0.5)).
 _Q = 1_000_000
@@ -45,22 +46,6 @@ def _quantize(X):
     import numpy as np
 
     return np.floor(X.astype(np.float64) * _Q + 0.5).astype(np.int64)
-
-
-def _rows_to_matrix(series):
-    """Stack a pandas Series of fixed-length vectors; raise a curated
-    error on null rows or ragged input (run q_embedding_hygiene
-    first) instead of an obscure executor TypeError."""
-    import numpy as np
-
-    if any(v is None for v in series):
-        raise ValueError(
-            "null embedding row — filter nulls (see q_embedding_hygiene) first"
-        )
-    lens = {len(v) for v in series}
-    if len(lens) > 1:
-        raise ValueError(f"ragged embedding column: dims seen {sorted(lens)}")
-    return np.array([np.asarray(v, dtype=np.float64) for v in series])
 
 
 def gram_exact(df: DataFrame, vec_col: str) -> DataFrame:
@@ -95,7 +80,7 @@ def gram_exact(df: DataFrame, vec_col: str) -> DataFrame:
             s = pdf[vec_col]
             if len(s) == 0:
                 continue
-            X = _rows_to_matrix(s)
+            X = _to_matrix(s)
             if d is None:
                 d = X.shape[1]
                 acc = np.zeros((d, d), dtype=object)
@@ -241,7 +226,7 @@ def pca_fit(df: DataFrame, vec_col: str, k: int) -> PCAModel:
             col = pdf[vec_col]
             if len(col) == 0:
                 continue
-            X = _rows_to_matrix(col)
+            X = _to_matrix(col)
             if d is None:
                 d = X.shape[1]
                 s = np.zeros(d)
@@ -331,7 +316,7 @@ def pca_project(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = _rows_to_matrix(pdf[vec_col])
+            X = _to_matrix(pdf[vec_col])
             if X.shape[1] != d:
                 raise ValueError(
                     f"embedding dim {X.shape[1]} != fitted dim {d}"

@@ -12,16 +12,19 @@ distance is ``m`` table lookups summed — no decompression.
 
 Spark shapes (nothing quadratic, nothing driver-bound):
 
-- :func:`pq_fit` — ``m`` independent :func:`~.similarity.kmeans_fit`
-  runs over sliced subvector frames (each a linear scan; only the
-  (m × k × d/m) codebook tensor reaches the driver).
-- :func:`pq_encode` — one Arrow-batched ``mapInPandas`` pass,
-  codebooks broadcast; argmin ties break to the LOWEST centroid id
-  (numpy argmin's first-occurrence rule — the same rule the
-  expression/SQL twin uses, so the two paths are comparable).
-- :func:`adc_topk` — queries collected + broadcast (the query set is
-  small by contract, same as ``knn_brute_force``), corpus codes
-  scanned once, per-partition top-k then global top-k.
+- :func:`pq_fit` — :func:`seed_codebooks` refined by
+  :func:`~.similarity._lloyd`, the Lloyd loop ``kmeans_fit`` runs:
+  one linear Arrow pass per iteration for all ``m`` subspaces (only
+  per-batch partial sums and the (m × k × d/m) codebook tensor reach
+  the driver).
+- :func:`pq_encode` — one Arrow-batched ``mapInPandas`` pass, the
+  codebooks in the kernel's closure; argmin ties break to the LOWEST
+  centroid id (numpy argmin's first-occurrence rule — the same rule
+  the expression/SQL twin uses, so the two paths are comparable).
+- :func:`adc_topk` — queries collected to the driver (the query set
+  is small by contract, same as ``knn_brute_force``), their distance
+  tables in the kernel's closure, corpus codes scanned once,
+  per-partition top-k then global top-k.
 
 Evidence split (the repo's exact-twin pattern): the Lloyd-fitted
 path is rows-only (k-means is not SQL-expressible); its
@@ -82,6 +85,8 @@ def seed_codebooks(
     from week4_musemotion_spark.operators.similarity import _collect_matrix
 
     _, X = _collect_matrix(emb.select(id_col, vec_col).orderBy(id_col).limit(k), id_col, vec_col)
+    if X.shape[0] == 0:
+        raise ValueError("no non-null vector found to seed the codebooks from")
     if X.shape[0] < k:
         raise ValueError(f"corpus has {X.shape[0]} rows < k={k} codebook seeds")
     dsub = _check_dims(X.shape[1], m)
@@ -95,106 +100,20 @@ def pq_fit(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    fit_fraction: float | None = None,
 ) -> PQModel:
-    """Lloyd-fitted codebooks: ``m`` independent k-means problems
-    solved in FUSED passes — per Lloyd iteration ONE Arrow-batched
-    scan assigns every subspace and emits per-batch PARTIAL SUM
-    tensors (map-side reduction: ≤ partitions × m × k × d/m tiny
-    rows reach the shuffle, never corpus rows), then one small
-    aggregate finishes the means.  Semantics per subspace are
-    identical to :func:`~.similarity.kmeans_fit` (same lowest-k-id
-    seeding, same expand-identity argmin with first-min tie rule,
-    empty clusters keep their centroid); only the pass structure
-    differs: m separate kmeans runs cost m·(iters+1) corpus jobs,
-    the fused fit costs iters+1 regardless of m.  ``fit_fraction``
-    fits on a seeded Bernoulli sample (the FAISS train-on-sample
-    move), falling back to the full corpus when the sample cannot
-    seed ``k`` clusters."""
-    import pandas as pd
+    """Lloyd-fitted codebooks: ``m`` independent k-means problems, one
+    per subspace, seeded by :func:`seed_codebooks` and refined by
+    :func:`~.similarity._lloyd`, the loop ``kmeans_fit`` runs — so
+    each subspace gets kmeans_fit's semantics (lowest-k-id seeding,
+    first-min argmin, empty clusters keep their centroid) at iters+1
+    corpus jobs regardless of m."""
+    from week4_musemotion_spark.operators.similarity import _lloyd
 
-    from week4_musemotion_spark.operators.similarity import (
-        _collect_matrix,
-        _to_matrix,
-    )
-    from week4_musemotion_spark.sources.tables import spread
-
-    if fit_fraction is not None and not 0.0 < fit_fraction <= 1.0:
-        raise ValueError(f"fit_fraction must be in (0, 1], got {fit_fraction!r}")
     # NULL vectors carry no information for codebook fitting and would
-    # crash the kmeans matrix build — exclude them from the whole fit.
+    # crash the matrix build — exclude them from the whole fit.
     emb = emb.filter(F.col(vec_col).isNotNull())
-    if fit_fraction is not None and fit_fraction < 1.0:
-        fit_df = emb.select(id_col, vec_col).sample(fraction=fit_fraction, seed=seed)
-    else:
-        fit_df = emb
-    # Seeds: the k lowest-id vectors, collected ONCE for all m
-    # subspaces (the per-subspace seeds are these rows' j-th
-    # subvectors — identical to m separate seed collects); the seed
-    # matrix doubles as the dimension probe, so no extra first() job.
-    _, X = _collect_matrix(
-        fit_df.select(id_col, vec_col).orderBy(id_col).limit(k), id_col, vec_col
-    )
-    if fit_df is not emb and X.shape[0] < k:
-        # sample too thin to seed k clusters — fall back to the full
-        # corpus (the seeds collect already told us, no extra job)
-        fit_df = emb
-        _, X = _collect_matrix(
-            fit_df.select(id_col, vec_col).orderBy(id_col).limit(k), id_col, vec_col
-        )
-    if X.shape[0] == 0:
-        raise ValueError(
-            "pq_fit: no non-null vector found to probe the dimension from"
-        )
-    dim = X.shape[1]
-    dsub = _check_dims(dim, m)
-    if X.shape[0] < k:
-        raise ValueError(f"corpus has {X.shape[0]} rows < k={k} codebook seeds")
-    books = X.reshape(k, m, dsub).transpose(1, 0, 2).copy()
-    spark = emb.sparkSession
-    scan = spread(fit_df.select(id_col, vec_col))
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(books)
-
-        def _partials(batches):
-            cb = bc.value  # (m, k, dsub)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                Xs = _to_matrix(pdf[vec_col]).reshape(len(pdf), m, dsub)
-                js, cs, ps, ss, ns = [], [], [], [], []
-                for j in range(m):
-                    cj = cb[j]
-                    # |x|² − 2x·c + |c|²; |x|² constant per row, dropped
-                    d = (cj**2).sum(axis=1)[None, :] - 2.0 * (Xs[:, j, :] @ cj.T)
-                    a = np.argmin(d, axis=1)  # first min = lowest id
-                    for c in np.unique(a):
-                        rows = Xs[a == c, j, :]
-                        js.extend([j] * dsub)
-                        cs.extend([int(c)] * dsub)
-                        ps.extend(range(dsub))
-                        ss.extend(rows.sum(axis=0).tolist())
-                        ns.extend([len(rows)] * dsub)
-                yield pd.DataFrame(
-                    {"j": js, "cluster": cs, "pos": ps, "s": ss, "n": ns}
-                )
-
-        try:
-            means = (
-                scan.mapInPandas(
-                    _partials, "j int, cluster int, pos int, s double, n long"
-                )
-                .groupBy("j", "cluster", "pos")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-        finally:
-            bc.destroy()
-        new_books = books.copy()  # empty clusters keep their centroid
-        for r in means:
-            new_books[r["j"], r["cluster"], r["pos"]] = r["s"] / r["n"]
-        books = new_books
-    return PQModel(books)
+    seeds = seed_codebooks(emb, m, k, id_col, vec_col)
+    return PQModel(_lloyd(emb, seeds.codebooks, iters, vec_col))
 
 
 def pq_encode(
@@ -204,29 +123,24 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """``(id, code)`` rows, ``code`` an m-array of centroid ids —
-    one Arrow-batched pass, codebooks broadcast.  Ties in the
-    per-subspace argmin break to the lowest centroid id."""
+    one Arrow-batched pass, the codebooks in the kernel's closure.
+    Ties in the per-subspace argmin break to the lowest centroid id."""
     import pandas as pd
 
-    from week4_musemotion_spark.operators.similarity import _to_matrix
+    from week4_musemotion_spark.operators.similarity import _centroid_dist, _to_matrix
     from week4_musemotion_spark.sources.tables import spread
 
-    spark = emb.sparkSession
-    bc = spark.sparkContext.broadcast(model.codebooks)
-    m, k, dsub = model.m, model.k, model.dsub
+    books = model.codebooks
+    m, dsub = model.m, model.dsub
 
     def _enc(batches):
-        cb = bc.value  # (m, k, dsub)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = _to_matrix(pdf[vec_col])
-            Xs = X.reshape(len(pdf), m, dsub)
+            Xs = _to_matrix(pdf[vec_col]).reshape(len(pdf), m, dsub)
             codes = np.empty((len(pdf), m), dtype=np.int32)
             for j in range(m):
-                # |x|^2 - 2 x.c + |c|^2; |x|^2 constant per row, dropped
-                d = (cb[j] ** 2).sum(axis=1)[None, :] - 2.0 * Xs[:, j, :] @ cb[j].T
-                codes[:, j] = np.argmin(d, axis=1)  # first min = lowest id
+                codes[:, j] = np.argmin(_centroid_dist(Xs[:, j, :], books[j]), axis=1)
             yield pd.DataFrame({id_col: pdf[id_col], "code": list(codes)})
 
     return spread(emb.select(id_col, vec_col)).mapInPandas(
@@ -244,17 +158,17 @@ def adc_topk(
 ) -> DataFrame:
     """Asymmetric-distance top-k: exact query-subvector-to-centroid
     tables (m × k_codebook per query, float64), database distances by
-    table lookup over the broadcast tables, per-partition then global
-    top-k.  Returns ``(query_id, neighbor_id, rank)`` with rank 1 the
-    nearest; ties break to the lowest neighbor id.  ``queries`` is
-    collected and broadcast — small by contract, exactly like
-    ``knn_brute_force``."""
+    table lookup over the tables in the kernel's closure,
+    per-partition then global top-k.  Returns ``(query_id,
+    neighbor_id, rank)`` with rank 1 the nearest; ties break to the
+    lowest neighbor id.  ``queries`` is collected to the driver —
+    small by contract, exactly like ``knn_brute_force``."""
     import pandas as pd
 
     from week4_musemotion_spark.operators.similarity import _collect_matrix
 
     qids, Q = _collect_matrix(queries.select(id_col, vec_col), id_col, vec_col)
-    m, kc, dsub = model.m, model.k, model.dsub
+    m, dsub = model.m, model.dsub
     if Q.shape[1] != m * dsub:
         raise ValueError(f"query dim {Q.shape[1]} != model dim {m * dsub}")
     Qs = Q.reshape(len(qids), m, dsub)
@@ -266,20 +180,16 @@ def adc_topk(
         ],
         axis=1,
     )
-    spark = codes.sparkSession
-    bc = spark.sparkContext.broadcast((qids, tables))
-
     def _score(batches):
-        ids_q, tab = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             C = np.stack(pdf["code"].to_numpy())  # (n, m)
             n = len(pdf)
-            # dist[q, i] = sum_j tab[q, j, C[i, j]]
-            dist = np.zeros((len(ids_q), n))
-            for j in range(tab.shape[1]):
-                dist += tab[:, j, :][:, C[:, j]]
+            # dist[q, i] = sum_j tables[q, j, C[i, j]]
+            dist = np.zeros((len(qids), n))
+            for j in range(tables.shape[1]):
+                dist += tables[:, j, :][:, C[:, j]]
             nb = pdf[id_col].to_numpy()
             # per-partition prune to k per query (global top-k downstream).
             # PQ guarantees exact distance ties (vectors sharing all m codes
@@ -292,11 +202,11 @@ def adc_topk(
             # (n_q x n) matrix, would turn the scan superlinear for no
             # additional correctness.
             kk = min(k, n)
-            part = np.empty((len(ids_q), kk), dtype=np.int64)
+            part = np.empty((len(qids), kk), dtype=np.int64)
             if kk == n:
                 part[:] = np.arange(n)
             else:
-                for qi in range(len(ids_q)):
+                for qi in range(len(qids)):
                     row = dist[qi]
                     v = np.partition(row, kk - 1)[kk - 1]
                     if np.isnan(v):
@@ -323,7 +233,7 @@ def adc_topk(
                     part[qi, : len(lt)] = lt
                     part[qi, len(lt) :] = eq[: kk - len(lt)]
             rows = {
-                "query_id": np.repeat(ids_q, kk),
+                "query_id": np.repeat(qids, kk),
                 "neighbor_id": nb[part].ravel(),
                 "dist": np.take_along_axis(dist, part, axis=1).ravel(),
             }

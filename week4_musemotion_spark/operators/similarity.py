@@ -1,10 +1,11 @@
 """Similarity search over embedding columns (``array<float>``).
 
-- :func:`knn_brute_force` — exact top-k cosine neighbors: the query
-  matrix is broadcast, the corpus streams through ``mapInPandas``
-  (Arrow batches → numpy block math), each batch pre-prunes to its
-  local top-k, and a final window takes the global top-k.  Shuffle
-  volume is O(batches × queries × k), never O(corpus).
+- :func:`knn_brute_force` — exact top-k cosine neighbors
+  (:func:`_exact_topk`): the query matrix rides in the kernel's
+  closure, the corpus streams through ``mapInPandas`` (Arrow batches →
+  numpy block math), each batch pre-prunes to its local top-k, and a
+  final window takes the global top-k.  Shuffle volume is
+  O(batches × queries × k), never O(corpus).
 - :func:`cosine_pairs` — exact all-pairs near-duplicate detection
   above a cosine threshold as a distributed block-nested-loop: the
   corpus is hashed into B blocks, every block *pair* becomes one
@@ -121,9 +122,27 @@ def _seq_norm(a: np.ndarray) -> np.ndarray:
 
 
 def _to_matrix(col: pd.Series) -> np.ndarray:
+    """Stack a column of fixed-length vectors into a float64 matrix;
+    raise a curated error on null rows or ragged input (run
+    q_embedding_hygiene first) instead of an obscure numpy error."""
     if len(col) == 0:
         return np.zeros((0, 1))
-    return np.array([np.asarray(v, dtype=np.float64) for v in col])
+    if col.isna().any():
+        raise ValueError("null embedding row — filter nulls (see q_embedding_hygiene) first")
+    try:
+        return np.array(col.tolist(), dtype=np.float64)
+    except ValueError:
+        raise ValueError(
+            f"ragged embedding column: dims seen {sorted(set(col.map(len)))}"
+        ) from None
+
+
+def _centroid_dist(mat: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    """Squared L2 distance from every row of ``mat`` to every centroid,
+    up to the per-row constant |x|² (the expand identity
+    ``|x|² − 2x·c + |c|²``): its argmin along axis 1 is the nearest
+    centroid, numpy's first minimum on ties (the lowest centroid id)."""
+    return (cent * cent).sum(axis=1)[None, :] - 2.0 * (mat @ cent.T)
 
 
 def _collect_matrix(df: DataFrame, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
@@ -134,56 +153,10 @@ def _collect_matrix(df: DataFrame, id_col: str, vec_col: str) -> tuple[np.ndarra
 def knn_brute_force(
     emb: DataFrame, queries: DataFrame, k: int = 3, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """Exact top-k cosine neighbors of each (broadcastable) query set."""
-    spark = emb.sparkSession
+    """Exact top-k cosine neighbors of each query (the query set is
+    small by contract: it is collected to the driver)."""
     q_ids, q_mat = _collect_matrix(queries, id_col, vec_col)
-    if q_ids.size == 0:
-        return _empty_result(spark, "knn")
-    q_norm = _seq_norm(q_mat)
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
-
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, mat_q, norm_q = bq.value
-        for pdf in batches:
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = _to_matrix(pdf[vec_col])
-            c_norm = _seq_norm(c_mat)
-            denom = c_norm[:, None] * norm_q[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = _seq_matmul(c_mat, mat_q) / denom
-            # zero-norm vectors have no defined cosine: exclude (the
-            # HOF path returns NULL; NaN would sort ABOVE every real
-            # score under Spark's desc ordering)
-            valid = denom > 0
-            out = []
-            for j, qid in enumerate(ids_q):
-                col = cos[:, j]
-                cand = np.nonzero((c_ids != qid) & valid[:, j])[0]
-                if len(cand) > k:
-                    # local top-k pre-prune: must use the SAME total
-                    # order as the global window (cos desc, id asc),
-                    # or tied-cosine neighbors get wrongly dropped
-                    order = np.lexsort((c_ids[cand], -col[cand]))
-                    cand = cand[order[:k]]
-                out.append(
-                    pd.DataFrame({"query_id": qid, "neighbor_id": c_ids[cand], "cos": col[cand]})
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    scored = spread(
-        emb.select(id_col, vec_col), min_rows=_NUMPY_SPREAD_MIN_ROWS
-    ).mapInPandas(_score, schema=_PAIR_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            cosine_e6(F.col("cos")).alias("cosine_e6"),
-        )
-    )
+    return _exact_topk(emb.select(id_col, vec_col), q_ids, q_mat, k, id_col, vec_col)
 
 
 def hard_negatives(
@@ -198,52 +171,79 @@ def hard_negatives(
     vector, the top-k most-similar corpus vectors with a DIFFERENT
     label — the negatives nearest the decision boundary, where the
     gradient signal lives (random negatives are trivially separable).
-    Same plan shape as :func:`knn_brute_force` — the query
-    matrix+labels broadcast, the corpus streams through Arrow batches
-    with sequential-fold float64 math, each batch pre-prunes to its
-    local top-k under the global total order (cos desc, id asc), and
-    one window takes the global top-k; shuffle volume is
-    O(batches × queries × k), never O(corpus).
+    The :func:`knn_brute_force` kernel (:func:`_exact_topk`) with a
+    label-mismatch mask; shuffle volume is O(batches × queries × k),
+    never O(corpus).
 
     Contract: ``label_col`` must be non-null integers on BOTH sides
     (labels are compared as int64 inside the Arrow kernel); null
-    labels are rejected up front with a clear error rather than
-    failing mid-kernel on the NaN→int cast."""
-    spark = emb.sparkSession
+    labels are rejected with a clear error (the query side up front)
+    rather than failing mid-kernel on the NaN→int cast."""
     pdfq = queries.select(id_col, vec_col, label_col).toPandas()
-    q_ids = pdfq[id_col].to_numpy(dtype=np.int64)
-    if q_ids.size == 0:
-        return _empty_result(spark, "knn")
     if pdfq[label_col].isna().any():
         raise ValueError(
             f"hard_negatives requires non-null integer labels; query side has null {label_col!r}"
         )
-    q_mat = _to_matrix(pdfq[vec_col])
     q_lab = pdfq[label_col].to_numpy(dtype=np.int64)
+
+    def _other_label(pdf: pd.DataFrame) -> np.ndarray:
+        if pdf[label_col].isna().any():
+            raise ValueError(
+                f"hard_negatives requires non-null integer labels; corpus has null {label_col!r}"
+            )
+        return pdf[label_col].to_numpy(dtype=np.int64)[:, None] != q_lab[None, :]
+
+    return _exact_topk(
+        emb.select(id_col, vec_col, label_col),
+        pdfq[id_col].to_numpy(dtype=np.int64),
+        _to_matrix(pdfq[vec_col]),
+        k,
+        id_col,
+        vec_col,
+        allow=_other_label,
+    )
+
+
+def _exact_topk(
+    scan: DataFrame,
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    allow=None,
+) -> DataFrame:
+    """The one exact cosine top-k: ``(query_id, neighbor_id, rank,
+    cosine_e6)`` for every query row of ``q_mat`` against the rows of
+    ``scan``.  The query matrix rides in the kernel's closure; the
+    corpus streams through Arrow batches with sequential-fold float64
+    math.  A candidate needs a defined cosine (both norms > 0), an id
+    other than the query's, and — when given — ``allow(pdf)``, an
+    (n_rows × n_queries) boolean mask over the batch.  Each batch
+    pre-prunes to its local top-k under the global total order (cos
+    desc, id asc), or tied-cosine neighbors get wrongly dropped, and
+    :func:`_rank_topk` takes the global top-k."""
+    if q_ids.size == 0:
+        return _empty_result(scan.sparkSession, "knn")
     q_norm = _seq_norm(q_mat)
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_lab, q_norm))
 
     def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, mat_q, lab_q, norm_q = bq.value
         for pdf in batches:
-            if pdf[label_col].isna().any():
-                raise ValueError(
-                    f"hard_negatives requires non-null integer labels; corpus has null {label_col!r}"
-                )
             c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_lab = pdf[label_col].to_numpy(dtype=np.int64)
             c_mat = _to_matrix(pdf[vec_col])
-            c_norm = _seq_norm(c_mat)
-            denom = c_norm[:, None] * norm_q[None, :]
+            denom = _seq_norm(c_mat)[:, None] * q_norm[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
-                cos = _seq_matmul(c_mat, mat_q) / denom
-            valid = denom > 0
+                cos = _seq_matmul(c_mat, q_mat) / denom
+            # zero-norm vectors have no defined cosine: exclude (the
+            # HOF path returns NULL; NaN would sort ABOVE every real
+            # score under Spark's desc ordering)
+            ok = (denom > 0) & (c_ids[:, None] != q_ids[None, :])
+            if allow is not None:
+                ok &= allow(pdf)
             out = []
-            for j, qid in enumerate(ids_q):
+            for j, qid in enumerate(q_ids):
                 col = cos[:, j]
-                cand = np.nonzero(
-                    (c_ids != qid) & (c_lab != lab_q[j]) & valid[:, j]
-                )[0]
+                cand = np.nonzero(ok[:, j])[0]
                 if len(cand) > k:
                     order = np.lexsort((c_ids[cand], -col[cand]))
                     cand = cand[order[:k]]
@@ -252,20 +252,10 @@ def hard_negatives(
                 )
             yield pd.concat(out, ignore_index=True)
 
-    scored = spread(
-        emb.select(id_col, vec_col, label_col), min_rows=_NUMPY_SPREAD_MIN_ROWS
-    ).mapInPandas(_score, schema=_PAIR_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            cosine_e6(F.col("cos")).alias("cosine_e6"),
-        )
+    scored = spread(scan, min_rows=_NUMPY_SPREAD_MIN_ROWS).mapInPandas(
+        _score, schema=_PAIR_SCHEMA
     )
+    return _rank_topk(scored, k)
 
 
 def hard_negatives_lsh(
@@ -677,14 +667,22 @@ def knn_lsh(
 
 
 def _assign_clusters(
-    df: DataFrame, centroids: np.ndarray, id_col: str, vec_col: str, out_id: str
+    df: DataFrame,
+    centroids: np.ndarray,
+    id_col: str,
+    vec_col: str,
+    out_id: str,
+    nearest=None,
 ) -> DataFrame:
-    """(id, vec, cluster) rows: nearest-centroid assignment in one
-    Arrow-batched numpy pass (centroid matrix broadcast; argmin of
-    squared L2 via the expand ``|x|² − 2x·c + |c|²`` identity —
-    |x|² is constant per row and dropped)."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(centroids)
+    """(id, vec, cluster) rows in one Arrow-batched numpy pass.
+    ``nearest(mat)`` maps a batch matrix to centroid indices; the
+    default is the exact argmin of :func:`_centroid_dist` over the
+    centroid matrix, which rides in the kernel's closure."""
+    if nearest is None:
+
+        def nearest(mat: np.ndarray) -> np.ndarray:
+            return np.argmin(_centroid_dist(mat, centroids), axis=1)
+
     schema = T.StructType(
         [
             T.StructField(out_id, T.LongType()),
@@ -694,22 +692,68 @@ def _assign_clusters(
     )
 
     def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cent = bc.value  # (k, dim)
-        cent_sq = (cent * cent).sum(axis=1)
         for pdf in batches:
-            mat = _to_matrix(pdf[vec_col])
-            cluster = np.argmin(cent_sq[None, :] - 2.0 * (mat @ cent.T), axis=1)
             yield pd.DataFrame(
                 {
                     out_id: pdf[id_col].to_numpy(dtype=np.int64),
                     vec_col: pdf[vec_col],
-                    "cluster": cluster.astype(np.int32),
+                    "cluster": nearest(_to_matrix(pdf[vec_col])).astype(np.int32),
                 }
             )
 
     return spread(
         df.select(id_col, vec_col), min_rows=_NUMPY_SPREAD_MIN_ROWS
     ).mapInPandas(_assign, schema=schema)
+
+
+def _lloyd(scan: DataFrame, books: np.ndarray, iters: int, vec_col: str) -> np.ndarray:
+    """The one Lloyd loop: ``books`` (m, k, d/m) seeds ``m`` independent
+    k-means problems over the m contiguous slices of ``vec_col`` (m=1
+    is plain k-means).  Each iteration is ONE Arrow-batched pass that
+    assigns every slice with the :func:`_centroid_dist` argmin (first
+    minimum on ties) and emits one (slice, cluster, n, sum vector) row
+    per hit cluster and batch — a vectorised bincount + ``add.at``
+    reduction — so at most batches × m × k small rows reach the
+    driver, which finishes the means: one job per iteration, no
+    shuffle.  The current codebooks ride in the kernel's closure.
+    Means differ from an avg() only by float-sum reassociation; empty
+    clusters keep their centroid."""
+    books = books.copy()
+    m, k, dsub = books.shape
+    scan = spread(scan.select(vec_col), min_rows=_NUMPY_SPREAD_MIN_ROWS)
+    for _ in range(iters):
+
+        def _partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                xs = _to_matrix(pdf[vec_col]).reshape(len(pdf), m, dsub)
+                for j in range(m):
+                    a = np.argmin(_centroid_dist(xs[:, j, :], books[j]), axis=1)
+                    n = np.bincount(a, minlength=k)
+                    s = np.zeros((k, dsub))
+                    np.add.at(s, a, xs[:, j, :])
+                    hit = np.flatnonzero(n)
+                    yield pd.DataFrame(
+                        {
+                            "j": np.full(len(hit), j, dtype=np.int32),
+                            "cluster": hit.astype(np.int32),
+                            "n": n[hit],
+                            "s": list(s[hit]),
+                        }
+                    )
+
+        parts = scan.mapInPandas(
+            _partials, "j int, cluster int, n long, s array<double>"
+        ).collect()
+        sums = np.zeros_like(books)
+        counts = np.zeros((m, k), dtype=np.int64)
+        for row in parts:
+            sums[row["j"], row["cluster"]] += row["s"]
+            counts[row["j"], row["cluster"]] += row["n"]
+        hit = counts > 0  # empty clusters keep their centroid
+        books[hit] = sums[hit] / counts[hit][:, None]
+    return books
 
 
 def kmeans_fit(
@@ -722,11 +766,9 @@ def kmeans_fit(
     seed: int = 42,
 ) -> np.ndarray:
     """Lloyd's k-means with deterministic seeding (the ``k`` smallest
-    ids), expressed Spark-first: each iteration is ONE Arrow-batched
-    map over the corpus that assigns and emits per-batch partial sums
-    (map-side reduction), finished on the driver — one linear scan
-    and one job per iteration, no all-pairs.  Only per-batch
-    (k × dim) partial sums ever reach the driver.
+    ids), expressed Spark-first through :func:`_lloyd`: one linear
+    Arrow-batched scan and one job per iteration, no all-pairs; only
+    per-batch (k × dim) partial sums ever reach the driver.
 
     ``fit_fraction`` fits the quantizer on a seeded Bernoulli sample
     of the corpus: each Lloyd iteration's assignment pass costs
@@ -753,51 +795,7 @@ def kmeans_fit(
         _, cent = _collect_matrix(seeds, id_col, vec_col)
     if cent.shape[0] == 0:
         raise ValueError("empty embedding corpus")
-    # FUSED Lloyd iteration (the pq_fit pattern): ONE Arrow-batched
-    # pass per iteration assigns AND emits one partial-sum row per
-    # (batch, cluster) — a vectorised bincount + add.at reduction, so
-    # at most batches × k rows of (n, sum vector) reach the driver,
-    # which finishes the means itself: one job per iteration, no
-    # shuffle.  Assignments use the expand-identity argmin with the
-    # first-min tie rule on float64 matrices; centroid means differ
-    # from an avg() only by float-sum reassociation, the same
-    # documented tolerance as pq_fit.  Empty clusters keep their
-    # centroid.
-    spark = emb.sparkSession
-    scan = spread(fit_df.select(vec_col), min_rows=_NUMPY_SPREAD_MIN_ROWS)
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(cent)
-
-        def _partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cb = bc.value  # (k, dim)
-            cent_sq = (cb * cb).sum(axis=1)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = _to_matrix(pdf[vec_col])
-                a = np.argmin(cent_sq[None, :] - 2.0 * (mat @ cb.T), axis=1)
-                n = np.bincount(a, minlength=len(cb))
-                s = np.zeros_like(cb)
-                np.add.at(s, a, mat)
-                hit = np.flatnonzero(n)
-                yield pd.DataFrame(
-                    {"cluster": hit.astype(np.int32), "n": n[hit], "s": list(s[hit])}
-                )
-
-        try:
-            parts = scan.mapInPandas(
-                _partials, "cluster int, n long, s array<double>"
-            ).collect()
-        finally:
-            bc.destroy()
-        sums = np.zeros_like(cent)
-        counts = np.zeros(len(cent), dtype=np.int64)
-        for row in parts:
-            sums[row["cluster"]] += row["s"]
-            counts[row["cluster"]] += row["n"]
-        hit = counts > 0  # empty clusters keep their centroid
-        cent[hit] = sums[hit] / counts[hit, None]
-    return cent
+    return _lloyd(fit_df, cent[None], iters, vec_col)[0]
 
 
 def _assign_clusters_ivf(
@@ -808,8 +806,8 @@ def _assign_clusters_ivf(
     out_id: str,
     probes: int = 3,
 ) -> DataFrame:
-    """Two-level (IVF-style) nearest-centroid assignment: the k
-    centroids are themselves quantized into ~√k coarse cells
+    """:func:`_assign_clusters` with a two-level (IVF-style) ``nearest``:
+    the k centroids are themselves quantized into ~√k coarse cells
     (driver-side numpy k-means over k rows — centroids only, never
     corpus vectors); each corpus vector first scores the √k coarse
     cells, then scans only the centroids of its ``probes`` nearest
@@ -821,79 +819,52 @@ def _assign_clusters_ivf(
     real corpora cluster, separating the cells): 0.71 / 0.94 / 0.99
     at probes 1 / 2 / 3, hence the probes=3 default (pinned by
     test)."""
-    spark = df.sparkSession
     k = centroids.shape[0]
     n_coarse = max(1, int(math.isqrt(k)))
     # tiny driver-side Lloyd over the k centroids (deterministic:
     # first-n_coarse seeds, fixed 4 iterations)
     coarse = centroids[:n_coarse].copy()
     for _ in range(4):
-        d2 = (coarse * coarse).sum(axis=1)[None, :] - 2.0 * (centroids @ coarse.T)
-        cell = np.argmin(d2, axis=1)
+        cell = np.argmin(_centroid_dist(centroids, coarse), axis=1)
         for c in range(n_coarse):
             members = centroids[cell == c]
             if len(members):
                 coarse[c] = members.mean(axis=0)
-    d2 = (coarse * coarse).sum(axis=1)[None, :] - 2.0 * (centroids @ coarse.T)
-    cell = np.argmin(d2, axis=1)
+    cell = np.argmin(_centroid_dist(centroids, coarse), axis=1)
     members: list[np.ndarray] = [
         np.nonzero(cell == c)[0].astype(np.int64) for c in range(n_coarse)
     ]
-    bc = spark.sparkContext.broadcast((centroids, coarse, members, probes))
-    schema = T.StructType(
-        [
-            T.StructField(out_id, T.LongType()),
-            T.StructField(vec_col, T.ArrayType(T.FloatType())),
-            T.StructField("cluster", T.IntegerType()),
-        ]
-    )
 
-    def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cent, crs, mem, p = bc.value
-        cent_sq = (cent * cent).sum(axis=1)
-        crs_sq = (crs * crs).sum(axis=1)
-        for pdf in batches:
-            mat = _to_matrix(pdf[vec_col])
-            cd = crs_sq[None, :] - 2.0 * (mat @ crs.T)
-            top_cells = np.argsort(cd, axis=1, kind="stable")[:, :p]
-            # vectorized per COARSE CELL (≤ p·√k small matmuls per
-            # batch), never per row — a row-wise Python loop here would
-            # put O(n) interpreter iterations on the hot path.  Ties
-            # across cells resolve to the first-processed cell (floats
-            # tie with measure zero; iteration order is fixed, so the
-            # result is deterministic either way).
-            best_score = np.full(len(mat), np.inf)
-            best_idx = np.zeros(len(mat), dtype=np.int64)
-            for c in range(len(mem)):
-                if len(mem[c]) == 0:
-                    continue
-                rows = np.nonzero((top_cells == c).any(axis=1))[0]
-                if len(rows) == 0:
-                    continue
-                cand = mem[c]
-                sc = cent_sq[cand][None, :] - 2.0 * (mat[rows] @ cent[cand].T)
-                loc = np.argmin(sc, axis=1)
-                val = sc[np.arange(len(rows)), loc]
-                upd = val < best_score[rows]
-                best_score[rows[upd]] = val[upd]
-                best_idx[rows[upd]] = cand[loc[upd]]
-            # empty probe unions (all probed cells empty) fall back to
-            # the full exact argmin for those rows
-            miss = np.nonzero(~np.isfinite(best_score))[0]
-            if len(miss):
-                sc = cent_sq[None, :] - 2.0 * (mat[miss] @ cent.T)
-                best_idx[miss] = np.argmin(sc, axis=1)
-            yield pd.DataFrame(
-                {
-                    out_id: pdf[id_col].to_numpy(dtype=np.int64),
-                    vec_col: pdf[vec_col],
-                    "cluster": best_idx.astype(np.int32),
-                }
-            )
+    def _nearest(mat: np.ndarray) -> np.ndarray:
+        top_cells = np.argsort(_centroid_dist(mat, coarse), axis=1, kind="stable")[:, :probes]
+        # vectorized per COARSE CELL (≤ p·√k small matmuls per batch),
+        # never per row — a row-wise Python loop here would put O(n)
+        # interpreter iterations on the hot path.  Ties across cells
+        # resolve to the first-processed cell (floats tie with measure
+        # zero; iteration order is fixed, so the result is
+        # deterministic either way).
+        best_score = np.full(len(mat), np.inf)
+        best_idx = np.zeros(len(mat), dtype=np.int64)
+        for c, cand in enumerate(members):
+            if len(cand) == 0:
+                continue
+            rows = np.nonzero((top_cells == c).any(axis=1))[0]
+            if len(rows) == 0:
+                continue
+            sc = _centroid_dist(mat[rows], centroids[cand])
+            loc = np.argmin(sc, axis=1)
+            val = sc[np.arange(len(rows)), loc]
+            upd = val < best_score[rows]
+            best_score[rows[upd]] = val[upd]
+            best_idx[rows[upd]] = cand[loc[upd]]
+        # empty probe unions (all probed cells empty) fall back to the
+        # full exact argmin for those rows
+        miss = np.nonzero(~np.isfinite(best_score))[0]
+        if len(miss):
+            best_idx[miss] = np.argmin(_centroid_dist(mat[miss], centroids), axis=1)
+        return best_idx
 
-    return spread(
-        df.select(id_col, vec_col), min_rows=_NUMPY_SPREAD_MIN_ROWS
-    ).mapInPandas(_assign, schema=schema)
+    return _assign_clusters(df, centroids, id_col, vec_col, out_id, nearest=_nearest)
 
 
 def semantic_dedup(
@@ -923,7 +894,7 @@ def semantic_dedup(
     dominates; the 1–16× probe in SCALING.md is flat for exactly that
     reason), but past that the balanced choice is ``k ≈ √n``, which
     equalizes both terms at O(n^1.5·dim): pass ``k="balanced"`` for
-    that, or an explicit int.  (The driver/broadcast footprint is the
+    that, or an explicit int.  (The driver/closure footprint is the
     k×dim centroid matrix, so k ∝ n also grows that linearly — another
     reason the extreme-n regime wants √n or a hierarchical quantizer.)
     ``assign="ivf"`` is that hierarchical quantizer for the assignment
@@ -1019,60 +990,33 @@ def _ivf_probe_assigned(
     centroids, scan only those clusters of the assignment table
     (`isin` on the cluster column → directory-level partition pruning
     when the assignment is a cluster-partitioned parquet index), and
-    exactly rerank the survivors.
-
-    Scoring is fused into ONE Arrow-batched pass over the pruned
-    partitions (per-query probed-cluster masks ride along in the
-    query broadcast; each batch pre-prunes to its local top-k) + one
-    global top-k window — two stages total, vs the join→join→window
-    chain this replaces (~2× faster at small scale from stage count
-    alone, same numpy fold → bit-identical scores)."""
-    spark = assigned.sparkSession
+    exactly rerank the survivors with :func:`_exact_topk`, whose mask
+    keeps each query to its own probed clusters — one Arrow-batched
+    pass over the pruned partitions + one global top-k window, the
+    same numpy fold as :func:`knn_brute_force`."""
     q_ids, q_mat = _collect_matrix(queries, id_col, vec_col)
     if q_ids.size == 0:
-        return _empty_result(spark, "knn")
-    q_norm = _seq_norm(q_mat)
-    cent_sq = (cent * cent).sum(axis=1)
-    d2 = cent_sq[None, :] - 2.0 * (q_mat @ cent.T)  # (q, k) up to |x|²
-    probe = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
+        return _empty_result(assigned.sparkSession, "knn")
+    probe = np.argsort(_centroid_dist(q_mat, cent), axis=1, kind="stable")[:, :n_probe]
     allowed = np.zeros((len(q_ids), cent.shape[0]), dtype=bool)
     for qi, row in enumerate(probe):
         allowed[qi, row] = True
     probed = sorted({int(c) for row in probe for c in row})
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norm, allowed))
 
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, mat_q, norm_q, allow = bq.value
-        for pdf in batches:
-            c_ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            c_clu = pdf["cluster"].to_numpy(dtype=np.int64)
-            c_mat = _to_matrix(pdf[vec_col])
-            c_norm = _seq_norm(c_mat)
-            denom = c_norm[:, None] * norm_q[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = _seq_matmul(c_mat, mat_q) / denom
-            ok = (denom > 0) & allow[:, c_clu].T & (c_ids[:, None] != ids_q[None, :])
-            out = []
-            for j, qid in enumerate(ids_q):
-                col = cos[:, j]
-                cand = np.nonzero(ok[:, j])[0]
-                if len(cand) > k:
-                    # same total order as the global window (cos desc,
-                    # id asc) or tied neighbors get wrongly dropped
-                    order = np.lexsort((c_ids[cand], -col[cand]))
-                    cand = cand[order[:k]]
-                out.append(
-                    pd.DataFrame({"query_id": qid, "neighbor_id": c_ids[cand], "cos": col[cand]})
-                )
-            yield pd.concat(out, ignore_index=True)
+    def _probed(pdf: pd.DataFrame) -> np.ndarray:
+        return allowed[:, pdf["cluster"].to_numpy(dtype=np.int64)].T
 
-    scored = spread(
+    return _exact_topk(
         assigned.filter(F.col("cluster").isin(probed)).select(
             "neighbor_id", F.col("cluster").cast("long").alias("cluster"), vec_col
         ),
-        min_rows=_NUMPY_SPREAD_MIN_ROWS,
-    ).mapInPandas(_score, schema=_PAIR_SCHEMA)
-    return _rank_topk(scored, k)
+        q_ids,
+        q_mat,
+        k,
+        "neighbor_id",
+        vec_col,
+        allow=_probed,
+    )
 
 
 #: per-process memo of the (k × dim) centroid matrix by index dir.
@@ -1160,8 +1104,8 @@ def knn_ivf(
 
     This convenience form re-fits the quantizer per call; the
     production lifecycle is :func:`ivf_build` once + :func:`ivf_probe`
-    per query batch.  Candidate routing is a broadcast join on the
-    tiny (query, cluster) pair list.  Approximate by construction (a
+    per query batch.  Candidate routing is a per-query probed-cluster
+    mask in the rerank kernel.  Approximate by construction (a
     true neighbor may live in an unprobed cluster) → rows-only check,
     like the LSH variant; run-to-run deterministic because seeding is
     by id and assignment ties are resolved by lowest cluster index.

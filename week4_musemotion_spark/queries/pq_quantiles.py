@@ -409,10 +409,11 @@ def q_pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     fitted distortion must beat the seed baseline, and ADC recall@3
     against exact brute force is pinned.
 
-    Scale shape: fit is m independent linear k-means runs (sample-
-    fittable); encode one Arrow pass; search broadcasts (n_q × m × k)
-    float tables and scans codes once — at 100 TB the codes table is
-    ~250× smaller than the vectors it stands for."""
+    Scale shape: fit is one linear Arrow pass per Lloyd iteration
+    for all m subspaces; encode one Arrow pass; search carries the
+    (n_q × m × k) float tables in its kernel and scans codes once —
+    at 100 TB the codes table is ~250× smaller than the vectors it
+    stands for."""
     from week4_musemotion_spark.operators.pq import adc_topk, pq_encode, pq_fit
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -375,8 +375,10 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive from md5, IVF seeds by lowest ids, and the exact baseline
     breaks ties by neighbor id.
 
-    Scale: all three searches share the broadcast-queries/Arrow-
-    corpus plan; the report joins three tiny (n_queries x k) frames."""
+    Scale: the exact baseline and the IVF rerank run the same
+    collected-queries/Arrow-corpus kernel, LSH an equi-join on
+    (table, bucket); the report joins three tiny (n_queries x k)
+    frames."""
     from week4_musemotion_spark.operators.similarity import (
         knn_brute_force,
         knn_ivf,

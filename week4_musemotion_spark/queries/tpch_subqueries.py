@@ -39,9 +39,8 @@ from week4_musemotion_spark.functions.exact import (
     int_div_round_sql,
 )
 from week4_musemotion_spark.queries.registry import query
+from week4_musemotion_spark.queries.tpch import _DISC_PCT_SQL
 from week4_musemotion_spark.sources.tables import load_table
-
-_DISC_PCT_SQL = "CAST(round(l_discount * 100) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
