@@ -106,6 +106,31 @@ UNREACHED_FUNCTIONS = {
 }
 
 
+def _module_name(repo, path) -> str:
+    parts = list(path.relative_to(repo).with_suffix("").parts)
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported(repo, path, tree) -> list[str]:
+    """Dotted names a file imports, relative and in-function imports
+    included: ``import a.b`` gives ``a.b``, ``from a.b import c`` gives
+    ``a.b.c`` (a module, or a name defined in ``a.b``)."""
+    import ast
+
+    mod = _module_name(repo, path)
+    here = mod.split(".") if path.name == "__init__.py" else mod.split(".")[:-1]
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.extend(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                base = ".".join(here[: len(here) - node.level + 1] + ([base] if base else []))
+            out.extend(f"{base}.{a.name}" for a in node.names)
+    return out
+
+
 def _unreached_modules(repo) -> list[str]:
     """Package modules (paths under the package) outside the static
     import closure of the entry points: the query registry, the
@@ -114,13 +139,8 @@ def _unreached_modules(repo) -> list[str]:
     import ast
 
     pkg = "week4_musemotion_spark"
-
-    def name_of(path):
-        parts = list(path.relative_to(repo).with_suffix("").parts)
-        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
-
-    package = {name_of(p): p for p in (repo / pkg).rglob("*.py")}
-    roots = {name_of(p): p for g in ENTRY_POINTS for p in repo.glob(g)}
+    package = {_module_name(repo, p): p for p in (repo / pkg).rglob("*.py")}
+    roots = {_module_name(repo, p): p for g in ENTRY_POINTS for p in repo.glob(g)}
     files = {**package, **roots}
     todo = [f"{pkg}.queries", f"{pkg}.dashboard", *roots]
     seen: set[str] = set()
@@ -129,20 +149,9 @@ def _unreached_modules(repo) -> list[str]:
         if mod in seen or mod not in files:
             continue
         seen.add(mod)
-        here = mod.split(".") if files[mod].name == "__init__.py" else mod.split(".")[:-1]
-        for node in ast.walk(ast.parse(files[mod].read_text())):
-            if isinstance(node, ast.Import):
-                targets = [a.name for a in node.names]
-            elif isinstance(node, ast.ImportFrom):
-                base = node.module or ""
-                if node.level:
-                    base = ".".join(here[: len(here) - node.level + 1] + ([base] if base else []))
-                targets = [base] + [f"{base}.{a.name}" for a in node.names]
-            else:
-                continue
-            for t in targets:
-                bits = t.split(".")
-                todo.extend(".".join(bits[:i]) for i in range(1, len(bits) + 1))
+        for t in _imported(repo, files[mod], ast.parse(files[mod].read_text())):
+            bits = t.split(".")
+            todo.extend(".".join(bits[:i]) for i in range(1, len(bits) + 1))
     return sorted(p.relative_to(repo / pkg).as_posix() for m, p in package.items() if m not in seen)
 
 
@@ -162,21 +171,23 @@ def _unreferenced_functions(repo) -> list[str]:
     """Top-level ``def``s, ``class``es and module-level assignments
     (``X = ...``, ``X: T = ...``) of reached package modules
     (``module.py:name``), public or ``_``-prefixed, that no other
-    top-level statement of a reached module or an entry point names
-    as an AST ``Name``, ``Attribute`` or import alias; docstrings and
-    comments do not count.  Dunder names are exempt, and ``@query``
-    builders are reached through the registry."""
+    top-level statement names as an AST ``Name``, ``Attribute`` or
+    import alias; docstrings and comments do not count.  A statement
+    of another file counts only when that file imports the name or
+    its module from the defining module, so a same-named definition
+    elsewhere cannot hide an orphan.  Reached modules and entry points
+    are searched.  Dunder names are exempt, and ``@query`` builders are
+    reached through the registry."""
     import ast
     from collections import Counter
 
     pkg = repo / "week4_musemotion_spark"
     unreached = set(_unreached_modules(repo))
-    modules = {
-        p.relative_to(pkg).as_posix(): ast.parse(p.read_text())
-        for p in pkg.rglob("*.py")
-        if p.relative_to(pkg).as_posix() not in unreached
-    }
-    roots = [ast.parse(p.read_text()) for g in ENTRY_POINTS for p in repo.glob(g)]
+    paths = [
+        p for p in pkg.rglob("*.py") if p.relative_to(pkg).as_posix() not in unreached
+    ] + [p for g in ENTRY_POINTS for p in repo.glob(g)]
+    trees = {p: ast.parse(p.read_text()) for p in paths}
+    imports = {p: set(_imported(repo, p, tree)) for p, tree in trees.items()}
 
     def names(stmt) -> set[str]:
         out = set()
@@ -193,11 +204,9 @@ def _unreferenced_functions(repo) -> list[str]:
         calls = (d.func if isinstance(d, ast.Call) else d for d in stmt.decorator_list)
         return any(getattr(f, "id", getattr(f, "attr", None)) == "query" for f in calls)
 
-    # per name: how many top-level statements mention it
-    mentions: Counter[str] = Counter()
-    for tree in [*modules.values(), *roots]:
-        for stmt in tree.body:
-            mentions.update(names(stmt))
+    # per file and name: how many top-level statements mention it
+    mentions = {p: Counter(n for s in tree.body for n in names(s)) for p, tree in trees.items()}
+
     def defined(stmt) -> list[str]:
         if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             return [] if registered(stmt) else [stmt.name]
@@ -208,16 +217,24 @@ def _unreferenced_functions(repo) -> list[str]:
         return []
 
     found = []
-    for rel, tree in sorted(modules.items()):
+    for p, tree in sorted(trees.items()):
+        if not p.is_relative_to(pkg):
+            continue
+        mod = _module_name(repo, p)
         for stmt in tree.body:
             for name in defined(stmt):
-                if (
-                    not (name.startswith("__") and name.endswith("__"))
-                    # no statement names it but its own (the assignment
-                    # target, or the call of a recursive function)
-                    and mentions[name] == (name in names(stmt))
-                ):
-                    found.append(f"{rel}:{name}")
+                if name.startswith("__") and name.endswith("__"):
+                    continue
+                # statements of its own module other than its own (the
+                # assignment target, or the call of a recursive function)
+                uses = mentions[p][name] - (name in names(stmt))
+                uses += sum(
+                    mentions[q][name]
+                    for q in trees
+                    if q != p and (mod in imports[q] or f"{mod}.{name}" in imports[q])
+                )
+                if not uses:
+                    found.append(f"{p.relative_to(pkg).as_posix()}:{name}")
     return found
 
 
@@ -232,6 +249,24 @@ def test_every_public_function_is_referenced():
     assert not dead, f"no non-test code names {dead}"
     stale = sorted(set(UNREACHED_FUNCTIONS) - set(unreferenced))
     assert not stale, f"allowlisted but referenced or gone: {stale}"
+
+
+def test_name_guard_counts_only_imported_mentions(tmp_path):
+    # a same-named definition in another module must not hide an
+    # orphan: b's own UTIL is used, a's UTIL is not
+    files = {
+        "week4_musemotion_spark/__init__.py": "",
+        "week4_musemotion_spark/queries/__init__.py": (
+            "from week4_musemotion_spark import b\nfrom week4_musemotion_spark.a import f\n"
+            "b.g(f())\n"
+        ),
+        "week4_musemotion_spark/a.py": "UTIL = 1\n\ndef f():\n    return 0\n",
+        "week4_musemotion_spark/b.py": "UTIL = 2\n\ndef g(x):\n    return UTIL + x\n",
+    }
+    for rel, text in files.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(text)
+    assert _unreferenced_functions(tmp_path) == ["a.py:UTIL"]
 
 
 def test_no_package_module_calls_sparkcontext_broadcast():
@@ -254,6 +289,40 @@ def test_no_package_module_calls_sparkcontext_broadcast():
             ):
                 calls.append(f"{p.relative_to(REPO_ROOT)}:{node.lineno}")
     assert not calls, f"sparkContext.broadcast called at {calls}"
+
+
+def test_renames_go_through_publish_and_tempdirs_through_cached_fixture():
+    # one commit protocol and one fixture cache: a rename anywhere else
+    # brings its own crash rules, a tempdir anywhere else its own key
+    import ast
+
+    from tests.conftest import REPO_ROOT
+
+    owner = {
+        "os.rename": "publish",
+        "os.replace": "publish",
+        "shutil.move": "publish",
+        "tempfile.gettempdir": "cached_fixture",
+    }
+    pkg = REPO_ROOT / "week4_musemotion_spark"
+    found = []
+    for p in sorted(pkg.rglob("*.py")):
+        rel = p.relative_to(pkg).as_posix()
+        for stmt in ast.parse(p.read_text()).body:
+            for node in ast.walk(stmt):
+                if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                    used = [f"{node.value.id}.{node.attr}"]
+                elif isinstance(node, ast.ImportFrom):
+                    used = [f"{node.module}.{a.name}" for a in node.names]
+                else:
+                    continue
+                for name in used:
+                    if name in owner and (rel, getattr(stmt, "name", None)) != (
+                        "sources/sinks.py",
+                        owner[name],
+                    ):
+                        found.append(f"{rel}:{node.lineno} {name}")
+    assert not found, f"outside sinks.publish / sinks.cached_fixture: {found}"
 
 
 def test_all_queries_run_at_smoke_sf(spark):

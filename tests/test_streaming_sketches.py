@@ -84,6 +84,6 @@ def test_store_publish_is_atomic_shape(spark, tmp_path):
     sink = make_hll_sink(["event_type"], "u", store)
     sink(ev.limit(100), 0)
     sink(ev, 1)
-    siblings = [d for d in os.listdir(tmp_path) if d.startswith(".store-stage-")]
+    siblings = [d for d in os.listdir(tmp_path) if d != "store"]
     assert siblings == [], siblings
     assert spark.read.parquet(store).count() > 0

@@ -43,46 +43,34 @@ def compact_parquet(
     row-appends degrades every scan with per-file open/footer costs
     and starves the scheduler with million-task stages).
 
-    Uses the same crash-safe staging/rename promotion as the upsert
-    sink: the live dataset is never deleted before its replacement is
-    fully written.  Returns the output file count.  At warehouse
-    scale the equivalent is the table format's OPTIMIZE/rewrite
-    action; partition-preserving compaction composes this per
-    partition directory.
+    The rewrite replaces the live dataset by a ``replace``
+    :func:`~week4_musemotion_spark.sources.sinks.publish`, the upsert
+    sink's crash-safe swap: the live dataset is never deleted before
+    its replacement is fully written.  Returns the output file count.
+    At warehouse scale the equivalent is the table format's
+    OPTIMIZE/rewrite action; partition-preserving compaction composes
+    this per partition directory.
     """
     import math
     import os
-    import shutil
+
+    from week4_musemotion_spark.sources.sinks import publish
 
     base = path.rstrip("/")
-    staging, old = base + "._staging", base + "._old"
-    if os.path.exists(old):
-        if not os.path.exists(base):
-            # crashed between rename(base, old) and rename(staging,
-            # base): the old data is still the only copy — restore it
-            os.rename(old, base)
-        else:
-            # crashed after the swap completed but before cleanup:
-            # base is the new data, old is the superseded copy —
-            # remove it or the next compaction's rename(base, old)
-            # hits an existing directory and raises
-            shutil.rmtree(old)
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
 
-    total = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(base)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    # coalesce, not repartition: compaction must not pay a shuffle —
-    # it only glues input splits together
-    spark.read.parquet(base).coalesce(n_files).write.mode("overwrite").parquet(staging)
-    os.rename(base, old)
-    os.rename(staging, base)
-    shutil.rmtree(old)
+    def _write(staging: str) -> None:
+        total = sum(
+            os.path.getsize(os.path.join(r, f))
+            for r, _, fs in os.walk(base)
+            for f in fs
+            if f.endswith(".parquet")
+        )
+        n_files = max(1, math.ceil(total / target_file_bytes))
+        # coalesce, not repartition: compaction must not pay a shuffle —
+        # it only glues input splits together
+        spark.read.parquet(base).coalesce(n_files).write.mode("overwrite").parquet(staging)
+
+    publish(base, _write, mode="replace")
     return sum(
         1 for r, _, fs in os.walk(base) for f in fs if f.endswith(".parquet")
     )

@@ -255,6 +255,20 @@ def adc_topk(
     )
 
 
+def _subspace_dist(vec_col: str, model: PQModel, j: int, c: int):
+    """Squared distance from subspace ``j`` of ``vec_col`` to centroid
+    ``c`` of codebook ``j``, as a Catalyst expression: a SEQUENTIAL
+    left-to-right fold from 0.0, bit-identical to a SQL oracle's
+    ``list_sum`` replay."""
+    cent = double_array_lit(model.codebooks[j, c])
+    sub = F.slice(F.col(vec_col), j * model.dsub + 1, model.dsub)
+    return F.aggregate(
+        F.zip_with(sub, cent, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def pq_encode_expr(
     emb: DataFrame,
     model: PQModel,
@@ -270,20 +284,11 @@ def pq_encode_expr(
     ``array_position``).  Use for oracle-checked audits; the numpy
     path (:func:`pq_encode`) is the production kernel, and
     tests/test_pq.py pins the two equal on real data."""
-    m, k, dsub = model.m, model.k, model.dsub
-
-    def dist(j: int, c: int):
-        cent = double_array_lit(model.codebooks[j, c])
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        return F.aggregate(
-            F.zip_with(sub, cent, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+    m, k = model.m, model.k
 
     rows = []
     for j in range(m):
-        dl = F.array(*[dist(j, c) for c in range(k)])
+        dl = F.array(*[_subspace_dist(vec_col, model, j, c) for c in range(k)])
         rows.append(
             F.struct(
                 F.lit(j).alias("j"),
@@ -311,20 +316,11 @@ def pq_distortion_expr(
     integers per row (floor(err·1e6 + 0.5)) so any downstream sum is
     partition-order-independent and value-oracle-able.  Same
     sequential-fold/argmin laws as :func:`pq_encode_expr`."""
-    m, k, dsub = model.m, model.k, model.dsub
-
-    def dist(j: int, c: int):
-        cent = double_array_lit(model.codebooks[j, c])
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        return F.aggregate(
-            F.zip_with(sub, cent, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+    m, k = model.m, model.k
 
     rows = []
     for j in range(m):
-        best = F.array_min(F.array(*[dist(j, c) for c in range(k)]))
+        best = F.array_min(F.array(*[_subspace_dist(vec_col, model, j, c) for c in range(k)]))
         rows.append(
             F.struct(
                 F.lit(j).alias("j"),

@@ -16,11 +16,12 @@ only touched partitions need rewriting (dynamic partition overwrite).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from week4_musemotion_spark.sources.sinks import publish
 
 
 def last_wins(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:
@@ -67,34 +68,19 @@ def upsert_parquet_snapshot(
     """Merge ``updates`` into the parquet snapshot at ``path``.
 
     Write-audit-publish with crash-safe promotion: the merge
-    materializes into a staging dir, the live snapshot is renamed
-    aside (never deleted first), staging is renamed live, and only
-    then is the old snapshot removed.  A crash at any point leaves
-    either the old snapshot (at ``path`` or ``path._old``) or the new
-    one intact — a plain delete-then-rename has a window where ALL
-    prior data is gone.  ``path._old`` surviving a crash is the
-    recovery signal.  Local-FS renames here; on an object store this
-    is the table-format/commit-protocol layer.
+    materializes into a staging dir and replaces the live snapshot by
+    a ``replace`` :func:`~week4_musemotion_spark.sources.sinks.publish`
+    (renamed aside, never deleted first), so a crash at any point
+    leaves the old snapshot or the new one intact, and the next call
+    recovers.
     """
-    base = path.rstrip("/")
-    staging, old = base + "._staging", base + "._old"
-    # recover from a previous crash: promote an orphaned old snapshot,
-    # clear any half-written staging
-    if os.path.exists(old) and not os.path.exists(path):
-        os.rename(old, path)
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
 
-    snapshot = spark.read.parquet(path) if os.path.exists(path) else None
-    merged = merge_upsert(snapshot, updates, keys)
-    merged.write.mode("overwrite").parquet(staging)
-    if os.path.exists(path):
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(path, old)
-    os.rename(staging, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    def _write(staging: str) -> None:
+        # read after publish's crash recovery restored any orphaned snapshot
+        snapshot = spark.read.parquet(path) if os.path.exists(path) else None
+        merge_upsert(snapshot, updates, keys).write.mode("overwrite").parquet(staging)
+
+    publish(path, _write, mode="replace")
 
 
 def apply_cdc(

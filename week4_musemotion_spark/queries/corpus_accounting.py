@@ -58,6 +58,7 @@ from week4_musemotion_spark.queries.provenance import (
     _daily_dense_sql,
     _winnow_sel_sql,
 )
+from week4_musemotion_spark.sources.sinks import cached_fixture
 from week4_musemotion_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -410,12 +411,9 @@ def _build_count_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
         sink(ev.filter(F.col("event_id") % _COUNT_BATCHES == b), b)
         if b == 1:
             sink(ev.filter(F.col("event_id") % _COUNT_BATCHES == b), b)  # replay
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
 
 def _count_store_fixture(spark: SparkSession, sf_dir: str) -> str:
-    from week4_musemotion_spark.queries.pipeline_ops import cached_fixture
-
     return cached_fixture(
         "musemotion_count_store",
         sf_dir,
@@ -467,18 +465,13 @@ def _compacted_count_store_fixture(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
 
-    from week4_musemotion_spark.queries.pipeline_ops import cached_fixture
     from week4_musemotion_spark.streaming.counts import compact_counts
 
     base = _count_store_fixture(spark, sf_dir)
 
     def _build(tmp: str) -> None:
-        shutil.copytree(base, tmp, dirs_exist_ok=True)
-        # the copied base marker must not pre-certify the compacted
-        # build (same invariant as the gate's compacted fixture)
-        os.remove(os.path.join(tmp, "_SUCCESS"))
+        shutil.copytree(base, tmp)
         compact_counts(spark, os.path.join(tmp, "store"))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     return cached_fixture(
         "musemotion_count_store_compacted",

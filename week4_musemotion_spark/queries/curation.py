@@ -29,6 +29,7 @@ from week4_musemotion_spark.operators.textstats import QUALITY_STOPWORDS
 from week4_musemotion_spark.operators.similarity import quantize_stats
 from week4_musemotion_spark.queries.extensions import _quality_e4_sql, _shingle_expr
 from week4_musemotion_spark.queries.registry import query
+from week4_musemotion_spark.sources.sinks import cached_fixture
 from week4_musemotion_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -359,19 +360,6 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivf_index_dir(sf_dir: str) -> str:
-    """Deterministic per-corpus index location under the system tmp
-    dir.  The testdata corpora are immutable, so a built index (its
-    assignment write ends with a parquet ``_SUCCESS`` marker) is
-    reusable across invocations and processes."""
-    import hashlib
-    import os
-    import tempfile
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), "musemotion_ivf", key)
-
-
 @query("q_knn_ivf", covers=("X-KNN-IVF",), oracle=None)
 def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with the production index lifecycle: the k-means
@@ -379,15 +367,14 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     per corpus (ivf_build → parquet index) and every invocation after
     that only probes 2 of 8 cluster partitions + exact-reranks.
     Approximate by construction → rows-only check, same contract as
-    the LSH variant."""
-    import os
-
+    the LSH variant.  The index is a ``cached_fixture``, keyed by the
+    embeddings files and the code."""
     from week4_musemotion_spark.operators.similarity import ivf_build, ivf_probe
 
     emb = load_table(spark, sf_dir, "embeddings")
-    index_dir = _ivf_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(index_dir, "assignment", "_SUCCESS")):
-        ivf_build(emb, index_dir)
+    index_dir = cached_fixture(
+        "musemotion_ivf", sf_dir, b"knn_ivf", lambda tmp: ivf_build(emb, tmp), table="embeddings"
+    )
     return ivf_probe(spark, index_dir, emb.filter(F.col("vec_id") < 5), k=3)
 
 

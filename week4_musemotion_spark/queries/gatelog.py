@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from week4_musemotion_spark.functions.exact import ratio_e4, ratio_e4_sql
 from week4_musemotion_spark.queries.extensions import JACCARD_THRESHOLD, _jaccard_ctes
 from week4_musemotion_spark.queries.registry import query
+from week4_musemotion_spark.sources.sinks import cached_fixture
 from week4_musemotion_spark.sources.tables import load_table
 
 _N_BATCHES = 4  # residues mod 4: seed = 0, ingested batches = 1, 2, 3
@@ -58,20 +59,11 @@ def _build_gate(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     )
     for b in range(1, _N_BATCHES):
         ingest(d.filter(F.col("doc_id") % _N_BATCHES == b), b)
-    # top-level completeness marker, written LAST: it is both this
-    # fixture's is-built check and what lets _publish_fixture treat a
-    # lost publish race as benign (the winner's copy is identical)
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
 
 def _gate_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Cached gate run, keyed by testdata content fingerprint (+ the
-    batch-count layout version).  Completeness marker: a top-level
-    ``_SUCCESS`` written after the last batch committed — also the
-    token ``_publish_fixture`` checks to treat a lost concurrent
-    publish race as benign."""
-    from week4_musemotion_spark.queries.pipeline_ops import cached_fixture
-
+    batch-count layout version) and the code."""
     return cached_fixture(
         "musemotion_gate",
         sf_dir,
@@ -89,26 +81,18 @@ def _gate_compacted_fixture(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
 
-    from week4_musemotion_spark.queries.pipeline_ops import cached_fixture
     from week4_musemotion_spark.streaming.neardup import compact_gate
 
     base = _gate_fixture(spark, sf_dir)
 
     def _build(tmp: str) -> None:
-        shutil.copytree(base, tmp, dirs_exist_ok=True)
-        # copytree brought the BASE fixture's marker along — remove
-        # it before compacting so the "marker present ⇒ compaction
-        # complete" invariant is real, not coincidental (a future
-        # in-place or resumable build must not trust a
-        # half-compacted dir)
-        os.remove(os.path.join(tmp, "_SUCCESS"))
+        shutil.copytree(base, tmp)
         compact_gate(
             spark,
             os.path.join(tmp, "idx"),
             os.path.join(tmp, "corpus"),
             os.path.join(tmp, "quarantine"),
         )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     return cached_fixture(
         "musemotion_gate_compacted",

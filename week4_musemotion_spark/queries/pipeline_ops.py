@@ -17,34 +17,11 @@ from week4_musemotion_spark.operators.textstats import QUALITY_STOPWORDS
 _Q_STOPLIST = ", ".join(f"'{w}'" for w in QUALITY_STOPWORDS)
 from week4_musemotion_spark.queries.registry import query
 from week4_musemotion_spark.queries.extensions import _quality_e4_sql
+from week4_musemotion_spark.sources.sinks import cached_fixture
 from week4_musemotion_spark.sources.tables import load_table
 
 _cents_tp = cents_sql("o_totalprice")
 
-
-def _publish_fixture(out: str, write_fn) -> None:
-    """Write a cached fixture dir via ``write_fn(tmp)`` into a
-    pid-suffixed staging dir, then atomically rename into place.
-
-    A failed rename is tolerated ONLY when a racer demonstrably
-    published (the winner's ``_SUCCESS`` exists — fixture content is a
-    pure function of the key, so the copies are identical); any other
-    rename failure re-raises so the caller sees the root cause instead
-    of a later confusing missing-path read error.  The staging dir is
-    removed on every exit path, including a failed Spark write."""
-    import os
-    import shutil
-
-    tmp = f"{out}.tmp-{os.getpid()}"
-    try:
-        write_fn(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 _BUCKET_SQL = f"({stable_hash64_sql('CAST(o_orderkey AS VARCHAR)')} % {GRANULARITY})"
 
@@ -287,24 +264,25 @@ def q_excel_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the table the oracle reads from parquet.  Workbooks are
     driver-side artifacts by nature — the 5-row collect here is the
     export fixture, not a data-path collect."""
-    import hashlib
     import os
-    import tempfile
 
     from week4_musemotion_spark.sources.excel import read_excel_auto_header
     from week4_musemotion_spark.sources.xlsx_lite import write_xlsx
 
-    rows = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name").collect()
-    grid = [
-        ["MuseMotion export", "", ""],
-        [" Region Key ", "Region  Name", "Column1"],
-        *[[str(r[0]), str(r[1]), ""] for r in rows],
-    ]
-    out_dir = os.path.join(tempfile.gettempdir(), "musemotion_xlsx")
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12] + ".xlsx")
-    write_xlsx(path, grid)
-    return read_excel_auto_header(spark, path, expected=["region_key", "region_name"])
+    def _build(tmp: str) -> None:
+        rows = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name").collect()
+        grid = [
+            ["MuseMotion export", "", ""],
+            [" Region Key ", "Region  Name", "Column1"],
+            *[[str(r[0]), str(r[1]), ""] for r in rows],
+        ]
+        os.makedirs(tmp)
+        write_xlsx(os.path.join(tmp, "region.xlsx"), grid)
+
+    out = cached_fixture("musemotion_xlsx", sf_dir, b"excel_source", _build, table="region")
+    return read_excel_auto_header(
+        spark, os.path.join(out, "region.xlsx"), expected=["region_key", "region_name"]
+    )
 
 
 @query(
@@ -321,25 +299,24 @@ def q_jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over the data and silently widens types, so production JSONL
     reads always pin the schema.  Oracle reads the same rows from
     parquet."""
-    import hashlib
     import json
     import os
-    import tempfile
 
-    rows = (
-        load_table(spark, sf_dir, "nation")
-        .select("n_nationkey", "n_name", "n_regionkey")
-        .collect()
+    def _build(tmp: str) -> None:
+        rows = (
+            load_table(spark, sf_dir, "nation")
+            .select("n_nationkey", "n_name", "n_regionkey")
+            .collect()
+        )
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "nation.jsonl"), "w") as fh:
+            for r in rows:
+                fh.write(json.dumps({"n_nationkey": r[0], "n_name": r[1], "n_regionkey": r[2]}) + "\n")
+
+    out = cached_fixture("musemotion_jsonl", sf_dir, b"jsonl_source", _build, table="nation")
+    return spark.read.schema("n_nationkey long, n_name string, n_regionkey long").json(
+        os.path.join(out, "nation.jsonl")
     )
-    out_dir = os.path.join(tempfile.gettempdir(), "musemotion_jsonl")
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(
-        out_dir, hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12] + ".jsonl"
-    )
-    with open(path, "w") as fh:
-        for r in rows:
-            fh.write(json.dumps({"n_nationkey": r[0], "n_name": r[1], "n_regionkey": r[2]}) + "\n")
-    return spark.read.schema("n_nationkey long, n_name string, n_regionkey long").json(path)
 
 
 @query(
@@ -493,45 +470,28 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchange path when an upstream warehouse emits ORC instead of
     parquet), re-read, and aggregated; the oracle computes the same
     aggregate from the original parquet, so write+read round-trip
-    fidelity is value-hash-checked.  The fixture write is keyed by
-    sf_dir PLUS a content fingerprint of the source lineitem files
-    (path+size+mtime), so regenerating the testdata invalidates the
-    cache; the write lands in a pid-suffixed staging dir atomically
-    renamed into place, so concurrent batteries on the same sf_dir
-    never observe a half-written fixture (loser keeps the winner's
-    identical copy).  Steady-state runs only pay the read.  Scale
+    fidelity is value-hash-checked.  The fixture is a
+    ``cached_fixture`` keyed by the source lineitem files and the
+    code, so steady-state runs only pay the read.  Scale
     note: the roundtrip inherits parquet's scan properties (columnar
     projection, predicate pushdown on stripe stats); the filter is
     applied BEFORE the write so the fixture holds exactly the audited
     subset."""
-    import hashlib
-    import os
-    import tempfile
-
     from week4_musemotion_spark.functions.exact import sum_money
 
-    src = os.path.join(os.path.abspath(sf_dir), "lineitem.parquet")
-    finger = hashlib.md5(os.path.abspath(sf_dir).encode())
-    paths = [src] if os.path.isfile(src) else sorted(
-        os.path.join(r, f) for r, _, fs in os.walk(src) for f in fs
+    out = cached_fixture(
+        "musemotion_orc",
+        sf_dir,
+        b"orc_roundtrip",
+        lambda tmp: (
+            load_table(spark, sf_dir, "lineitem")
+            .filter(F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
+            .select("l_returnflag", "l_extendedprice")
+            .write.mode("overwrite")
+            .orc(tmp)
+        ),
+        table="lineitem",
     )
-    for p in paths:
-        st = os.stat(p)
-        finger.update(f"{p}|{st.st_size}|{st.st_mtime_ns}".encode())
-    out = os.path.join(
-        tempfile.gettempdir(), "musemotion_orc", finger.hexdigest()[:16]
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        _publish_fixture(
-            out,
-            lambda tmp: (
-                load_table(spark, sf_dir, "lineitem")
-                .filter(F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-                .select("l_returnflag", "l_extendedprice")
-                .write.mode("overwrite")
-                .orc(tmp)
-            ),
-        )
     back = spark.read.orc(out)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -565,34 +525,19 @@ def q_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRUNING — non-matching directories are never opened (pinned by
     ``tests/test_plans.py::test_partitioned_write_prunes_directories``)
     — and the per-partition writes are the unit of incremental
-    refresh (rewrite one lang, leave the rest).  Fixture caching:
-    content-fingerprint key + atomic rename, same protocol as
-    q_orc_roundtrip."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    finger = hashlib.md5(b"partitioned:" + os.path.abspath(sf_dir).encode())
-    paths = [src] if os.path.isfile(src) else sorted(
-        os.path.join(r, f) for r, _, fs in os.walk(src) for f in fs
+    refresh (rewrite one lang, leave the rest).  The fixture is a
+    ``cached_fixture``, like q_orc_roundtrip's."""
+    out = cached_fixture(
+        "musemotion_partitioned",
+        sf_dir,
+        b"partitioned",
+        lambda tmp: (
+            load_table(spark, sf_dir, "documents")
+            .write.mode("overwrite")
+            .partitionBy("lang")
+            .parquet(tmp)
+        ),
     )
-    for p in paths:
-        st = os.stat(p)
-        finger.update(f"{p}|{st.st_size}|{st.st_mtime_ns}".encode())
-    out = os.path.join(
-        tempfile.gettempdir(), "musemotion_partitioned", finger.hexdigest()[:16]
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        _publish_fixture(
-            out,
-            lambda tmp: (
-                load_table(spark, sf_dir, "documents")
-                .write.mode("overwrite")
-                .partitionBy("lang")
-                .parquet(tmp)
-            ),
-        )
     back = spark.read.parquet(out).filter(F.col("lang") == "en")
     return back.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -890,65 +835,19 @@ def _card_counts(df: DataFrame) -> DataFrame:
     )
 
 
-def _sf_fingerprint(sf_dir: str, tag: bytes, table: str = "documents") -> str:
-    """Content fingerprint of a testdata table, used as a fixture
-    cache key: file paths + sizes + mtimes, so a driver-regenerated
-    testdata round invalidates every cached fixture.  Pass the table
-    the fixture is actually BUILT from — fingerprinting a different
-    table would serve a stale cache when only the input table
-    changes."""
-    import hashlib
-    import os
-
-    src = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    finger = hashlib.md5(tag + b":" + os.path.abspath(sf_dir).encode())
-    paths = [src] if os.path.isfile(src) else sorted(
-        os.path.join(r, f) for r, _, fs in os.walk(src) for f in fs
-    )
-    for p in paths:
-        st = os.stat(p)
-        finger.update(f"{p}|{st.st_size}|{st.st_mtime_ns}".encode())
-    return finger.hexdigest()[:16]
-
-
-def cached_fixture(subdir: str, sf_dir: str, tag: bytes, build_fn, table: str = "documents") -> str:
-    """The cached-fixture protocol in ONE place: tempdir keyed by the
-    input table's content fingerprint, ``_SUCCESS``-gated is-built
-    check, atomic publish via :func:`_publish_fixture`.  ``build_fn``
-    receives the staging dir and must create ``_SUCCESS`` inside it
-    as its last act.  Every fixture-backed query (gate log, HLL
-    store, count store, export) composes this instead of re-rolling
-    the tempdir + fingerprint + publish dance."""
-    import os
-    import tempfile
-
-    out = os.path.join(tempfile.gettempdir(), subdir, _sf_fingerprint(sf_dir, tag, table))
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        _publish_fixture(out, build_fn)
-    return out
-
-
 def _export_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Cached manifest-driven export of the documents table
     (``sinks.export_with_manifest``, partitioned by (source, lang)) —
     shared by every export-audit query so the write cost is paid once
     per testdata generation."""
-    import os
-    import tempfile
-
     from week4_musemotion_spark.sources.sinks import export_with_manifest
 
-    out = os.path.join(
-        tempfile.gettempdir(), "musemotion_export", _sf_fingerprint(sf_dir, b"export_manifest")
+    return cached_fixture(
+        "musemotion_export",
+        sf_dir,
+        b"export_manifest",
+        lambda tmp: export_with_manifest(load_table(spark, sf_dir, "documents"), tmp, _card_counts),
     )
-    if not os.path.exists(os.path.join(out, "_manifest")):
-        _publish_fixture(
-            out,
-            lambda tmp: export_with_manifest(
-                load_table(spark, sf_dir, "documents"), tmp, _card_counts
-            ),
-        )
-    return out
 
 
 @query(
@@ -977,9 +876,8 @@ def q_export_manifest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the export is one partitioned write (shards are the
     unit of incremental refresh and of partition-pruned reads); the
-    audit is one grouped recount joined to the tiny manifest.
-    Fixture caching: content-fingerprint key + atomic rename, same
-    protocol as q_orc_roundtrip."""
+    audit is one grouped recount joined to the tiny manifest.  The
+    export is a ``cached_fixture``, like q_orc_roundtrip's."""
     import os
 
     out = _export_fixture(spark, sf_dir)
@@ -1116,30 +1014,25 @@ def q_manifest_refresh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost of the refresh is O(touched shards) — the append+refresh
     never re-reads the 90% base, which is the entire point at 100 TB.
 
-    Fixture caching: content-fingerprint key + atomic rename; the
-    refresh runs once per testdata generation."""
+    The fixture is a ``cached_fixture``: the refresh runs once per
+    testdata generation and code version."""
     import os
-    import tempfile
 
     from week4_musemotion_spark.sources.sinks import export_with_manifest, refresh_manifest
 
-    out = os.path.join(
-        tempfile.gettempdir(), "musemotion_refresh", _sf_fingerprint(sf_dir, b"manifest_refresh")
-    )
-    if not os.path.exists(os.path.join(out, "_manifest")):
-        def _build(tmp: str) -> None:
-            d = load_table(spark, sf_dir, "documents")
-            base = d.filter(F.col("doc_id") % 10 != 7)
-            extra = d.filter(F.col("doc_id") % 10 == 7)
-            export_with_manifest(base, tmp, _card_counts)
-            extra.write.mode("append").partitionBy("source", "lang").parquet(tmp)
-            touched = [
-                {"source": r["source"], "lang": r["lang"]}
-                for r in extra.select("source", "lang").distinct().collect()
-            ]
-            refresh_manifest(spark, tmp, _card_counts, touched)
+    def _build(tmp: str) -> None:
+        d = load_table(spark, sf_dir, "documents")
+        base = d.filter(F.col("doc_id") % 10 != 7)
+        extra = d.filter(F.col("doc_id") % 10 == 7)
+        export_with_manifest(base, tmp, _card_counts)
+        extra.write.mode("append").partitionBy("source", "lang").parquet(tmp)
+        touched = [
+            {"source": r["source"], "lang": r["lang"]}
+            for r in extra.select("source", "lang").distinct().collect()
+        ]
+        refresh_manifest(spark, tmp, _card_counts, touched)
 
-        _publish_fixture(out, _build)
+    out = cached_fixture("musemotion_refresh", sf_dir, b"manifest_refresh", _build)
     return spark.read.parquet(os.path.join(out, "_manifest")).select(
         "source", "lang", "n_docs", "chars_sum"
     )

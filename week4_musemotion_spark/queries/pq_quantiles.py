@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from week4_musemotion_spark.operators.qsketch import quantiles_sql
 from week4_musemotion_spark.queries.registry import query
+from week4_musemotion_spark.sources.sinks import cached_fixture
 from week4_musemotion_spark.sources.tables import load_table
 
 #: Micro-batch count for the replayed corpus stream.
@@ -78,12 +79,9 @@ def _build_qsketch_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
             sink(batch, b)  # replay: the commit marker must no-op it
         if b == 3:
             compact_counts(spark, store)  # fold the first four batches
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
 
 def _qsketch_store_fixture(spark: SparkSession, sf_dir: str) -> str:
-    from week4_musemotion_spark.queries.pipeline_ops import cached_fixture
-
     return cached_fixture(
         "musemotion_qsketch_store",
         sf_dir,

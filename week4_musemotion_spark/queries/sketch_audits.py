@@ -59,6 +59,7 @@ from week4_musemotion_spark.queries.sketch_quality import (
     _hll_rho_sql,
     _hll_shingle_sql,
 )
+from week4_musemotion_spark.sources.sinks import cached_fixture
 from week4_musemotion_spark.sources.tables import load_table
 
 #: Span width for duplicated-span coverage: 8-token grams — long
@@ -652,12 +653,9 @@ def _build_hll_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     sink = make_hll_sink(["event_type"], "u", os.path.join(tmp, "store"))
     for b in range(_STREAM_BATCHES):
         sink(ev.filter(F.col("event_id") % _STREAM_BATCHES == b), b)
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
 
 def _hll_store_fixture(spark: SparkSession, sf_dir: str) -> str:
-    from week4_musemotion_spark.queries.pipeline_ops import cached_fixture
-
     return cached_fixture(
         "musemotion_hll_store",
         sf_dir,

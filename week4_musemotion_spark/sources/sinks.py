@@ -16,12 +16,126 @@ stats-backed (min/max pruning), and the basis for everything the
 optimizer pushes down.  ``partition_by`` should be a low-cardinality
 column used in filters (at 100 TB, partition pruning is the first
 and cheapest IO saver).
+
+Every directory this engine commits goes through :func:`publish`, and
+every fixture it reuses across runs through :func:`cached_fixture`.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import os
+import shutil
+import tempfile
+import uuid
+from pathlib import Path
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def publish(path: str, write_fn, mode: str = "fresh", stage: str | None = None) -> None:
+    """Commit ``path`` by writing a staging copy with ``write_fn(staging)``
+    and renaming it into place — the one rename in the package.
+
+    ``mode="fresh"`` publishes a key that many writers may race for
+    (a cached fixture): the staging name is unique to this writer
+    (``stage`` if given, else ``<path>.tmp-<pid>-<uuid>``; with
+    ``write_fn=None`` the stage is already written).  A failed rename
+    is tolerated ONLY when ``path`` exists — a racer published the same
+    key, whose content is a function of the key — and any other error
+    re-raises.  The stage is removed on every exit path.
+
+    ``mode="replace"`` swaps a live dataset for a new version, single
+    writer: write ``path._staging``, rename ``path`` → ``path._old``,
+    rename staging → ``path``, remove ``._old``.  The live data is never
+    deleted before its replacement is complete, so a crash leaves the
+    old version (at ``path`` or ``path._old``) or the new one.  Before
+    writing it recovers from such a crash: ``._old`` without ``path`` is
+    restored, ``._old`` beside ``path`` is the superseded copy and is
+    dropped, and stale staging is swept.  ``write_fn`` runs after that
+    recovery, so it may read ``path``.  A write that raises leaves the
+    live data in place and no staging behind.  On an object store this
+    is the table format's commit protocol."""
+    base = path.rstrip("/")
+    if mode == "fresh":
+        stage = stage or f"{base}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+        try:
+            if write_fn is not None:
+                write_fn(stage)
+            try:
+                os.rename(stage, base)
+            except OSError:
+                if not os.path.exists(base):
+                    raise
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        return
+    if mode != "replace":
+        raise ValueError(f"unknown publish mode {mode!r}")
+    staging, old = base + "._staging", base + "._old"
+    if os.path.exists(old):
+        if os.path.exists(base):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, base)
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+    try:
+        write_fn(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if os.path.exists(base):
+        os.rename(base, old)
+    os.rename(staging, base)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def _sf_fingerprint(sf_dir: str, tag: bytes, table: str = "documents") -> str:
+    """Content fingerprint of a testdata table, the input half of a
+    fixture key: file paths + sizes + mtimes, so regenerated testdata
+    invalidates every cached fixture.  Pass the table the fixture is
+    actually BUILT from — fingerprinting a different table would serve
+    a stale cache when only the input table changes."""
+    src = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
+    finger = hashlib.md5(tag + b":" + os.path.abspath(sf_dir).encode())
+    paths = [src] if os.path.isfile(src) else sorted(
+        os.path.join(r, f) for r, _, fs in os.walk(src) for f in fs
+    )
+    for p in paths:
+        st = os.stat(p)
+        finger.update(f"{p}|{st.st_size}|{st.st_mtime_ns}".encode())
+    return finger.hexdigest()[:16]
+
+
+@functools.cache
+def _code_digest() -> str:
+    """md5 over the package's sorted ``*.py`` paths and bytes, the code
+    half of a fixture key: a fixture built by other code is never
+    served.  Computed on first use, once per process."""
+    root = Path(__file__).resolve().parents[1]
+    digest = hashlib.md5()
+    for p in sorted(root.rglob("*.py")):
+        digest.update(p.relative_to(root.parent).as_posix().encode())
+        digest.update(p.read_bytes())
+    return digest.hexdigest()[:16]
+
+
+def cached_fixture(subdir: str, sf_dir: str, tag: bytes, build_fn, table: str = "documents") -> str:
+    """Build a fixture once and reuse it: the directory
+    ``$TMPDIR/<subdir>/<input fingerprint>-<code digest>``, built by
+    ``build_fn(staging)`` and committed by a ``fresh`` :func:`publish`.
+    The rename is the commit, so the key directory existing means the
+    fixture is complete.  Returns the fixture directory."""
+    out = os.path.join(
+        tempfile.gettempdir(), subdir, f"{_sf_fingerprint(sf_dir, tag, table)}-{_code_digest()}"
+    )
+    if not os.path.isdir(out):
+        publish(out, build_fn)
+    return out
 
 
 def write_parquet(
@@ -53,29 +167,16 @@ def export_with_manifest(
     Manifest-present ⇒ export complete: readers treat it as the
     commit marker (the underscore prefix hides it from Spark's data
     scan).  For the marker claim to hold on its own, the manifest is
-    written to a dot-prefixed staging dir and atomically ``os.rename``d
-    into place — a crash mid-manifest-write leaves only staging
-    litter, never a partial ``_manifest`` a presence-checking reader
-    would trust."""
+    committed by a ``replace`` :func:`publish` — a crash mid-manifest-write
+    leaves only staging litter, never a partial ``_manifest`` a
+    presence-checking reader would trust."""
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
     back = df.sparkSession.read.parquet(path)
-    _publish_manifest(manifest_fn(back), path)
-
-
-def _publish_manifest(manifest_df: DataFrame, path: str) -> None:
-    """Atomically (re)publish ``<path>/_manifest``: write to a
-    ``.manifest_stage`` dir, remove any prior manifest, rename the
-    staging dir into place.  The reader-visible states are only
-    absent (not committed / being replaced) or complete."""
-    import os
-    import shutil
-
-    stage = os.path.join(path, ".manifest_stage")
-    final = os.path.join(path, "_manifest")
-    shutil.rmtree(stage, ignore_errors=True)
-    manifest_df.write.mode("overwrite").parquet(stage)
-    shutil.rmtree(final, ignore_errors=True)
-    os.rename(stage, final)
+    publish(
+        os.path.join(path, "_manifest"),
+        lambda stage: manifest_fn(back).write.mode("overwrite").parquet(stage),
+        mode="replace",
+    )
 
 
 def refresh_manifest(
@@ -101,11 +202,9 @@ def refresh_manifest(
     value back to its directory), their manifest rows are recomputed
     from the files as written, all other shards' rows are carried over
     from the stored manifest untouched, and the merge is published via
-    the same staging-dir + ``os.rename`` commit as the full export.
+    the same ``replace`` :func:`publish` as the full export.
     Cost is O(touched shards) scan volume — the pruned filter reads
     only the named directories — not O(corpus)."""
-    import os
-
     if not partitions:
         raise ValueError("partitions must be non-empty (nothing to refresh)")
     for p in partitions:
@@ -124,6 +223,11 @@ def refresh_manifest(
         touched = touched | _match(p)
     sub = spark.read.parquet(path).filter(touched)
     fresh = manifest_fn(sub)
-    stored = spark.read.parquet(os.path.join(path, "_manifest"))
-    kept = stored.filter(~touched)
-    _publish_manifest(kept.unionByName(fresh).coalesce(1), path)
+    final = os.path.join(path, "_manifest")
+
+    def _write(stage: str) -> None:
+        # the stored manifest is read after publish's crash recovery
+        kept = spark.read.parquet(final).filter(~touched)
+        kept.unionByName(fresh).coalesce(1).write.mode("overwrite").parquet(stage)
+
+    publish(final, _write, mode="replace")

@@ -25,8 +25,8 @@ protocol (the same txn-marker idea Delta's ``txnAppId``/``txnVersion``
 writer option implements at the table-format layer):
 
 1. every file a batch produces carries a ``bid-<batch_id>-`` name
-   prefix and lands via staging + rename, so a batch's output is
-   identifiable and removable as a unit;
+   prefix and lands via staging + ``sinks.publish``, so a batch's
+   output is identifiable and removable as a unit;
 2. a commit marker ``_ingest_commits/<batch_id>`` is created only
    AFTER all four outputs (quarantine, corpus, index shingles, index
    bands) are in place — marker present ⇒ replay returns immediately;
@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from week4_musemotion_spark.operators.dedup import _band_rows, minhash_signatures, shingle_sets
 from week4_musemotion_spark.operators.lsh_index import query_index
+from week4_musemotion_spark.sources.sinks import publish
 
 
 def _purge_keyed(target: str, tag: str) -> None:
@@ -68,21 +69,20 @@ def _purge_keyed(target: str, tag: str) -> None:
 def _append_keyed(df: DataFrame, target: str, tag: str) -> None:
     """Append ``df`` to the parquet dir ``target`` as files named
     ``bid-<tag>-<i>.parquet``: write to a dot-prefixed staging dir
-    (invisible to Spark readers), then rename each part file into
+    (invisible to Spark readers), then publish each part file into
     place.  Combined with ``_purge_keyed`` this makes the append
     replayable — the batch's contribution is removable as a unit."""
     os.makedirs(target, exist_ok=True)
     staging = os.path.join(target, f".staging-{tag}-{uuid.uuid4().hex[:8]}")
     try:
         df.write.mode("overwrite").parquet(staging)
-        i = 0
-        for name in sorted(os.listdir(staging)):
-            if name.startswith("part-") and name.endswith(".parquet"):
-                os.rename(
-                    os.path.join(staging, name),
-                    os.path.join(target, f"bid-{tag}-{i:05d}.parquet"),
-                )
-                i += 1
+        parts = [n for n in os.listdir(staging) if n.startswith("part-") and n.endswith(".parquet")]
+        for i, name in enumerate(sorted(parts)):
+            publish(
+                os.path.join(target, f"bid-{tag}-{i:05d}.parquet"),
+                None,
+                stage=os.path.join(staging, name),
+            )
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 

@@ -8,8 +8,8 @@ Exactly-once comes from ALGEBRA here, not from a transaction log:
 HLL registers form an idempotent, commutative monoid under pointwise
 max, so re-merging a replayed micro-batch is a no-op by construction
 — ``merge(store, batch)`` twice equals once.  The only machinery
-needed is an atomic publish of the merged store (staging dir +
-rename, the `_manifest` pattern from ``sources/sinks.py``), so a
+needed is a ``replace`` publish of the merged store
+(``sources/sinks.publish``, the staging/swap every rewrite uses), so a
 reader never observes a half-written store.  Contrast with the
 near-dup gate (``streaming/neardup.py``), whose appends are NOT
 idempotent and therefore need the full bid-prefix + commit-marker
@@ -26,25 +26,11 @@ complete register table — ``hll_estimate`` it directly, or
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 
 from week4_musemotion_spark.operators.sketches import hll_merge, hll_registers
-
-
-def _publish_atomic(df: DataFrame, path: str) -> None:
-    """Write ``df`` to a dot-prefixed staging dir and rename it into
-    place.  A crash mid-write leaves only staging litter; the
-    reader-visible states are absent (not yet published / being
-    replaced) or complete."""
-    parent = os.path.dirname(path.rstrip("/")) or "."
-    os.makedirs(parent, exist_ok=True)
-    stage = os.path.join(parent, f".{os.path.basename(path.rstrip('/'))}-stage-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(stage)
-    shutil.rmtree(path, ignore_errors=True)
-    os.rename(stage, path)
+from week4_musemotion_spark.sources.sinks import publish
 
 
 def make_hll_sink(group_cols: list[str], value_col: str, store_path: str, p: int = 8):
@@ -55,23 +41,22 @@ def make_hll_sink(group_cols: list[str], value_col: str, store_path: str, p: int
         ).option("checkpointLocation", ckpt).start()
 
     Per micro-batch: sketch the batch, max-merge with the store,
-    republish atomically.  The store must be read FULLY before the
-    swap (registers are tiny — m rows per group — so the localCheckpoint
-    materialization is a few KB, not a scan-avoidance hack): renaming
-    the directory out from under a lazy reader would break the plan.
+    republish it by a ``replace`` publish.  The store is read inside
+    the staging write, after the publish's crash recovery, and the
+    write consumes it fully before the swap renames it aside.
     """
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         reg = hll_registers(batch_df, group_cols, value_col, p)
-        if os.path.isdir(store_path):
-            prev = spark.read.parquet(store_path)
-            merged = hll_merge(prev, reg, group_cols)
-        else:
+
+        def _write(stage: str) -> None:
             merged = reg
-        # materialize BEFORE the rename swap invalidates the source
-        merged = merged.localCheckpoint(eager=True)
-        _publish_atomic(merged, store_path)
+            if os.path.isdir(store_path):
+                prev = batch_df.sparkSession.read.parquet(store_path)
+                merged = hll_merge(prev, reg, group_cols)
+            merged.write.mode("overwrite").parquet(stage)
+
+        publish(store_path, _write, mode="replace")
 
     return _sink
 
