@@ -3,12 +3,12 @@
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from week4_musemotion_spark.sources.sinks import read_manifest
 
 
 def _card(df):
@@ -22,7 +22,7 @@ def _stale_shards(spark, out):
     """(source, lang) of every shard whose stored ``_manifest`` row
     differs from the card recomputed from the files on disk, in
     either direction; empty when the manifest is current."""
-    stored = spark.read.parquet(os.path.join(out, "_manifest"))
+    stored = read_manifest(spark, out)
     actual = _card(spark.read.parquet(out)).select(*stored.columns)
     diff = stored.exceptAll(actual).unionByName(actual.exceptAll(stored))
     return {(r["source"], r["lang"]) for r in diff.collect()}
@@ -107,7 +107,7 @@ def test_refresh_manifest_recards_only_named_shards(spark, tmp_path):
     export_with_manifest(d, out, _card)
     before = {
         (r["source"], r["lang"]): (r["n_docs"], r["chars_sum"])
-        for r in spark.read.parquet(out + "/_manifest").collect()
+        for r in read_manifest(spark, out).collect()
     }
 
     # append rows to one existing shard, bypassing the manifest
@@ -126,7 +126,7 @@ def test_refresh_manifest_recards_only_named_shards(spark, tmp_path):
     assert _stale_shards(spark, out) == set()
     after = {
         (r["source"], r["lang"]): (r["n_docs"], r["chars_sum"])
-        for r in spark.read.parquet(out + "/_manifest").collect()
+        for r in read_manifest(spark, out).collect()
     }
     key = (tgt["source"], tgt["lang"])
     assert after[key][0] == before[key][0] + n_extra
@@ -173,7 +173,7 @@ def test_refresh_manifest_escaped_partition_values_and_empty_list(spark, tmp_pat
     assert _stale_shards(spark, out) == set()
     rows = {
         (r["source"], r["lang"]): r["n_docs"]
-        for r in spark.read.parquet(out + "/_manifest").collect()
+        for r in read_manifest(spark, out).collect()
     }
     assert rows[("web", "pt:BR")] == 2 and rows[("books", "pt:BR")] == 1
 

@@ -136,7 +136,7 @@ def test_fuzzy_join_edit1_full_recall_all_edit_kinds(spark):
     """Deletion-neighborhood blocking must recover EVERY pair at edit
     distance <= 1 — deletions, insertions, substitutions, and exact
     equals — against a brute-force python levenshtein."""
-    from week4_musemotion_spark.operators.fuzzy import fuzzy_join_edit1
+    from week4_musemotion_spark.operators.fuzzy import fuzzy_join
 
     clean = [(i, f"record-{i:04d}-tail") for i in range(40)]
     dirty = []
@@ -169,7 +169,7 @@ def test_fuzzy_join_edit1_full_recall_all_edit_kinds(spark):
     ddf = spark.createDataFrame(dirty, "did long, dname string")
     got = {
         (r.did, r.cid)
-        for r in fuzzy_join_edit1(cdf, ddf, "cname", "dname").collect()
+        for r in fuzzy_join(cdf, ddf, "cname", "dname", k=1).collect()
     }
     assert got == expect
     assert len(expect) >= 40  # at least the planted pairs
@@ -183,7 +183,7 @@ def test_fuzzy_join_candidates_linear_on_templated_names(spark):
     half-segment blocking collapsed here (1 distinct seg-1 key over
     15k rows -> disguised cross join); deletion-neighborhood keys
     always contain the high-entropy suffix so they cannot."""
-    from week4_musemotion_spark.operators.fuzzy import candidate_pairs_edit1
+    from week4_musemotion_spark.operators.fuzzy import _candidate_pairs
 
     n = 600
     clean = [(i, f"Customer#{i:09d}") for i in range(n)]
@@ -194,8 +194,8 @@ def test_fuzzy_join_candidates_linear_on_templated_names(spark):
             dirty.append((i + 1_000_000, s[: p - 1] + s[p:]))  # one deletion
     cdf = spark.createDataFrame(clean, "cid long, cname string")
     ddf = spark.createDataFrame(dirty, "did long, dname string")
-    cands = candidate_pairs_edit1(
-        cdf, ddf, "cname", "dname", dedup_on=["did", "cid"]
+    cands = _candidate_pairs(
+        cdf, ddf, "cname", "dname", 1, ["did", "cid"]
     ).count()
     # each dirty row should propose O(1) clean rows; allow a generous
     # constant (templated ids like 000000100/000000110 can collide on
@@ -254,42 +254,18 @@ def test_fuzzy_join_k2_full_recall_all_edit_pairs(spark):
     assert len(expect) >= 36  # at least the planted pairs
 
 
-def test_fuzzy_join_k3_hof_fallback_recall(spark):
-    """k >= 3 takes the composed higher-order-function path (the
-    scalar explode is specialized for k <= 2) — recall must still be
-    exact for triple edits on short strings."""
+def test_fuzzy_join_rejects_unsupported_radius(spark):
+    """Only the depth-1 and depth-2 deletion neighborhoods exist; any
+    other radius raises before any plan is built."""
+    import pytest
+
     from week4_musemotion_spark.operators.fuzzy import fuzzy_join
 
-    clean = [(i, f"w{chr(65 + i)}xyz{chr(97 + i)}") for i in range(8)]
-    dirty = [
-        (100, clean[0][1][1:] + "Q"),        # delete pos1 + append = 2..3 edits
-        (101, clean[1][1][:2] + "AB" + clean[1][1][4:]),  # 2 substitutions
-        (102, "QQ" + clean[2][1][2:] + "R"),  # 2 subs + 1 insert = 3 edits
-        (103, clean[3][1]),                   # exact
-    ]
-
-    def lev(a, b):
-        dp = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            prev, dp[0] = dp[0], i
-            for j, cb in enumerate(b, 1):
-                prev, dp[j] = dp[j], min(dp[j] + 1, dp[j - 1] + 1, prev + (ca != cb))
-        return dp[-1]
-
-    expect = {
-        (di, ci, lev(dt, cs))
-        for di, dt in dirty
-        for ci, cs in clean
-        if lev(dt, cs) <= 3
-    }
-    cdf = spark.createDataFrame(clean, "cid long, cname string")
-    ddf = spark.createDataFrame(dirty, "did long, dname string")
-    got = {
-        (r.did, r.cid, r.dist)
-        for r in fuzzy_join(cdf, ddf, "cname", "dname", k=3).collect()
-    }
-    assert got == expect
-    assert len(expect) >= 4
+    cdf = spark.createDataFrame([(1, "abc")], "cid long, cname string")
+    ddf = spark.createDataFrame([(2, "abd")], "did long, dname string")
+    for k in (0, 3):
+        with pytest.raises(ValueError, match="k must be 1 or 2"):
+            fuzzy_join(cdf, ddf, "cname", "dname", k=k)
 
 
 def test_exact_int_div_round_matches_fraction_reference(spark):

@@ -197,14 +197,19 @@ def test_bloom_membership_is_scan_side_predicate(spark):
     assert "Exchange" not in plan[filt:scan], "exchange between filter and fact scan"
 
 
+#: Both Bloom hash families; each build/fold test runs under each.
+_BLOOM_FAMILIES = ("portable", "native")
+
+
 def test_bloom_rejects_bad_bits(spark):
     import pytest as _pytest
 
-    from week4_musemotion_spark.operators.sketches import build_key_bloom
+    from week4_musemotion_spark.operators.sketches import bloom_positions
 
     d = spark.range(3).select(F.col("id").alias("k"))
-    with _pytest.raises(ValueError):
-        build_key_bloom(d, "k", num_bits=1000)
+    for family in _BLOOM_FAMILIES:
+        with _pytest.raises(ValueError):
+            bloom_positions(d, F.col("k"), 1000, 3, family)
 
 
 def test_hll_ignores_null_values(spark):
@@ -239,57 +244,26 @@ def test_hll_estimate_p_mismatch_fails_loudly(spark):
 
 
 def test_bloom_build_ignores_null_keys(spark):
-    from week4_musemotion_spark.operators.sketches import build_key_bloom
+    from week4_musemotion_spark.operators.sketches import bloom_positions
 
     d = spark.createDataFrame([(1,), (2,), (None,)], "k long")
     clean = spark.createDataFrame([(1,), (2,)], "k long")
-    assert build_key_bloom(d, "k", num_bits=256) == build_key_bloom(clean, "k", num_bits=256)
+    for family in _BLOOM_FAMILIES:
+        got = bloom_positions(d, F.col("k"), 256, 3, family)
+        assert sorted(got) == sorted(bloom_positions(clean, F.col("k"), 256, 3, family))
 
 
 def test_bloom_words_fold_from_larger_build(spark):
     """Positions built at the grid max mask down to the identical
     bitmap a direct smaller build produces."""
-    from week4_musemotion_spark.operators.sketches import (
-        bloom_positions,
-        bloom_words,
-        build_key_bloom,
-    )
+    from week4_musemotion_spark.operators.sketches import bloom_positions, bloom_words
 
     d = spark.range(100).select(F.col("id").alias("k"))
-    pos = bloom_positions(d, "k", num_bits=4096)
-    for bits in (64, 512, 4096):
-        assert bloom_words(pos, bits) == build_key_bloom(d, "k", num_bits=bits)
-
-
-def test_cms_width_mismatch_fails_loudly(spark):
-    import pytest as _pytest
-
-    from week4_musemotion_spark.operators.sketches import cms_sketch
-
-    d = spark.range(100).select(F.concat(F.lit("v"), F.col("id") % 7).alias("v"))
-    with _pytest.raises(ValueError):
-        cms_sketch(d, [], "v", width=100)
-
-
-def test_cms_ignores_nulls_and_absent_terms_read_zero(spark):
-    from week4_musemotion_spark.functions.hashing import stable_hash64
-    from week4_musemotion_spark.operators.sketches import cms_sketch
-
-    d = spark.createDataFrame([("a",), ("a",), (None,)], "v string")
-    sk = cms_sketch(d, [], "v", width=64)
-    # the NULL row adds nothing: each of the 4 hash rows holds one
-    # cell, counting the two 'a's
-    assert sorted((r.j, r.cnt, r.w, r.d) for r in sk.collect()) == [
-        (j, 2, 64, 4) for j in range(4)
-    ]
-    # an unseen term can only read collision mass; with 1 distinct
-    # value and 64*4 cells, none of its cells is present (reads 0)
-    probe = spark.createDataFrame([("zz-unseen",)], "v string").select(
-        F.posexplode(
-            F.array(*[stable_hash64(F.col("v"), seed=j).bitwiseAND(63) for j in range(4)])
-        ).alias("j", "pos")
-    )
-    assert probe.join(sk, ["j", "pos"]).count() == 0
+    for family in _BLOOM_FAMILIES:
+        pos = bloom_positions(d, F.col("k"), 4096, 3, family)
+        for bits in (64, 512, 4096):
+            direct = bloom_positions(d, F.col("k"), bits, 3, family)
+            assert bloom_words(pos, bits) == bloom_words(direct, bits)
 
 
 def _fold(registers, q, group_cols):

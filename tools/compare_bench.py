@@ -3,12 +3,9 @@
 Usage: python tools/compare_bench.py OLD.json NEW.json [threshold]
        python tools/compare_bench.py OLD1.json,OLD2.json NEW1.json,NEW2.json
 
-Accepts any of: the local ``BENCH_FULL.json`` shape (``queries`` at
-the top level), the driver's ``BENCH_r{N}.json`` wrapper (``parsed``
-holding the summary line), or — when the driver's stdout window cut
-the JSON line mid-map and ``parsed`` is null (BENCH_r01) — regex
-recovery of every ``"q_*": seconds`` pair from the raw ``tail``
-fragment, so cross-round diffs keep full history.
+Reads the ``BENCH_FULL.json`` shape that ``bench.py`` writes
+(``queries`` at the top level, seconds per query).  Compare two trees
+measured in the same time window, never two rounds on their own.
 
 Either side may be a COMMA-SEPARATED list of snapshots: per-query
 times are then min-combined across the list.  This is the round-10
@@ -25,28 +22,15 @@ threshold, so CI/driver rounds can gate on it.
 from __future__ import annotations
 
 import json
-import re
 import sys
 
 
 def load_queries(path: str) -> dict[str, float]:
-    """Per-query seconds from any bench snapshot shape."""
+    """Per-query seconds from a ``BENCH_FULL.json`` snapshot."""
     doc = json.load(open(path))
-    if isinstance(doc.get("queries"), dict):
-        return doc["queries"]
-    parsed = doc.get("parsed")
-    if isinstance(parsed, dict) and isinstance(parsed.get("queries"), dict):
-        # NOTE: parsed may carry a queries_file path, but that file is
-        # overwritten by every local bench run — reading it here would
-        # silently diff a snapshot against itself.  Only the inline
-        # slowest-N map is authoritative for the snapshot's round.
-        return dict(parsed["queries"])
-    # driver cut the stdout line mid-JSON: recover what the tail holds
-    tail = doc.get("tail", "")
-    pairs = re.findall(r'"(q_\w+)"\s*:\s*([0-9.]+)', tail)
-    if not pairs:
-        raise ValueError(f"{path}: no queries / parsed / recoverable tail")
-    return {name: float(sec) for name, sec in pairs}
+    if not isinstance(doc.get("queries"), dict):
+        raise ValueError(f"{path}: no top-level queries map (not a BENCH_FULL.json)")
+    return doc["queries"]
 
 
 def load_side(spec: str) -> dict[str, float]:

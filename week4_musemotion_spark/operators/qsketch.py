@@ -23,8 +23,8 @@ then window arithmetic on the tiny count table.
 
 Everything here has a byte-identical DuckDB rendering (the ``_sql``
 twins), so quantile queries are value-oracle-able like the other
-portable sketches (HLL / bloom / CMS / Misra-Gries in
-``operators/sketches.py``).
+portable sketches (HLL / bloom / Misra-Gries in
+``operators/sketches.py``, count-min in ``queries/sketch_audits.py``).
 """
 
 from __future__ import annotations

@@ -11,10 +11,9 @@ exactly checkable:
   HyperLogLog (distinct count, mergeable m-row state), with
   :func:`hll_fold_register` to derive a smaller precision from a
   larger build;
-- :func:`build_key_bloom` / :func:`bloom_might_contain` /
-  :func:`bloom_prune` — bloom membership (join pruning, exact after
-  the join);
-- :func:`cms_sketch` — count-min (point frequency, depth×width state).
+- :func:`bloom_positions` / :func:`bloom_words` / :func:`bloom_prune`
+  — bloom membership (join pruning, exact after the join), under the
+  portable family or the native ``xxhash64`` one.
 """
 
 from __future__ import annotations
@@ -365,49 +364,51 @@ def hll_estimate(
 # ---------------------------------------------------------------------------
 
 
-def build_key_bloom(
-    keys: DataFrame, key_col: str, num_bits: int = 1 << 15, num_hashes: int = 3
-) -> list[int]:
-    """Bloom bitmap of a key column as ``num_bits / 64`` signed longs.
+def _bloom_hash_positions(
+    key: Column, num_bits: int, num_hashes: int, hash_family: str
+) -> list[Column]:
+    """The ``num_hashes`` seeded bit positions of ``key`` in a
+    ``num_bits`` bitmap, one column per seed.  ``hash_family`` picks
+    the hash: ``"portable"`` is ``stable_hash64`` of the key cast to
+    string, whose positions a SQL oracle replays bit-for-bit;
+    ``"native"`` is ``xxhash64(key, seed)`` of a :func:`_bloom_key`
+    column, for advisory filters no oracle replays (the portable
+    chain — string cast + concat + MD5 + hex substring + base
+    conversion — costs ~50× more per probed row than one codegen'd
+    long hash)."""
+    if hash_family == "portable":
+        from week4_musemotion_spark.functions.hashing import stable_hash64
 
-    The build is distributed: each key hashes to ``num_hashes`` bit
-    positions JVM-side (seeded portable hash), and only the DISTINCT
-    positions — at most ``num_bits`` ints, a few KB no matter how
-    many keys — ever reach the driver.  That bound is what makes this
-    usable where a broadcast join is not: a dim side of 100 M keys
-    broadcasts megabytes of hashes, but its bloom is still
-    ``num_bits/8`` bytes.  False-positive rate ≈ (1-e^(-kn/m))^k;
-    size ``num_bits`` ≈ 10–16 bits per expected key for ~1 % or
-    better."""
-    return bloom_words(
-        bloom_positions(keys, key_col, num_bits, num_hashes), num_bits
-    )
+        hashes = [stable_hash64(key.cast("string"), seed=s) for s in range(num_hashes)]
+    elif hash_family == "native":
+        hashes = [F.xxhash64(key, F.lit(s)) for s in range(num_hashes)]
+    else:
+        raise ValueError(f"unknown bloom hash family {hash_family!r}")
+    return [F.pmod(h, num_bits) for h in hashes]
 
 
 def bloom_positions(
-    keys: DataFrame, key_col: str, num_bits: int, num_hashes: int = 3
+    keys: DataFrame, key: Column, num_bits: int, num_hashes: int, hash_family: str
 ) -> list[int]:
     """The distributed half of the bloom build: distinct set bit
-    positions of every non-NULL key (NULL never equi-joins, so it
-    contributes no bits).  Because positions are ``hash & (bits-1)``,
-    a position set built at ``num_bits`` folds down to any smaller
-    power of two with ``p & (smaller-1)`` — one Spark job can feed a
-    whole bitmap-size grid (see :func:`bloom_words`)."""
+    positions of every non-NULL ``key`` under the ``hash_family`` hash
+    (see :func:`_bloom_hash_positions`; NULL never equi-joins, so it
+    contributes no bits).  Only the distinct positions — at most
+    ``num_bits`` ints, a few KB no matter how many keys — reach the
+    driver, which is what makes a bloom usable where a broadcast join
+    is not.  Because positions are ``hash & (bits-1)``, a position
+    set built at ``num_bits`` folds down to any smaller power of two
+    with ``p & (smaller-1)`` — one Spark job can feed a whole
+    bitmap-size grid (see :func:`bloom_words`).  False-positive rate
+    ≈ (1-e^(-kn/m))^k; size ``num_bits`` ≈ 10–16 bits per expected
+    key for ~1 % or better."""
     if num_bits & (num_bits - 1) or num_bits < 64:
         raise ValueError(f"num_bits must be a power of two >= 64, got {num_bits}")
-    from week4_musemotion_spark.functions.hashing import stable_hash64
-
-    key = F.col(key_col).cast("string")
     pos = (
-        keys.filter(F.col(key_col).isNotNull())
+        keys.filter(key.isNotNull())
         .select(
             F.explode(
-                F.array(
-                    *[
-                        F.pmod(stable_hash64(key, seed=s), num_bits)
-                        for s in range(num_hashes)
-                    ]
-                )
+                F.array(*_bloom_hash_positions(key, num_bits, num_hashes, hash_family))
             ).alias("pos")
         )
         .distinct()
@@ -428,30 +429,22 @@ def bloom_words(positions: list[int], num_bits: int) -> list[int]:
     return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
 
 
-def bloom_might_contain(
-    col: Column, words: list[int], num_hashes: int = 3
-) -> Column:
-    """Membership predicate against a :func:`build_key_bloom` bitmap —
-    a pure builtin-expression column (literal long array + shifts),
-    so it runs inside whole-stage codegen on the scan side, BEFORE
-    any exchange.  May pass false positives (the downstream equi-join
-    removes them); never drops a true key."""
-    num_bits = 64 * len(words)
-    from week4_musemotion_spark.functions.hashing import stable_hash64
-
+def _bloom_probe(words: list[int], positions: list[Column]) -> Column:
+    """Membership predicate: every one of ``positions`` (one column per
+    seed, each below ``64 * len(words)``) has its bit set in the
+    ``words`` bitmap.  Pure builtin expressions (a literal long array
+    + shifts), so it runs inside whole-stage codegen on the scan
+    side, before any exchange.  May pass false positives; never drops
+    a key whose positions built the bitmap."""
     arr = F.array(*[F.lit(w).cast("long") for w in words])
-    s_col = col.cast("string")
-    conds = []
-    for s in range(num_hashes):
-        pos = F.pmod(stable_hash64(s_col, seed=s), num_bits)
+    out = None
+    for pos in positions:
         word = F.element_at(arr, F.shiftright(pos, 6).cast("int") + 1)
         bit = F.call_function(
             "shiftright", word, pos.bitwiseAND(63).cast("int")
         ).bitwiseAND(1)
-        conds.append(bit == 1)
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
+        cond = bit == 1
+        out = cond if out is None else out & cond
     return out
 
 
@@ -470,57 +463,6 @@ def _bloom_key(df: DataFrame, key_col: str) -> tuple[Column, str]:
         f"bloom_prune: key column {key_col!r} has type {t.simpleString()}; "
         "only integral and string keys are supported"
     )
-
-
-def _fast_bloom_positions(
-    keys: DataFrame, key: Column, num_bits: int, num_hashes: int
-) -> list[int]:
-    """Distinct set bit positions of every non-NULL key under the
-    NATIVE ``xxhash64(key, seed)`` family — the probe-cost-optimized
-    twin of :func:`bloom_positions` for advisory filters whose bits
-    are never replayed by a SQL oracle (the portable md5 family costs
-    ~50× more per probed row: string cast + concat + MD5 + hex
-    substring + base conversion vs one codegen'd long hash).  ``key``
-    is the canonical column from :func:`_bloom_key`."""
-    if num_bits & (num_bits - 1) or num_bits < 64:
-        raise ValueError(f"num_bits must be a power of two >= 64, got {num_bits}")
-    pos = (
-        keys.filter(key.isNotNull())
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.xxhash64(key, F.lit(s)), num_bits)
-                        for s in range(num_hashes)
-                    ]
-                )
-            ).alias("pos")
-        )
-        .distinct()
-    )
-    return [r.pos for r in pos.collect()]
-
-
-def _fast_might_contain(
-    probe: Column, words: list[int], num_hashes: int = 3
-) -> Column:
-    """Membership predicate under the native xxhash64 family — must
-    pair with :func:`_fast_bloom_positions` over a ``probe`` column of
-    the same :func:`_bloom_key` family.  Pure builtin expressions:
-    runs inside whole-stage codegen on the scan side, before any
-    exchange."""
-    num_bits = 64 * len(words)
-    arr = F.array(*[F.lit(w).cast("long") for w in words])
-    out = None
-    for s in range(num_hashes):
-        pos = F.pmod(F.xxhash64(probe, F.lit(s)), num_bits)
-        word = F.element_at(arr, F.shiftright(pos, 6).cast("int") + 1)
-        bit = F.call_function(
-            "shiftright", word, pos.bitwiseAND(63).cast("int")
-        ).bitwiseAND(1)
-        cond = bit == 1
-        out = cond if out is None else out & cond
-    return out
 
 
 def bloom_prune(
@@ -549,10 +491,10 @@ def bloom_prune(
     portable md5 one: the probe predicate evaluates once per FACT row
     — the 100 TB side — and one codegen'd long hash per seed is ~50×
     cheaper per row than the md5-hex-conv chain (measured 1.0 s →
-    0.1 s on a 600 k-row probe).  The oracle-replayed audits
-    (q_bloom_fp_audit) keep :func:`bloom_positions` /
-    :func:`bloom_might_contain`, whose portable positions a SQL
-    oracle reproduces bit-for-bit.
+    0.1 s on a 600 k-row probe).  The oracle-replayed audit
+    (q_bloom_fp_audit) builds and probes the same bitmap under the
+    ``"portable"`` family, whose positions a SQL oracle reproduces
+    bit-for-bit.
 
     Both key columns must be integral (hashed as long) or both string
     (hashed as themselves); any other pairing raises ``TypeError``."""
@@ -562,57 +504,10 @@ def bloom_prune(
         raise TypeError(
             f"bloom_prune: {key_family} build keys cannot probe {probe_family} fact keys"
         )
-    pos = _fast_bloom_positions(keys, key, num_bits, num_hashes)
-    w = bloom_words(pos, num_bits)
-    return fact.filter(_fast_might_contain(probe, w, num_hashes))
-
-
-# ---------------------------------------------------------------------------
-# Portable count-min sketch — engine-replayable point-frequency sketch
-# ---------------------------------------------------------------------------
-
-
-def cms_sketch(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    width: int = 1024,
-    depth: int = 4,
-) -> DataFrame:
-    """Per-group count-min sketch (Cormode & Muthukrishnan 2005)
-    from the portable hash family, so estimates replay bit-for-bit
-    in a SQL oracle — the point-frequency member of the sketch
-    family (HLL: distinct, Misra-Gries: heavy hitters, bloom:
-    membership).
-
-    Layout: one row per NON-ZERO cell ``(*group_cols, j, pos, cnt,
-    w, d)`` with ``pos = hash_j(value) & (width-1)`` for each of
-    ``depth`` seeded hashes; ``w`` and ``d`` carry the build width
-    and depth, so a reader can check the geometry it estimates
-    against.  State is at most ``depth × width`` rows per group
-    regardless of stream size; two sketches merge by summing cells;
-    NULL values contribute nothing.  Because ``pos`` is a bit mask,
-    the cells of a narrower power-of-two width are exact sums of the
-    wide cells sharing ``pos & (new_width-1)`` — a width grid costs
-    one build (``q_cms_point_error``).  Estimates are the classic min
-    over rows: never below the true count, above it only by
-    hash-collision mass (ε ≈ e/width of the stream per row,
-    δ ≈ e^-depth)."""
-    if width & (width - 1) or width < 16:
-        raise ValueError(f"width must be a power of two >= 16, got {width}")
-    if not 1 <= depth <= 8:
-        raise ValueError(f"depth must be in [1, 8], got {depth}")
-    from week4_musemotion_spark.functions.hashing import stable_hash64
-
-    v = F.col(value_col).cast("string")
-    pos = F.array(
-        *[stable_hash64(v, seed=j).bitwiseAND(width - 1) for j in range(depth)]
-    )
-    return (
-        df.filter(F.col(value_col).isNotNull())
-        .select(*group_cols, F.posexplode(pos).alias("j", "pos"))
-        .groupBy(*group_cols, "j", "pos")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("w", F.lit(width).cast("int"))
-        .withColumn("d", F.lit(depth).cast("int"))
+    pos = bloom_positions(keys, key, num_bits, num_hashes, "native")
+    return fact.filter(
+        _bloom_probe(
+            bloom_words(pos, num_bits),
+            _bloom_hash_positions(probe, num_bits, num_hashes, "native"),
+        )
     )

@@ -604,7 +604,7 @@ def q_winnow_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: both pair sets are bucketed equi-joins (shingle buckets /
     print buckets), the comparison is one left join on the tiny true
     pair set, and the report is a single row."""
-    from week4_musemotion_spark.queries.provenance import _winnow_selected
+    from week4_musemotion_spark.queries.provenance import _winnow_prints
 
     docs = load_table(spark, sf_dir, "documents")
     # branch-reuse pins (SCALING.md): jac feeds the candidate set
@@ -618,12 +618,7 @@ def q_winnow_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=False)
     )
-    sel = _winnow_selected(spark, sf_dir)
-    fp = (
-        sel.filter(F.col("pos") >= _WW - 1)
-        .select("doc_id", F.shiftright("selkey", 20).alias("ph"))
-        .distinct()
-    )
+    fp = _winnow_prints(spark, sf_dir)
     # only prints of docs that appear in the (tiny) true pair set can
     # contribute a consumed row, so semi-join BEFORE the print
     # self-join — without it boilerplate prints fan out over the whole

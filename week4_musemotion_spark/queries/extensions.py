@@ -685,10 +685,10 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleted (position keyed on the id — deterministic in both
     engines) and must be re-matched to the registry within edit
     distance 1.  The engine uses deletion-neighborhood blocking
-    (exact recall, operators/fuzzy.py) + levenshtein verify; the
-    oracle is the quadratic cross-compare — identical output because
-    blocking recall is exact."""
-    from week4_musemotion_spark.operators.fuzzy import fuzzy_join_edit1
+    (exact recall, operators/fuzzy.fuzzy_join at k=1) + levenshtein
+    verify; the oracle is the quadratic cross-compare — identical
+    output because blocking recall is exact."""
+    from week4_musemotion_spark.operators.fuzzy import fuzzy_join
 
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     dirty = c.filter(F.col("c_custkey") % 3 == 0).select(
@@ -698,7 +698,7 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("substring(c_name, pmod(c_custkey, 17) + 1 + 1, length(c_name))"),
         ).alias("dirty_name"),
     )
-    return fuzzy_join_edit1(
+    return fuzzy_join(
         c, dirty, "c_name", "dirty_name", dedup_on=["dirty_id", "c_custkey"]
     ).select(
         "dirty_id",

@@ -101,7 +101,6 @@ def q_fuzzy_join_tau2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dirty_name",
         k=2,
         dedup_on=["dirty_id", "c_custkey"],
-        broadcast_dirty="auto",  # broadcast only while the variant explosion fits
     ).select(
         "dirty_id",
         F.col("c_custkey").alias("match_id"),

@@ -17,7 +17,7 @@ from week4_musemotion_spark.operators.textstats import QUALITY_STOPWORDS
 _Q_STOPLIST = ", ".join(f"'{w}'" for w in QUALITY_STOPWORDS)
 from week4_musemotion_spark.queries.registry import query
 from week4_musemotion_spark.queries.extensions import _quality_e4_sql
-from week4_musemotion_spark.sources.sinks import cached_fixture
+from week4_musemotion_spark.sources.sinks import cached_fixture, read_manifest
 from week4_musemotion_spark.sources.tables import load_table
 
 _cents_tp = cents_sql("o_totalprice")
@@ -878,11 +878,9 @@ def q_export_manifest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit of incremental refresh and of partition-pruned reads); the
     audit is one grouped recount joined to the tiny manifest.  The
     export is a ``cached_fixture``, like q_orc_roundtrip's."""
-    import os
-
     out = _export_fixture(spark, sf_dir)
     back = spark.read.parquet(out)
-    manifest = spark.read.parquet(os.path.join(out, "_manifest"))
+    manifest = read_manifest(spark, out)
     return _manifest_audit(_card_counts(back), manifest)
 
 
@@ -954,12 +952,10 @@ def q_manifest_card_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one corpus scan for the card, a tiny manifest read,
     one join on the (source, lang) key — the manifest side is
     |shards| rows at any corpus size."""
-    import os
-
     from week4_musemotion_spark.operators.textstats import quality_stats
 
     out = _export_fixture(spark, sf_dir)
-    manifest = spark.read.parquet(os.path.join(out, "_manifest")).select(
+    manifest = read_manifest(spark, out).select(
         "source",
         "lang",
         F.col("n_docs").alias("manifest_docs"),
@@ -1016,8 +1012,6 @@ def q_manifest_refresh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The fixture is a ``cached_fixture``: the refresh runs once per
     testdata generation and code version."""
-    import os
-
     from week4_musemotion_spark.sources.sinks import export_with_manifest, refresh_manifest
 
     def _build(tmp: str) -> None:
@@ -1033,7 +1027,7 @@ def q_manifest_refresh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         refresh_manifest(spark, tmp, _card_counts, touched)
 
     out = cached_fixture("musemotion_refresh", sf_dir, b"manifest_refresh", _build)
-    return spark.read.parquet(os.path.join(out, "_manifest")).select(
+    return read_manifest(spark, out).select(
         "source", "lang", "n_docs", "chars_sum"
     )
 

@@ -163,6 +163,19 @@ def _winnow_selected(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select("doc_id", "source", "pos", F.min(key).over(w).alias("selkey"))
 
 
+def _winnow_prints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct winnowed prints of every document, ``(doc_id,
+    ph)``: the selected key of each full window (``pos >= w-1``)
+    with the position complement shifted off, so a print is the
+    40-bit gram hash alone."""
+    return (
+        _winnow_selected(spark, sf_dir)
+        .filter(F.col("pos") >= _WW - 1)
+        .select("doc_id", F.shiftright("selkey", 20).alias("ph"))
+        .distinct()
+    )
+
+
 @query(
     "q_winnow_density",
     covers=("X-WINNOW-DENSITY",),
@@ -258,12 +271,7 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     replication at any cluster size; MOSS drops high-df prints for
     the same reason).  LIMIT rides a total order (shared DESC,
     doc_a, doc_b)."""
-    sel = _winnow_selected(spark, sf_dir)
-    fp = (
-        sel.filter(F.col("pos") >= _WW - 1)
-        .select("doc_id", F.shiftright("selkey", 20).alias("ph"))
-        .distinct()
-    )
+    fp = _winnow_prints(spark, sf_dir)
     st = fp.select(
         "doc_id",
         "ph",

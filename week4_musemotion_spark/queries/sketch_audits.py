@@ -139,7 +139,7 @@ def q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: false positives) up to 4 KiB (comfortable at every test SF), so
 #: the audit always exhibits BOTH regimes regardless of how many dim
 #: keys the SF yields.  Production sizing reads this curve at
-#: 10-16 bits/key (see build_key_bloom).
+#: 10-16 bits/key (see operators/sketches.bloom_positions).
 _FP_BITS_GRID = (64, 512, 4096, 32768)
 _FP_HASHES = 3
 
@@ -206,8 +206,9 @@ def q_bloom_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL of its seeded hash positions appear in the union of dim-key
     positions — exactly the OR-ed bitmap the Spark side broadcasts,
     so both engines agree on every label at every size."""
-    from week4_musemotion_spark.functions.hashing import stable_hash64
     from week4_musemotion_spark.operators.sketches import (
+        _bloom_hash_positions,
+        _bloom_probe,
         bloom_positions,
         bloom_words,
     )
@@ -229,39 +230,31 @@ def q_bloom_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one distributed position build at the grid maximum; every
     # power-of-two size below it is a driver-side mask (positions are
     # hash & (bits-1)), so the grid costs ONE Spark job, not four
-    pos = bloom_positions(dimk, "k", num_bits=max(_FP_BITS_GRID))
-    # FUSED grid (was: one bloom_might_contain filter + one dim join
-    # per size, unioned — 4 joins, 4 passes over factk, 12 md5s/key).
+    max_bits = max(_FP_BITS_GRID)
+    pos = bloom_positions(dimk, F.col("k"), max_bits, _FP_HASHES, "portable")
+    # FUSED grid: one join and one pass over factk for every size.
     # The three seeded portable hashes are computed ONCE per fact key
     # at the grid maximum (pmod at a power of two is a bit mask, so
     # pmod(h, max) & (b-1) == pmod(h, b) — the same fold-down identity
     # the position build uses), ONE left join labels dim membership,
     # and one struct explode emits each size's verdict from its own
-    # bitmap literal.  Outcome labels are bit-identical; the oracle is
-    # unchanged.
-    max_bits = max(_FP_BITS_GRID)
+    # bitmap literal.
     hashed = factk.join(dimk.withColumn("in_dim", F.lit(True)), "k", "left").select(
         "cnt",
         "in_dim",
         *[
-            F.pmod(stable_hash64(F.col("k").cast("string"), seed=s), max_bits).alias(
-                f"_h{s}"
+            h.alias(f"_h{s}")
+            for s, h in enumerate(
+                _bloom_hash_positions(F.col("k"), max_bits, _FP_HASHES, "portable")
             )
-            for s in range(_FP_HASHES)
         ],
     )
     structs = []
     for bits in _FP_BITS_GRID:
-        arr = F.array(*[F.lit(w).cast("long") for w in bloom_words(pos, bits)])
-        passed = None
-        for s in range(_FP_HASHES):
-            p = F.col(f"_h{s}").bitwiseAND(bits - 1)
-            word = F.element_at(arr, F.shiftright(p, 6).cast("int") + 1)
-            bit = F.call_function(
-                "shiftright", word, p.bitwiseAND(63).cast("int")
-            ).bitwiseAND(1)
-            cond = bit == 1
-            passed = cond if passed is None else passed & cond
+        passed = _bloom_probe(
+            bloom_words(pos, bits),
+            [F.col(f"_h{s}").bitwiseAND(bits - 1) for s in range(_FP_HASHES)],
+        )
         structs.append(
             F.struct(
                 F.lit(bits).cast("long").alias("num_bits"), passed.alias("passed")
@@ -522,9 +515,9 @@ def q_cms_point_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each sketch is depth × width rows TOTAL no matter the
     stream, and the whole GRID costs one corpus pass — cells are
     built once at the grid maximum and folded down per width
-    (``cms_sketch``: positions are hash & (w-1), so narrow cells are
-    exact sums of wide ones), the same one-build trick as the bloom
-    grid.  The exact top-k exists only as the audit's truth side.
+    (positions are hash & (w-1), so narrow cells are exact sums of
+    wide ones), the same one-build trick as the bloom grid.  The
+    exact top-k exists only as the audit's truth side.
     Same portable primitives as the HLL/bloom family, so the oracle
     replays every cell at every width."""
     from week4_musemotion_spark.functions.text import shingles, tokens
@@ -534,8 +527,8 @@ def q_cms_point_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = spread(load_table(spark, sf_dir, "documents").select("text"))
     s = d.select(F.explode(shingles(tokens("text"), 3)).alias("s"))
-    # ONE corpus pass (was two: the top-k truth aggregate AND a
-    # cms_sketch build each exploded+hashed the full shingle stream).
+    # ONE corpus pass: the top-k truth aggregate and the sketch share
+    # the exact term-frequency table.
     # The audit already needs the exact per-term counts for its truth
     # side, and a CMS cell is by definition the sum of the counts of
     # the terms hashing into it — so the whole sketch GRID derives

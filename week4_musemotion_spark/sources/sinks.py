@@ -179,6 +179,19 @@ def export_with_manifest(
     )
 
 
+def read_manifest(spark, path: str) -> DataFrame:
+    """The manifest an :func:`export_with_manifest` published under
+    ``path``.  It is read by explicit ``part-*.parquet`` file list: the
+    ``_`` prefix that hides the manifest from the export's data scan
+    also makes Spark ignore the directory itself as a read root
+    (logging ``All paths were ignored``), and a glob path trades that
+    for a ``FileStreamSink`` warning with a stack trace."""
+    parts = sorted(str(f) for f in Path(path, "_manifest").glob("part-*.parquet"))
+    if not parts:
+        raise FileNotFoundError(f"no published manifest under {path}")
+    return spark.read.parquet(*parts)
+
+
 def refresh_manifest(
     spark,
     path: str,
@@ -223,11 +236,10 @@ def refresh_manifest(
         touched = touched | _match(p)
     sub = spark.read.parquet(path).filter(touched)
     fresh = manifest_fn(sub)
-    final = os.path.join(path, "_manifest")
 
     def _write(stage: str) -> None:
         # the stored manifest is read after publish's crash recovery
-        kept = spark.read.parquet(final).filter(~touched)
+        kept = read_manifest(spark, path).filter(~touched)
         kept.unionByName(fresh).coalesce(1).write.mode("overwrite").parquet(stage)
 
-    publish(final, _write, mode="replace")
+    publish(os.path.join(path, "_manifest"), _write, mode="replace")
