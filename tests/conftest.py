@@ -72,3 +72,23 @@ def oracle_diff(spark, name: str, tables: tuple[str, ...]):
     assert len(g) == len(w), (name, len(g), len(w))
     pd.testing.assert_frame_equal(g, w, check_dtype=False)
     return got
+
+
+def _flat_file(df, staging_dir: Path, dest: Path) -> None:
+    """Write ``df`` as the single parquet file ``dest``: the file
+    stream source does not recurse into the directory
+    ``df.write.parquet`` produces, so the part-file is lifted out."""
+    df.coalesce(1).write.parquet(str(staging_dir))
+    next(staging_dir.glob("part-*.parquet")).rename(dest)
+
+
+def start_stream(stream, batch_fn, checkpoint_dir: str):
+    """Run ``batch_fn`` as the ``foreachBatch`` body of an
+    ``availableNow`` query over ``stream``; returns the
+    ``StreamingQuery`` (the caller awaits termination)."""
+    return (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )

@@ -88,11 +88,6 @@ UNREACHED_MODULES = {
     "(musemotion-populate-table.sql)",
 }
 
-_STREAM_FRONT_END = (
-    "the Structured Streaming front-end of a sink the registry drives; "
-    "only its test exercises checkpoint replay"
-)
-
 #: Top-level functions, classes and module constants of reached
 #: package modules that no non-test code names, each with the reason
 #: it stays.  Like ``UNREACHED_MODULES``, an entry that is referenced
@@ -100,9 +95,6 @@ _STREAM_FRONT_END = (
 UNREACHED_FUNCTIONS = {
     "queries/musemotion_sql.py:run_corpus": "reference parity: runs the reference's own "
     "musemotion-queries.sql; only a reference-checkout test can drive it",
-    "streaming/counts.py:stream_daily_counts": _STREAM_FRONT_END,
-    "streaming/neardup.py:stream_neardup_ingest": _STREAM_FRONT_END,
-    "streaming/sketches.py:stream_hll_distinct": _STREAM_FRONT_END,
 }
 
 

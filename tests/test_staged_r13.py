@@ -26,24 +26,24 @@ def test_qsketch_store_replay_and_torn_files_are_exactly_once(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from week4_musemotion_spark.streaming.counts import compact_counts
-    from week4_musemotion_spark.streaming.quantiles import (
-        make_qsketch_sink,
-        read_qsketch_counts,
+    from week4_musemotion_spark.operators.qsketch import bucket_counts
+    from week4_musemotion_spark.sources.sinks import _append_keyed
+    from week4_musemotion_spark.streaming.counts import (
+        compact_counts,
+        make_count_sink,
+        read_daily_counts,
     )
 
     df = spark.createDataFrame(
         pd.DataFrame({"g": ["a"] * 6 + ["b"] * 6, "v": [1, 2, 4, 8, 16, 32] * 2})
     )
     store = str(tmp_path / "store")
-    sink = make_qsketch_sink(["g"], "v", store)
+    sink = make_count_sink(store, lambda b: bucket_counts(b.select("g", "v"), ["g"], "v"))
     sink(df, 0)
     sink(df, 0)  # full replay: marker must short-circuit
     # torn batch: files land but no marker — readers must ignore them
-    from week4_musemotion_spark.streaming.neardup import _append_keyed
-
     _append_keyed(df.groupBy("g").agg(F.count("*").alias("cnt")), os.path.join(store, "counts"), "99")
-    folded = read_qsketch_counts(
+    folded = read_daily_counts(
         spark, store, "g string, bucket int, cnt long"
     ).toPandas()
     # every (g, bucket) count must equal ONE pass over df: 6 values,
@@ -51,11 +51,11 @@ def test_qsketch_store_replay_and_torn_files_are_exactly_once(spark, tmp_path):
     assert folded.cnt.eq(1).all() and len(folded) == 12
     # compaction must not change the fold
     sink(df.filter(F.col("v") > 2), 1)
-    before = read_qsketch_counts(
+    before = read_daily_counts(
         spark, store, "g string, bucket int, cnt long"
     ).toPandas().sort_values(["g", "bucket"]).reset_index(drop=True)
     compact_counts(spark, store)
-    after = read_qsketch_counts(
+    after = read_daily_counts(
         spark, store, "g string, bucket int, cnt long"
     ).toPandas().sort_values(["g", "bucket"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(before, after)

@@ -7,14 +7,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _flat_file, start_stream
 
 
 def test_neardup_gate_quarantines_cross_batch_dups(spark, tmp_path):
     from week4_musemotion_spark.operators.dedup import minhash_lsh_join
     from week4_musemotion_spark.operators.lsh_index import build_index
     from week4_musemotion_spark.sources.tables import load_table
-    from week4_musemotion_spark.streaming.neardup import stream_neardup_ingest
+    from week4_musemotion_spark.streaming.neardup import make_ingest_fn
 
     d = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     seed = d.filter(F.col("doc_id") % 10 > 1)
@@ -32,30 +32,17 @@ def test_neardup_gate_quarantines_cross_batch_dups(spark, tmp_path):
     src = tmp_path / "arrivals"
     src.mkdir()
 
-    # two FLAT files -> maxFilesPerTrigger=1 gives two sequential
-    # batches (the file source does not recurse into the directories
-    # df.write.parquet produces, so lift the part-file out)
-    def _flat_file(df, name):
-        staging = tmp_path / f"_stage_{name}"
-        df.coalesce(1).write.parquet(str(staging))
-        part = next(staging.glob("part-*.parquet"))
-        part.rename(src / f"{name}.parquet")
-
-    _flat_file(arrivals.filter(F.col("doc_id") % 10 == 0), "b0")
-    _flat_file(arrivals.filter(F.col("doc_id") % 10 == 1), "b1")
+    # two FLAT files -> maxFilesPerTrigger=1 gives two sequential batches
+    _flat_file(arrivals.filter(F.col("doc_id") % 10 == 0), tmp_path / "_stage_b0", src / "b0.parquet")
+    _flat_file(arrivals.filter(F.col("doc_id") % 10 == 1), tmp_path / "_stage_b1", src / "b1.parquet")
 
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
-    q = stream_neardup_ingest(
-        stream,
-        index_path=idx,
-        corpus_path=str(tmp_path / "corpus"),
-        quarantine_path=str(tmp_path / "quarantine"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
+    ingest = make_ingest_fn(idx, str(tmp_path / "corpus"), str(tmp_path / "quarantine"))
+    q = start_stream(stream, ingest, str(tmp_path / "ckpt"))
     q.awaitTermination(300)
 
     quarantined = {
@@ -111,6 +98,7 @@ def _run_gate(spark, root, batches, fail_on=None, monkeypatch=None):
     """Drive make_ingest_fn directly (no stream) over ``batches``;
     optionally inject one failure before the bands append of a batch."""
     from week4_musemotion_spark.operators.lsh_index import build_index
+    from week4_musemotion_spark.sources import sinks
     from week4_musemotion_spark.sources.tables import load_table
     from week4_musemotion_spark.streaming import neardup
 
@@ -121,7 +109,7 @@ def _run_gate(spark, root, batches, fail_on=None, monkeypatch=None):
         str(root / "idx"), str(root / "corpus"), str(root / "quarantine")
     )
     if fail_on is not None:
-        real_append = neardup._append_keyed
+        real_append = sinks._append_keyed
         state = {"armed": True}
 
         def failing_append(df, target, tag):
@@ -130,7 +118,7 @@ def _run_gate(spark, root, batches, fail_on=None, monkeypatch=None):
                 raise RuntimeError("injected crash before bands append")
             real_append(df, target, tag)
 
-        monkeypatch.setattr(neardup, "_append_keyed", failing_append)
+        monkeypatch.setattr(sinks, "_append_keyed", failing_append)
     for bid, batch in enumerate(batches):
         try:
             ingest(batch, bid)
@@ -218,27 +206,21 @@ def test_real_stream_restart_replays_exactly_once(spark, tmp_path, monkeypatch):
     attempt, and the final state equals a clean run — exactly-once
     through an actual crash/restart, not a simulated call."""
     from week4_musemotion_spark.operators.lsh_index import build_index
+    from week4_musemotion_spark.sources import sinks
     from week4_musemotion_spark.sources.tables import load_table
-    from week4_musemotion_spark.streaming import neardup
-    from week4_musemotion_spark.streaming.neardup import stream_neardup_ingest
+    from week4_musemotion_spark.streaming.neardup import make_ingest_fn
 
     d = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     seed = d.filter(F.col("doc_id") % 10 > 1)
     arrivals = d.filter(F.col("doc_id") % 10 <= 1)
-
-    def _flat_file(df, src, name):
-        staging = src.parent / f"_stage_{name}"
-        df.coalesce(1).write.parquet(str(staging))
-        part = next(staging.glob("part-*.parquet"))
-        part.rename(src / f"{name}.parquet")
 
     def _drive(root, fail_batch=None):
         idx = str(root / "idx")
         build_index(seed, idx)
         src = root / "arrivals"
         src.mkdir()
-        _flat_file(arrivals.filter(F.col("doc_id") % 10 == 0), src, "b0")
-        _flat_file(arrivals.filter(F.col("doc_id") % 10 == 1), src, "b1")
+        _flat_file(arrivals.filter(F.col("doc_id") % 10 == 0), root / "_stage_b0", src / "b0.parquet")
+        _flat_file(arrivals.filter(F.col("doc_id") % 10 == 1), root / "_stage_b1", src / "b1.parquet")
 
         def _start():
             stream = (
@@ -246,16 +228,11 @@ def test_real_stream_restart_replays_exactly_once(spark, tmp_path, monkeypatch):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(str(src))
             )
-            return stream_neardup_ingest(
-                stream,
-                index_path=idx,
-                corpus_path=str(root / "corpus"),
-                quarantine_path=str(root / "quarantine"),
-                checkpoint_dir=str(root / "ckpt"),
-            )
+            ingest = make_ingest_fn(idx, str(root / "corpus"), str(root / "quarantine"))
+            return start_stream(stream, ingest, str(root / "ckpt"))
 
         if fail_batch is not None:
-            real_append = neardup._append_keyed
+            real_append = sinks._append_keyed
             state = {"armed": True}
 
             def failing_append(df, target, tag):
@@ -264,14 +241,14 @@ def test_real_stream_restart_replays_exactly_once(spark, tmp_path, monkeypatch):
                     raise RuntimeError("injected crash before bands append")
                 real_append(df, target, tag)
 
-            monkeypatch.setattr(neardup, "_append_keyed", failing_append)
+            monkeypatch.setattr(sinks, "_append_keyed", failing_append)
             q = _start()
             try:
                 q.awaitTermination(300)
             except Exception:
                 pass  # the injected crash fails the query — expected
             assert state["armed"] is False, "injection never fired"
-            monkeypatch.setattr(neardup, "_append_keyed", real_append)
+            monkeypatch.setattr(sinks, "_append_keyed", real_append)
         q = _start()  # (re)start on the same checkpoint
         q.awaitTermination(300)
 

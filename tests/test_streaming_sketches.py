@@ -7,18 +7,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
-
-
-def _flat_file(df, staging_dir, dest):
-    df.coalesce(1).write.parquet(str(staging_dir))
-    part = next(staging_dir.glob("part-*.parquet"))
-    part.rename(dest)
+from tests.conftest import SF_SMOKE, _flat_file, start_stream
 
 
 def test_stream_store_equals_batch_sketch(spark, tmp_path):
     from week4_musemotion_spark.operators.sketches import hll_estimate, hll_registers
-    from week4_musemotion_spark.streaming.sketches import stream_hll_distinct
+    from week4_musemotion_spark.streaming.sketches import make_hll_sink
 
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select(
         "event_type", F.col("user_id").cast("string").alias("u")
@@ -34,7 +28,7 @@ def test_stream_store_equals_batch_sketch(spark, tmp_path):
         .parquet(str(src))
     )
     store = str(tmp_path / "store")
-    q = stream_hll_distinct(stream, ["event_type"], "u", store, str(tmp_path / "ckpt"))
+    q = start_stream(stream, make_hll_sink(["event_type"], "u", store), str(tmp_path / "ckpt"))
     q.awaitTermination(300)
 
     key = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731

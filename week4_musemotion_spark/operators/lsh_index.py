@@ -26,7 +26,9 @@ true near-dups in the inner ``_intersections`` join.  The streaming
 gate appends in the same order.  A crash mid-write can still leave
 partial part-files that a later read will see (parquet reads are not
 ``_SUCCESS``-gated); for replay-exact multi-writer semantics use the
-streaming gate's batch-id commit log.
+streaming gate's batch commit log (``sources/sinks.commit_batch``),
+whose committed tags (``sinks.committed_batches``) also decide what
+:func:`compact_index` keeps.
 """
 
 from __future__ import annotations
@@ -43,6 +45,7 @@ from week4_musemotion_spark.operators.dedup import (
     minhash_signatures,
     shingle_sets,
 )
+from week4_musemotion_spark.sources.sinks import committed_batches, purge_uncommitted
 
 
 def build_index(
@@ -133,12 +136,12 @@ def compact_index(
     staging/rename swap).  Returns {subdir: output file count}
     (-1 = skipped under the trigger).
 
-    Streaming-gate aware: files of UNCOMMITTED batches (a ``bid-*``
-    prefix with no ``_ingest_commits`` marker — a torn attempt) are
+    Streaming-gate aware: files of UNCOMMITTED batches (a batch-log
+    tag with no ``_ingest_commits`` marker — a torn attempt) are
     purged first, exactly what that batch's own replay would do, so
     compaction never folds half-written output into the compacted
-    files.  Committed batches lose their ``bid-`` names but keep their
-    markers, so a post-compaction replay still skips them.
+    files.  Committed batches lose their batch-log file names but keep
+    their markers, so a post-compaction replay still skips them.
 
     ``trigger_files``: only compact a subdir once it holds more than
     this many parquet files (None = always).
@@ -155,8 +158,7 @@ def compact_index(
     # pass ONE commit-log snapshot, so every dir purges against the same
     # view even if a batch commits mid-pass
     if committed is None:
-        commit_dir = os.path.join(path, "_ingest_commits")
-        committed = set(os.listdir(commit_dir)) if os.path.isdir(commit_dir) else set()
+        committed = committed_batches(os.path.join(path, "_ingest_commits"))
     out: dict[str, int] = {}
     for sub in ("shingles", "bands"):
         d = os.path.join(path, sub)
@@ -175,18 +177,12 @@ def _compact_dir(
     """One gate-output directory's compaction step, shared by
     :func:`compact_index` and ``streaming.neardup.compact_gate`` so
     the purge/trigger rules can never diverge between the index and
-    the doc dirs: sweep staging leftovers, purge ``bid-*`` files of
-    uncommitted (torn) batches, then compact unless at-or-under the
+    the doc dirs: purge what uncommitted (torn) batches left
+    (``sinks.purge_uncommitted``), then compact unless at-or-under the
     file-count trigger (returns -1 when skipped)."""
-    import shutil
-
     from week4_musemotion_spark.operators.layout import compact_parquet
 
-    for name in list(os.listdir(d)):
-        if name.startswith(".staging-"):
-            shutil.rmtree(os.path.join(d, name), ignore_errors=True)
-        elif name.startswith("bid-") and name.split("-")[1] not in committed:
-            os.remove(os.path.join(d, name))
+    purge_uncommitted(d, committed)
     n_files = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
     if trigger_files is not None and n_files <= trigger_files:
         return -1

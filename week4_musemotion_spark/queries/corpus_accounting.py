@@ -403,10 +403,17 @@ def _build_count_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     hash compare)."""
     import os
 
+    from week4_musemotion_spark.functions.eventtime import epoch_micros
     from week4_musemotion_spark.streaming.counts import make_count_sink
 
+    def _daily(batch: DataFrame) -> DataFrame:
+        day = int_div_trunc(epoch_micros(batch), F.lit(US_PER_DAY))
+        return batch.groupBy("event_type", day.alias("day_idx")).agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
-    sink = make_count_sink(["event_type"], os.path.join(tmp, "store"))
+    sink = make_count_sink(os.path.join(tmp, "store"), _daily)
     for b in range(_COUNT_BATCHES):
         sink(ev.filter(F.col("event_id") % _COUNT_BATCHES == b), b)
         if b == 1:

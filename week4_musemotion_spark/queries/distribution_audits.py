@@ -53,8 +53,8 @@ from week4_musemotion_spark.operators.qsketch import (
     quantiles_from_counts,
     quantiles_sql,
 )
-from week4_musemotion_spark.queries.extensions import _jaccard_ctes
 from week4_musemotion_spark.queries.registry import query
+from week4_musemotion_spark.queries.sketch_quality import _pair_signature_ctes, _pair_signatures
 from week4_musemotion_spark.sources.tables import load_table
 
 
@@ -456,14 +456,10 @@ def q_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash-LSH banding tuner
 # ---------------------------------------------------------------------------
 
-#: Signature family size and the (bands, rows) grid it factors into.
-_TUNE_HASHES = 16
+#: The (bands, rows) grid that the fidelity audit's 16-seed signature
+#: family factors into, and the "true dup" threshold separating recall
+#: pairs from sub-threshold (false-positive proxy) pairs.
 _TUNE_CONFIGS = ((16, 1), (8, 2), (4, 4), (2, 8))
-
-#: Pair domain (exact Jaccard >= this) and the "true dup" threshold
-#: separating recall pairs from sub-threshold (false-positive proxy)
-#: pairs — same constants as the sketch_quality fidelity audit.
-_TUNE_MIN_JACCARD = 0.5
 _TUNE_TRUE_E4 = 8000
 
 
@@ -471,13 +467,7 @@ _TUNE_TRUE_E4 = 8000
     "q_band_tune",
     covers=("X-LSH-BAND-TUNE",),
     oracle=f"""
-    WITH {_jaccard_ctes(_TUNE_MIN_JACCARD)},
-    mh AS (
-        SELECT sh.doc_id, s.k,
-               min({stable_hash64_sql("sh.shingle", seed_expr="s.k")}) AS mv
-        FROM sh CROSS JOIN (SELECT unnest(range(0, {_TUNE_HASHES})) AS k) s
-        GROUP BY sh.doc_id, s.k
-    ),
+    WITH {_pair_signature_ctes()},
     jc AS (
         SELECT doc_a, doc_b,
                CAST((2 * i * 10000 + (na + nb - i)) // (2 * (na + nb - i)) AS BIGINT) AS jaccard_e4
@@ -526,34 +516,6 @@ def q_band_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
     logic is pure column expressions over 16 columns — the config
     explode multiplies the PAIR table (tiny) by 4, never the
     corpus."""
-    from week4_musemotion_spark.operators.dedup import _intersections, shingle_strings
-
-    d = load_table(spark, sf_dir, "documents")
-    shs = shingle_strings(d).distinct().localCheckpoint(eager=False)
-    sh = shs.select("_id", F.col("s").alias("shingle"))
-    pairs = (
-        _intersections(None, sh)
-        .filter(F.col("jac") >= _TUNE_MIN_JACCARD)
-        .select("doc_a", "doc_b", "jaccard_e4")
-        .localCheckpoint(eager=False)
-    )
-    members = (
-        pairs.select(F.col("doc_a").alias("_id"))
-        .unionByName(pairs.select(F.col("doc_b").alias("_id")))
-        .distinct()
-    )
-    sig = (
-        shs.join(F.broadcast(members), "_id", "semi")
-        .groupBy("_id")
-        .agg(
-            *[
-                F.min(stable_hash64(F.col("s"), seed=k)).alias(f"mh_{k}")
-                for k in range((_TUNE_HASHES))
-            ]
-        )
-    )
-    a = sig.select(F.col("_id").alias("doc_a"), *[F.col(f"mh_{k}").alias(f"a_{k}") for k in range(_TUNE_HASHES)])
-    b = sig.select(F.col("_id").alias("doc_b"), *[F.col(f"mh_{k}").alias(f"b_{k}") for k in range(_TUNE_HASHES)])
 
     def hit(bands: int, rows: int) -> F.Column:
         band_hits = []
@@ -583,8 +545,7 @@ def q_band_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).alias("cfg")
     is_true = F.col("jaccard_e4") >= _TUNE_TRUE_E4
     return (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
+        _pair_signatures(spark, sf_dir)
         .select("jaccard_e4", cfg)
         .select("jaccard_e4", "cfg.bands", "cfg.rows_per_band", "cfg.hit")
         .groupBy("bands", "rows_per_band")

@@ -424,6 +424,26 @@ def _pr_edges_sql() -> str:
     )"""
 
 
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetric part co-purchase edge list ``(u, v)``: parts bought
+    together in >= 2 orders, one row per direction — the builder twin
+    of :func:`_pr_edges_sql`'s ``edges``.  The self-join runs on the
+    DISTINCT (order, part) table, never on raw lineitem."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
+    prs = (
+        li.join(b, "l_orderkey")
+        .filter(F.col("l_partkey") < F.col("pb"))
+        .groupBy(F.col("l_partkey").alias("pa"), "pb")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("cnt") >= 2)
+        .select("pa", "pb")
+    )
+    return prs.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionByName(
+        prs.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
+    )
+
+
 @query(
     "q_pagerank_parts",
     covers=("X-PAGERANK",),
@@ -469,19 +489,7 @@ def q_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The candidate-pair stage reuses the basket-affinity shape: the
     self-join runs on the DISTINCT (order, part) table grouped per
     order, never on raw lineitem."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    prs = (
-        li.join(b, "l_orderkey")
-        .filter(F.col("l_partkey") < F.col("pb"))
-        .groupBy(F.col("l_partkey").alias("pa"), "pb")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= 2)
-        .select("pa", "pb")
-    )
-    edges = prs.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionByName(
-        prs.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     # the edge table feeds deg, both iterations, and the final degree
     # join — pin the pair-generation lineage so it executes once, not
     # once per consumer branch (same idiom as q_kcore_parts; modest
@@ -561,19 +569,7 @@ def q_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase pairs thin out, and the correct 3-core is EMPTY — the
     hash-verified empty result is the audit saying "no dense core",
     not a defect."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    prs = (
-        li.join(b, "l_orderkey")
-        .filter(F.col("l_partkey") < F.col("pb"))
-        .groupBy(F.col("l_partkey").alias("pa"), "pb")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= 2)
-        .select("pa", "pb")
-    )
-    edges = prs.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionByName(
-        prs.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     # each round consumes its edge set TWICE (degree agg + the induced
     # semi-join) and every round builds on the last — without lineage
     # truncation the expensive pair-generation subtree re-executes per
@@ -616,19 +612,7 @@ def q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     hubs), a flat one predicts uniform partitioning.  One keyed
     degree aggregate plus one bucket aggregate over the |nodes|-sized
     degree table."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    prs = (
-        li.join(b, "l_orderkey")
-        .filter(F.col("l_partkey") < F.col("pb"))
-        .groupBy(F.col("l_partkey").alias("pa"), "pb")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= 2)
-        .select("pa", "pb")
-    )
-    edges = prs.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionByName(
-        prs.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     return deg.groupBy(F.length(F.bin("d")).cast("long").alias("degree_bucket")).agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
@@ -686,19 +670,7 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds reuse the shuffle layout; per-round ``localCheckpoint``
     keeps lineage one round deep (branch-reuse idiom, see
     q_kcore_parts)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    prs = (
-        li.join(b, "l_orderkey")
-        .filter(F.col("l_partkey") < F.col("pb"))
-        .groupBy(F.col("l_partkey").alias("pa"), "pb")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= 2)
-        .select("pa", "pb")
-    )
-    edges = prs.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionByName(
-        prs.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     edges = edges.localCheckpoint(eager=False)
     labels = edges.select(F.col("u").alias("node")).distinct().withColumn("lab", F.col("node"))
     for _ in range(_LP_ROUNDS):

@@ -2,7 +2,7 @@
 
 - q_stream_len_quantiles — per-source document-length quantiles read
   from the STREAMING log-bucket sketch store
-  (``streaming/quantiles.py``): the corpus is replayed as micro-
+  (``streaming/counts.py``): the corpus is replayed as micro-
   batches through the txn-marker ``foreachBatch`` sink (one batch
   deliberately REPLAYED to pin exactly-once, the log compacted
   mid-stream to pin the manifest flip), then the readout folds the
@@ -64,14 +64,16 @@ def _build_qsketch_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     (marker short-circuit) and one mid-stream compaction (manifest
     flip) — if either broke exactly-once, the oracle diff would
     catch it as a wrong bucket count."""
-    from week4_musemotion_spark.streaming.counts import compact_counts
-    from week4_musemotion_spark.streaming.quantiles import make_qsketch_sink
+    from week4_musemotion_spark.operators.qsketch import bucket_counts
+    from week4_musemotion_spark.streaming.counts import compact_counts, make_count_sink
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.length("text").alias("doc_len")
     )
     store = os.path.join(tmp, "store")
-    sink = make_qsketch_sink(["source"], "doc_len", store)
+    sink = make_count_sink(
+        store, lambda b: bucket_counts(b.select("source", "doc_len"), ["source"], "doc_len")
+    )
     for b in range(_QS_BATCHES):
         batch = d.filter(F.col("doc_id") % _QS_BATCHES == b)
         sink(batch, b)
@@ -112,15 +114,14 @@ def q_stream_len_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each micro-batch writes O(|batch| → buckets) rows;
     read-side state is O(sources × ~260) regardless of stream
     length; compaction keeps the log's file count bounded."""
-    from week4_musemotion_spark.streaming.quantiles import read_quantiles
+    from week4_musemotion_spark.operators.qsketch import quantiles_from_counts
+    from week4_musemotion_spark.streaming.counts import read_daily_counts
 
     tmp = _qsketch_store_fixture(spark, sf_dir)
-    return read_quantiles(
-        spark,
-        os.path.join(tmp, "store"),
-        ["source"],
-        empty_schema="source string, bucket int, cnt long",
+    counts = read_daily_counts(
+        spark, os.path.join(tmp, "store"), "source string, bucket int, cnt long"
     )
+    return quantiles_from_counts(counts, ["source"])
 
 
 # ---------------------------------------------------------------------------

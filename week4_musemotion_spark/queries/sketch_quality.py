@@ -54,11 +54,10 @@ _FIDELITY_MIN_JACCARD = 0.5
 _SWEEP_THRESHOLDS = (5000, 6000, 7000, 8000, 9000)
 
 
-@query(
-    "q_minhash_fidelity",
-    covers=("X-MINHASH-FIDELITY",),
-    oracle=f"""
-    WITH {_jaccard_ctes(_FIDELITY_MIN_JACCARD)},
+def _pair_signature_ctes() -> str:
+    """Oracle twin of :func:`_pair_signatures`: the ``pairs`` CTE chain
+    plus ``mh(doc_id, k, mv)``, one MinHash value per document and seed."""
+    return f"""{_jaccard_ctes(_FIDELITY_MIN_JACCARD)},
     mh AS (
         -- the shared helper's ROW-VALUED seed form: same 'k:' prefix,
         -- same md5-prefix width, so Spark's stable_hash64(s, seed=k)
@@ -67,31 +66,17 @@ _SWEEP_THRESHOLDS = (5000, 6000, 7000, 8000, 9000)
                min({stable_hash64_sql("sh.shingle", seed_expr="s.k")}) AS mv
         FROM sh CROSS JOIN (SELECT unnest(range(0, {_FIDELITY_HASHES})) AS k) s
         GROUP BY sh.doc_id, s.k
-    )
-    SELECT p.doc_a, p.doc_b,
-           CAST((2 * p.i * 10000 + (p.na + p.nb - p.i)) // (2 * (p.na + p.nb - p.i)) AS BIGINT) AS jaccard_e4,
-           CAST(count(*) FILTER (WHERE a.mv = b.mv) AS BIGINT) AS sig_agree,
-           CAST((2 * count(*) FILTER (WHERE a.mv = b.mv) * 10000 + {_FIDELITY_HASHES})
-                // (2 * {_FIDELITY_HASHES}) AS BIGINT) AS est_e4
-    FROM pairs p
-    JOIN mh a ON a.doc_id = p.doc_a
-    JOIN mh b ON b.doc_id = p.doc_b AND b.k = a.k
-    GROUP BY p.doc_a, p.doc_b, p.i, p.na, p.nb
-    """,
-)
-def q_minhash_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash sketch-quality audit: for every verified near-dup pair
-    (exact 3-gram Jaccard >= 0.5), the exact Jaccard next to the
-    16-seed MinHash signature agreement — measured on THIS corpus, so
-    a config change (bands, rows, hash count) is judged by data
-    rather than by the 1-(1-s^r)^b formula alone.  The hash family
-    here is the md5-portable ``stable_hash64`` (seeded), which is
-    what lets the oracle replay every signature bit-for-bit; the
-    production family swaps in xxhash64 behind the same shape.
+    )"""
 
-    Scale: pair domain comes from the shingle equi-join (never
-    all-pairs); signatures are one grouped aggregate over the
-    exploded shingle table (16 mins in a single shuffle)."""
+
+def _pair_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every near-dup pair (exact 3-gram Jaccard >= ``_FIDELITY_MIN_JACCARD``)
+    as ``(doc_b, doc_a, jaccard_e4)`` plus both members' portable-MinHash
+    signatures in columns ``a_<k>`` and ``b_<k>`` (``stable_hash64``
+    seeded ``k`` for ``k < _FIDELITY_HASHES``, so the oracle replays
+    every value).  The pair domain comes from the shingle equi-join
+    (never all-pairs); signatures are one grouped aggregate over the
+    shingles of pair members only."""
     from week4_musemotion_spark.operators.dedup import _intersections, shingle_strings
 
     d = load_table(spark, sf_dir, "documents")
@@ -123,13 +108,44 @@ def q_minhash_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = sig.select(F.col("_id").alias("doc_a"), *[F.col(f"mh_{k}").alias(f"a_{k}") for k in range(_FIDELITY_HASHES)])
     b = sig.select(F.col("_id").alias("doc_b"), *[F.col(f"mh_{k}").alias(f"b_{k}") for k in range(_FIDELITY_HASHES)])
+    return pairs.join(a, "doc_a").join(b, "doc_b")
+
+
+@query(
+    "q_minhash_fidelity",
+    covers=("X-MINHASH-FIDELITY",),
+    oracle=f"""
+    WITH {_pair_signature_ctes()}
+    SELECT p.doc_a, p.doc_b,
+           CAST((2 * p.i * 10000 + (p.na + p.nb - p.i)) // (2 * (p.na + p.nb - p.i)) AS BIGINT) AS jaccard_e4,
+           CAST(count(*) FILTER (WHERE a.mv = b.mv) AS BIGINT) AS sig_agree,
+           CAST((2 * count(*) FILTER (WHERE a.mv = b.mv) * 10000 + {_FIDELITY_HASHES})
+                // (2 * {_FIDELITY_HASHES}) AS BIGINT) AS est_e4
+    FROM pairs p
+    JOIN mh a ON a.doc_id = p.doc_a
+    JOIN mh b ON b.doc_id = p.doc_b AND b.k = a.k
+    GROUP BY p.doc_a, p.doc_b, p.i, p.na, p.nb
+    """,
+)
+def q_minhash_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash sketch-quality audit: for every verified near-dup pair
+    (exact 3-gram Jaccard >= 0.5), the exact Jaccard next to the
+    16-seed MinHash signature agreement — measured on THIS corpus, so
+    a config change (bands, rows, hash count) is judged by data
+    rather than by the 1-(1-s^r)^b formula alone.  The hash family
+    here is the md5-portable ``stable_hash64`` (seeded), which is
+    what lets the oracle replay every signature bit-for-bit; the
+    production family swaps in xxhash64 behind the same shape.
+
+    Scale: pair domain comes from the shingle equi-join (never
+    all-pairs); signatures are one grouped aggregate over the
+    exploded shingle table (16 mins in a single shuffle)."""
     agree = sum(
         F.when(F.col(f"a_{k}") == F.col(f"b_{k}"), 1).otherwise(0)
         for k in range(_FIDELITY_HASHES)
     ).cast("long")
     return (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
+        _pair_signatures(spark, sf_dir)
         .select(
             "doc_a",
             "doc_b",

@@ -36,7 +36,7 @@ from pyspark.sql import SparkSession
 #: Conservative default for local[N]; a real cluster deployment
 #: would set this to ~2-3x total executor cores (or rely on AQE
 #: coalescing from a higher initial value).
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:

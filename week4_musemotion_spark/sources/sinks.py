@@ -19,6 +19,18 @@ and cheapest IO saver).
 
 Every directory this engine commits goes through :func:`publish`, and
 every fixture it reuses across runs through :func:`cached_fixture`.
+
+Every batch log lives here too: the streaming stores (``streaming/``)
+and the LSH index's compaction (``operators/lsh_index``) share one
+file naming and one commit protocol.  A batch writes its files as
+``bid-<tag>-<i>.parquet`` (:func:`batch_tag` reads the tag back), and
+the batch counts once the marker ``<commit_dir>/<tag>`` exists
+(:func:`commit_batch` runs a batch exactly once).  A compaction that
+folds batches into one records the folded tags in a manifest named
+after its own tag; :func:`committed_batches` reads the log.  This is
+the Delta ``txnAppId``/``txnVersion`` idea at file granularity, and the
+reference upsert loader's land-each-key-once guarantee
+(load_musemotion_to_db.py:91-143) made batch-granular.
 """
 
 from __future__ import annotations
@@ -92,6 +104,94 @@ def publish(path: str, write_fn, mode: str = "fresh", stage: str | None = None) 
     os.rename(staging, base)
     if os.path.exists(old):
         shutil.rmtree(old)
+
+
+def batch_tag(name: str) -> str | None:
+    """The tag of a batch-log file ``bid-<tag>-<i>.parquet``; None for
+    any other name (staging dirs, files a batch log did not write)."""
+    return name.split("-")[1] if name.startswith("bid-") else None
+
+
+def _purge_keyed(target: str, tag: str) -> None:
+    """Remove every file a previous attempt of batch ``tag`` left in
+    ``target``."""
+    if not os.path.isdir(target):
+        return
+    for name in os.listdir(target):
+        if batch_tag(name) == tag:
+            os.remove(os.path.join(target, name))
+
+
+def _append_keyed(df: DataFrame, target: str, tag: str) -> None:
+    """Append ``df`` to the parquet dir ``target`` as files named
+    ``bid-<tag>-<i>.parquet``: write to a dot-prefixed staging dir
+    (invisible to Spark readers), then publish each part file into
+    place.  Combined with ``_purge_keyed`` this makes the append
+    replayable — the batch's contribution is removable as a unit."""
+    os.makedirs(target, exist_ok=True)
+    staging = os.path.join(target, f".staging-{tag}-{uuid.uuid4().hex[:8]}")
+    try:
+        df.write.mode("overwrite").parquet(staging)
+        parts = [n for n in os.listdir(staging) if n.startswith("part-") and n.endswith(".parquet")]
+        for i, name in enumerate(sorted(parts)):
+            publish(
+                os.path.join(target, f"bid-{tag}-{i:05d}.parquet"),
+                None,
+                stage=os.path.join(staging, name),
+            )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def commit_batch(commit_dir: str, tag: str, dirs, writes) -> None:
+    """Run batch ``tag`` of a batch log exactly once.
+
+    Marker ``<commit_dir>/<tag>`` present: the batch committed, and a
+    replay returns at once.  Otherwise every ``bid-<tag>-*`` file a
+    torn attempt left in ``dirs`` is purged, ``writes(append)`` runs
+    (``append(df, target)`` lands ``df`` in ``target`` as this batch's
+    files, and ``writes`` may write other files too), and the marker
+    is written LAST.  A crash anywhere before the marker leaves files
+    that readers ignore and the replay removes, so the rewrite sees
+    exactly the pre-batch state."""
+    marker = os.path.join(commit_dir, tag)
+    if os.path.exists(marker):
+        return
+    for d in dirs:
+        _purge_keyed(d, tag)
+    writes(lambda df, target: _append_keyed(df, target, tag))
+    os.makedirs(commit_dir, exist_ok=True)
+    with open(marker, "w") as fh:
+        fh.write("committed\n")
+
+
+def committed_batches(commit_dir: str, folded_dir: str | None = None) -> set[str]:
+    """The tags whose files a reader of the log counts: every tag with a
+    marker, minus the tags a committed compaction folded.  A manifest
+    ``<folded_dir>/<tag>`` lists the tags compaction ``tag`` folded; it
+    applies once ``tag`` has a marker, whether or not the folded files
+    are swept yet, and whether or not ``tag`` was itself folded later.
+    With no ``folded_dir`` this is the full marker set."""
+    committed = set(os.listdir(commit_dir)) if os.path.isdir(commit_dir) else set()
+    live = set(committed)
+    if folded_dir is not None and os.path.isdir(folded_dir):
+        for tag in os.listdir(folded_dir):
+            if tag in committed:
+                with open(os.path.join(folded_dir, tag)) as fh:
+                    live -= set(fh.read().split())
+    return live
+
+
+def purge_uncommitted(target: str, committed: set[str]) -> None:
+    """Remove what uncommitted attempts left in ``target``: staging dirs
+    and the files of every tag outside ``committed`` — what each torn
+    batch's own replay would remove."""
+    for name in os.listdir(target):
+        tag = batch_tag(name)
+        if name.startswith(".staging-"):
+            shutil.rmtree(os.path.join(target, name), ignore_errors=True)
+        elif tag is not None and tag not in committed:
+            os.remove(os.path.join(target, name))
 
 
 def _sf_fingerprint(sf_dir: str, tag: bytes, table: str = "documents") -> str:

@@ -1,29 +1,29 @@
-"""Streaming daily-count store: a ``foreachBatch``-maintained
-append-only log of per-batch (group, day) count partials — the
-unbounded-stream feeder for the daily-grid drift monitors
-(CUSUM / seasonal residuals), in O(groups × days) read-side state.
+"""Streaming count store: a ``foreachBatch``-maintained append-only log
+of per-batch keyed count partials, folded at read time.  Two stores
+run on it: per-(group, day) event counts, the unbounded-stream feeder
+for the daily-grid drift monitors (CUSUM / seasonal residuals), and
+per-(group, bucket) log-bucket counts (``operators/qsketch.py``), whose
+fold reads out quantiles; both in O(groups × keys) read-side state.
 
 This is the ADDITIVE branch of the engine's streaming design rule
 (see streaming/sketches.py): counts are NOT an idempotent monoid —
 re-adding a replayed micro-batch double-counts — so algebra cannot
-give exactly-once and the store uses the near-dup gate's txn-marker
-protocol instead (the Delta ``txnAppId``/``txnVersion`` idea at file
-granularity):
+give exactly-once, and every batch goes through the batch commit log
+(``sources/sinks.py``: ``commit_batch`` under ``_count_commits``).
+A batch's partial counts once its marker exists; a replay of a
+committed batch returns at once, and a torn attempt's files are
+purged before the rewrite.
 
-1. each batch appends its per-(group, day) partial counts as
-   ``bid-<batch_id>-*`` files via staging + rename;
-2. a commit marker ``_count_commits/<batch_id>`` is published only
-   AFTER the append — marker present ⇒ replay returns immediately;
-3. marker absent ⇒ torn files from the failed attempt are purged by
-   prefix before the batch is re-aggregated.
-
-The store itself is a LOG of committed partials, not a materialized
-total: totals fold at read time (``read_daily_counts``) — sum over
+The store is a LOG of committed partials, not a materialized total:
+totals fold at read time (``read_daily_counts``) — a sum over
 committed batch partials is exactly the map-side-combine shape, and
 keeping the store append-only is what makes the per-batch write
 O(batch) instead of O(history) (a read-modify-republish total table
 would re-write the whole history every micro-batch; the HLL store
 can afford republish because its state is capped at m rows/group).
+Folding with SUM is also what makes the quantile store exact: the
+bucket sketch's merge IS addition, so the streamed readout equals the
+batch query's to the digit.
 """
 
 from __future__ import annotations
@@ -33,56 +33,44 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from week4_musemotion_spark.functions.eventtime import US_PER_DAY, epoch_micros
-from week4_musemotion_spark.functions.exact import int_div_trunc
-from week4_musemotion_spark.streaming.neardup import _append_keyed, _purge_keyed
+from week4_musemotion_spark.sources.sinks import batch_tag, commit_batch, committed_batches
 
 
-def make_count_sink(group_cols: list[str], store_path: str, ts_col: str = "ts"):
-    """The ``foreachBatch`` body maintaining the count log, exposed so
-    tests can drive replays deterministically (call it twice with the
-    same batch_id).
+def _layout(store_path: str) -> tuple[str, str, str]:
+    """``(data_dir, commit_dir, folded_dir)`` of a count store."""
+    return (
+        os.path.join(store_path, "counts"),
+        os.path.join(store_path, "_count_commits"),
+        os.path.join(store_path, "_compacted"),
+    )
+
+
+def _files_of(data_dir: str, tags: set[str]) -> list[str]:
+    """The data files of the batches ``tags``."""
+    if not tags or not os.path.isdir(data_dir):
+        return []
+    return [os.path.join(data_dir, n) for n in os.listdir(data_dir) if batch_tag(n) in tags]
+
+
+def make_count_sink(store_path: str, partial):
+    """The ``foreachBatch`` body maintaining the partial log: batch
+    ``batch_id`` appends ``partial(batch_df)``, a keyed partial with a
+    ``cnt`` column, exactly once.  Exposed so fixtures and tests can
+    drive replays deterministically (call it twice with the same
+    batch_id).
 
         stream.writeStream.foreachBatch(
-            make_count_sink(["event_type"], store)
+            make_count_sink(store, lambda b: bucket_counts(b, ["source"], "doc_len"))
         ).option("checkpointLocation", ckpt).start()
     """
-    commit_dir = os.path.join(store_path, "_count_commits")
-    data_dir = os.path.join(store_path, "counts")
+    data_dir, commit_dir, _ = _layout(store_path)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        tag = str(batch_id)
-        marker = os.path.join(commit_dir, tag)
-        if os.path.exists(marker):
-            return  # fully committed batch replayed: nothing to do
-        _purge_keyed(data_dir, tag)  # torn previous attempt
-        day = int_div_trunc(epoch_micros(batch_df, ts_col), F.lit(US_PER_DAY))
-        partial = batch_df.groupBy(
-            *group_cols, day.alias("day_idx")
-        ).agg(F.count(F.lit(1)).alias("cnt"))
-        _append_keyed(partial, data_dir, tag)
-        os.makedirs(commit_dir, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write("committed\n")
+        commit_batch(
+            commit_dir, str(batch_id), [data_dir], lambda append: append(partial(batch_df), data_dir)
+        )
 
     return _sink
-
-
-def stream_daily_counts(
-    stream: DataFrame,
-    group_cols: list[str],
-    store_path: str,
-    checkpoint_dir: str,
-    ts_col: str = "ts",
-):
-    """Start the count-log maintenance query over ``stream``
-    (append-only source).  Returns the ``StreamingQuery``."""
-    return (
-        stream.writeStream.foreachBatch(make_count_sink(group_cols, store_path, ts_col))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 #: Schema of an empty/uncommitted store with the default group cols —
@@ -90,116 +78,77 @@ def stream_daily_counts(
 _DEFAULT_EMPTY = "event_type string, day_idx long, cnt long"
 
 
-def _committed_live_bids(store_path: str) -> set[str]:
-    """Batch ids whose partials a reader must fold: marker present
-    AND not folded into a committed compaction (the compaction's
-    ``_compacted/<tag>`` manifest lists the bids it absorbed — once
-    that compaction's own marker exists, the originals are excluded
-    whether or not their files have been swept yet)."""
-    commit_dir = os.path.join(store_path, "_count_commits")
-    folded_dir = os.path.join(store_path, "_compacted")
-    committed = set(os.listdir(commit_dir)) if os.path.isdir(commit_dir) else set()
-    if os.path.isdir(folded_dir):
-        for tag in os.listdir(folded_dir):
-            if tag in committed:  # only a COMMITTED compaction excludes
-                with open(os.path.join(folded_dir, tag)) as fh:
-                    committed -= set(fh.read().split())
-    return committed
+def _fold(df: DataFrame) -> DataFrame:
+    keys = [c for c in df.columns if c != "cnt"]
+    return df.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
 
 
 def read_daily_counts(
     spark: SparkSession, store_path: str, empty_schema: str = _DEFAULT_EMPTY
 ) -> DataFrame:
-    """Fold the committed partial log to per-(group, day) totals.
+    """Fold the committed partial log to per-key totals (every column
+    but ``cnt`` is a key).
 
-    Only files of COMMITTED, not-yet-folded batches are read: a torn
-    attempt's files sit in the data dir until the replay purges them,
-    and a committed compaction's originals sit there until the sweep
-    removes them — filtering on markers + compaction manifests makes
-    reads correct under BOTH races (committed ⇒ counted exactly once,
-    torn or folded ⇒ not counted).  An empty or all-torn store
-    returns zero rows with ``empty_schema`` (pass your own when the
-    group columns differ from the default)."""
-    data_dir = os.path.join(store_path, "counts")
-    live = _committed_live_bids(store_path)
-    files = (
-        [
-            os.path.join(data_dir, name)
-            for name in os.listdir(data_dir)
-            if name.startswith("bid-") and name.split("-")[1] in live
-        ]
-        if live and os.path.isdir(data_dir)
-        else []
-    )
+    Only files of COMMITTED, not-yet-folded batches are read
+    (``sinks.committed_batches``): a torn attempt's files sit in the
+    data dir until the replay purges them, and a committed
+    compaction's originals sit there until the sweep removes them —
+    filtering on markers + compaction manifests makes reads correct
+    under BOTH races (committed ⇒ counted exactly once, torn or
+    folded ⇒ not counted).  An empty or all-torn store returns zero
+    rows with ``empty_schema`` (pass your own when the keys differ
+    from the default)."""
+    data_dir, commit_dir, folded_dir = _layout(store_path)
+    files = _files_of(data_dir, committed_batches(commit_dir, folded_dir))
     if not files:
         return spark.createDataFrame([], empty_schema)
-    df = spark.read.parquet(*files)
-    keys = [c for c in df.columns if c != "cnt"]
-    return df.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
+    return _fold(spark.read.parquet(*files))
 
 
 def compact_counts(spark: SparkSession, store_path: str) -> dict[str, int]:
     """Fold every committed, not-yet-folded batch's partials into ONE
     compacted batch — the maintenance pass that keeps read cost
-    O(groups × days) instead of O(#micro-batches) on a long-running
+    O(groups × keys) instead of O(#micro-batches) on a long-running
     stream (the count log's analogue of the near-dup gate's
     compact_gate; the HLL store needs none because it republishes m
     rows/group every batch).
 
     Crash-safe ordering (readers stay exactly-once at every point):
 
-    1. aggregate the live bids' files → append as ``bid-c<n>-*``
-       (staging + rename; uncommitted, so readers ignore them);
-    2. write the folded-bid manifest ``_compacted/c<n>``, then
-       publish the compaction's own commit marker — from this instant
-       readers count the compacted partials and exclude the
-       originals (manifest + marker, not file deletion, flips the
-       switch);
-    3. sweep the folded originals' files — pure garbage collection,
-       re-runnable after any crash.
+    1. one ``sinks.commit_batch`` under the next tag ``c<n>``: append
+       the live batches' fold, then write the folded-tag manifest
+       ``_compacted/c<n>``, then the marker — from that instant readers
+       count the compacted partials and exclude the originals
+       (manifest + marker, not file deletion, flips the switch);
+    2. sweep the files of every committed batch that a committed
+       compaction folded — pure garbage collection, so it also removes
+       what an earlier crashed sweep left, and re-runs after any crash.
 
     Original markers are KEPT forever: a foreachBatch replay of a
     folded batch must still see its marker and no-op.  Returns
-    ``{"folded": n_bids, "files_removed": n}``."""
-    data_dir = os.path.join(store_path, "counts")
-    commit_dir = os.path.join(store_path, "_count_commits")
-    folded_dir = os.path.join(store_path, "_compacted")
-    live = _committed_live_bids(store_path)
-    if len(live) <= 1 or not os.path.isdir(data_dir):
-        return {"folded": 0, "files_removed": 0}
-    files = [
-        os.path.join(data_dir, name)
-        for name in os.listdir(data_dir)
-        if name.startswith("bid-") and name.split("-")[1] in live
-    ]
-    # monotonic compaction tag from the full (never-deleted) marker
-    # log, so a new compaction can never collide with a committed one
-    all_committed = os.listdir(commit_dir) if os.path.isdir(commit_dir) else []
-    seq = 1 + max(
-        (int(b[1:]) for b in all_committed if b.startswith("c") and b[1:].isdigit()),
-        default=0,
-    )
-    tag = f"c{seq}"
-    # a TORN previous attempt of this tag (crash between append and
-    # marker) may have left files + manifest: purge both before the
-    # rewrite, same contract as the sink
-    _purge_keyed(data_dir, tag)
-    stale_manifest = os.path.join(folded_dir, tag)
-    if os.path.exists(stale_manifest):
-        os.remove(stale_manifest)
-    df = spark.read.parquet(*files)
-    keys = [c for c in df.columns if c != "cnt"]
-    folded = df.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
-    _append_keyed(folded, data_dir, tag)
-    os.makedirs(folded_dir, exist_ok=True)
-    with open(os.path.join(folded_dir, tag), "w") as fh:
-        fh.write("\n".join(sorted(live)) + "\n")
-    os.makedirs(commit_dir, exist_ok=True)
-    with open(os.path.join(commit_dir, tag), "w") as fh:
-        fh.write("committed\n")
-    # sweep: garbage from this moment on; safe to re-run
+    ``{"folded": n_batches, "files_removed": n}``."""
+    data_dir, commit_dir, folded_dir = _layout(store_path)
+    live = committed_batches(commit_dir, folded_dir)
+    files = _files_of(data_dir, live)
+    folded = 0
+    if len(live) > 1 and files:
+        # monotonic compaction tag from the full (never-deleted) marker
+        # log, so a new compaction can never collide with a committed one
+        marks = committed_batches(commit_dir)
+        seq = 1 + max((int(b[1:]) for b in marks if b.startswith("c") and b[1:].isdigit()), default=0)
+        tag = f"c{seq}"
+
+        def _writes(append) -> None:
+            append(_fold(spark.read.parquet(*files)), data_dir)
+            os.makedirs(folded_dir, exist_ok=True)
+            with open(os.path.join(folded_dir, tag), "w") as fh:
+                fh.write("\n".join(sorted(live)) + "\n")
+
+        commit_batch(commit_dir, tag, [data_dir], _writes)
+        folded = len(live)
+    garbage = committed_batches(commit_dir) - committed_batches(commit_dir, folded_dir)
     removed = 0
-    for p in files:
+    for p in _files_of(data_dir, garbage):
         os.remove(p)
         removed += 1
-    return {"folded": len(live), "files_removed": removed}
+    return {"folded": folded, "files_removed": removed}

@@ -20,20 +20,14 @@ matters for the workload — at production batch sizes the
 corpus-check dominates.
 
 Exactly-once: foreachBatch replays a failed batch with the same
-``batch_id``, and this gate is IDEMPOTENT under that replay.  The
-protocol (the same txn-marker idea Delta's ``txnAppId``/``txnVersion``
-writer option implements at the table-format layer):
-
-1. every file a batch produces carries a ``bid-<batch_id>-`` name
-   prefix and lands via staging + ``sinks.publish``, so a batch's
-   output is identifiable and removable as a unit;
-2. a commit marker ``_ingest_commits/<batch_id>`` is created only
-   AFTER all four outputs (quarantine, corpus, index shingles, index
-   bands) are in place — marker present ⇒ replay returns immediately;
-3. marker absent ⇒ any torn files from the failed attempt are purged
-   by prefix BEFORE the batch is recomputed, so the near-dup decision
-   is made against exactly the pre-batch corpus state and the rewrite
-   reproduces the original outcome.
+``batch_id``, and this gate is IDEMPOTENT under that replay.  Each
+batch runs through the batch commit log (``sources/sinks.commit_batch``)
+with the marker dir ``<index>/_ingest_commits``: marker present ⇒ the
+replay returns at once; marker absent ⇒ the torn attempt's files are
+purged from all four outputs (quarantine, corpus, index shingles,
+index bands) BEFORE the batch is recomputed, so the near-dup decision
+is made against exactly the pre-batch corpus state and the rewrite
+reproduces the original outcome.
 
 The commit log and staging dirs are ``_``/``.``-prefixed, which Spark's
 file readers skip, so readers of ``corpus/docs`` etc. never see them.
@@ -44,47 +38,13 @@ Reference analogue: the upsert loader's key-idempotent semantics
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from week4_musemotion_spark.operators.dedup import _band_rows, minhash_signatures, shingle_sets
 from week4_musemotion_spark.operators.lsh_index import query_index
-from week4_musemotion_spark.sources.sinks import publish
-
-
-def _purge_keyed(target: str, tag: str) -> None:
-    """Remove every file a previous attempt of batch ``tag`` left in
-    ``target`` (identified by the bid name prefix)."""
-    if not os.path.isdir(target):
-        return
-    prefix = f"bid-{tag}-"
-    for name in os.listdir(target):
-        if name.startswith(prefix):
-            os.remove(os.path.join(target, name))
-
-
-def _append_keyed(df: DataFrame, target: str, tag: str) -> None:
-    """Append ``df`` to the parquet dir ``target`` as files named
-    ``bid-<tag>-<i>.parquet``: write to a dot-prefixed staging dir
-    (invisible to Spark readers), then publish each part file into
-    place.  Combined with ``_purge_keyed`` this makes the append
-    replayable — the batch's contribution is removable as a unit."""
-    os.makedirs(target, exist_ok=True)
-    staging = os.path.join(target, f".staging-{tag}-{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.mode("overwrite").parquet(staging)
-        parts = [n for n in os.listdir(staging) if n.startswith("part-") and n.endswith(".parquet")]
-        for i, name in enumerate(sorted(parts)):
-            publish(
-                os.path.join(target, f"bid-{tag}-{i:05d}.parquet"),
-                None,
-                stage=os.path.join(staging, name),
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+from week4_musemotion_spark.sources.sinks import commit_batch, committed_batches
 
 
 def make_ingest_fn(
@@ -104,14 +64,14 @@ def make_ingest_fn(
     bands_dir = os.path.join(index_path, "bands")
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        tag = str(batch_id)
-        marker = os.path.join(commit_dir, tag)
-        if os.path.exists(marker):
-            return  # replay of a fully committed batch: nothing to do
-        # torn previous attempt: remove its files BEFORE querying the
-        # index, so the near-dup decision sees the pre-batch corpus
-        for d in (quarantine_dir, corpus_dir, shingles_dir, bands_dir):
-            _purge_keyed(d, tag)
+        commit_batch(
+            commit_dir,
+            str(batch_id),
+            (quarantine_dir, corpus_dir, shingles_dir, bands_dir),
+            lambda append: _gate(batch_df, append),
+        )
+
+    def _gate(batch_df: DataFrame, append) -> None:
         batch_df = batch_df.persist()
         flagged_ids = clean = sh = None
         try:
@@ -127,16 +87,12 @@ def make_ingest_fn(
             flagged_ids.count()
             flagged = batch_df.join(flagged_ids, id_col, "left_semi")
             clean = batch_df.join(flagged_ids, id_col, "left_anti").persist()
-            _append_keyed(flagged, quarantine_dir, tag)
-            _append_keyed(clean, corpus_dir, tag)
+            append(flagged, quarantine_dir)
+            append(clean, corpus_dir)
             # shingles before bands — same crash contract as lsh_index
             sh = shingle_sets(clean, text_col, id_col, 3).persist()
-            _append_keyed(sh, shingles_dir, tag)
-            _append_keyed(_band_rows(minhash_signatures(sh)), bands_dir, tag)
-            # all outputs in place: publish the commit marker LAST
-            os.makedirs(commit_dir, exist_ok=True)
-            with open(marker, "w") as fh:
-                fh.write("committed\n")
+            append(sh, shingles_dir)
+            append(_band_rows(minhash_signatures(sh)), bands_dir)
         finally:
             # unpersist on EVERY path: a failed attempt is expected
             # here (the replay protocol exists for it), and stranding
@@ -159,7 +115,7 @@ def compact_gate(
 ) -> dict[str, int]:
     """Small-files maintenance for ALL the gate's outputs: the index
     (via ``lsh_index.compact_index``) plus the quarantine and corpus
-    doc dirs, each accreting one ``bid-*`` file per micro-batch.  Same
+    doc dirs, each accreting one batch-log file per micro-batch.  Same
     gate-aware rules everywhere: uncommitted (torn) batches' files are
     purged first — what their own replay would do — and committed
     batches keep their ``_ingest_commits`` markers, so post-compaction
@@ -169,8 +125,7 @@ def compact_gate(
     point).  Returns {dir: output file count} (-1 = under trigger)."""
     from week4_musemotion_spark.operators.lsh_index import _compact_dir, compact_index
 
-    commit_dir = os.path.join(index_path, "_ingest_commits")
-    committed = set(os.listdir(commit_dir)) if os.path.isdir(commit_dir) else set()
+    committed = committed_batches(os.path.join(index_path, "_ingest_commits"))
     # one commit-log snapshot for ALL dirs: index and doc dirs must
     # agree on which batches are torn
     out = compact_index(spark, index_path, target_file_bytes, trigger_files, committed)
@@ -181,33 +136,3 @@ def compact_gate(
         if os.path.isdir(d):
             out[label] = _compact_dir(spark, d, committed, target_file_bytes, trigger_files)
     return out
-
-
-def stream_neardup_ingest(
-    stream: DataFrame,
-    index_path: str,
-    corpus_path: str,
-    quarantine_path: str,
-    checkpoint_dir: str,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Run the near-dup-gated ingest loop; returns the StreamingQuery
-    (caller awaits termination).  The index at ``index_path`` must
-    already exist (``lsh_index.build_index`` on the seed corpus, or
-    on an empty frame)."""
-    ingest = make_ingest_fn(
-        index_path,
-        corpus_path,
-        quarantine_path,
-        threshold=threshold,
-        text_col=text_col,
-        id_col=id_col,
-    )
-    return (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -11,10 +11,11 @@ max, so re-merging a replayed micro-batch is a no-op by construction
 needed is a ``replace`` publish of the merged store
 (``sources/sinks.publish``, the staging/swap every rewrite uses), so a
 reader never observes a half-written store.  Contrast with the
-near-dup gate (``streaming/neardup.py``), whose appends are NOT
-idempotent and therefore need the full bid-prefix + commit-marker
-protocol; a count-min store (cells SUM — replay would double-count)
-would need that protocol too.  This split — idempotent-monoid state
+near-dup gate (``streaming/neardup.py``) and the count store
+(``streaming/counts.py``), whose appends are NOT idempotent and
+therefore run through the batch commit log (``sources/sinks.py``:
+batch-tagged files + commit markers); a count-min store (cells SUM —
+replay would double-count) would need that log too.  This split — idempotent-monoid state
 gets algebra, additive state gets markers — is the design rule for
 every streaming accumulator in this engine.
 
@@ -59,23 +60,3 @@ def make_hll_sink(group_cols: list[str], value_col: str, store_path: str, p: int
         publish(store_path, _write, mode="replace")
 
     return _sink
-
-
-def stream_hll_distinct(
-    stream: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    store_path: str,
-    checkpoint_dir: str,
-    p: int = 8,
-):
-    """Start the register-store maintenance query over ``stream``
-    (append-only source).  Returns the ``StreamingQuery``; call
-    ``processAllAvailable()``/``awaitTermination`` per the workload.
-    """
-    return (
-        stream.writeStream.foreachBatch(make_hll_sink(group_cols, value_col, store_path, p))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
